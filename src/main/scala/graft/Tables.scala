@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -14,8 +15,40 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  // Parquet schema per session and path, validated by an on-disk signature.
+  // Without a schema `spark.read.parquet` runs a one-task footer-inference
+  // JOB on every call, i.e. on every query construction. An unchanged file
+  // read under the same inference confs (set once, in Sessions.local) gives
+  // the same schema, so a resident session pays that job once per table.
+  // One entry per (session, path): a superseded signature is
+  // replaced, not accumulated, and a stopped session's entries go with it.
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
+      String, ((Long, Long), StructType)]]())
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * session while the file keeps its length and modification time. For a
+    * directory-form table the signature sums its part files' lengths and
+    * takes their latest modification time: parts rewritten in place under
+    * the same names leave the directory's own time unchanged.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val status = fs.getFileStatus(p)
+    val parts = if (status.isDirectory) fs.listStatus(p).toSeq else Seq(status)
+    val sig = (parts.map(_.getLen).sum,
+      (status +: parts).map(_.getModificationTime).max)
+    schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+      .compute(path, (_, cur) =>
+        if (cur != null && cur._1 == sig) cur
+        else (sig, spark.read.parquet(path).schema))._2
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "nation")
@@ -121,7 +154,8 @@ object Tables {
     * WORK proxy calibrated on regex-battery-intensity expressions
     * (~0.3 s/MB single-core); a call site whose expression is measurably
     * costlier per byte passes its own `minBytes` (q107's 16-MD5-per-
-    * shingle band pass measures ~2 s/MB and overrides to 256 KB).
+    * shingle band pass measures ~2 s/MB and overrides to 256 KB; the
+    * inverted index's tokenize map, 0.54 s/MB, to ~95 KB).
     */
   val SpreadMinBytes: Long = 4L << 20
 

@@ -133,24 +133,45 @@ object InvertedIndex {
     * the reference keeps line numbers of dropped lines.
     */
   def documentPostings(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      // No pre-repartition: tokenize+explode is cheaper than shuffling the
-      // text payload (A/B-measured: plain 0.15s vs spread 0.27s for the full
-      // q01 at sf0.1), and at cluster scale the scan arrives as many splits
-      // anyway — the groupBy shuffle right after is the only exchange needed.
+    Tables.spread(Tables.documents(spark, dir).select(col("doc_id"), col("text")),
+        col("doc_id"), minBytes = PostingsSpreadMinBytes)
       .select(col("doc_id"), posexplode(text.tokens(col("text"))).as(Seq("pos0", "token")))
       .filter(col("token") =!= "")
       .select(col("token"), col("doc_id"), (col("pos0") + 1).cast("int").as("pos"))
 
+  /** [[Tables.spread]] floor for the map phase above: the mass at which the
+    * phase on one task costs as much as the spread exchange. Two numbers,
+    * measured at local[4] on a 4-core Xeon VM (q01's map and aggregate
+    * into a noop sink, median of 15 warm runs):
+    *  - the map (tokenize, posexplode, partial collect_list) costs
+    *    0.54 s per MB of `documents` parquet on one core (slope over
+    *    0.06-3.3 MB single-row-group files);
+    *  - the spread exchange costs a fixed ~0.05 s (spread minus single
+    *    task at 11-62 KB: +0.03 to +0.07 s).
+    * The floor is 0.05 / 0.54 MB, about 95 KB: sf0.01's 64 KB file stays
+    * on one task, sf0.1's 580 KB spreads (0.52 -> 0.38 s) and so does
+    * the 1.7 MB 3x scale-up (1.10 -> 0.56 s). The default 4 MB floor,
+    * calibrated on regex batteries, would keep all of them on one task.
+    */
+  private val PostingsSpreadMinBytes: Long = (0.05 / 0.54 * (1 << 20)).toLong
+
+  /** Presentation of q01/q01b: token order, then `(doc_id: pos), ...`.
+    * The sort comes FIRST so the posting strings are built once, above the
+    * range exchange: built below it, they are built again by the
+    * exchange's bound-sampling job. Built-in concat and casts, because
+    * format_string runs a java.util.Formatter per posting.
+    */
   private def formatDocIndex(grouped: DataFrame): DataFrame =
-    grouped.select(
-      col("token"),
-      size(col("ps")).cast("long").as("n_postings"),
-      concat_ws(", ",
-        transform(col("ps"), p =>
-          format_string("(%d: %d)", p.getField("doc_id"), p.getField("pos"))))
-        .as("postings"))
+    grouped
       .orderBy(col("token"))
+      .select(
+        col("token"),
+        size(col("ps")).cast("long").as("n_postings"),
+        concat_ws(", ",
+          transform(col("ps"), p =>
+            concat(lit("("), p.getField("doc_id").cast("string"), lit(": "),
+              p.getField("pos").cast("string"), lit(")"))))
+          .as("postings"))
 
   def documentsIndex(spark: SparkSession, dir: String): DataFrame =
     formatDocIndex(

@@ -18,12 +18,14 @@ import org.apache.spark.sql.functions._
   * exact top-k in SimilaritySpec. q24 is the cosine near-dup face of the
   * same bucketing.
   *
-  * Spread policy (A/B-measured at sf0.1): the `repartition(..., vec_id)`
-  * before the vector math is the ONE place a payload spread pays — the
-  * NTables×Planes×dim bucket dot products (and the pairwise cosines they
-  * feed) dominate the shuffle cost (q24: spread 0.60s vs plain 0.74s).
-  * Cheap per-row ops (hashing, tokenizing, metadata) measured the other way
-  * and carry no spread — see InvertedIndex.documentPostings / Multimodal.
+  * Spread policy: the `repartition(..., vec_id)` before the vector math
+  * pays at sf0.1 — the NTables×Planes×dim bucket dot products (and the
+  * pairwise cosines they feed) dominate the shuffle cost (q24: spread
+  * 0.60s vs plain 0.74s). Elsewhere a spread pays once the single-task
+  * work exceeds the exchange's fixed cost: [[graft.Tables.spread]] takes
+  * that mass as its floor, e.g. ~95 KB for the inverted index's tokenize
+  * map (0.05 s exchange / 0.54 s per MB on one core, measured on 4 cores;
+  * see InvertedIndex.PostingsSpreadMinBytes).
   */
 object Similarity {
 

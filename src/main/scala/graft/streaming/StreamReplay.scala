@@ -25,18 +25,6 @@ object StreamReplay {
   private val runSeqs =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
 
-  // schema per events path, validated by a content signature: the batch
-  // footer read that seeds the file-stream source is immutable per fixture
-  // version, but a resident session (bench settle runs × 5 replay queries)
-  // was paying it on every invocation. One entry per path (superseded
-  // signatures are REPLACED, not accumulated), and the signature folds the
-  // mtime+length of every part file for a directory-form fixture — a
-  // directory whose part files are rewritten in place under the same names
-  // keeps its own mtime, so a directory-level stat alone could serve a
-  // stale schema after an in-place regen.
-  private val sourceMeta = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
-
   /** A fixture table as a REAL file-stream source. File-stream sources
     * need an explicit schema: one metadata-only batch read supplies it.
     * The source's basePath must be a DIRECTORY: a directory-form
@@ -50,21 +38,12 @@ object StreamReplay {
   private def replayTable(spark: SparkSession, dir: String,
       table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val status = fs.getFileStatus(hPath)
-    val isDir = status.isDirectory
-    // cheap per-call signature: single file → its own (mtime, len); directory
-    // → fold over the direct children so in-place part rewrites invalidate
-    val sig =
-      if (isDir)
-        fs.listStatus(hPath).foldLeft(status.getModificationTime) {
-          (acc, s) => acc * 31 + s.getModificationTime * 31 + s.getLen
-        }
-      else status.getModificationTime * 31 + status.getLen
-    val schema = sourceMeta.compute(path, (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, spark.read.parquet(path).schema))._2
+    val isDir = {
+      val hPath = new org.apache.hadoop.fs.Path(path)
+      hPath.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(hPath).isDirectory
+    }
+    val schema = graft.Tables.schemaOf(spark, path)
     if (isDir) spark.readStream.schema(schema).parquet(path)
     else spark.readStream.schema(schema)
       .option("pathGlobFilter", s"$table.parquet").parquet(dir)

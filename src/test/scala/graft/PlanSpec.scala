@@ -694,4 +694,42 @@ class PlanSpec extends AnyFunSuite {
       "phase-1 salt cell exchange missing")
     assert(!p.contains("SinglePartition"), "global funnel crept into the sample")
   }
+
+  test("q01/q01b: posting strings are built once, above the range exchange on token") {
+    import org.apache.spark.sql.catalyst.expressions.ConcatWs
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val ii = graft.operators.InvertedIndex
+    for ((name, df) <- Seq("q01" -> ii.documentsIndex(spark, dir),
+        "q01b" -> ii.documentsIndexSalted(spark, dir))) {
+      // the physical plan with its exchanges, before execution
+      val root = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val byToken = root.collect { case e: ShuffleExchangeExec => e }
+        .filter(_.outputPartitioning match {
+          case RangePartitioning(ord, _) =>
+            ord.head.child.references.exists(_.name == "token")
+          case _ => false
+        })
+      assert(byToken.size === 1, s"$name: no single range exchange on token\n$root")
+      val builds = (n: org.apache.spark.sql.execution.SparkPlan) =>
+        n.expressions.exists(_.find(_.isInstanceOf[ConcatWs]).isDefined)
+      assert(root.find(builds).isDefined, s"$name: no posting-string projection")
+      assert(byToken.head.find(builds).isEmpty,
+        s"$name: posting strings built below the range exchange, so its sampling job builds them too")
+      val p = plan(df)
+      assert(!p.contains("format_string"), s"$name: format_string in the plan")
+      assert(!p.contains("ScalaUDF"), s"$name: per-row UDF in the plan")
+    }
+  }
+
+  test("q15: window, session aggregate and sort share ONE range exchange on user_id") {
+    val p = plan(graft.operators.TimeWindows.q15(spark, dir))
+    assert(ops(p, "Exchange") === 1, p.take(1500))
+    assert(p.contains("rangepartitioning(user_id"), p.take(1500))
+    assert(!p.contains("hashpartitioning"), p.take(1500))
+  }
 }

@@ -5,6 +5,10 @@
 #   3. tools/compare.py              — DuckDB oracle compare (the driver-gate replica)
 #   4. tools/typelint.py             — DuckDB DESCRIBE type lint over every oracle
 #   5. tools/q69_cross_check.py      — multi-chunk oracle branch cross-check
+#   6. perfbench/run.py (mapreduce)  — DuckDB oracle compare of q01/q15/q37 on
+#                                      the benchmark's 3x sf0.1 input; sf0.01's
+#                                      documents are below the floor of q01's
+#                                      map-side spread, this input is above it
 # Exits non-zero on the FIRST failing step; each step's exit code is printed.
 # Usage: tools/verify_all.sh [sfDir] [outDir]
 set -u
@@ -31,4 +35,6 @@ step "verify"     env SPARK_GRAFT_VERIFY_STRICT=1 sbt -batch "runMain graft.Veri
 step "compare"    python3 tools/compare.py "$OUT_DIR" "$SF_DIR"
 step "typelint"   python3 tools/typelint.py "$OUT_DIR" "$SF_DIR"
 step "q69-cross"  python3 tools/q69_cross_check.py "$OUT_DIR"
-echo "VERIFY_ALL: PASS (suite + verify dump + oracle compare + typelint + q69 cross-check)"
+# exits 1 on any oracle mismatch (or a self-test that fails to catch one)
+step "perfbench"  python3 perfbench/run.py --workload mapreduce --seed 1 --seconds 5 --trace 0
+echo "VERIFY_ALL: PASS (suite + verify dump + oracle compare + typelint + q69 cross-check + perfbench mapreduce)"

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors, Future}
+
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -84,8 +88,9 @@ final case class CurationParams(
 /** The end-to-end curation RUN: every stage of the shipped curation family,
   * chained as ONE artifact-writing job (reference: the pipeline a
   * `mapreduce.c`-style engine would run as separate driver programs over
-  * intermediate files; here the whole chain is one lazily-planned Spark job
-  * graph with explicit materialization points).
+  * intermediate files; here one driver submits the chain's Spark jobs in
+  * order, with explicit materialization points, and runs the blocks that
+  * do not depend on the chain as branches beside it).
   *
   *   q44 gates → q94 classifier gate → q18 exact dedup → q21+q56 near-dup
   *   resolution → q57-style
@@ -146,20 +151,92 @@ final case class CurationParams(
   * survivor frames folded by a map-side-combinable `max` — one shuffle,
   * replacing round 12's chain of ten sequential id-keyed left joins over
   * the full raw-doc frame (the widest plan in the artifacts stage).
+  *
+  * Critical path: the chain (funnel → sem_dedup → line_dedup → span_cut →
+  * source_cap → sampled) is sequential, each stage reading the one
+  * before. Two blocks are branches on [[Branches]] threads instead, the
+  * way the reference's map and reduce threads overlap:
+  *   - the dedup index (`index/dedup/`, `index/seen`) and the scores pass
+  *     (`verdicts/scores`) read only the scan, so one branch writes them
+  *     from the moment `docs` exists, under the funnel;
+  *   - the artifact writes (corpus, shards, the verdicts, run_params,
+  *     manifest, opt-in layout/sequences) read only frames the chain has
+  *     built and never each other's output, so they are submitted
+  *     together.
+  * Every branch joins before the pointer swap; `prev_drift` reads
+  * doc_fates and scores back, so it runs after the join. The branches
+  * change which thread submits a job, never the plans, the outputs or
+  * the job count. On the benchmark's
+  * sf0.1 curate input (4 cores, warm pass) the index and scores branch
+  * finishes inside the funnel, so the run's wall is the chain plus the
+  * artifacts stage, whose residual tail is the `shards/` write: AQE
+  * coalesces its range exchange to one partition, so one task writes
+  * every shard file (SCALE.md, "CurationRun's critical path").
   */
 object CurationRun {
 
   /** Stage-wall timer for the scale audits (SCALE.md's CurationRun table):
     * every stage boundary in [[run]] is an EAGER materialization
     * (localCheckpoint / sink write), so wrapping the block bounds that
-    * stage's wall. stderr-only observability — no data-path effect.
+    * stage's wall. Branch stages overlap the chain, so walls no longer sum
+    * to the run: each line also carries the stage's start offset from the
+    * timer's creation (the run's start). stderr-only observability — no
+    * data-path effect.
     */
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    System.err.println(
-      f"[curation-run] stage-wall $label%-12s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
+  private final class StageTimer {
+    private val runStart = System.nanoTime()
+
+    def apply[T](label: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      System.err.println(f"[curation-run] stage-wall $label%-19s " +
+        f"${(System.nanoTime() - t0) / 1e9}%5.1f s  start +" +
+        f"${(t0 - runStart) / 1e9}%.1f s")
+      r
+    }
+  }
+
+  /** The branch threads of one [[run]]: blocks that read only frames
+    * already built, and whose output nothing on the chain reads, run here
+    * beside the chain instead of on its critical path (the reference's
+    * m map and n reduce threads overlap the same way). Created on the
+    * calling thread, and every thread is created by a [[fork]] on that
+    * thread, so branch jobs inherit the caller's Spark local properties
+    * (job group, scheduler pool, description) — a global pool's threads
+    * would not. [[close]] returns only once every thread has exited.
+    */
+  private[graft] final class Branches extends AutoCloseable {
+    private val threads = new ConcurrentLinkedQueue[Thread]
+    private val pool = Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"curation-run-branch-${threads.size}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    }
+    private val forked = ArrayBuffer.empty[Future[_]]
+
+    def fork(body: => Unit): Unit = {
+      val task: Runnable = () => body
+      forked += pool.submit(task)
+    }
+
+    /** Waits for EVERY forked branch, including after one has thrown (a
+      * branch still writing must not outlive the decision not to commit),
+      * then rethrows the first failure in fork order, so the reported
+      * error does not depend on timing.
+      */
+    def join(): Unit = {
+      val failures = forked.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(throw _)
+    }
+
+    def close(): Unit = {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
 
   /** In-place outDir reuse is a supported workflow (every artifact writes
@@ -219,336 +296,366 @@ object CurationRun {
     // swap at the end of the run publishes them as a consistent set
     // (crash-safety contract: [[graft.sources.Artifacts]])
     val art = Artifacts.stage(spark, outDir)
-    // one parquet scan feeds the funnel AND both dimension fan-backs
-    val scanned = timed("scan") {
-      Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-        .localCheckpoint()
-    }
-    // opt-in q114 transform: markup out of every payload before any gate
-    // reads it (per-row codegen chain; no doc dropped, so no manifest row)
-    val stripped =
-      if (!params.stripMarkup) scanned
-      else timed("markup_strip") {
-        scanned.withColumn("text",
-          graft.functions.text.stripMarkup(col("text"))).localCheckpoint()
-      }
-    // opt-in q112 gate: the published Gopher battery ahead of the funnel;
-    // the funnel's "raw" row then counts gated survivors
-    val docs =
-      if (!params.gopherGate) stripped
-      else timed("gopher_gate") {
-        stripped.filter(
-          operators.TextAnalysis.gopherVerdict(col("text"))).localCheckpoint()
-      }
-    // curationStages materializes its member frames eagerly, so this block
-    // carries the quality-gate + exact-dedup + near-dedup wall
-    val funnel = timed("funnel") {
-      Pipeline.curationStages(
-        docs.select(col("doc_id"), col("text")), Pipeline.EvalEvery,
-        params.classifierFloorE6, params.nearDupJaccard,
-        params.qualityKeeper)
-    }
-    // decontaminated survivors: stat + line-dedup input (gram-join lineage
-    // behind it — materialize, q78 precedent)
-    val dec = timed("decon_ckpt") { funnel.last._2.localCheckpoint() }
-
-    // stage 6: semantic dedup (q85, the SemDeDup step) over survivors that
-    // CARRY embeddings — text dedup cannot see a paraphrased copy, the
-    // embedding space can. CONTRACT: the embeddings table is keyed so that
-    // vec_id == the doc_id of the document it embeds (TESTDATA.md's
-    // one-embedding-per-doc layout) — the join below depends on it, and
-    // CurationRunSpec asserts a non-trivial hit count so a schema drift
-    // that breaks the alignment fails loudly instead of silently turning
-    // this stage into a pass-through. Docs without an embedding pass
-    // through unjudged (they were never clusterable); each ≥ 0.95-cosine
-    // component keeps its min doc_id. The drop set is an id-only
-    // left-anti join — text never rides the vector machinery.
-    // The quantizer is fit ONCE here (or reloaded from a prior run's
-    // artifact) and always persisted under model/coarse — see
-    // [[CurationParams.reuseModels]].
-    val semdeduped = timed("sem_dedup") {
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id").as("doc_id"),
-          graft.functions.vectors.toDouble(col("embedding")).as("v"))
-        .filter(col("v").isNotNull)
-      val subject = dec.select(col("doc_id")).join(emb, Seq("doc_id"))
-        .select(col("doc_id").as("vec_id"), col("v"))
-        .localCheckpoint()
-      val n = subject.count()
-      if (n == 0) dec // nothing clusterable: the stage judges no one
-      else {
-        val quant = (params.reuseIndex.orElse(params.reuseModels),
-            params.refreshModels) match {
-          case (Some(prior), _) => timed("quant_load") {
-            ModelStore.loadQuantizer(
-            spark, s"${Artifacts.resolve(spark, prior)}/model/coarse")
-          }
-          // the production middle path: prior codebook + ONE Lloyd step
-          // on THIS run's subject (q111/imiRefresh composed into the
-          // pipeline) — adapts to drift for one aggregate pass instead
-          // of a full KMeans refit
-          case (None, Some(prior)) => timed("quant_refresh") {
-            ModelStore.loadQuantizer(
-            spark, s"${Artifacts.resolve(spark, prior)}/model/coarse") match {
-              case FlatQuantizer(cs) => FlatQuantizer(
-                Similarity.refreshedCodebook(Similarity.codebookRefresh(
-                  subject.select(col("v")), cs)))
-              case imi: ImiQuantizer =>
-                Similarity.imiRefresh(subject.select(col("v")), imi)
-            }
-          }
-          case (None, None) => timed("quant_fit") {
-            Quantizers.quantizerFor(subject, Similarity.ivfCellsFor(n))
-          }
-        }
-        ModelStore.saveQuantizer(spark, quant, s"$art/model/coarse")
-        // the (vec_id, cell) soft-assignment index. With --reuse-index the
-        // prior run's persisted rows serve every doc it already assigned
-        // (valid because the quantizer IS that run's — assignment is a
-        // pure function of (codebook, vector)) and only the ARRIVALS pay
-        // the assignment pass; the run always persists the index it USED
-        // (model/index) so any run can seed the next. The verdict then
-        // reads the just-written artifact: the candidate self-join
-        // consumes the cells frame twice, and re-reading clustered
-        // parquet beats re-executing the N×k assignment lineage.
-        val fresh: DataFrame => DataFrame = df => df.select(col("vec_id"),
-          explode(quant.probeCells(col("v"), Similarity.SemProbeCells))
-            .as("cell"))
-        val cells = params.reuseIndex match {
-          case Some(prior) => timed("index_load") {
-            val priorIdx = ModelStore.loadIndex(
-              spark, s"${Artifacts.resolve(spark, prior)}/model/index")
-              .select(col("vec_id"), col("cell"))
-            priorIdx.join(subject.select(col("vec_id")), Seq("vec_id"))
-              .unionByName(fresh(subject.join(
-                priorIdx.select(col("vec_id")).distinct(),
-                Seq("vec_id"), "left_anti")))
-          }
-          case None => fresh(subject)
-        }
-        ModelStore.saveIndex(cells, s"$art/model/index")
-        val verdict = Similarity.semanticDedupCells(
-          subject.select(col("vec_id")), subject,
-          ModelStore.loadIndex(spark, s"$art/model/index")
-            .select(col("vec_id"), col("cell")),
-          params.semDedupCosine)
-        dec.join(
-            verdict.filter(!col("is_kept"))
-              .select(col("vec_id").as("doc_id")),
-            Seq("doc_id"), "left_anti")
+    val timed = new StageTimer
+    val branches = new Branches
+    try {
+      // one parquet scan feeds the funnel AND both dimension fan-backs
+      val scanned = timed("scan") {
+        Tables.documents(spark, sfDir)
+          .select(col("doc_id"), col("text"), col("lang"), col("source"))
           .localCheckpoint()
       }
-    }
-
-    // stage 7: strip corpus-duplicated lines (q80b's 64-bit-key form);
-    // boilerplate-only docs empty out and leave the corpus here
-    val lined = timed("line_dedup") {
-      Pipeline.lineDedupHashed(semdeduped.select(col("doc_id"), col("text")))
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("cleaned").as("text"))
-        .withColumn("n_tokens", graft.functions.text.tokenCount(col("text")))
-        .localCheckpoint()
-    }
-
-    // stage 8: cut corpus-duplicated 8-token spans (q84); span-only docs
-    // leave. Post-cut token count is exact arithmetic on spanCut's own
-    // columns (kept = n_tokens - n_cut), not a re-tokenize.
-    val cut = timed("span_cut") {
-      Dedup.spanCut(lined.select(col("doc_id"), col("text")))
-        .filter(col("n_tokens") - col("n_cut") > 0)
-        .select(col("doc_id"), col("cleaned").as("text"),
-          (col("n_tokens") - col("n_cut")).as("n_tokens"))
-        .localCheckpoint()
-    }
-
-    // stage 9: per-source cap (q89's salted two-phase rank — the verdict
-    // frame is the artifact; the survivor frame is an id-only semi join)
-    val (capVerdict, capped) = timed("source_cap") {
-      val v = Pipeline.sourceCap(
-        cut.join(docs.select(col("doc_id"), col("source")), Seq("doc_id")),
-        params.sourceCap).localCheckpoint()
-      (v, cut.join(v.select(col("doc_id")), Seq("doc_id")).localCheckpoint())
-    }
-
-    // stage 10: language-mixture sampling (q75) — verdict keeps the losers
-    // (audit trail); the corpus keeps the winners
-    val (sampleVerdict, sampled) = timed("sampled") {
-      val v = Pipeline.mixtureSample(
-        capped.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-          .select(col("doc_id"), col("lang"), col("text"))).localCheckpoint()
-      (v, capped
-        .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))
-        .localCheckpoint())
-    }
-
-    // stage 10.5 (opt-in): q135's token-budget selection over the sampled
-    // survivors — keep the best-classifier-scored prefix whose token mass
-    // fits tokenBudgetPct% of the surviving total. The verdict frame (per
-    // selected doc: score, tokens, cumulative) is the artifact; the
-    // survivor frame is an id-only semi join, the source-cap idiom.
-    val (budgetVerdict, selected) = params.tokenBudgetPct match {
-      case None => (None, sampled)
-      case Some(pct) => timed("token_budget") {
-        val v = Pipeline.tokenBudgetSelect(
-          sampled.select(col("doc_id"), col("text")), pct).localCheckpoint()
-        (Some(v),
-          sampled.join(v.select(col("doc_id")), Seq("doc_id"))
-            .localCheckpoint())
+      // opt-in q114 transform: markup out of every payload before any gate
+      // reads it (per-row codegen chain; no doc dropped, so no manifest row)
+      val stripped =
+        if (!params.stripMarkup) scanned
+        else timed("markup_strip") {
+          scanned.withColumn("text",
+            graft.functions.text.stripMarkup(col("text"))).localCheckpoint()
+        }
+      // opt-in q112 gate: the published Gopher battery ahead of the funnel;
+      // the funnel's "raw" row then counts gated survivors
+      val docs =
+        if (!params.gopherGate) stripped
+        else timed("gopher_gate") {
+          stripped.filter(
+            operators.TextAnalysis.gopherVerdict(col("text"))).localCheckpoint()
+        }
+      // branch: the dedup index and the scores read only the scan, never a
+      // chain frame, so one branch thread writes them under the funnel.
+      // The persistable dedup-index state (q78's production contract):
+      // exact md5 keys, hashed shingle sets, and the LSH band index over
+      // the snapshot this run ingested (the same population doc_fates
+      // covers) — the artifacts a later `--incremental` run verdicts its
+      // arrivals against WITHOUT re-deduping, or even rescanning, this
+      // corpus. One extra shingle pass over the checkpointed scan; the
+      // shingle table is ~8 B/shingle, far under the text it summarizes.
+      branches.fork {
+        timed("dedup_index") {
+          val keyed = docs.select(col("doc_id"), col("text"))
+          Dedup.exactKeyIndex(keyed)
+            .write.mode("overwrite").parquet(s"$art/index/dedup/exact")
+          val sh = Dedup.nearDupShingles(keyed).localCheckpoint()
+          sh.write.mode("overwrite").parquet(s"$art/index/dedup/shingles")
+          Dedup.nearDupBandIndex(sh)
+            .write.mode("overwrite").parquet(s"$art/index/dedup/bands")
+          // the seen-id set an --incremental successor anti-joins to find
+          // its arrivals. Deliberately the RAW scanned ids, not doc_fates:
+          // fates exclude the eval-side holdout (doc_id % EvalEvery == 0),
+          // which a later snapshot still contains — fates-based arrival
+          // detection would re-verdict the holdout every night
+          scanned.select(col("doc_id")).distinct()
+            .write.mode("overwrite").parquet(s"$art/index/seen")
+        }
+        // per-doc classifier scores of the RAW snapshot (pre-gate, so two
+        // runs' tables describe the same population even when their gate
+        // params differ) — the between-runs monitoring artifact the next
+        // run's --prev-run PSI reads, q116's production prev side. This is
+        // a full-snapshot token-explode pass (the one stage whose sf10 wall
+        // dominated the round-13 profile), so a run whose output will
+        // never seed a monitoring chain can opt out with --write-scores
+        // false
+        if (params.writeScores) timed("scores") {
+          operators.TextAnalysis.classifierScoresUnsorted(
+              scanned.select(col("doc_id"), col("text")))
+            .write.mode("overwrite").parquet(s"$art/verdicts/scores")
+        }
+        // (an opted-out run needs no stale-scores delete anymore: the
+        // fresh staging version starts empty, so a later --prev-run reading
+        // THIS run finds no scores table and fails loudly — the hazard the
+        // old Hadoop-FileSystem delete existed to close is gone
+        // structurally)
       }
-    }
+      // curationStages materializes its member frames eagerly, so this block
+      // carries the quality-gate + exact-dedup + near-dedup wall
+      val funnel = timed("funnel") {
+        Pipeline.curationStages(
+          docs.select(col("doc_id"), col("text")), Pipeline.EvalEvery,
+          params.classifierFloorE6, params.nearDupJaccard,
+          params.qualityKeeper)
+      }
+      // decontaminated survivors: stat + line-dedup input (gram-join lineage
+      // behind it — materialize, q78 precedent)
+      val dec = timed("decon_ckpt") { funnel.last._2.localCheckpoint() }
 
-    // the funnel's last frame is re-read by the manifest stat AND the fates
-    // fold — swap in the checkpointed copy so neither re-executes the
-    // gram-explode decontamination lineage
-    val stages = (funnel.init :+ (funnel.last._1 -> dec)) ++
-      Seq("sem_dedup" -> semdeduped, "line_dedup" -> lined, "span_cut" -> cut,
-        "source_cap" -> capped, "sampled" -> sampled) ++
-      (if (params.tokenBudgetPct.isDefined)
-        Seq("token_budget" -> selected) else Seq.empty)
-    val manifest = stages.zipWithIndex
-      .map { case ((name, df), i) => Pipeline.funnelStat(df, i, name) }
-      .reduce(_.union(_))
-      .orderBy(col("stage_idx"))
+      // stage 6: semantic dedup (q85, the SemDeDup step) over survivors that
+      // CARRY embeddings — text dedup cannot see a paraphrased copy, the
+      // embedding space can. CONTRACT: the embeddings table is keyed so that
+      // vec_id == the doc_id of the document it embeds (TESTDATA.md's
+      // one-embedding-per-doc layout) — the join below depends on it, and
+      // CurationRunSpec asserts a non-trivial hit count so a schema drift
+      // that breaks the alignment fails loudly instead of silently turning
+      // this stage into a pass-through. Docs without an embedding pass
+      // through unjudged (they were never clusterable); each ≥ 0.95-cosine
+      // component keeps its min doc_id. The drop set is an id-only
+      // left-anti join — text never rides the vector machinery.
+      // The quantizer is fit ONCE here (or reloaded from a prior run's
+      // artifact) and always persisted under model/coarse — see
+      // [[CurationParams.reuseModels]].
+      val semdeduped = timed("sem_dedup") {
+        val emb = Tables.embeddings(spark, sfDir)
+          .select(col("vec_id").as("doc_id"),
+            graft.functions.vectors.toDouble(col("embedding")).as("v"))
+          .filter(col("v").isNotNull)
+        val subject = dec.select(col("doc_id")).join(emb, Seq("doc_id"))
+          .select(col("doc_id").as("vec_id"), col("v"))
+          .localCheckpoint()
+        val n = subject.count()
+        if (n == 0) dec // nothing clusterable: the stage judges no one
+        else {
+          val quant = (params.reuseIndex.orElse(params.reuseModels),
+              params.refreshModels) match {
+            case (Some(prior), _) => timed("quant_load") {
+              ModelStore.loadQuantizer(
+              spark, s"${Artifacts.resolve(spark, prior)}/model/coarse")
+            }
+            // the production middle path: prior codebook + ONE Lloyd step
+            // on THIS run's subject (q111/imiRefresh composed into the
+            // pipeline) — adapts to drift for one aggregate pass instead
+            // of a full KMeans refit
+            case (None, Some(prior)) => timed("quant_refresh") {
+              ModelStore.loadQuantizer(
+              spark, s"${Artifacts.resolve(spark, prior)}/model/coarse") match {
+                case FlatQuantizer(cs) => FlatQuantizer(
+                  Similarity.refreshedCodebook(Similarity.codebookRefresh(
+                    subject.select(col("v")), cs)))
+                case imi: ImiQuantizer =>
+                  Similarity.imiRefresh(subject.select(col("v")), imi)
+              }
+            }
+            case (None, None) => timed("quant_fit") {
+              Quantizers.quantizerFor(subject, Similarity.ivfCellsFor(n))
+            }
+          }
+          ModelStore.saveQuantizer(spark, quant, s"$art/model/coarse")
+          // the (vec_id, cell) soft-assignment index. With --reuse-index the
+          // prior run's persisted rows serve every doc it already assigned
+          // (valid because the quantizer IS that run's — assignment is a
+          // pure function of (codebook, vector)) and only the ARRIVALS pay
+          // the assignment pass; the run always persists the index it USED
+          // (model/index) so any run can seed the next. The verdict then
+          // reads the just-written artifact: the candidate self-join
+          // consumes the cells frame twice, and re-reading clustered
+          // parquet beats re-executing the N×k assignment lineage.
+          val fresh: DataFrame => DataFrame = df => df.select(col("vec_id"),
+            explode(quant.probeCells(col("v"), Similarity.SemProbeCells))
+              .as("cell"))
+          val cells = params.reuseIndex match {
+            case Some(prior) => timed("index_load") {
+              val priorIdx = ModelStore.loadIndex(
+                spark, s"${Artifacts.resolve(spark, prior)}/model/index")
+                .select(col("vec_id"), col("cell"))
+              priorIdx.join(subject.select(col("vec_id")), Seq("vec_id"))
+                .unionByName(fresh(subject.join(
+                  priorIdx.select(col("vec_id")).distinct(),
+                  Seq("vec_id"), "left_anti")))
+            }
+            case None => fresh(subject)
+          }
+          ModelStore.saveIndex(cells, s"$art/model/index")
+          val verdict = Similarity.semanticDedupCells(
+            subject.select(col("vec_id")), subject,
+            ModelStore.loadIndex(spark, s"$art/model/index")
+              .select(col("vec_id"), col("cell")),
+            params.semDedupCosine)
+          dec.join(
+              verdict.filter(!col("is_kept"))
+                .select(col("vec_id").as("doc_id")),
+              Seq("doc_id"), "left_anti")
+            .localCheckpoint()
+        }
+      }
 
-    // per-doc fate: survivor sets are strictly nested, so the last stage a
-    // doc appears in is its fate — ONE union of (doc_id, stage_idx) pairs
-    // folded by a map-side-combinable max, then a plan-literal name lookup.
-    // One shuffle total, vs round 12's ten chained id-keyed left joins
-    // over the full raw frame (the widest plan in the artifacts stage —
-    // equivalent by the nesting, measured cheaper at sf10).
-    val stageName = typedLit(
-      stages.zipWithIndex.map { case ((name, _), i) => i -> name }.toMap)
-    val fates = stages.zipWithIndex
-      .map { case ((_, df), i) =>
-        df.select(col("doc_id"), lit(i).as("stage_idx")) }
-      .reduce(_.union(_))
-      .groupBy(col("doc_id"))
-      .agg(max(col("stage_idx")).as("last_stage_idx"))
-      .select(col("doc_id"), col("last_stage_idx"),
-        element_at(stageName, col("last_stage_idx")).as("last_stage"))
+      // stage 7: strip corpus-duplicated lines (q80b's 64-bit-key form);
+      // boilerplate-only docs empty out and leave the corpus here
+      val lined = timed("line_dedup") {
+        Pipeline.lineDedupHashed(semdeduped.select(col("doc_id"), col("text")))
+          .filter(col("n_kept") > 0)
+          .select(col("doc_id"), col("cleaned").as("text"))
+          .withColumn("n_tokens", graft.functions.text.tokenCount(col("text")))
+          .localCheckpoint()
+      }
 
-    val corpus = selected
-      .join(docs.select(col("doc_id"), col("lang"), col("source")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        col("n_tokens"))
+      // stage 8: cut corpus-duplicated 8-token spans (q84); span-only docs
+      // leave. Post-cut token count is exact arithmetic on spanCut's own
+      // columns (kept = n_tokens - n_cut), not a re-tokenize.
+      val cut = timed("span_cut") {
+        Dedup.spanCut(lined.select(col("doc_id"), col("text")))
+          .filter(col("n_tokens") - col("n_cut") > 0)
+          .select(col("doc_id"), col("cleaned").as("text"),
+            (col("n_tokens") - col("n_cut")).as("n_tokens"))
+          .localCheckpoint()
+      }
 
-    // stage 11: training-shard assignment (q100) over the survivors — the
-    // run's OUTPUT is a training-READY corpus: shard-partitioned files
-    // whose on-disk row order (pos within shard) IS the deterministic
-    // training order, re-runnable to identical bytes and epoch-reseedable
-    // via Pipeline.ShuffleSalt
-    val sharded = timed("shards") {
-      corpus.join(
+      // stage 9: per-source cap (q89's salted two-phase rank — the verdict
+      // frame is the artifact; the survivor frame is an id-only semi join)
+      val (capVerdict, capped) = timed("source_cap") {
+        val v = Pipeline.sourceCap(
+          cut.join(docs.select(col("doc_id"), col("source")), Seq("doc_id")),
+          params.sourceCap).localCheckpoint()
+        (v, cut.join(v.select(col("doc_id")), Seq("doc_id")).localCheckpoint())
+      }
+
+      // stage 10: language-mixture sampling (q75) — verdict keeps the losers
+      // (audit trail); the corpus keeps the winners
+      val (sampleVerdict, sampled) = timed("sampled") {
+        val v = Pipeline.mixtureSample(
+          capped.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+            .select(col("doc_id"), col("lang"), col("text"))).localCheckpoint()
+        (v, capped
+          .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))
+          .localCheckpoint())
+      }
+
+      // stage 10.5 (opt-in): q135's token-budget selection over the sampled
+      // survivors — keep the best-classifier-scored prefix whose token mass
+      // fits tokenBudgetPct% of the surviving total. The verdict frame (per
+      // selected doc: score, tokens, cumulative) is the artifact; the
+      // survivor frame is an id-only semi join, the source-cap idiom.
+      val (budgetVerdict, selected) = params.tokenBudgetPct match {
+        case None => (None, sampled)
+        case Some(pct) => timed("token_budget") {
+          val v = Pipeline.tokenBudgetSelect(
+            sampled.select(col("doc_id"), col("text")), pct).localCheckpoint()
+          (Some(v),
+            sampled.join(v.select(col("doc_id")), Seq("doc_id"))
+              .localCheckpoint())
+        }
+      }
+
+      // the funnel's last frame is re-read by the manifest stat AND the fates
+      // fold — swap in the checkpointed copy so neither re-executes the
+      // gram-explode decontamination lineage
+      val stages = (funnel.init :+ (funnel.last._1 -> dec)) ++
+        Seq("sem_dedup" -> semdeduped, "line_dedup" -> lined, "span_cut" -> cut,
+          "source_cap" -> capped, "sampled" -> sampled) ++
+        (if (params.tokenBudgetPct.isDefined)
+          Seq("token_budget" -> selected) else Seq.empty)
+      val manifest = stages.zipWithIndex
+        .map { case ((name, df), i) => Pipeline.funnelStat(df, i, name) }
+        .reduce(_.union(_))
+        .orderBy(col("stage_idx"))
+
+      // per-doc fate: survivor sets are strictly nested, so the last stage a
+      // doc appears in is its fate — ONE union of (doc_id, stage_idx) pairs
+      // folded by a map-side-combinable max, then a plan-literal name lookup.
+      // One shuffle total, vs round 12's ten chained id-keyed left joins
+      // over the full raw frame (the widest plan in the artifacts stage —
+      // equivalent by the nesting, measured cheaper at sf10).
+      val stageName = typedLit(
+        stages.zipWithIndex.map { case ((name, _), i) => i -> name }.toMap)
+      val fates = stages.zipWithIndex
+        .map { case ((_, df), i) =>
+          df.select(col("doc_id"), lit(i).as("stage_idx")) }
+        .reduce(_.union(_))
+        .groupBy(col("doc_id"))
+        .agg(max(col("stage_idx")).as("last_stage_idx"))
+        .select(col("doc_id"), col("last_stage_idx"),
+          element_at(stageName, col("last_stage_idx")).as("last_stage"))
+
+      val corpus = selected
+        .join(docs.select(col("doc_id"), col("lang"), col("source")),
+          Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("source"), col("text"),
+          col("n_tokens"))
+
+      // stage 11: training-shard assignment (q100) over the survivors — the
+      // run's OUTPUT is a training-READY corpus: shard-partitioned files
+      // whose on-disk row order (pos within shard) IS the deterministic
+      // training order, re-runnable to identical bytes and epoch-reseedable
+      // via Pipeline.ShuffleSalt
+      val sharded = corpus.join(
           Pipeline.trainShards(selected.select(col("doc_id"), col("text")))
             .select(col("doc_id"), col("shard"), col("pos")),
           Seq("doc_id"))
         .select(col("shard"), col("pos"), col("doc_id"), col("lang"),
           col("source"), col("text"), col("n_tokens"))
-    }
-    // provenance: the operating points this run actually used — a verdict
-    // table without its thresholds is not reproducible
-    val runParams = {
-      import spark.implicits._
-      Seq((params.semDedupCosine, params.classifierFloorE6,
-        params.nearDupJaccard, params.sourceCap,
-        params.reuseModels.orNull, params.reuseIndex.orNull,
-        params.refreshModels.orNull, params.prevRun.orNull,
-        params.stripMarkup, params.gopherGate, params.qualityKeeper,
-        params.packSequences, params.writeScores,
-        params.tokenBudgetPct.map(_.toString).orNull))
-        .toDF("sem_dedup_cosine", "classifier_floor_e6", "neardup_jaccard",
-          "source_cap", "reused_models_from", "reused_index_from",
-          "refreshed_models_from", "prev_run", "strip_markup",
-          "gopher_gate", "quality_keeper", "pack_sequences", "write_scores",
-          "token_budget_pct")
-    }
-    timed("artifacts") {
-      PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id")
-      PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos")
-      capVerdict.write.mode("overwrite").parquet(s"$art/verdicts/source_cap")
-      sampleVerdict.write.mode("overwrite").parquet(s"$art/verdicts/sample")
-      // no stale-table delete needed for a flag-less rerun (the old
-      // write-scores lesson): every run stages into a FRESH version dir,
-      // so a prior run's budget verdict can't leak into this one's set
-      budgetVerdict.foreach(
-        _.write.mode("overwrite").parquet(s"$art/verdicts/token_budget"))
-      fates.write.mode("overwrite").parquet(s"$art/verdicts/doc_fates")
-      runParams.coalesce(1).write.mode("overwrite").parquet(s"$art/run_params")
-      manifest.coalesce(1).write.mode("overwrite").parquet(s"$art/manifest")
-    }
-    // the persistable dedup-index state (q78's production contract): exact
-    // md5 keys, hashed shingle sets, and the LSH band index over the
-    // snapshot this run ingested (the same population doc_fates covers) —
-    // the artifacts a later `--incremental` run verdicts its arrivals
-    // against WITHOUT re-deduping, or even rescanning, this corpus. One
-    // extra shingle pass over the checkpointed scan; the shingle table is
-    // ~8 B/shingle, far under the text it summarizes.
-    timed("dedup_index") {
-      val keyed = docs.select(col("doc_id"), col("text"))
-      Dedup.exactKeyIndex(keyed)
-        .write.mode("overwrite").parquet(s"$art/index/dedup/exact")
-      val sh = Dedup.nearDupShingles(keyed).localCheckpoint()
-      sh.write.mode("overwrite").parquet(s"$art/index/dedup/shingles")
-      Dedup.nearDupBandIndex(sh)
-        .write.mode("overwrite").parquet(s"$art/index/dedup/bands")
-      // the seen-id set an --incremental successor anti-joins to find its
-      // arrivals. Deliberately the RAW scanned ids, not doc_fates: fates
-      // exclude the eval-side holdout (doc_id % EvalEvery == 0), which a
-      // later snapshot still contains — fates-based arrival detection
-      // would re-verdict the holdout every night
-      scanned.select(col("doc_id")).distinct()
-        .write.mode("overwrite").parquet(s"$art/index/seen")
-    }
-    // opt-in q124 layout: the packed training-sequence plan over the SAME
-    // survivors the shards stage laid out (next-fit in q100's salted
-    // order, so shard here == shards/'s shard) — the dataloader reads
-    // sequences instead of padding per row
-    if (params.packSequences) timed("pack") {
-      Pipeline.packSequences(selected.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(s"$art/layout/sequences")
-    }
-    // per-doc classifier scores of the RAW snapshot (pre-gate, so two
-    // runs' tables describe the same population even when their gate
-    // params differ) — the between-runs monitoring artifact the next
-    // run's --prev-run PSI reads, q116's production prev side. This is a
-    // full-snapshot token-explode pass (the one stage whose sf10 wall
-    // dominated the round-13 profile), so a run whose output will never
-    // seed a monitoring chain can opt out with --write-scores false
-    if (params.writeScores) timed("scores") {
-      operators.TextAnalysis.classifierScoresUnsorted(
-          scanned.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(s"$art/verdicts/scores")
-    }
-    // (an opted-out run needs no stale-scores delete anymore: the fresh
-    // staging version starts empty, so a later --prev-run reading THIS
-    // run finds no scores table and fails loudly — the hazard the old
-    // Hadoop-FileSystem delete existed to close is gone structurally)
-    // between-runs monitoring against a REAL prior run: BOTH sides of
-    // both reports are READ from persisted artifacts (one pass + one join
-    // — the collapse q105/q116 promise): the prev side from the prior
-    // run's, the cur side from the files this run just wrote — re-reading
-    // clustered parquet beats re-executing the 11-frame fates lineage /
-    // the scoring pass (the q78 between-stages lesson)
-    params.prevRun.foreach { prior => timed("prev_drift") {
-      val priorRoot = Artifacts.resolve(spark, prior)
-      Pipeline.fateDrift(
-          spark.read.parquet(s"$priorRoot/verdicts/doc_fates")
-            .select(col("doc_id"), col("last_stage").as("fate")),
-          spark.read.parquet(s"$art/verdicts/doc_fates")
-            .select(col("doc_id"), col("last_stage").as("fate")))
-        .write.mode("overwrite").parquet(s"$art/verdicts/drift")
-      operators.TextAnalysis.scoreDriftPsiBetween(
-          spark.read.parquet(s"$priorRoot/verdicts/scores"),
-          spark.read.parquet(s"$art/verdicts/scores"))
-        .write.mode("overwrite").parquet(s"$art/verdicts/psi")
-    } }
-    // the publish: everything above is invisible to readers until this
-    // single pointer swap lands; a crash anywhere earlier leaves the
-    // prior committed run intact
-    Artifacts.commit(spark, outDir, art)
-    manifest
+      // provenance: the operating points this run actually used — a verdict
+      // table without its thresholds is not reproducible
+      val runParams = {
+        import spark.implicits._
+        Seq((params.semDedupCosine, params.classifierFloorE6,
+          params.nearDupJaccard, params.sourceCap,
+          params.reuseModels.orNull, params.reuseIndex.orNull,
+          params.refreshModels.orNull, params.prevRun.orNull,
+          params.stripMarkup, params.gopherGate, params.qualityKeeper,
+          params.packSequences, params.writeScores,
+          params.tokenBudgetPct.map(_.toString).orNull))
+          .toDF("sem_dedup_cosine", "classifier_floor_e6", "neardup_jaccard",
+            "source_cap", "reused_models_from", "reused_index_from",
+            "refreshed_models_from", "prev_run", "strip_markup",
+            "gopher_gate", "quality_keeper", "pack_sequences", "write_scores",
+            "token_budget_pct")
+      }
+      // every sink write reads only chain frames built above, and none
+      // reads another's output, so they are submitted together; the join
+      // waits for them and for the dedup-index/scores branch
+      timed("artifacts") {
+        def write(path: String)(f: => Unit): Unit =
+          branches.fork(timed(path)(f))
+        write("corpus") {
+          PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id")
+        }
+        write("shards") {
+          PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos")
+        }
+        write("verdicts/source_cap") {
+          capVerdict.write.mode("overwrite").parquet(s"$art/verdicts/source_cap")
+        }
+        write("verdicts/sample") {
+          sampleVerdict.write.mode("overwrite").parquet(s"$art/verdicts/sample")
+        }
+        // no stale-table delete needed for a flag-less rerun (the old
+        // write-scores lesson): every run stages into a FRESH version dir,
+        // so a prior run's budget verdict can't leak into this one's set
+        budgetVerdict.foreach(v => write("verdicts/token_budget") {
+          v.write.mode("overwrite").parquet(s"$art/verdicts/token_budget")
+        })
+        write("verdicts/doc_fates") {
+          fates.write.mode("overwrite").parquet(s"$art/verdicts/doc_fates")
+        }
+        write("run_params") {
+          runParams.coalesce(1).write.mode("overwrite").parquet(s"$art/run_params")
+        }
+        write("manifest") {
+          manifest.coalesce(1).write.mode("overwrite").parquet(s"$art/manifest")
+        }
+        // opt-in q124 layout: the packed training-sequence plan over the
+        // SAME survivors the shards stage laid out (next-fit in q100's
+        // salted order, so shard here == shards/'s shard) — the dataloader
+        // reads sequences instead of padding per row
+        if (params.packSequences) write("layout/sequences") {
+          Pipeline.packSequences(selected.select(col("doc_id"), col("text")))
+            .write.mode("overwrite").parquet(s"$art/layout/sequences")
+        }
+        branches.join()
+      }
+      // between-runs monitoring against a REAL prior run: BOTH sides of
+      // both reports are READ from persisted artifacts (one pass + one join
+      // — the collapse q105/q116 promise): the prev side from the prior
+      // run's, the cur side from the files this run just wrote — re-reading
+      // clustered parquet beats re-executing the 11-frame fates lineage /
+      // the scoring pass (the q78 between-stages lesson). It reads
+      // doc_fates and scores, so it runs after the join, not as a branch.
+      params.prevRun.foreach { prior => timed("prev_drift") {
+        val priorRoot = Artifacts.resolve(spark, prior)
+        Pipeline.fateDrift(
+            spark.read.parquet(s"$priorRoot/verdicts/doc_fates")
+              .select(col("doc_id"), col("last_stage").as("fate")),
+            spark.read.parquet(s"$art/verdicts/doc_fates")
+              .select(col("doc_id"), col("last_stage").as("fate")))
+          .write.mode("overwrite").parquet(s"$art/verdicts/drift")
+        operators.TextAnalysis.scoreDriftPsiBetween(
+            spark.read.parquet(s"$priorRoot/verdicts/scores"),
+            spark.read.parquet(s"$art/verdicts/scores"))
+          .write.mode("overwrite").parquet(s"$art/verdicts/psi")
+      } }
+      // the publish: everything above is invisible to readers until this
+      // single pointer swap lands; a crash anywhere earlier leaves the
+      // prior committed run intact
+      Artifacts.commit(spark, outDir, art)
+      manifest
+    } finally branches.close()
   }
 
   /** The `--incremental <priorRun>` mode: the q78 verdict as a RUN, served
@@ -607,6 +714,7 @@ object CurationRun {
     // previous committed state (not a torn index) for the next night
     val priorRoot = Artifacts.resolve(spark, prior)
     val art = Artifacts.stage(spark, outDir)
+    val timed = new StageTimer
     locally {
       val rp = spark.read.parquet(s"$priorRoot/run_params").collect().head
       require(rp.getAs[Boolean]("strip_markup") == params.stripMarkup &&

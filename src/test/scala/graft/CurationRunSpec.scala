@@ -2,9 +2,34 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Pipeline
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.parquet.hadoop.ParquetOutputCommitter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** A parquet committer whose job set-up fails for the output paths ending
+  * in [[FailingCommitter.failOn]]: a sink write that throws on the driver
+  * thread that submitted it, with no hook in the engine. Installed through
+  * `spark.sql.parquet.output.committer.class`; every other path commits as
+  * the stock [[ParquetOutputCommitter]] does.
+  */
+class FailingCommitter(path: Path, ctx: TaskAttemptContext)
+    extends ParquetOutputCommitter(path, ctx) {
+  override def setupJob(job: JobContext): Unit = {
+    FailingCommitter.failOn.filter(path.toString.endsWith(_)).foreach { s =>
+      throw new java.io.IOException(s"injected write failure on $s")
+    }
+    super.setupJob(job)
+  }
+}
+
+object FailingCommitter {
+  @volatile var failOn: Option[String] = None
+}
 
 /** End-to-end curation run against the sf0.001 fixture: one command must
   * produce sink artifacts whose funnel rows match q88's (the driver's
@@ -746,5 +771,130 @@ class CurationRunSpec extends AnyFunSuite {
 
     Seq(outA, outB, outC).foreach(d =>
       new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively())
+  }
+
+  private def branchThreadsAlive(): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("curation-run-branch"))
+      .map(_.getName)
+
+  test("branches: join waits for every branch, then rethrows the first failure in fork order") {
+    val b = new CurationRun.Branches
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      b.fork { Thread.sleep(200); throw new IllegalStateException("first") }
+      b.fork { throw new IllegalArgumentException("second") }
+      b.fork { Thread.sleep(400); slowDone.set(true) }
+      val e = intercept[IllegalStateException](b.join())
+      assert(e.getMessage === "first",
+        "join must rethrow the failure of the earliest fork, not the earliest to fail")
+      assert(slowDone.get(),
+        "join returned while a branch was still running")
+    } finally b.close()
+    assert(branchThreadsAlive().isEmpty,
+      s"threads alive after close: ${branchThreadsAlive()}")
+    // a clean join returns normally
+    val ok = new CurationRun.Branches
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    try {
+      (1 to 3).foreach(_ => ok.fork { ran.incrementAndGet(); () })
+      ok.join()
+    } finally ok.close()
+    assert(ran.get() === 3)
+  }
+
+  /** A branch that throws (the dedup-index branch forked before the
+    * funnel, or an artifact write) must keep `Artifacts.commit` from
+    * running: the prior committed run still resolves, byte-identical, and
+    * no branch thread outlives `run` on either outcome.
+    */
+  test("a failed branch never commits: the prior run stays readable and no branch thread survives") {
+    import spark.implicits._
+    def prose(i: Int): String = {
+      val t = (0 until 80).map(j => s"c${i}x$j").toArray
+      t(5) = "the"; t(20) = "and"; t(35) = "is"; t(50) = "that"
+      t.mkString(" ")
+    }
+    def write(dir: String, docs: Seq[(Long, String)]): Unit = {
+      docs.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      docs.zipWithIndex.map { case ((id, _), i) =>
+        (id, Array.tabulate(8)(d => if (d == i % 8) 1.0f else 0.01f * i), 0)
+      }.toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    val sfA = Files.createTempDirectory("branch_sfA").toString
+    val sfB = Files.createTempDirectory("branch_sfB").toString
+    write(sfA, (1 to 3).map(i => i.toLong -> prose(i)))
+    write(sfB, (1 to 5).map(i => i.toLong -> prose(i)))
+    val out = Files.createTempDirectory("branch_out").toString
+    CurationRun.run(spark, sfA, out).collect()
+    assert(branchThreadsAlive().isEmpty,
+      s"threads alive after a committed run: ${branchThreadsAlive()}")
+    val v1 = art(out)
+    def manifestRows(d: String) = spark.read.parquet(s"$d/manifest")
+      .orderBy(col("stage_idx")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    val committed = manifestRows(v1)
+    val key = "spark.sql.parquet.output.committer.class"
+    // index/seen: the dedup-index branch, forked before the funnel;
+    // verdicts/doc_fates: one of the artifact writes
+    for (target <- Seq("index/seen", "verdicts/doc_fates")) {
+      spark.conf.set(key, classOf[FailingCommitter].getName)
+      FailingCommitter.failOn = Some(target)
+      val e = try intercept[Exception] {
+        CurationRun.run(spark, sfB, out).collect()
+      } finally {
+        FailingCommitter.failOn = None
+        spark.conf.unset(key)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(
+          s"injected write failure on $target")),
+        s"run must rethrow the $target branch's failure, got $e")
+      assert(branchThreadsAlive().isEmpty,
+        s"threads alive after a failed run ($target): ${branchThreadsAlive()}")
+      assert(art(out) === v1,
+        s"a failed $target branch must not move the committed pointer")
+      assert(manifestRows(art(out)) === committed,
+        "prior committed artifacts must be untouched by the failed run")
+    }
+    Seq(sfA, sfB, out).foreach(d =>
+      new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively())
+  }
+
+  /** The branches change which thread submits each job, never what a job
+    * computes: two runs over the same input write the same rows to every
+    * artifact table (each table's rows as JSON, sorted).
+    */
+  test("two runs over the same input write identical rows to every artifact table") {
+    val again = Files.createTempDirectory("curation_run_again").toString
+    CurationRun.run(spark, sfDir, again).collect()
+    def tables(root: String): Map[String, Seq[String]] = {
+      val base = new java.io.File(root).toPath
+      Files.walk(base).iterator().asScala
+        .filter(_.getFileName.toString == "_SUCCESS")
+        .map { s =>
+          base.relativize(s.getParent).toString ->
+            spark.read.parquet(s.getParent.toString).toJSON.collect()
+              .toSeq.sorted
+        }.toMap
+    }
+    val first = tables(art(outDir))
+    val second = tables(art(again))
+    val expected = Set("corpus", "shards", "run_params", "manifest",
+      "index/seen", "index/dedup/exact", "index/dedup/shingles",
+      "index/dedup/bands", "model/coarse", "model/index",
+      "verdicts/source_cap", "verdicts/sample", "verdicts/doc_fates",
+      "verdicts/scores")
+    assert(first.keySet === expected, "artifact tables of the first run")
+    assert(second.keySet === expected, "artifact tables of the second run")
+    expected.foreach { t =>
+      assert(first(t).nonEmpty, s"$t is empty")
+      assert(first(t) === second(t), s"$t differs between two runs")
+    }
+    new scala.reflect.io.Directory(new java.io.File(again)).deleteRecursively()
   }
 }

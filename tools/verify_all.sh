@@ -9,6 +9,10 @@
 #                                      the benchmark's 3x sf0.1 input; sf0.01's
 #                                      documents are below the floor of q01's
 #                                      map-side spread, this input is above it
+#   7. perfbench/run.py (curate)     — CurationRun.run on the sf0.1 documents,
+#                                      branch threads included: the manifest's
+#                                      first four rows must equal q88's DuckDB
+#                                      oracle rows, its stages never grow
 # Exits non-zero on the FIRST failing step; each step's exit code is printed.
 # Usage: tools/verify_all.sh [sfDir] [outDir]
 set -u
@@ -37,4 +41,5 @@ step "typelint"   python3 tools/typelint.py "$OUT_DIR" "$SF_DIR"
 step "q69-cross"  python3 tools/q69_cross_check.py "$OUT_DIR"
 # exits 1 on any oracle mismatch (or a self-test that fails to catch one)
 step "perfbench"  python3 perfbench/run.py --workload mapreduce --seed 1 --seconds 5 --trace 0
-echo "VERIFY_ALL: PASS (suite + verify dump + oracle compare + typelint + q69 cross-check + perfbench mapreduce)"
+step "curate"     python3 perfbench/run.py --workload curate --seed 1 --seconds 5 --trace 0
+echo "VERIFY_ALL: PASS (suite + verify dump + oracle compare + typelint + q69 cross-check + perfbench mapreduce + curate)"

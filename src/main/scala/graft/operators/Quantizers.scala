@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.functions.expressions.vecexprs
+import graft.functions.expressions.{NearestCellsExpr, vecexprs}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** A fitted coarse quantizer for the IVF family (q39/q85/q92b): maps an
@@ -90,9 +91,14 @@ final case class ImiQuantizer(cbA: Array[Array[Double]],
   override def probeWidthFactor: Int = 2 // measured — see the trait doc
 }
 
-/** Quantizer fitting: bounded hash-keyed samples + ML KMeans, flat up to
-  * [[FlatCellCap]] cells, IMI beyond. All fit inputs are (vec_id, v:
-  * array<double>) frames with no nulls/zero-norms (callers guard).
+/** Quantizer fitting, flat up to [[FlatCellCap]] cells, IMI beyond, PQ per
+  * dimension slice. Each fit collects ONE bounded hash-keyed sample to the
+  * driver (one Spark job over a materialized input) and runs the plain
+  * [[lloyd]] loop over it or over its dimension slices: the sample is at
+  * most max([[FitSampleFloor]], 16·k) rows and `orderBy.limit` already
+  * yields one partition, so a distributed fit would be a chain of one-task
+  * jobs. All fit inputs are (vec_id, v: array<double>) frames with no
+  * nulls/zero-norms (callers guard).
   */
 object Quantizers {
 
@@ -113,6 +119,12 @@ object Quantizers {
     * center-starved.
     */
   val FitSampleFloor = 4096
+
+  /** Lloyd rounds per fit: few, because a coarse quantizer only needs
+    * roughly-balanced cells, not converged-optimal ones (recall bounds
+    * asserted in SimilaritySpec).
+    */
+  val LloydIters = 5
 
   /** The fit quantizer for a target cell count: flat codebook while the
     * plan literal can hold it, IMI product past it.
@@ -137,59 +149,36 @@ object Quantizers {
     * unflagged. Density-proportional is what a coarse quantizer wants
     * anyway: heavy regions get more centroids, which shrinks Σ|cell|²
     * where pair mass concentrates. Lowest keys win (TakeOrdered with a
-    * vec_id tiebreak — a total order, insensitive to file order), and k
-    * clamps to the sample size so a tiny corpus never asks KMeans for more
-    * centers than it has points.
+    * vec_id tiebreak — a total order, insensitive to file order), and
+    * [[lloyd]] seeds only from distinct sample points, so a tiny or
+    * duplicate-heavy corpus gets fewer centers, never a repeated one.
     */
-  def fitCentroids(clean: DataFrame, k: Int): Array[Array[Double]] = {
-    import org.apache.spark.ml.functions.array_to_vector
-    // sample count rides the checkpoint job (Similarity.ckptWithCount)
-    val (sample, n) = Similarity.ckptWithCount(
-      fitSample(clean, k).withColumn("fv", array_to_vector(col("v"))))
-    kmeansCenters(sample, math.min(k, n.toInt))
-  }
+  def fitCentroids(clean: DataFrame, k: Int): Array[Array[Double]] =
+    lloyd(fitSample(clean, k), k)
 
   /** Fit the two IMI half-space codebooks: k1 ~ √kTotal codewords on the
     * first ⌊dim/2⌋ dims, k2 = ⌈kTotal/k1⌉ on the rest, both capped at
     * [[FlatCellCap]] (so kTotal caps at FlatCellCap²). One shared sample
-    * (sized for the larger side), two KMeans fits on its halves.
+    * (sized for the larger side), two Lloyd fits on its halves.
     */
   def fitImiCodebooks(clean: DataFrame,
       kTotal: Int): (Array[Array[Double]], Array[Array[Double]]) = {
-    import org.apache.spark.ml.functions.array_to_vector
     val k1 = math.min(FlatCellCap,
       math.max(1, math.ceil(math.sqrt(kTotal.toDouble)).toInt))
     val k2 = math.min(FlatCellCap,
       math.max(1, math.ceil(kTotal.toDouble / k1).toInt))
-    val half = floor(size(col("v")) / 2).cast("int")
-    // sample count AND the dim gate ride the checkpoint job itself (the
-    // ckptWithCount idiom, plus min(size(v)) as a second observed metric
-    // — identical to the old first-row probe on the uniform-dim input the
-    // fit requires, and it replaces a dedicated head() job)
-    val obs = org.apache.spark.sql.Observation()
     val sample = fitSample(clean, math.max(k1, k2))
-      .observe(obs, count(lit(1)).as("n"),
-        coalesce(min(size(col("v"))), lit(0)).as("mindim"))
-      .select(
-        array_to_vector(slice(col("v"), lit(1), half)).as("fva"),
-        array_to_vector(slice(col("v"), half + 1, size(col("v"))))
-          .as("fvb"))
-      .localCheckpoint()
-    val n = obs.get("n").asInstanceOf[Number].intValue
-    require(n > 0, "IMI quantizer cannot fit an empty corpus")
-    require(obs.get("mindim").asInstanceOf[Number].intValue >= 2,
+    require(sample.nonEmpty, "IMI quantizer cannot fit an empty corpus")
+    require(sample.map(_.length).min >= 2,
       "IMI quantizer needs dim >= 2 (first half-space is empty)")
-    val cbA = kmeansCenters(sample.select(col("fva").as("fv")),
-      math.min(k1, n))
-    val cbB = kmeansCenters(sample.select(col("fvb").as("fv")),
-      math.min(k2, n))
-    (cbA, cbB)
+    (lloyd(sample.map(v => v.take(v.length / 2)), k1),
+      lloyd(sample.map(v => v.drop(v.length / 2)), k2))
   }
 
   /** Fit the M per-subspace product-quantization codebooks (k codewords
     * each) for [[Similarity.pqAdcTopK]]: ONE shared bounded sample (the
     * same per-row-hash-keyed discipline as every other fit here), then M
-    * independent KMeans fits over its disjoint dimension slices. Subspace
+    * independent Lloyd fits over its disjoint dimension slices. Subspace
     * bounds follow the integer rule lo_m = ⌊dim·m/M⌋ — the same arithmetic
     * the encode pass and the DuckDB mirror use, so all three agree on
     * ragged dims. Codebook state is M·k·(dim/M) = k·dim doubles — the SAME
@@ -198,57 +187,62 @@ object Quantizers {
     */
   def pqFitCodebooks(clean: DataFrame, m: Int,
       k: Int): Array[Array[Array[Double]]] = {
-    import org.apache.spark.ml.functions.array_to_vector
-    import scala.collection.parallel.CollectionConverters._
-    // count AND dim ride the checkpoint job (min(size(v)) equals the old
-    // first-row dim probe on the uniform-dim input the fit requires, and
-    // replaces a dedicated head() job)
-    val obs = org.apache.spark.sql.Observation()
     val sample = fitSample(clean, k)
-      .observe(obs, count(lit(1)).as("n"),
-        coalesce(min(size(col("v"))), lit(0)).as("dim"))
-      .localCheckpoint()
-    val n = obs.get("n").asInstanceOf[Number].intValue
-    require(n > 0, "PQ quantizer cannot fit an empty corpus")
-    val dim = obs.get("dim").asInstanceOf[Number].intValue
+    require(sample.nonEmpty, "PQ quantizer cannot fit an empty corpus")
+    val dim = sample.map(_.length).min
     require(dim >= m, s"PQ needs dim >= $m subspaces, got $dim")
-    // the M fits are independent jobs over the one materialized sample —
-    // submit them concurrently (driver threads; local[32] has the slack,
-    // and on a cluster the scheduler interleaves their tiny stages).
-    // Sequential fits made the fit wall M× one fit and dominated q98.
-    // .par preserves index order, and each fit is seed-42 deterministic,
-    // so the codebooks are bit-identical to the sequential form's.
-    (0 until m).toArray.par.map { i =>
-      val lo = dim * i / m
-      val hi = dim * (i + 1) / m
-      kmeansCenters(
-        sample.select(array_to_vector(
-          slice(col("v"), lit(lo + 1), lit(hi - lo))).as("fv")),
-        math.min(k, n))
-    }.toArray
+    Array.tabulate(m)(i =>
+      lloyd(sample.map(_.slice(dim * i / m, dim * (i + 1) / m)), k))
   }
 
   /** The bounded deterministic fit sample (see [[fitCentroids]] for why the
-    * key is per-row and the order total); ≥ 16 points per requested center
-    * so the fit is never center-starved.
+    * key is per-row and the order total), collected to the driver in
+    * (hk, vec_id) order by one collect; ≥ 16 points per requested center
+    * so the fit is never center-starved. Driver footprint: max(4096, 16·k)
+    * rows × dim doubles, 32 MB at k = FlatCellCap and 64 dims.
     */
-  private def fitSample(clean: DataFrame, k: Int): DataFrame =
+  private def fitSample(clean: DataFrame, k: Int): Array[Array[Double]] =
     clean
-      .select(col("vec_id"), col("v"),
-        xxhash64(col("v"), col("vec_id")).as("hk"))
+      .select(col("v"), xxhash64(col("v"), col("vec_id")).as("hk"),
+        col("vec_id"))
       .orderBy(col("hk"), col("vec_id"))
       .limit(math.max(FitSampleFloor, 16 * k))
+      .collect()
+      .map(_.getSeq[Double](0).toArray)
 
-  /** One ML KMeans fit over a materialized sample carrying `fv`. Random
-    * init + few iterations: k-means|| costs several extra distributed
-    * passes and a coarse quantizer only needs roughly-balanced cells, not
-    * converged-optimal ones (recall bounds asserted in SimilaritySpec).
+  /** Plain Lloyd k-means over a driver-side sample. Every choice is pinned,
+    * so a codebook is a pure function of the sample's rows and order:
+    *   - init: the first k DISTINCT points in sample order (the order is
+    *     already a uniform deterministic draw); fewer distinct points than
+    *     k gives fewer centers;
+    *   - exactly [[LloydIters]] assign/update rounds;
+    *   - assignment: [[NearestCellsExpr.compute]]'s top-1, the rule the
+    *     serve path uses, so fit and serve share one tie-break (lowest
+    *     center id) and one NaN fallback;
+    *   - an empty cell keeps its center;
+    *   - sums accumulate in sample order, so the codebook is bit-identical
+    *     at any core or partition count.
     */
-  private def kmeansCenters(sample: DataFrame, k: Int): Array[Array[Double]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    new KMeans()
-      .setK(math.max(1, k)).setSeed(42).setMaxIter(5).setInitMode("random")
-      .setFeaturesCol("fv").setPredictionCol("cell")
-      .fit(sample).clusterCenters.map(_.toArray)
+  private def lloyd(points: Array[Array[Double]],
+      k: Int): Array[Array[Double]] = {
+    val centers = points.iterator.distinctBy(_.toSeq).take(k).toArray
+    val rows = points.map(ArrayData.toArrayData)
+    for (_ <- 0 until LloydIters) {
+      val sums = centers.map(c => new Array[Double](c.length))
+      val counts = new Array[Int](centers.length)
+      var i = 0
+      while (i < points.length) {
+        val c = NearestCellsExpr.compute(rows(i), centers, 1).getInt(0)
+        val p = points(i)
+        val s = sums(c)
+        var j = 0
+        while (j < s.length) { s(j) += p(j); j += 1 }
+        counts(c) += 1
+        i += 1
+      }
+      for (c <- centers.indices if counts(c) > 0)
+        centers(c) = sums(c).map(_ / counts(c))
+    }
+    centers
   }
 }

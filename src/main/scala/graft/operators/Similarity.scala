@@ -197,17 +197,17 @@ object Similarity {
 
   /** q92b: q92's PRODUCTION twin — the same rank-and-gate tail fed by IVF
     * candidate generation instead of the exact probes × corpus score. The
-    * sample-fit quantizer (q85's [[fitCentroids]], ~√n cells) assigns every
-    * candidate its single nearest cell in one codegen'd pass; each probe
-    * explodes to its [[ivfProbesFor]] nearest cells (q39's shape) and scores
-    * only cell-mates. Cost: |probe cells| is KB-scale and broadcasts, the
-    * corpus never shuffles, and scored pairs shrink from probes × N to
-    * probes × (IvfProbes/k̂) × N — the q82-vs-q25 anchor/twin contract
-    * applied to hard-negative mining. A candidate holds ONE cell, so a
-    * (probe, cand) pair surfaces at most once per probe cell and needs no
-    * pair dedup before scoring (q25's score-once rule holds by shape).
-    * Rows-only registry surface; recall vs the exact q92 anchor is
-    * property-checked in SimilaritySpec.
+    * sample-fit quantizer (q85's [[Quantizers.fitCentroids]], ~√n cells)
+    * assigns every candidate its single nearest cell in one codegen'd
+    * pass; each probe explodes to its [[ivfProbesFor]] nearest cells
+    * (q39's shape) and scores only cell-mates. Cost: |probe cells| is
+    * KB-scale and broadcasts, the corpus never shuffles, and scored pairs
+    * shrink from probes × N to probes × (IvfProbes/k̂) × N — the
+    * q82-vs-q25 anchor/twin contract applied to hard-negative mining. A
+    * candidate holds ONE cell, so a (probe, cand) pair surfaces at most
+    * once per probe cell and needs no pair dedup before scoring (q25's
+    * score-once rule holds by shape). Rows-only registry surface; recall
+    * vs the exact q92 anchor is property-checked in SimilaritySpec.
     */
   def q92b(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -338,19 +338,11 @@ object Similarity {
         lit(0.0).as("cos_dist"), lit(0.0).as("z"), lit(false).as("is_outlier"))
     val spark = src.sparkSession
     import spark.implicits._
-    val seeds = fitCentroids(clean, k).zipWithIndex
+    val seeds = Quantizers.fitCentroids(clean, k).zipWithIndex
       .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
       .toDF("seed_id", "sv")
     outlierTail(clean, seeds)
   }
-
-  /** Fit the flat coarse quantizer on a bounded hash-keyed sample — the
-    * shared idiom of q85 and q93's production form, now hosted with the
-    * two-level machinery in [[Quantizers.fitCentroids]] (which documents
-    * the per-row sample key and why dedup-by-content would be wrong).
-    */
-  private def fitCentroids(clean: DataFrame, k: Int): Array[Array[Double]] =
-    Quantizers.fitCentroids(clean, k)
 
   /** Null and zero-norm vectors have no defined cosine distance (NULL / NaN
     * d) and would win Spark's min(struct) NULL-first ordering while the
@@ -1045,23 +1037,8 @@ object Similarity {
       .filter(col("v").isNotNull)
     val (base, n) = ckptWithCount(baseRaw)
     if (n == 0) return emptyTopK(spark)
-    // The coarse-quantizer and PQ-codebook fits are data-independent reads
-    // of the same materialized base (each draws its own deterministic
-    // sample); submitting one from a second driver thread overlaps their
-    // tiny sequential Lloyd stages (guide §2.6 — the scheduler happily
-    // interleaves two jobs' stages; measured sequential: coarse 0.87 s +
-    // PQ 1.17 s, warm). Each fit is seed-42-deterministic over its own
-    // sample, so concurrency cannot change either result — the same
-    // argument as pqFitCodebooks' internal .par over subspaces.
-    val quantF = scala.concurrent.Future {
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      Quantizers.quantizerFor(base, ivfCellsFor(n))
-    }(scala.concurrent.ExecutionContext.global)
-    val cbs = Quantizers.pqFitCodebooks(base, PqSubspaces, PqCodewords)
-    ivfPqTopK(base,
-      scala.concurrent.Await.result(quantF,
-        scala.concurrent.duration.Duration.Inf),
-      cbs)
+    ivfPqTopK(base, Quantizers.quantizerFor(base, ivfCellsFor(n)),
+      Quantizers.pqFitCodebooks(base, PqSubspaces, PqCodewords))
   }
 
   /** q101b: q101's DETERMINISTIC-SEED twin — ONE seed set (the
@@ -1706,7 +1683,8 @@ object Similarity {
     * sample is keyed by the per-row hash xxhash64(v, vec_id), so it is
     * deterministic, insensitive to file order, and represents duplicate
     * cliques at their density-proportional share — never a contiguous
-    * low-hash flood, never rare-vector inflation (see [[fitCentroids]]).
+    * low-hash flood, never rare-vector inflation (see
+    * [[Quantizers.fitCentroids]]).
     */
   val SemFitSample: Int = Quantizers.FitSampleFloor
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{FlatQuantizer, ImiQuantizer, Quantizers, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -134,8 +135,10 @@ class QuantizerSpec extends AnyFunSuite {
     * subspaces → widths 2,3,2,3), each codeword inside the value range of
     * its own slice — a transposed slice (codebook m fit on the wrong dims)
     * fails the range check because the synthetic ranges differ per dim
-    * block. Determinism: two fits over the same frame are bit-identical
-    * (the .par fan-out must not introduce order dependence).
+    * block. Determinism: flat, IMI and PQ codebooks are bit-identical
+    * whatever the input's partition count or the session's shuffle
+    * partition count — the fit sample is a total order and the Lloyd sums
+    * run over it in that order.
     */
   test("pqFitCodebooks: ragged-dim slice widths, per-slice value ranges, deterministic") {
     val n = 500L
@@ -161,9 +164,53 @@ class QuantizerSpec extends AnyFunSuite {
       }
       off += widths(i)
     }
-    val again = Quantizers.pqFitCodebooks(base, m, 8)
-    assert(cbs.map(_.map(_.toSeq).toSeq).toSeq ===
-      again.map(_.map(_.toSeq).toSeq).toSeq, "fit not deterministic")
+    // every fit family, from the same rows spread over 1 or 7 input
+    // partitions and hashed across 1 or 7 shuffle partitions
+    def fits(df: DataFrame) = {
+      val (a, b) = Quantizers.fitImiCodebooks(df, 9)
+      Seq(Seq(Quantizers.fitCentroids(df, 8)), Seq(a, b),
+        Quantizers.pqFitCodebooks(df, m, 8).toSeq)
+        .map(_.map(_.map(_.toSeq).toSeq))
+    }
+    val want = fits(base)
+    assert(want(2) === cbs.map(_.map(_.toSeq).toSeq).toSeq)
+    for (p <- Seq(1, 7))
+      assert(fits(base.repartition(p)) === want, s"drift at $p input partitions")
+    val conf = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(conf)
+    try for (p <- Seq(1, 7)) {
+      spark.conf.set(conf, p.toLong)
+      assert(fits(base.repartition(col("vec_id"))) === want,
+        s"drift at $p shuffle partitions")
+    } finally spark.conf.set(conf, saved)
+  }
+
+  /** The duplicate-clique shape: 16 centers asked of a sample with only 3
+    * distinct vectors. The fit seeds from distinct points only, so it
+    * returns exactly those 3 centers — no repeated seed whose cell stays
+    * empty, and no NaN from dividing an empty cell's sum.
+    */
+  test("a fit over 3 distinct vectors asked for 16 centers returns exactly 3") {
+    import spark.implicits._
+    val distinct = Seq(Seq(1.0, 0.0, 0.5), Seq(0.0, 2.0, 0.25), Seq(-1.0, 1.0, 3.0))
+    val df = (0 until 300).map(i => (i.toLong, distinct(i % 3))).toDF("vec_id", "v")
+    val cs = Quantizers.fitCentroids(df, 16)
+    assert(cs.length === 3, s"${cs.length} centers")
+    assert(cs.forall(_.forall(x => !x.isNaN)), "NaN center")
+    distinct.foreach(d => assert(cs.exists(c =>
+      c.zip(d).forall { case (x, y) => math.abs(x - y) < 1e-9 }), s"no center at $d"))
+  }
+
+  /** Each fit is driver-side code over one collected sample: exactly one
+    * Spark job per fit, whatever the family (a chain of per-iteration
+    * distributed jobs per codebook would start dozens).
+    */
+  test("each quantizer fit starts exactly one Spark job") {
+    import graft.TestSpark.jobsOf
+    val df = synthetic(5000).localCheckpoint()
+    assert(jobsOf(Quantizers.quantizerFor(df, 45)) === 1, "flat fit")
+    assert(jobsOf(Quantizers.fitImiCodebooks(df, 260)) === 1, "IMI fit")
+    assert(jobsOf(Quantizers.pqFitCodebooks(df, 4, 16)) === 1, "PQ fit")
   }
 
   /** Reload equality (round-13 #1): a persisted model must reproduce the

@@ -239,11 +239,12 @@ class SimilaritySpec extends AnyFunSuite {
     * score mismatch means the twin scored a pair twice.
     *
     * The floor is the HONEST one (VERDICT r11 #3): the pipeline is fully
-    * deterministic (hash-keyed fit sample, seed-42 KMeans), and measured
-    * recall under ivfProbesFor's √cells fan-out is 0.6308 here (sf0.001),
-    * 0.554 at sf0.01, 0.516 at sf0.1 — scale-stable where the old fixed
-    * 4-probe fan-out decayed (0.477 → 0.368). 0.6 fails on any quiet
-    * cell-assignment or fan-out degradation at this fixture.
+    * deterministic (hash-keyed fit sample, driver-side Lloyd fit in
+    * sample order), and measured recall under ivfProbesFor's √cells
+    * fan-out is 0.754 here (sf0.001), 0.692 at sf0.01, 0.532 at sf0.1 —
+    * scale-stable where the old fixed 4-probe fan-out decayed (0.477 →
+    * 0.368). 0.6 fails on any quiet cell-assignment or fan-out
+    * degradation at this fixture.
     */
   test("IVF hard negatives (q92b) recall vs exact (q92) is >= 0.6, scores equal") {
     def mined(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
@@ -261,12 +262,12 @@ class SimilaritySpec extends AnyFunSuite {
 
   /** q98/q98b PQ-ADC: the refined top-10 must recover most of the exact
     * top-10. Measured on this fixture (deterministic: hash-keyed fit
-    * sample + seed-42 KMeans for q98, lowest-id seeds for q98b) at the
-    * round-13 calibrated shortlist (160 — the q103 sweep at the 200k
+    * sample + driver-side Lloyd fit for q98, lowest-id seeds for q98b) at
+    * the round-13 calibrated shortlist (160 — the q103 sweep at the 200k
     * decade showed the old 40 was the binding constraint on the whole
-    * stack): trained 0.92 / seeded 0.96 at sf0.001, 0.82 / 0.84 at
-    * sf0.1 — so 0.8 fails on any quiet encode, LUT, or shortlist
-    * degradation without flaking on the fixture's own variation.
+    * stack): trained 0.94 / seeded 0.96 at sf0.001, 0.76 / 0.84 at
+    * sf0.1 — so 0.8 at this fixture fails on any quiet encode, LUT, or
+    * shortlist degradation without flaking on the fixture's own variation.
     */
   test("PQ-ADC (q98 trained, q98b seeded) recall@10 vs exact (q20) is >= 0.8") {
     val exact = pairs(Similarity.q20(spark, dir))
@@ -279,10 +280,11 @@ class SimilaritySpec extends AnyFunSuite {
 
   /** q101/q101b IVF-PQ (the composed production stack): recall vs exact
     * q20 with measured-honest floors at the round-13 calibrated shortlist
-    * (160) — trained 0.52 (sf0.001) / 0.50 (sf0.1) / 0.94 (sf1 20k):
-    * with the shortlist constraint removed the trained form is now
-    * ROUTING-bound at small scales (the sample-fit coarse cells, not the
-    * ADC order, drop the missing neighbors); seeded 0.88 / 0.90 / 0.96.
+    * (160) — trained 0.76 (sf0.001) / 0.62 (sf0.1), and 0.94 at sf1 20k
+    * under the earlier MLlib fit: with the shortlist constraint removed
+    * the trained form is now ROUTING-bound at small scales (the
+    * sample-fit coarse cells, not the ADC order, drop the missing
+    * neighbors); seeded 0.88 / 0.90 / 0.96.
     * So 0.45 / 0.8 fail on any quiet routing or ADC degradation. Every
     * overlapping pair must carry the IDENTICAL rounded score: the refine
     * is exact cosine by construction, so a score drift means the refine

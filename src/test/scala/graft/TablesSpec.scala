@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.TestSpark.jobsOf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables` resolves each table's parquet schema once per session: a warm
@@ -21,27 +21,6 @@ class TablesSpec extends AnyFunSuite {
       .find(_.getName.endsWith(".parquet")).get
     Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/$name.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Jobs started by `body` on this thread, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"tables-spec-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val sc = spark.sparkContext
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
   }
 
   test("a warm Tables read starts no job") {

@@ -1,7 +1,7 @@
 // q85 pair-mass assertion on the dup-heavy fixture (round-9 verdict
 // mandate #3, split from skew_probe_q85.scala whose timing table runs
 // separately): reconstruct q85's candidate stage exactly — sample-fit
-// quantizer (Similarity.fitCentroids' uniform per-row hash key), soft
+// quantizer (Quantizers.fitCentroids itself), soft
 // top-2 cells, ids-only within-cell self-join — and assert the surviving
 // pair mass is the planted 2,000-vector clique's C(2000,2), NOT an N^2
 // blow-up (N=20k would be 2.0e8 pairs).
@@ -16,10 +16,8 @@
 //   -I tools/pairmass_probe_q85.scala < /dev/null
 val probeReport: String = {
   import org.apache.spark.sql.functions._
-  import org.apache.spark.ml.clustering.KMeans
-  import org.apache.spark.ml.functions.array_to_vector
   import graft.functions.expressions.vecexprs
-  import graft.operators.Similarity.{SemProbeCells, SemFitSample, SemDedupCosine}
+  import graft.operators.Similarity.{SemProbeCells, SemDedupCosine}
   val skew = "/root/repo/target/sf1skew"
   val b = graft.Tables.embeddings(spark, skew)
     .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
@@ -28,15 +26,8 @@ val probeReport: String = {
     .filter(col("v").isNotNull)
     .localCheckpoint()
   val nVec = b.count()
-  // uniform per-row hash key — must mirror Similarity.fitCentroids
-  val fitSample = b.select(col("v"), xxhash64(col("v"), col("vec_id")).as("hk"))
-    .orderBy(col("hk")).limit(SemFitSample)
-    .withColumn("fv", array_to_vector(col("v")))
   val k = graft.operators.Similarity.ivfCellsFor(nVec)
-  val model = new KMeans().setK(k).setSeed(42).setMaxIter(5)
-    .setInitMode("random").setFeaturesCol("fv").setPredictionCol("cell")
-    .fit(fitSample)
-  val centroids = model.clusterCenters.map(_.toArray)
+  val centroids = graft.operators.Quantizers.fitCentroids(b, k)
   val cells = b.select(col("vec_id"),
     explode(vecexprs.nearestCells(col("v"), centroids, SemProbeCells)).as("cell"))
     .localCheckpoint()

@@ -397,10 +397,9 @@ object CurationRun {
           .select(col("vec_id").as("doc_id"),
             graft.functions.vectors.toDouble(col("embedding")).as("v"))
           .filter(col("v").isNotNull)
-        val subject = dec.select(col("doc_id")).join(emb, Seq("doc_id"))
-          .select(col("doc_id").as("vec_id"), col("v"))
-          .localCheckpoint()
-        val n = subject.count()
+        val (subject, n) = Similarity.ckptWithCount(
+          dec.select(col("doc_id")).join(emb, Seq("doc_id"))
+            .select(col("doc_id").as("vec_id"), col("v")))
         if (n == 0) dec // nothing clusterable: the stage judges no one
         else {
           val quant = (params.reuseIndex.orElse(params.reuseModels),

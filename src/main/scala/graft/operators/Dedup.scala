@@ -247,9 +247,10 @@ object Dedup {
     * then one min-aggregate; the jump makes convergence O(log diameter)
     * instead of O(diameter) — measured on the fixture graph (diameter 16):
     * 4 counted rounds instead of 16 (since r18 the init IS the
-    * post-round-1 state, so `lastCcRounds` counts one fewer round than
-    * the same graph under the pre-r18 convention — probes assert <=
-    * bounds, which only tighten). `localCheckpoint` truncates the lineage so
+    * post-round-1 state, so a graph needs one fewer loop round than under
+    * the pre-r18 convention — `maxRounds` bounds the loop rounds, and
+    * DedupSpec pins a diameter-32 path at `maxRounds = 9`).
+    * `localCheckpoint` truncates the lineage so
     * round N's plan doesn't replay rounds 1..N-1. The only driver-side
     * value per round is one scalar (the label sum, which strictly decreases
     * until the fixpoint — the convergence test needs no row-level diff
@@ -257,14 +258,6 @@ object Dedup {
     * edges, and a fixpoint under neighbor-min forces labels constant per
     * component, pinned at the minimum id.
     */
-  /** Diagnostic only: round count of the most recent connectedComponents
-    * materialization in this JVM. Measurement probes (tools/skew_probe
-    * .scala) read it to assert the pointer-jumped loop closes a
-    * diameter-d component in O(log d) rounds; not part of the query
-    * surface.
-    */
-  @volatile var lastCcRounds: Int = -1
-
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
       maxRounds: Int = 25): DataFrame = {
     var edges = pairs
@@ -344,7 +337,7 @@ object Dedup {
       // future improvements through the pointer jump) and is dropped with
       // the self-loop filter. Dup-heavy graphs collapse brutally: the
       // sf1skew 2.48M-edge pair graph shrinks to 5,460 directed edges
-      // after round 1 (tools/cc_contract_probe.scala: 36% wall win, 8 -> 6
+      // after round 1 (SCALE.md "CC edge contraction": 36% wall win, 8 -> 6
       // rounds, labels bit-identical). NOTE: merely DROPPING settled edges
       // without relabeling the rest is unsound — a settled triangle loses
       // all incident edges and its stale label never improves (measured:
@@ -366,7 +359,6 @@ object Dedup {
       round += 1
     }
     require(done, s"connectedComponents did not converge in $maxRounds rounds")
-    lastCcRounds = round
     ids.join(labels, Seq("v"), "left")
       .select(col("v"), coalesce(col("lab"), col("v")).as("lab"))
   }
@@ -537,21 +529,6 @@ object Dedup {
     * corpus shuffle.
     */
   private def cutFlagged(docs: DataFrame, flagged: DataFrame): DataFrame =
-    cutFlaggedRows(docs, flagged)
-      // the presentation sort's range sampling re-executes the join + the
-      // per-token zip_with/exists cut chain (the expensive part of this
-      // tail) — materialize the finished rows once (q112/q141's lesson);
-      // shared by q84 and q86. PlanSpec pins the pre-materialization plan
-      // through [[q86PlanProbe]] (the checkpoint truncates the visible
-      // final plan to a scan+sort, exactly like q88's staged frames).
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-
-  /** The cut tail's frame BEFORE the materialize+sort — the plan surface
-    * the q84/q86 broadcast/shuffle-shape assertions inspect.
-    */
-  private[graft] def cutFlaggedRows(docs: DataFrame,
-      flagged: DataFrame): DataFrame =
     docs.join(flagged, Seq("doc_id"), "left")
       .select(col("doc_id"),
         // null-input parity with the oracle's coalesce-to-0/'' tail: a null
@@ -573,6 +550,15 @@ object Dedup {
       .select(col("doc_id"), col("n_tokens"),
         (col("n_tokens") - size(col("kept"))).as("n_cut"),
         array_join(col("kept"), " ").as("cleaned"))
+      // the presentation sort's range sampling re-executes the join + the
+      // per-token zip_with/exists cut chain (the expensive part of this
+      // tail) — materialize the finished rows once (q112/q141's lesson);
+      // shared by q84 and q86. PlanSpec pins the plan this checkpoint
+      // action executes, read off Spark's query-execution listener (the
+      // checkpoint truncates the frame's own visible plan to a scan+sort,
+      // exactly like q88's staged frames).
+      .localCheckpoint()
+      .orderBy(col("doc_id"))
 
   /** q86: benchmark decontamination SURGERY — the remove step downstream of
     * q57/q66's detection (window semantics shared with q84): every 8-token
@@ -598,15 +584,6 @@ object Dedup {
     * split — planted-corpus specs run it directly.
     */
   def decontaminateCut(docs: DataFrame, evalEvery: Long): DataFrame = {
-    val (train, flagged) = decontaminateFlagged(docs, evalEvery)
-    cutFlagged(train, flagged)
-  }
-
-  /** q86's (train, flagged-starts) pair — the flagging plan before the cut
-    * tail, shared by the registered query and [[q86PlanProbe]].
-    */
-  private def decontaminateFlagged(docs: DataFrame,
-      evalEvery: Long): (DataFrame, DataFrame) = {
     val cores = docs.sparkSession.sparkContext.defaultParallelism
     val base = docs.filter(col("doc_id").isNotNull)
     val train = base.filter(col("doc_id") % evalEvery =!= 0)
@@ -625,20 +602,7 @@ object Dedup {
       // needs no exchange
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("starts"))
-    (train, flagged)
-  }
-
-  /** q86's full computation WITHOUT the final materialize+sort — the plan
-    * PlanSpec's broadcast/shuffle-shape assertions read (the registered
-    * q86 checkpoints the finished rows, which truncates its own visible
-    * plan to a checkpoint scan + sort).
-    */
-  private[graft] def q86PlanProbe(spark: SparkSession,
-      dir: String): DataFrame = {
-    val (train, flagged) = decontaminateFlagged(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      Pipeline.EvalEvery)
-    cutFlaggedRows(train, flagged).orderBy(col("doc_id"))
+    cutFlagged(train, flagged)
   }
 
   // ---- End-to-end dedup verdict (q76) -------------------------------------

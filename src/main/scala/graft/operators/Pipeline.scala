@@ -222,37 +222,26 @@ object Pipeline {
     * → decontaminated. Exposed so [[graft.CurationRun]] can WRITE the same
     * frames q88 counts — manifest parity with the q88 oracle is then by
     * construction, not by re-implementation.
-    */
-  def curationStages(docs: DataFrame,
-      evalEvery: Long): Seq[(String, DataFrame)] =
-    curationStages(docs, evalEvery, ClassifierFloorE6, FunnelNearDupJaccard)
-
-  /** [[curationStages]] with the two tunable knives as parameters — the
-    * classifier operating point (q102's sweep is the calibration table
-    * that justifies a value) and the near-dup Jaccard bar. q88 and the
-    * default CurationRun use the deployed constants, so their oracle
-    * surfaces are unchanged; a recalibrated CurationRun passes the chosen
-    * points through without a rebuild.
-    */
-  def curationStages(docs: DataFrame, evalEvery: Long,
-      classifierFloorE6: Long,
-      nearDupJaccard: Double): Seq[(String, DataFrame)] =
-    curationStages(docs, evalEvery, classifierFloorE6, nearDupJaccard,
-      qualityKeeper = false)
-
-  /** [[curationStages]] with the near-dup keeper POLICY as a parameter:
-    * `qualityKeeper = true` swaps the min-label survivor for q113's
-    * argmax-classifier-score member per component (ties → lowest id) —
-    * dedup decides the cluster, quality decides the survivor. Default
-    * false keeps q88's oracle surface bit-identical. The quality form
-    * costs one extra scoring pass over the exact-dedup survivors (the
+    *
+    * The two tunable knives are parameters: the classifier operating point
+    * (q102's sweep is the calibration table that justifies a value) and
+    * the near-dup Jaccard bar. q88 and the default CurationRun use the
+    * deployed constants, so their oracle surfaces are unchanged; a
+    * recalibrated CurationRun passes the chosen points through without a
+    * rebuild.
+    *
+    * `qualityKeeper = true` swaps the near-dup min-label survivor for
+    * q113's argmax-classifier-score member per component (ties → lowest
+    * id) — dedup decides the cluster, quality decides the survivor. The
+    * default false keeps q88's oracle surface bit-identical. The quality
+    * form costs one extra scoring pass over the exact-dedup survivors (the
     * funnel's own classifier pass kept only ids); the argmax is a
     * map-side-combinable min(struct), q113's shape.
     */
   def curationStages(docs: DataFrame, evalEvery: Long,
-      classifierFloorE6: Long,
-      nearDupJaccard: Double,
-      qualityKeeper: Boolean): Seq[(String, DataFrame)] = {
+      classifierFloorE6: Long = ClassifierFloorE6,
+      nearDupJaccard: Double = FunnelNearDupJaccard,
+      qualityKeeper: Boolean = false): Seq[(String, DataFrame)] = {
     import graft.functions.expressions.sketch
     // base and clf are each consumed by SEVERAL actions downstream (their
     // own funnel stat, every later stage's lineage, and CurationRun's
@@ -339,7 +328,7 @@ object Pipeline {
 
   /** The funnel's near-dup Jaccard bar (the q21 estimated-Jaccard
     * threshold its pair stage runs at). Like [[ClassifierFloorE6]], a
-    * deployed default that the parameterized [[curationStages]] overload
+    * deployed default that [[curationStages]]'s `nearDupJaccard` parameter
     * lets a recalibrated run override without a rebuild.
     */
   val FunnelNearDupJaccard: Double = 0.8
@@ -527,34 +516,19 @@ object Pipeline {
     * CurationRun's opt-in pre-funnel transform runs the identical
     * expression.
     */
-  def markupStrip(docs: DataFrame): DataFrame =
-    markupStripRows(docs)
-      // presentation-sort range sampling re-executes this scan-level
-      // child (no shuffle below to resume from) — uncheckpointed, the
-      // per-row expression work ran twice per run (the q112/q141 lesson).
-      // PlanSpec pins the pre-materialization plan through
-      // [[q114PlanProbe]] (q86PlanProbe's precedent).
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-
-  /** The strip battery BEFORE the materialize+sort — the plan surface the
-    * q114 joinless-codegen assertions inspect.
-    */
-  private def markupStripRows(docs: DataFrame): DataFrame = {
+  def markupStrip(docs: DataFrame): DataFrame = {
     val t = coalesce(col("text"), lit(""))
     val clean = text.stripMarkup(col("text"))
     docs.select(col("doc_id"), clean.as("clean_text"),
-      (length(t) - length(clean)).cast("long").as("n_removed"))
+        (length(t) - length(clean)).cast("long").as("n_removed"))
+      // presentation-sort range sampling re-executes this scan-level
+      // child (no shuffle below to resume from) — uncheckpointed, the
+      // per-row expression work ran twice per run (the q112/q141 lesson).
+      // PlanSpec pins the plan this checkpoint action executes, read off
+      // Spark's query-execution listener.
+      .localCheckpoint()
+      .orderBy(col("doc_id"))
   }
-
-  /** q114's full computation WITHOUT the final materialize — the plan
-    * PlanSpec's gate-battery assertions read (the registered q114
-    * checkpoints before its presentation sort, which truncates its own
-    * visible plan to a checkpoint scan + sort).
-    */
-  private[graft] def q114PlanProbe(spark: SparkSession,
-      dir: String): DataFrame =
-    markupStripRows(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
   /** q127: within-document line dedup — the self-boilerplate cut CCNet
     * applies per PAGE before any corpus-level stage (navigation chrome,

@@ -36,7 +36,7 @@ object Similarity {
     * checkpoint action itself, so the count is free; the returned frame's
     * rows are untouched.
     */
-  private[operators] def ckptWithCount(df: DataFrame): (DataFrame, Long) = {
+  private[graft] def ckptWithCount(df: DataFrame): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
     val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
     (ck, obs.get("n").asInstanceOf[Number].longValue)

@@ -120,36 +120,21 @@ object TextAnalysis {
     * directly.
     */
   def gopherRules(docs: DataFrame): DataFrame =
-    gopherRulesRows(docs)
+    docs
+      .select(col("doc_id") +:
+        gopherSignals(col("text")).map { case (n, c) => c.as(n) }: _*)
+      .withColumn("pass_gopher", gopherPass(col))
       // the presentation sort's range sampling is a SEPARATE execution of
       // its child, and this child is the seven-regex signal projection
       // sitting directly on the scan (no shuffle in between to resume
       // from) — uncheckpointed, every signal computed twice per run
       // (q141's lesson at batch-expression scale; measured −35% r18).
       // What materializes is doc_id + 8 narrow signal columns. PlanSpec
-      // pins the pre-materialization plan through [[q112PlanProbe]] (the
-      // checkpoint truncates the visible final plan to a scan + sort,
-      // exactly like q86PlanProbe's precedent).
+      // pins the plan this checkpoint action executes, read off Spark's
+      // query-execution listener (the checkpoint truncates the frame's
+      // own visible plan to a scan + sort).
       .localCheckpoint()
       .orderBy(col("doc_id"))
-
-  /** The signal battery BEFORE the materialize+sort — the plan surface the
-    * q112 joinless-codegen assertions inspect (q86PlanProbe's precedent).
-    */
-  private def gopherRulesRows(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id") +:
-        gopherSignals(col("text")).map { case (n, c) => c.as(n) }: _*)
-      .withColumn("pass_gopher", gopherPass(col))
-
-  /** q112's full computation WITHOUT the final materialize — the plan
-    * PlanSpec's gate-battery assertions read (the registered q112
-    * checkpoints before its presentation sort, which truncates its own
-    * visible plan to a checkpoint scan + sort).
-    */
-  private[graft] def q112PlanProbe(spark: SparkSession,
-      dir: String): DataFrame =
-    gopherRulesRows(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
   /** The seven q112 signal columns over a raw text column. */
   private def gopherSignals(raw: Column): Seq[(String, Column)] = {
@@ -921,6 +906,24 @@ object TextAnalysis {
     else base.withColumn("syms",
       graft.functions.expressions.textnative.bpeMergeAll(col("syms"), pending))
 
+  /** The first `limit` adjacent symbol pairs of a vocab frame, ranked by
+    * count DESC, lhs, rhs (q139's total order), as (lhs, rhs, count) —
+    * one map-side-combinable pair count and one bounded collect per
+    * learner round.
+    */
+  private def rankedPairs(vocab: DataFrame,
+      limit: Int): Array[(String, String, Long)] =
+    vocab.filter(size(col("syms")) >= 2)
+      .select(col("cnt"),
+        slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
+        slice(col("syms"), lit(2), size(col("syms")) - 1).as("ra"))
+      .select(col("cnt"), explode(arrays_zip(col("la"), col("ra"))).as("z"))
+      .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
+      .agg(sum(col("cnt")).as("c"))
+      .orderBy(col("c").desc, col("l"), col("r"))
+      .limit(limit).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+
   /** Learn `steps` merges; returns (step, lhs, rhs, weight) in order. */
   def bpeLearnMerges(docs: DataFrame,
       steps: Int = BpeSteps): Seq[(Int, String, String, Long)] = {
@@ -934,20 +937,11 @@ object TextAnalysis {
         base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
         pending.clear()
       }
-      val top = vocabWithMerges(base, pending.toSeq)
-        .filter(size(col("syms")) >= 2)
-        .select(col("cnt"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("ra"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("ra"))).as("z"))
-        .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect() // the argmax: 1 row, a model-fit boundary
+      // the argmax: 1 row, a model-fit boundary
+      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), 1)
       if (top.isEmpty) exhausted = true
       else {
-        val (l, r, c) =
-          (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
+        val (l, r, c) = top.head
         out += ((k, l, r, c))
         pending += ((l, r))
         k += 1
@@ -1052,17 +1046,7 @@ object TextAnalysis {
         base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
         pending.clear()
       }
-      val top = vocabWithMerges(base, pending.toSeq)
-        .filter(size(col("syms")) >= 2)
-        .select(col("cnt"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("ra"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("ra"))).as("z"))
-        .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(lookahead).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), lookahead)
       if (top.isEmpty) exhausted = true
       else {
         rounds += 1
@@ -1095,11 +1079,6 @@ object TextAnalysis {
     }
     (out.toSeq, rounds)
   }
-
-  /** Diagnostic (lastCcRounds precedent): rounds the most recent q142 run
-    * needed — the batching evidence the spec and SCALE.md read.
-    */
-  @volatile var lastBpeRounds: Int = -1
 
   /** Deep-K operating point of the tie-ACCEPTING batcher (q145): deep
     * enough that q142's exactness guard visibly plateaus on the fixture
@@ -1148,17 +1127,7 @@ object TextAnalysis {
         base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
         pending.clear()
       }
-      val top = vocabWithMerges(base, pending.toSeq)
-        .filter(size(col("syms")) >= 2)
-        .select(col("cnt"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("ra"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("ra"))).as("z"))
-        .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(lookahead).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), lookahead)
       if (top.isEmpty) exhausted = true
       else {
         rounds += 1
@@ -1181,17 +1150,13 @@ object TextAnalysis {
     (out.toSeq, rounds)
   }
 
-  /** Rounds of the most recent q145 run — the deep-K batching evidence. */
-  @volatile var lastBpeDeepRounds: Int = -1
-
   /** q145: the deep-K merge table — same columns as q139/q142, learned by
     * the tie-accepting batcher at [[BpeDeepSteps]].
     */
   def q145BpeMergesDeep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (merges, rounds) =
+    val (merges, _) =
       bpeLearnMergesDeep(Tables.documents(spark, dir).select(col("text")))
-    lastBpeDeepRounds = rounds
     merges.map { case (k, l, r, c) => (k, l, r, l + r, c) }
       .toDF("step", "lhs", "rhs", "merged", "weight")
       .orderBy(col("step"))
@@ -1202,9 +1167,8 @@ object TextAnalysis {
     */
   def q142BpeMergesBatched(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (merges, rounds) =
+    val (merges, _) =
       bpeLearnMergesBatched(Tables.documents(spark, dir).select(col("text")))
-    lastBpeRounds = rounds
     merges.map { case (k, l, r, c) => (k, l, r, l + r, c) }
       .toDF("step", "lhs", "rhs", "merged", "weight")
       .orderBy(col("step"))

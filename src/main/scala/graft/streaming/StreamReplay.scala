@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import graft.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,23 +64,6 @@ object StreamReplay {
     */
   val StatePartitions = 8
 
-  /** Diagnostic only (lastCcRounds precedent): state-operator metrics of
-    * the most recent drain in this JVM — (operatorName, numRowsTotal,
-    * numRowsUpdated, numRowsDroppedByWatermark) summed/maxed over
-    * micro-batches. Measurement probes (tools/stream_skew_probe.scala) read
-    * it to assert state stays O(distinct keys) on dup-heavy replays; not
-    * part of the query surface.
-    */
-  @volatile var lastStateOps: Seq[(String, Long, Long, Long)] = Nil
-
-  /** Diagnostic only (lastStateOps precedent): per-micro-batch duration
-    * breakdown of the most recent drain — (batchId, durationMs map:
-    * triggerExecution/queryPlanning/getBatch/addBatch/walCommit/...).
-    * The r19 drain-decomposition probe reads it to attribute the fixed
-    * per-drain cost (VERDICT r18 #2); not part of the query surface.
-    */
-  @volatile var lastDrainMs: Seq[(Long, Map[String, Long])] = Nil
-
   private def drain(df: DataFrame, sinkPrefix: String, mode: String): DataFrame = {
     val spark = df.sparkSession
     // a memory sink registers a temp view per run; drop the previous run's
@@ -110,21 +91,7 @@ object StreamReplay {
           .trigger(Trigger.AvailableNow())
           .start()
         try query.awaitTermination()
-        finally {
-          // capture per-operator state metrics before stop clears progress:
-          // numRowsTotal is a gauge (max over batches), the others counters
-          lastStateOps = query.recentProgress.toSeq
-            .flatMap(_.stateOperators.toSeq)
-            .groupBy(_.operatorName)
-            .map { case (op, ps) =>
-              (op, ps.map(_.numRowsTotal).max, ps.map(_.numRowsUpdated).sum,
-                ps.map(_.numRowsDroppedByWatermark).sum)
-            }.toSeq
-          lastDrainMs = query.recentProgress.toSeq.map(p =>
-            (p.batchId, p.durationMs.asScala.toMap
-              .map { case (k, v) => (k, v.longValue) }))
-          query.stop()
-        }
+        finally query.stop()
       } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
     }
     spark.table(sink)

@@ -158,9 +158,10 @@ class DedupSpec extends AnyFunSuite {
     * to the self-loop filter — the component MIN then arrives LATE through
     * an attached path, and must still reach all triangle members via the
     * label-graph witnesses. (Merely dropping settled edges dead-ends here
-    * — the measured-unsound variant in tools/cc_contract_probe.scala.)
+    * — the measured-unsound variant, SCALE.md "CC edge contraction".)
     * The 33-node path also pins the round count at O(log diameter): 32
-    * hops must close in <= 9 rounds, not 32.
+    * hops must close in <= 9 rounds, not 32 — `maxRounds = 9` makes the
+    * loop's convergence `require` throw past that.
     */
   test("CC contraction: late-arriving min crosses a settled clique; rounds stay O(log d)") {
     import spark.implicits._
@@ -177,11 +178,9 @@ class DedupSpec extends AnyFunSuite {
     val n = 33L
     val ids2 = (0L until n).toDF("v")
     val pairs2 = (1L until n).map(i => (i - 1, i)).toDF("a_id", "b_id")
-    val got2 = Dedup.connectedComponents(ids2, pairs2)
+    val got2 = Dedup.connectedComponents(ids2, pairs2, maxRounds = 9)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2.values.forall(_ == 0L), s"path not fully resolved: $got2")
-    assert(Dedup.lastCcRounds <= 9,
-      s"rounds ${Dedup.lastCcRounds} not O(log 32)")
   }
 
   /** r19: the convergence scalar rides the label checkpoint via `observe`

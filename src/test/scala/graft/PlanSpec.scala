@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.{Relational, Similarity}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan contracts: the physical properties the 100 TB design depends on must
@@ -16,6 +19,22 @@ class PlanSpec extends AnyFunSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** The initial physical plans of the actions `build` runs while it
+    * constructs its frame — an eager checkpoint's plan is the query's real
+    * work, which the returned frame's own plan shows only as a scan.
+    */
+  private def executed(build: => org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+    TestSpark.plansOf(build)._2
+
+  /** Every ScalaUDF in `p`'s nodes and subqueries. Matched on the
+    * expression class: a UDF's rendered name is "UDF" or its registered
+    * name, never "ScalaUDF".
+    */
+  private def udfs(p: SparkPlan): Seq[ScalaUDF] =
+    p.collectWithSubqueries { case n =>
+      n.expressions.flatMap(_.collect { case u: ScalaUDF => u })
+    }.flatten
 
   test("q03: predicates and projection reach the parquet scan") {
     val p = plan(Relational.q03(spark, dir))
@@ -200,12 +219,22 @@ class PlanSpec extends AnyFunSuite {
     // be a broadcast against the one train tokenize pass, not a corpus-wide
     // gram-keyed exchange (q84 pays that shuffle because its threshold is a
     // corpus-global count; q86's membership test has no such need).
-    // Inspected through q86PlanProbe: the registered q86 materializes its
-    // finished rows before the presentation sort (r18 — the sort's range
-    // sampling re-ran the cut chain), which truncates the registered
-    // query's own visible plan to a checkpoint scan + sort; the probe is
-    // the identical computation without that materialization.
-    val p = plan(graft.operators.Dedup.q86PlanProbe(spark, dir))
+    // Read off q86's own checkpoint action: the registered q86
+    // materializes its finished rows before the presentation sort (r18 —
+    // the sort's range sampling re-ran the cut chain), which truncates
+    // the returned frame's visible plan to a checkpoint scan + sort.
+    // Size-based broadcast is off while q86 runs: at sf0.001 the planner
+    // would broadcast the eval side on its size estimate alone, hiding a
+    // lost broadcast hint. At 100 TB that estimate is far past any
+    // threshold, so the hint is what keeps the broadcast.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val plans =
+      try executed(graft.operators.Dedup.q86(spark, dir))
+      finally spark.conf.set(key, saved)
+    assert(plans.size === 1, "q86's construction runs one action, its checkpoint")
+    val p = plans.head.treeString
     assert(p.contains("BroadcastHashJoin"), p.take(500))
     // exactly one gh-keyed exchange is legitimate: the EVAL side's distinct
     // (small by premise). A second one means the train gram frame regressed
@@ -436,20 +465,49 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q112/q114: per-row gate batteries stay joinless codegen projections") {
-    // Inspected through the *PlanProbe frames (q86's precedent): the
-    // registered queries localCheckpoint before their presentation sorts
-    // (r18), which truncates their own visible plans to a checkpoint
-    // scan + sort — asserting on those would be vacuous (ADVICE r18).
-    // The probes are the identical computation minus the materialization,
-    // so the assertions see the real gate-battery plan.
+    // Read off each query's own checkpoint action: the registered queries
+    // localCheckpoint before their presentation sorts (r18), which
+    // truncates the returned frames' visible plans to a checkpoint scan +
+    // sort — asserting on those would be vacuous (ADVICE r18). The output
+    // column each battery computes proves the plan read is the battery's.
     Seq(
-      graft.operators.TextAnalysis.q112PlanProbe(spark, dir),
-      graft.operators.Pipeline.q114PlanProbe(spark, dir)).foreach { df =>
-      val p = plan(df)
-      assert(!p.contains("ScalaUDF"), "gate fell out of codegen")
-      assert(!p.contains("Join"), "a per-row gate must not join")
-      assert(!p.contains("HashAggregate"), "a per-row gate must not aggregate")
+      "pass_gopher" -> executed(graft.operators.TextAnalysis.q112(spark, dir)),
+      "clean_text" -> executed(graft.operators.Pipeline.q114(spark, dir)))
+      .foreach { case (out, plans) =>
+        assert(plans.size === 1, s"$out: one action, the checkpoint")
+        val p = plans.head.treeString
+        assert(p.contains(out), p)
+        assert(udfs(plans.head).isEmpty, "gate fell out of codegen")
+        assert(!p.contains("Join"), "a per-row gate must not join")
+        assert(!p.contains("HashAggregate"), "a per-row gate must not aggregate")
+      }
+  }
+
+  /** The one registered query that reads the reference corpus, not `dir`. */
+  private val ReferenceIndex = "q00_reference_index"
+
+  /** Plan lint: no registered query plans a cross product or a per-row
+    * ScalaUDF — neither in its returned frame's plan nor in any plan its
+    * construction executes (eager checkpoints, collects, drains), which
+    * the returned frame's plan stops short of.
+    */
+  private def lint(q: QueryDef): Unit = {
+    val (df, built) = TestSpark.plansOf(q.build(spark, dir))
+    (TestSpark.initialPlan(df.queryExecution.executedPlan) +: built).foreach { p =>
+      assert(p.collectWithSubqueries { case c: CartesianProductExec => c }.isEmpty,
+        s"${q.name}: CartesianProduct\n${p.treeString}")
+      assert(udfs(p).isEmpty, s"${q.name}: ScalaUDF ${udfs(p).mkString(", ")}")
     }
+  }
+
+  test("plan lint: no registered query plans a CartesianProduct or a ScalaUDF") {
+    Registry.all.filterNot(_.name == ReferenceIndex).foreach(lint)
+  }
+
+  test("plan lint: the reference-corpus index plans no CartesianProduct or ScalaUDF") {
+    assume(new java.io.File("/root/reference/testfiles").isDirectory,
+      "reference corpus absent")
+    lint(Registry.byName(ReferenceIndex))
   }
 
   /** q115's batch numbering must sort within (shard, bucket) cells — a

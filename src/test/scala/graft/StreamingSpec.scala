@@ -19,6 +19,16 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** Rows held in state across a drain's micro-batches: numRowsTotal is a
+    * gauge, so its max over batches per stateful operator, summed over the
+    * operators.
+    */
+  private def stateRows(
+      progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]): Long =
+    progress.flatMap(_.stateOperators.toSeq)
+      .groupBy(_.operatorName)
+      .values.map(_.map(_.numRowsTotal).max).sum
+
   private def staticEvents: DataFrame =
     Tables.events(spark, dir)
       .select(col("ts"), col("event_id"), col("user_id"),
@@ -367,7 +377,8 @@ class StreamingSpec extends AnyFunSuite {
       (6L, "unique closing text sharing no shingles with anything else", "web"))
     rows.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val got = streaming.StreamReplay.q107(spark, d)
+    val (q, progress) = TestSpark.progressOf(streaming.StreamReplay.q107(spark, d))
+    val got = q
       .collect().map(r => r.getLong(0) ->
         ((r.getBoolean(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))))
       .toMap
@@ -378,7 +389,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got(4L) === ((false, None)))
     assert(got(5L) === ((true, Some(3L))))
     assert(got(6L) === ((false, None)))
-    assert(streaming.StreamReplay.lastStateOps.map(_._2).sum === 24L)
+    assert(stateRows(progress) === 24L)
   }
 
   /** q123's two contracts on a planted corpus: (a) serve-equivalence — the
@@ -398,7 +409,8 @@ class StreamingSpec extends AnyFunSuite {
         (i, Array.fill(8)(rnd.nextGaussian().toFloat), 0))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    val got = streaming.StreamReplay.q123(spark, d).collect().toSeq
+    val (q, progress) = TestSpark.progressOf(streaming.StreamReplay.q123(spark, d))
+    val got = q.collect().toSeq
     val want = Similarity.q39b(spark, d).collect().toSeq
     assert(got === want, "served-from-stream-index top-k drifted from batch")
     assert(got.nonEmpty)
@@ -411,7 +423,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
     val cells = base.select(FlatQuantizer(seeds).assign(col("v")).as("c"))
       .distinct().count()
-    assert(streaming.StreamReplay.lastStateOps.map(_._2).sum === cells,
+    assert(stateRows(progress) === cells,
       s"state rows must equal distinct cells ($cells)")
     new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
   }

@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared session for all suites — same Sessions.local recipe as the
   * driver's Verify/Bench entry points, so test semantics can't drift.
@@ -28,5 +32,59 @@ object TestSpark {
       sc.removeSparkListener(listener)
     }
     n.get
+  }
+
+  /** A physical plan as planned before execution: every adaptive node,
+    * subqueries included, replaced by its initial plan. After execution
+    * an adaptive node prints its final AND its initial plan, so operator
+    * counts over the executed form would double.
+    */
+  def initialPlan(p: SparkPlan): SparkPlan =
+    p.transformDownWithSubqueries { case a: AdaptiveSparkPlanExec => a.initialPlan }
+
+  /** `body`'s value and the initial physical plan of every action it ran
+    * (eager checkpoints and collects included), in completion order — the
+    * plans a frame's own `queryExecution` no longer shows once a
+    * checkpoint has cut its lineage.
+    */
+  def plansOf[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(initialPlan(qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val out = drained(spark.listenerManager.register(listener),
+      spark.listenerManager.unregister(listener))(body)
+    (out, plans.toArray(Array.empty[SparkPlan]).toSeq)
+  }
+
+  /** `body`'s value and the progress event of every micro-batch the
+    * streaming queries it ran completed.
+    */
+  def progressOf[T](body: => T): (T, Seq[StreamingQueryProgress]) = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        events.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val out = drained(spark.streams.addListener(listener),
+      spark.streams.removeListener(listener))(body)
+    (out, events.toArray(Array.empty[StreamingQueryProgress]).toSeq)
+  }
+
+  /** Runs `body` between `add` and `remove`, draining the listener bus
+    * before the listener comes off so every event `body` posted arrives.
+    */
+  private def drained[T](add: => Unit, remove: => Unit)(body: => T): T = {
+    add
+    try body
+    finally {
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      remove
+    }
   }
 }

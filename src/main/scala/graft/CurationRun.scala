@@ -436,20 +436,17 @@ object CurationRun {
           // reads the just-written artifact: the candidate self-join
           // consumes the cells frame twice, and re-reading clustered
           // parquet beats re-executing the N×k assignment lineage.
-          val fresh: DataFrame => DataFrame = df => df.select(col("vec_id"),
-            explode(quant.probeCells(col("v"), Similarity.SemProbeCells))
-              .as("cell"))
           val cells = params.reuseIndex match {
             case Some(prior) => timed("index_load") {
               val priorIdx = ModelStore.loadIndex(
                 spark, s"${Artifacts.resolve(spark, prior)}/model/index")
                 .select(col("vec_id"), col("cell"))
               priorIdx.join(subject.select(col("vec_id")), Seq("vec_id"))
-                .unionByName(fresh(subject.join(
+                .unionByName(Similarity.semCells(subject.join(
                   priorIdx.select(col("vec_id")).distinct(),
-                  Seq("vec_id"), "left_anti")))
+                  Seq("vec_id"), "left_anti"), quant))
             }
-            case None => fresh(subject)
+            case None => Similarity.semCells(subject, quant)
           }
           ModelStore.saveIndex(cells, s"$art/model/index")
           val verdict = Similarity.semanticDedupCells(

@@ -25,11 +25,6 @@ object sketch {
     ColumnBridge.column(
       SimHash64Expr(ColumnBridge.expression(tokenHashes)))
 
-  /** MinHash signature (k minima of a_i*h+b_i over the hashes). */
-  def minhashSig(shingleHashes: Column, k: Int, seed: Long): Column =
-    ColumnBridge.column(
-      MinHashSigExpr(ColumnBridge.expression(shingleHashes), k, seed))
-
   /** Distinct hashed n-shingles of a token array: xxhash64 each token once,
     * chain n consecutive hashes into a shingle hash, dedupe. Replaces
     * wordNgrams+array_distinct+xxhash64 (which re-split the text three times

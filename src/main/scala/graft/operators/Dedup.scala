@@ -44,10 +44,6 @@ object Dedup {
     */
   val MinhashSeed = 0x5eedL
 
-  /** Per-row minhash signature from pre-hashed shingles (array<long>). */
-  def minhashSignature(shingleHashes: Column): Column =
-    sketch.minhashSig(shingleHashes, MinhashK, MinhashSeed)
-
   /** Candidate near-dup pairs from banded LSH + exact Jaccard verification.
     * Input: (doc_id, text); output: (a_id, b_id, jaccard >= threshold).
     */
@@ -119,24 +115,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"))
       .distinct()
     verifyJaccard(pairs, shingled, shingled, threshold)
-  }
-
-  /** CROSS-frame near-dup candidates: batch docs (a side) against corpus
-    * docs (b side) — the incremental-ingestion shape (q78), where the
-    * corpus side at scale is a precomputed ids+bands index and the corpus
-    * is NEVER self-joined. Output (a_id, b_id, jaccard) with a_id from
-    * `a`, b_id from `b`.
-    */
-  def crossNearDupPairs(a: DataFrame, b: DataFrame,
-      threshold: Double): DataFrame = {
-    val aSh = shingledDocs(a)
-    val bSh = shingledDocs(b)
-    val pairs = bandedKeys(aSh).select(col("band_key"), col("doc_id").as("a_id"))
-      .join(bandedKeys(bSh).select(col("band_key"), col("doc_id").as("b_id")),
-        Seq("band_key"))
-      .select(col("a_id"), col("b_id"))
-      .distinct()
-    verifyJaccard(pairs, aSh, bSh, threshold)
   }
 
   /** Q21 over the documents table (rows-only for the driver; recall is

@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
   * exact top-k in SimilaritySpec. q24 is the cosine near-dup face of the
   * same bucketing.
   *
-  * Spread policy: the `repartition(..., vec_id)` before the vector math
+  * Spread policy: [[vectorBase]] is the one place it is decided, and
+  * the queries that spread read their vectors through it. Its
+  * `repartition(..., vec_id)` before the vector math
   * pays at sf0.1 — the NTables×Planes×dim bucket dot products (and the
   * pairwise cosines they feed) dominate the shuffle cost (q24: spread
   * 0.60s vs plain 0.74s). Elsewhere a spread pays once the single-task
@@ -42,6 +44,37 @@ object Similarity {
     (ck, obs.get("n").asInstanceOf[Number].longValue)
   }
 
+  /** The spread read (the header's spread policy): `embeddings`
+    * hash-repartitioned on vec_id over every core, then
+    * (vec_id, `keep`..., v: array<double>).
+    * The exchange sits before the cast, so the cast and all the vector
+    * math downstream run spread. Null embeddings stay as a null `v`; each
+    * caller keeps its own null handling.
+    */
+  private[graft] def vectorBase(spark: SparkSession, dir: String,
+      keep: Column*): DataFrame =
+    Tables.embeddings(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
+      .select((col("vec_id") +: keep :+
+        vectors.toDouble(col("embedding")).as("v")): _*)
+
+  /** The `k` lowest-id vectors of a (vec_id, v) frame: the deterministic
+    * codebook of the seeded twins (q39b's idiom). A k-row, KB-scale take
+    * of model state, not a data-path collect; empty for an empty frame.
+    */
+  private[graft] def lowestIdSeeds(base: DataFrame,
+      k: Int): Array[Array[Double]] =
+    base.orderBy(col("vec_id")).limit(k)
+      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+
+  /** q85's soft cell assignment: every (vec_id, v) row explodes to its
+    * [[SemProbeCells]] nearest `quant` cells, one (vec_id, cell) row each.
+    */
+  private[graft] def semCells(frame: DataFrame,
+      quant: CellQuantizer): DataFrame =
+    frame.select(col("vec_id"),
+      explode(quant.probeCells(col("v"), SemProbeCells)).as("cell"))
+
   /** Shared ranking tail for the exact and ANN variants: rank candidates
     * per probe by (cosine DESC, neighbor_id), keep top `TopK`, round to
     * `ScoreDp`. One definition so the ANN tiers can never drift from the
@@ -64,9 +97,7 @@ object Similarity {
     * kept). Scores rounded to 6 dp per the oracle contract.
     */
   def q20(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val emb = vectorBase(spark, dir)
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
     rankTopK(emb.crossJoin(broadcast(probes))
@@ -156,10 +187,8 @@ object Similarity {
     * boundary row cannot flip on a last-bit engine difference.
     */
   def q92(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id").as("id"), col("label"),
-        vectors.toDouble(col("embedding")).as("v"))
+    val e = vectorBase(spark, dir, col("label"))
+      .withColumnRenamed("vec_id", "id")
     hardNegatives(
       e.filter(pmod(col("id"), lit(HardNegProbeEvery)) === 0), e, HardNegK)
   }
@@ -210,10 +239,8 @@ object Similarity {
     * vs the exact q92 anchor is property-checked in SimilaritySpec.
     */
   def q92b(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id").as("id"), col("label"),
-        vectors.toDouble(col("embedding")).as("v"))
+    val e = vectorBase(spark, dir, col("label"))
+      .withColumnRenamed("vec_id", "id")
       .filter(col("v").isNotNull)
     hardNegativesIvf(
       e.filter(pmod(col("id"), lit(HardNegProbeEvery)) === 0), e, HardNegK)
@@ -261,14 +288,11 @@ object Similarity {
     * q92b runs under its trained quantizer — carry a DuckDB hash row.
     */
   def q92c(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id").as("id"), col("label"),
-        vectors.toDouble(col("embedding")).as("v"))
+    val labeled = vectorBase(spark, dir, col("label"))
       .filter(col("v").isNotNull)
     // quantizer state: the K lowest-id vectors (KB-scale model state)
-    val seeds = e.orderBy(col("id")).limit(IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(labeled, IvfCells)
+    val e = labeled.withColumnRenamed("vec_id", "id")
     if (seeds.isEmpty)
       return e.select(col("id").as("probe_id"), lit(1).as("rnk"),
         col("id").as("cand_id"), lit(0.0).as("cosine"))
@@ -304,10 +328,7 @@ object Similarity {
     * agg.
     */
   def q93(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
-    embeddingOutliers(e, OutlierSeeds)
+    embeddingOutliers(vectorBase(spark, dir), OutlierSeeds)
   }
 
   /** The q93 assign→stats→z tail over any (vec_id, v) frame — planted
@@ -421,11 +442,9 @@ object Similarity {
     * for the driver; recall vs q20 property-checked in SimilaritySpec.
     */
   def q25(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      // bucket computation (NTables x Planes x dim dot products per row) is
-      // the hot spot — spread it even when the input is one small split
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    // bucket computation (NTables x Planes x dim dot products per row) is
+    // the hot spot — spread it even when the input is one small split
+    val base = vectorBase(spark, dir)
     // corpus: one bucket per table (NTables rows per vector), ids only
     val emb = base.select(col("vec_id"),
       explode(vecexprs.hyperplaneBuckets(col("v"), Planes, NTables)).as("bucket"))
@@ -461,10 +480,7 @@ object Similarity {
     * recall vs the exact anchor remains property-checked in SimilaritySpec.
     */
   def q24(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
-    lshNearDupPairs(base, NearDupCosine)
+    lshNearDupPairs(vectorBase(spark, dir), NearDupCosine)
   }
 
   /** Bucket-size target for the near-dup self-join: planes scale as
@@ -608,9 +624,7 @@ object Similarity {
     * sides so the oracle can never disagree at the boundary.
     */
   def q48(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
     base.select(col("vec_id").as("a_id"), col("v").as("av"))
       .join(broadcast(base.select(col("vec_id").as("b_id"), col("v").as("bv"))),
         col("a_id") < col("b_id"))
@@ -700,9 +714,7 @@ object Similarity {
     * property-checked in SimilaritySpec.
     */
   def q39(spark: SparkSession, dir: String): DataFrame = {
-    val baseRaw = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val baseRaw = vectorBase(spark, dir)
       // null embeddings can't train or be assigned a cell; the cosine
       // tiers drop them via null propagation, the IVF tier drops them here
       .filter(col("v").isNotNull)
@@ -711,10 +723,10 @@ object Similarity {
     ivfTopK(base, Quantizers.quantizerFor(base, ivfCellsFor(n)))
   }
 
-  /** Empty, schema-correct rankTopK result — the q39/q39b short-circuit for
-    * a corpus the quantizer cannot be built on.
+  /** Empty, schema-correct rankTopK result — the q39/q39b/q123 short-circuit
+    * for a corpus the quantizer cannot be built on.
     */
-  private def emptyTopK(spark: SparkSession): DataFrame = {
+  private[graft] def emptyTopK(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -760,14 +772,11 @@ object Similarity {
     * IS exact equality of the retrieved lists.
     */
   def q39b(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     // quantizer state: the K lowest-id vectors (a 16-row, KB-scale take —
     // model state like q39's clusterCenters, not a data-path collect)
-    val seeds = base.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, IvfCells)
     if (seeds.isEmpty) return emptyTopK(spark)
     ivfTopK(base, FlatQuantizer(seeds))
   }
@@ -1031,9 +1040,7 @@ object Similarity {
     * property-checked in SimilaritySpec.
     */
   def q101(spark: SparkSession, dir: String): DataFrame = {
-    val baseRaw = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val baseRaw = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     val (base, n) = ckptWithCount(baseRaw)
     if (n == 0) return emptyTopK(spark)
@@ -1051,13 +1058,9 @@ object Similarity {
     * stack under one oracle hash.
     */
   def q101b(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id"))
-      .limit(math.max(IvfCells, PqCodewords))
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, math.max(IvfCells, PqCodewords))
     if (seeds.isEmpty) return emptyTopK(spark)
     ivfPqTopK(base, FlatQuantizer(seeds.take(IvfCells)),
       pqCodebooksFromSeeds(seeds.take(PqCodewords)))
@@ -1086,13 +1089,9 @@ object Similarity {
     * and amortized to zero on the serve path (bench pair in SCALE.md).
     */
   def q121(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id"))
-      .limit(math.max(IvfCells, PqCodewords))
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, math.max(IvfCells, PqCodewords))
     if (seeds.isEmpty) return emptyTopK(spark)
     val quant = FlatQuantizer(seeds.take(IvfCells))
     val cbs = pqCodebooksFromSeeds(seeds.take(PqCodewords))
@@ -1141,14 +1140,10 @@ object Similarity {
     * verbatim; q121 stays registered as the one-shot seam test.
     */
   def q121b(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     val entry = servedIndex.computeIfAbsent(canonicalDir(dir), _ => {
-      val seeds = base.orderBy(col("vec_id"))
-        .limit(math.max(IvfCells, PqCodewords))
-        .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+      val seeds = lowestIdSeeds(base, math.max(IvfCells, PqCodewords))
       if (seeds.isEmpty) null
       else {
         val quant = FlatQuantizer(seeds.take(IvfCells))
@@ -1233,13 +1228,9 @@ object Similarity {
     * saturation, deployed flag) spec-checked in SimilaritySpec.
     */
   def q103(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id"))
-      .limit(math.max(IvfCells, PqCodewords))
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, math.max(IvfCells, PqCodewords))
     if (seeds.isEmpty)
       return sweepGrid(spark).select(col("nprobe"), col("shortlist"),
         lit(0L).as("scanned_pairs"), lit(0L).as("hits"),
@@ -1283,12 +1274,9 @@ object Similarity {
     * map-side order-statistic shape (SCALE.md, round-14 skew probes).
     */
   def q125(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, IvfCells)
     if (seeds.isEmpty) return emptyClusterTrim(spark)
     clusterTrim(base, seeds)
   }
@@ -1331,12 +1319,9 @@ object Similarity {
     * survivors) — the same kept set without ranking non-survivors.
     */
   def q126(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, IvfCells)
     if (seeds.isEmpty) return emptyClusterSample(spark)
     clusterSample(base, seeds)
   }
@@ -1476,9 +1461,7 @@ object Similarity {
     * codebook fit is init-dependent, q39's situation exactly).
     */
   def q98(spark: SparkSession, dir: String): DataFrame = {
-    val baseRaw = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val baseRaw = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     val (base, n) = ckptWithCount(baseRaw)
     if (n == 0) return emptyTopK(spark)
@@ -1495,12 +1478,9 @@ object Similarity {
     * stays property-only.
     */
   def q98b(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id")).limit(PqCodewords)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, PqCodewords)
     if (seeds.isEmpty) return emptyTopK(spark)
     pqAdcTopK(base, pqCodebooksFromSeeds(seeds))
   }
@@ -1531,9 +1511,7 @@ object Similarity {
     * cell-mates via the family's shared quantizer.
     */
   def q99(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val e = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     semanticDecon(
       e.filter(pmod(col("vec_id"), lit(SemDeconEvery)) === 0)
@@ -1586,9 +1564,7 @@ object Similarity {
     * agreement with the exact q99 is spec-checked in SimilaritySpec.
     */
   def q99b(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val e = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     semanticDeconQuantized(
       e.filter(pmod(col("vec_id"), lit(SemDeconEvery)) === 0)
@@ -1659,20 +1635,12 @@ object Similarity {
     * pairs, which coincides at fixture scale (see FIXTURES.md §4 for the
     * recall assumption).
     */
-  def q85(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
+  def q85(spark: SparkSession, dir: String): DataFrame =
     semanticDedup(
-      emb.select(col("vec_id")),
-      emb.repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-        .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
-        .filter(col("v").isNotNull),
+      Tables.embeddings(spark, dir).select(col("vec_id")),
+      vectorBase(spark, dir).filter(col("v").isNotNull),
       SemDedupCosine)
-  }
 
-  /** The q85 core: `ids` is every vector id (null-embedding rows resolve as
-    * singletons), `base` the clusterable (vec_id, v) frame — planted specs
-    * run it directly.
-    */
   /** Soft-assignment width for q85's quantizer cells (see q85 doc). */
   val SemProbeCells = 2
 
@@ -1688,6 +1656,10 @@ object Similarity {
     */
   val SemFitSample: Int = Quantizers.FitSampleFloor
 
+  /** The q85 core: `ids` is every vector id (null-embedding rows resolve as
+    * singletons), `base` the clusterable (vec_id, v) frame — planted specs
+    * run it directly.
+    */
   def semanticDedup(ids: DataFrame, base: DataFrame,
       threshold: Double): DataFrame = {
     // vectors feed the quantizer fit, the cell explode, and two candidate
@@ -1706,9 +1678,7 @@ object Similarity {
         // the within-cell pair mass stays sub-quadratic as the corpus
         // grows; past [[Quantizers.FlatCellCap]] cells the quantizer is
         // the two-level IMI product (same contract, same joins)
-        val quant = Quantizers.quantizerFor(b, ivfCellsFor(n))
-        b.select(col("vec_id"),
-          explode(quant.probeCells(col("v"), SemProbeCells)).as("cell"))
+        semCells(b, Quantizers.quantizerFor(b, ivfCellsFor(n)))
       }
     semanticDedupCells(ids, b, cells, threshold)
   }
@@ -1727,29 +1697,22 @@ object Similarity {
     * plan-literal rebuild — free next to any scan.
     */
   def q104(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val ids = emb.select(col("vec_id"))
-    val bRaw = emb
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
-      .filter(col("v").isNotNull)
-    val (b, n) = ckptWithCount(bRaw)
+    val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
+    val (b, n) = ckptWithCount(vectorBase(spark, dir).filter(col("v").isNotNull))
     if (n == 0) return semanticDedup(ids, b, SemDedupCosine)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-q104-model").toString
+    // per-process scratch, overwritten in place (q121's idiom): a temp dir
+    // per invocation would leak one codebook per call
+    val path = graft.sources.Scratch.dir("q104-model") + "/coarse"
     graft.sources.ModelStore.saveQuantizer(spark,
-      Quantizers.quantizerFor(b, ivfCellsFor(n)), s"$tmp/coarse")
-    val quant = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
+      Quantizers.quantizerFor(b, ivfCellsFor(n)), path)
+    val quant = graft.sources.ModelStore.loadQuantizer(spark, path)
     // inline [[semanticDedupQuantized]] minus its checkpoint: `b` is
     // already materialized by the ckptWithCount above, and the wrapper's
     // unconditional localCheckpoint re-materialized the full corpus frame
     // a second time — one wasted corpus-sized job per q104 run (r19c
     // job-trace find; the wrapper keeps its checkpoint for callers that
     // pass raw frames, e.g. QuantizerSpec's injected-IMI path)
-    semanticDedupCells(ids, b,
-      b.select(col("vec_id"),
-        explode(quant.probeCells(col("v"), SemProbeCells)).as("cell")),
-      SemDedupCosine)
+    semanticDedupCells(ids, b, semCells(b, quant), SemDedupCosine)
   }
 
   /** q85 driven by a PRE-FITTED quantizer — the same candidate/CC tail fed
@@ -1760,9 +1723,7 @@ object Similarity {
   def semanticDedupQuantized(ids: DataFrame, base: DataFrame,
       threshold: Double, quant: CellQuantizer): DataFrame = {
     val b = base.localCheckpoint()
-    val cells = b.select(col("vec_id"),
-      explode(quant.probeCells(col("v"), SemProbeCells)).as("cell"))
-    semanticDedupCells(ids, b, cells, threshold)
+    semanticDedupCells(ids, b, semCells(b, quant), threshold)
   }
 
   /** The shared q85 tail: soft cell assignments → ids-only within-cell
@@ -1877,14 +1838,11 @@ object Similarity {
     * alternative to a full KMeans refit (FitIters scans).
     */
   def q111(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     // model state: the K lowest-id vectors (q39b's init-free codebook —
     // KB-scale, the legitimate model-fit boundary, not a data-path collect)
-    val seeds = base.orderBy(col("vec_id")).limit(IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, IvfCells)
     if (seeds.isEmpty) {
       import org.apache.spark.sql.types._
       return spark.createDataFrame(
@@ -2060,12 +2018,9 @@ object Similarity {
     * the exact inverse of the ⌊dim·m/M⌋ slice rule all PQ code shares).
     */
   def q122(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val base = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id")).limit(PqCodewords)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = lowestIdSeeds(base, PqCodewords)
     if (seeds.isEmpty) {
       import org.apache.spark.sql.types._
       return spark.createDataFrame(
@@ -2173,9 +2128,7 @@ object Similarity {
     * served ANN shortlist (q39/q98/q101 feed the same tail).
     */
   def q117(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+    val emb = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
     mmrTopK(
       emb.filter(col("vec_id") < 5)
@@ -2522,8 +2475,8 @@ object Similarity {
     * before the overlap join of two K-sized frames.
     */
   def q136(spark: SparkSession, dir: String): DataFrame =
-    matryoshkaFidelity(Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
+    // the core casts `embedding` itself; the base's unused `v` is pruned
+    matryoshkaFidelity(vectorBase(spark, dir, col("embedding")))
 
   /** The q136 core over any (vec_id, embedding) frame — planted specs run
     * it directly.

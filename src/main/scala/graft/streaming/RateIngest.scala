@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * UNBOUNDED source where arrival outpaces that floor, the regime the
   * sizing rule is for (a Kafka-shaped 100 TB/day feed never drains to
   * "done"; Spark sizes each micro-batch to whatever accumulated during the
-  * previous commit). This module maps a `rate`/`rate-micro-batch` arrival
+  * previous commit). This module maps a `rate-micro-batch` arrival
   * process onto the fixture tables so the SAME stateful cores (q107's band
   * index, q61's exact dedup) run under sustained arrival with real
   * payloads:
@@ -29,10 +29,10 @@ import org.apache.spark.sql.functions._
   * The seq-mapping is the HARNESS, not the production path: at 100 TB the
   * rate source stands in for the real broker and payloads arrive in the
   * message itself. What carries over unchanged is the stateful core and
-  * its scale shape — state O(distinct keys) regardless of arrival count,
-  * micro-batch size adapting to backlog (`rate` form), results identical
-  * to the file-replay path on the same logical input (`rate-micro-batch`
-  * form, asserted in RateSourceSpec).
+  * its scale shape — state O(distinct keys) regardless of arrival count —
+  * and results identical to the file-replay path on the same logical
+  * input (asserted in RateSourceSpec). The wall-clock `rate` form's
+  * backpressure measurements are recorded in SCALE.md.
   */
 object RateIngest {
 
@@ -88,18 +88,6 @@ object RateIngest {
       .option("numPartitions", numPartitions)
       .load()
 
-  /** A true arrival-RATE stream (`rowsPerSecond` ticks/s, wall-clock):
-    * when the rate exceeds what one commit absorbs, the backlog carries
-    * into the next micro-batch — the sustained-backpressure regime the
-    * probe measures.
-    */
-  def rateTicks(spark: SparkSession, rowsPerSecond: Int,
-      numPartitions: Int = 2): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond)
-      .option("numPartitions", numPartitions)
-      .load()
-
   /** Deliver `static`'s rows on the tick stream: tick v carries the row
     * with seq = v / repeats — each row arrives `repeats` times on
     * CONSECUTIVE ticks (adjacent duplicate arrivals stay inside any
@@ -136,10 +124,10 @@ object RateIngest {
       .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
   }
 
-  /** Drain stats: evidence the spec/probe assert on. `maxStateRows` is the
+  /** Drain stats: evidence the spec asserts on. `maxStateRows` is the
     * gauge over batches (state growth bound), `inputRows` the total ticks
-    * consumed, `maxBatchRows` the largest single micro-batch (under `rate`,
-    * the adaptive-batching/backpressure signal).
+    * consumed, `maxBatchRows` the largest single micro-batch (under a
+    * wall-clock rate source, the adaptive-batching/backpressure signal).
     */
   final case class DrainStats(batches: Long, inputRows: Long,
       maxStateRows: Long, maxBatchRows: Long, wallSec: Double)
@@ -153,47 +141,42 @@ object RateIngest {
   def drainUntil(spark: SparkSession, df: DataFrame, name: String,
       mode: String, targetInput: Long, settleBatches: Int = 2,
       timeoutMs: Long = 180000L): (DataFrame, DrainStats) =
-    StreamReplay.synchronized {
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        StreamReplay.StatePartitions)
+    StreamReplay.withStatePartitions(spark) {
+      val t0 = System.nanoTime()
+      val q = df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).start()
       try {
-        val t0 = System.nanoTime()
-        val q = df.writeStream.format("memory").queryName(name)
-          .outputMode(mode).start()
-        try {
-          // accumulate per-batch evidence keyed by batchId off
-          // recentProgress (last ~100): batches committing between polls
-          // must not be missed — a lastProgress-only poll undercounts input
-          // and can miss the peak batch/state gauges
-          val perBatch = scala.collection.mutable.LinkedHashMap[
-            Long, (Long, Long)]() // batchId -> (inputRows, maxStateRows)
-          var coveredAt = -1L
-          val deadline = System.currentTimeMillis() + timeoutMs
-          var done = false
-          while (!done) {
-            require(System.currentTimeMillis() < deadline,
-              s"rate drain '$name' did not reach $targetInput ticks " +
-                s"(+$settleBatches settle batches) in ${timeoutMs} ms — " +
-                s"consumed ${perBatch.values.map(_._1).sum} over " +
-                s"${perBatch.size} batches")
-            Thread.sleep(50)
-            q.recentProgress.foreach { p =>
-              perBatch(p.batchId) = (p.numInputRows,
-                p.stateOperators.map(_.numRowsTotal).foldLeft(0L)(math.max))
-            }
-            val input = perBatch.values.map(_._1).sum
-            val lastBatch = perBatch.keys.foldLeft(-1L)(math.max)
-            if (coveredAt < 0 && input >= targetInput) coveredAt = lastBatch
-            done = coveredAt >= 0 && lastBatch >= coveredAt + settleBatches
+        // accumulate per-batch evidence keyed by batchId off
+        // recentProgress (last ~100): batches committing between polls
+        // must not be missed — a lastProgress-only poll undercounts input
+        // and can miss the peak batch/state gauges
+        val perBatch = scala.collection.mutable.LinkedHashMap[
+          Long, (Long, Long)]() // batchId -> (inputRows, maxStateRows)
+        var coveredAt = -1L
+        val deadline = System.currentTimeMillis() + timeoutMs
+        var done = false
+        while (!done) {
+          require(System.currentTimeMillis() < deadline,
+            s"rate drain '$name' did not reach $targetInput ticks " +
+              s"(+$settleBatches settle batches) in ${timeoutMs} ms — " +
+              s"consumed ${perBatch.values.map(_._1).sum} over " +
+              s"${perBatch.size} batches")
+          Thread.sleep(50)
+          q.recentProgress.foreach { p =>
+            perBatch(p.batchId) = (p.numInputRows,
+              p.stateOperators.map(_.numRowsTotal).foldLeft(0L)(math.max))
           }
-          q.stop()
-          (spark.table(name),
-            DrainStats(perBatch.size, perBatch.values.map(_._1).sum,
-              perBatch.values.map(_._2).foldLeft(0L)(math.max),
-              perBatch.values.map(_._1).foldLeft(0L)(math.max),
-              (System.nanoTime() - t0) / 1e9))
-        } finally if (q.isActive) q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+          val input = perBatch.values.map(_._1).sum
+          val lastBatch = perBatch.keys.foldLeft(-1L)(math.max)
+          if (coveredAt < 0 && input >= targetInput) coveredAt = lastBatch
+          done = coveredAt >= 0 && lastBatch >= coveredAt + settleBatches
+        }
+        q.stop()
+        (spark.table(name),
+          DrainStats(perBatch.size, perBatch.values.map(_._1).sum,
+            perBatch.values.map(_._2).foldLeft(0L)(math.max),
+            perBatch.values.map(_._1).foldLeft(0L)(math.max),
+            (System.nanoTime() - t0) / 1e9))
+      } finally if (q.isActive) q.stop()
     }
 }

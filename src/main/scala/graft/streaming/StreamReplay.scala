@@ -74,28 +74,34 @@ object StreamReplay {
     val prev = seq.get()
     if (prev > 0) spark.catalog.dropTempView(s"${sinkPrefix}_$prev")
     val sink = s"${sinkPrefix}_${seq.incrementAndGet()}"
-    // partition count binds at query start; restore after the (synchronous)
-    // drain so batch plans in the same session keep the session sizing.
-    // Serialized on this object: suites run sequentially today (forked JVM,
-    // testForkedParallel off), but a concurrent drain would race the
-    // session-global conf save/restore — the lock closes that class of bug
-    // outright (drains are sub-second-to-seconds; contention is irrelevant).
-    StreamReplay.synchronized {
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val query = df.writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try query.awaitTermination()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    withStatePartitions(spark) {
+      val query = df.writeStream
+        .format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try query.awaitTermination()
+      finally query.stop()
     }
     spark.table(sink)
   }
+
+  /** Runs a synchronous streaming drain with the session's shuffle
+    * partitions at [[StatePartitions]] (the count binds at query start),
+    * restoring the session sizing afterwards so batch plans in the same
+    * session keep it. Serialized on this object: a concurrent drain would
+    * race the session-global conf save/restore — the lock closes that
+    * class of bug outright (drains are sub-second-to-seconds; contention
+    * is irrelevant).
+    */
+  private[graft] def withStatePartitions[T](spark: SparkSession)(body: => T): T =
+    StreamReplay.synchronized {
+      val saved = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
+      try body
+      finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
   def q55(spark: SparkSession, dir: String): DataFrame =
     drain(EventStreams.tumblingCounts(replayEvents(spark, dir)),
@@ -227,14 +233,13 @@ object StreamReplay {
       .select(col("vec_id"),
         graft.functions.vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    val seeds = base.orderBy(col("vec_id")).limit(Similarity.IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = Similarity.lowestIdSeeds(base, Similarity.IvfCells)
     if (seeds.isEmpty) return None
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-serve-model").toString
-    graft.sources.ModelStore.saveQuantizer(spark, FlatQuantizer(seeds),
-      s"$tmp/coarse")
-    val quant = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
+    // per-process scratch, overwritten in place (q121's idiom): a temp dir
+    // per invocation would leak one codebook per call
+    val path = graft.sources.Scratch.dir("serve-model") + "/coarse"
+    graft.sources.ModelStore.saveQuantizer(spark, FlatQuantizer(seeds), path)
+    val quant = graft.sources.ModelStore.loadQuantizer(spark, path)
     val centroids = quant match { case FlatQuantizer(cs) => cs; case _ => seeds }
     import spark.implicits._
     val centroidDf = centroids.zipWithIndex.toSeq
@@ -588,7 +593,7 @@ object StreamReplay {
   def q123(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val served = servedQuantizer(spark, dir)
-    if (served.isEmpty) return emptyTopKResult(spark)
+    if (served.isEmpty) return Similarity.emptyTopK(spark)
     val (quant, _, _) = served.get
     val stream = replayTable(spark, dir, "embeddings")
       .select(col("vec_id"),
@@ -604,19 +609,6 @@ object StreamReplay {
         graft.functions.vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
     Similarity.ivfServe(index, base, quant)
-  }
-
-  /** Empty, schema-correct ranked-top-k result — q123's short-circuit for
-    * a corpus no codebook can be trained on (Similarity.emptyTopK's shape).
-    */
-  private def emptyTopKResult(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("probe_id", LongType), StructField("rnk", IntegerType),
-        StructField("neighbor_id", LongType),
-        StructField("score", DoubleType))))
   }
 
   /** Empty, schema-correct q108 result — the windowed monitor for a corpus

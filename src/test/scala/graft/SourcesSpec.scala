@@ -148,6 +148,18 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("served-model queries write their codebook to scratch, not a fresh temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def modelDirs(): Set[String] =
+      Option(tmp.list()).getOrElse(Array.empty[String]).toSet.filter(n =>
+        n.startsWith("graft-q104-model") || n.startsWith("graft-serve-model"))
+    val before = modelDirs()
+    for (q <- Seq("q104", "q106"); _ <- 1 to 2)
+      Registry.all.find(_.name.startsWith(q + "_")).get
+        .build(spark, dir).count()
+    assert(modelDirs() -- before == Set.empty)
+  }
+
   test("streaming parquet sink restarts from checkpoint exactly once") {
     withTemp { tmp =>
       import spark.implicits._

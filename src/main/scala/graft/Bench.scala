@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point: times every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line for the driver.

@@ -43,8 +43,8 @@ object Sessions {
       // entries by default — sized for a driver running a handful of query
       // shapes, not an engine hosting 166. One q135b run alone touches
       // ~130 distinct sources, so at the default it recompiled 24-30 of
-      // them with janino on EVERY run (measured,
-      // tools/codegen_planning_probe_r19.scala), and any pass over the
+      // them with janino on EVERY run (measured in round 19; SCALE.md,
+      // "Retired probe scripts"), and any pass over the
       // inventory evicts everything 40 times over. 4096 entries bounds
       // the cache at tens of MB of class metadata on any driver — the
       // knob is scale-independent (compilation is pure driver-side waste

@@ -288,7 +288,6 @@ case class ShingleHashesExpr(child: Expression, n: Int)
 
 object ShingleHashesExpr {
   import org.apache.spark.sql.catalyst.expressions.XXH64
-  import org.apache.spark.unsafe.types.UTF8String
 
   def compute(tokens: ArrayData, n: Int): ArrayData = {
     val m = tokens.numElements()

@@ -524,7 +524,6 @@ object ImiProbeCellsExpr {
 
 object HyperplaneBucketsExpr {
   import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-  import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.types.{IntegerType => IT}
 
   /** ±1 component for (dim d, plane p): parity of Murmur3(d, p) — must stay

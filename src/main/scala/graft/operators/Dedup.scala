@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.expressions.sketch
-import graft.functions.text
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -618,7 +617,23 @@ object Dedup {
   /** The q76 core over any (doc_id, text) frame — planted-corpus specs run
     * it directly.
     */
-  def dedupVerdict(docs: DataFrame, threshold: Double): DataFrame = {
+  def dedupVerdict(docs: DataFrame, threshold: Double): DataFrame =
+    exactThenNearClusters(docs, threshold)
+      .select(col("doc_id"), col("lab").as("rep_id"),
+        (col("doc_id") === col("lab")).as("kept"),
+        when(col("doc_id") === col("lab"), lit("kept"))
+          .when(col("doc_id") =!= col("keeper"), lit("exact"))
+          .otherwise(lit("near")).as("reason"))
+      .orderBy(col("doc_id"))
+
+  /** q76's and q113's shared cluster resolution over a (doc_id, text)
+    * frame: every doc_id with its exact keeper (min doc_id per md5 of the
+    * text) and `lab`, the near-dup component label of that keeper (LSH +
+    * exact Jaccard ≥ `threshold` pairs over the exact survivors,
+    * pointer-jumped to the component min). Columns: doc_id, keeper, v, lab.
+    */
+  private def exactThenNearClusters(docs: DataFrame,
+      threshold: Double): DataFrame = {
     // keyed feeds keepers + doc2keeper, keepers feeds three consumers —
     // materialize both (ids+hash only, tiny) so no branch re-runs the
     // corpus scan+md5 through lineage (same fix measured on q78)
@@ -639,12 +654,6 @@ object Dedup {
     val comp = connectedComponents(
       keepers.select(col("keeper").as("v")), pairs)
     doc2keeper.join(comp, doc2keeper("keeper") === comp("v"))
-      .select(col("doc_id"), col("lab").as("rep_id"),
-        (col("doc_id") === col("lab")).as("kept"),
-        when(col("doc_id") === col("lab"), lit("kept"))
-          .when(col("doc_id") =!= col("keeper"), lit("exact"))
-          .otherwise(lit("near")).as("reason"))
-      .orderBy(col("doc_id"))
   }
 
   /** q113: quality-keeper dedup — q76's cluster resolution with the
@@ -677,20 +686,7 @@ object Dedup {
     * directly.
     */
   def qualityKeeperDedup(docs: DataFrame, threshold: Double): DataFrame = {
-    val keyed = docs.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("h"))
-      .localCheckpoint()
-    val keepers = keyed.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
-      .localCheckpoint()
-    val doc2keeper = keyed.join(keepers, Seq("h"))
-      .select(col("doc_id"), col("keeper"))
-    val keeperDocs = docs
-      .join(keepers.select(col("keeper").as("doc_id")), Seq("doc_id"))
-    val pairs = nearDupPairsUnsorted(keeperDocs, threshold)
-      .select(col("a_id"), col("b_id"))
-    val comp = connectedComponents(
-      keepers.select(col("keeper").as("v")), pairs)
-    val membership = doc2keeper.join(comp, doc2keeper("keeper") === comp("v"))
+    val membership = exactThenNearClusters(docs, threshold)
       .select(col("doc_id"), col("lab").as("rep_id"))
     // scored feeds the per-cluster argmax AND the final join-back — the r18
     // baseline plan re-executed the q94 token-explode scoring pass (plus

@@ -16,8 +16,7 @@ case class MediaFeatures(media_id: Long, width: Int, height: Int,
     n_bytes: Int, features: Array[Float])
 
 /** Multimodal columns (LLM-pipeline tier): binary media columns with typed
-  * metadata, plus decode / feature-extract / resize / frame-sample
-  * plumbing.
+  * metadata, plus decode / feature-extract / resize plumbing.
   *
   * No EXTERNAL codecs exist in this environment, so `decodeStub` is a
   * clearly-marked deterministic FAKE (byte histogram as "pixels") — swap it
@@ -130,23 +129,6 @@ object Multimodal {
         r.copy(media = out)
       }
     }
-  }
-
-  /** Frame-sample stub: fixed-size windows at regular offsets — the video
-    * analogue (decode N frames per clip). Emits (media_id, frame_no, frame).
-    */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int,
-      nFrames: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      val usable = math.max(r.media.length - frameBytes, 0)
-      (0 until nFrames).iterator.map { f =>
-        val off = if (nFrames == 1) 0 else usable * f / (nFrames - 1)
-        (r.media_id, f,
-          java.util.Arrays.copyOfRange(r.media, off,
-            math.min(off + frameBytes, r.media.length)))
-      }
-    }.toDF("media_id", "frame_no", "frame")
   }
 
   // ---- Perceptual image hash (q77) ----------------------------------------
@@ -879,7 +861,7 @@ object Multimodal {
     * [[AudioPertAmp]] — a small additive hum. The contour comparisons
     * flip only where adjacent window energies are close; at the SHIPPED
     * constants every planted pair lands within the Hamming ≤ 3 bound
-    * (measured on sf0.01's 50 twins, tools/q143_planted_probe_r18: dist
+    * (measured on sf0.01's 50 twins in round 18, README's q143 entry: dist
     * h0:29 h1:9 h2:6 h3:6, max 3 — an earlier draft's "~40/50, max 5"
     * described a pre-final larger-amp constant set).
     */

@@ -47,9 +47,9 @@ sealed trait CellQuantizer {
     * for equal coverage. Flat: 1 by definition. IMI: 2 — its centroids are
     * a GRID of per-half marginals, not free joint KMeans centers, so the
     * same probed-cell count covers the manifold less adaptively; measured
-    * at the 200k decade (tools/imi_fanout_probe), hard-negative recall
-    * through a 462-cell IMI steps 0.0 → 1.0 between 1× and 2× the ⌈√k⌉
-    * fan-out where flat hits 1.0 at exactly 1×. Consumers multiply
+    * at the 200k decade (SCALE.md, "IMI at the 200k decade"),
+    * hard-negative recall through a 462-cell IMI steps 0.0 → 1.0 between
+    * 1× and 2× the ⌈√k⌉ fan-out where flat hits 1.0 at exactly 1×. Consumers multiply
     * [[Similarity.ivfProbesFor]] by this (capped at nCells).
     */
   def probeWidthFactor: Int = 1

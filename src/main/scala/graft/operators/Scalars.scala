@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.num._
 import graft.functions.text
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -320,10 +320,9 @@ object Similarity {
     * The quantizer here is deliberately deterministic — the K lowest-id
     * vectors are the seeds — so the WHOLE operator is exactly
     * SQL-mirrorable (KMeans centroids are init-dependent; lowest-id seeds
-    * are a total order any engine reproduces). The production quantizer at
-    * 100 TB is q39's trained KMeans feeding this same assign→stats→z tail;
-    * this anchor is what that path's assignment/stats logic is checked
-    * against. Shape: seeds and the K-row stats frame broadcast, the corpus
+    * are a total order any engine reproduces). A trained quantizer's
+    * centroids would feed the same assign→stats→z tail. Shape: seeds and
+    * the K-row stats frame broadcast, the corpus
     * never shuffles — one scan, one map-side-combined argmin, one K-row
     * agg.
     */
@@ -332,52 +331,18 @@ object Similarity {
   }
 
   /** The q93 assign→stats→z tail over any (vec_id, v) frame — planted
-    * specs run it directly; a trained quantizer's centroids can replace
-    * the lowest-id seeds without touching this logic.
+    * specs run it directly.
     */
   def embeddingOutliers(src: DataFrame, k: Int): DataFrame = {
-    val clean = definedCosine(src)
+    // Null and zero-norm vectors have no defined cosine distance (NULL /
+    // NaN d) and would win Spark's min(struct) NULL-first ordering while
+    // the oracle's NULLS-LAST rank picks the best real distance — exclude
+    // them from seeding AND assignment (q85's .isNotNull guard, plus the
+    // 0-norm case cosine can't serve).
+    val clean =
+      src.filter(col("v").isNotNull && vectors.dot(col("v"), col("v")) > 0)
     val seeds = clean.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("seed_id"), col("v").as("sv"))
-    outlierTail(clean, seeds)
-  }
-
-  /** q93's production form: the same assign→stats→z tail fed by a TRAINED
-    * coarse quantizer (q39/q85's sample-fit KMeans) instead of the
-    * lowest-id seeds the oracle anchor uses. The z-extreme verdicts are
-    * quantizer-robust by construction — a genuine stray is far from every
-    * mode of the corpus, so whichever reasonable centroid it lands on, its
-    * within-cluster distance stays an extreme z — asserted by the
-    * equality-of-verdict spec on planted strays against the anchor form.
-    */
-  def embeddingOutliersKMeans(src: DataFrame, k: Int): DataFrame = {
-    // the empty test rides the checkpoint job (ckptWithCount) instead of
-    // paying a separate isEmpty probe of the materialized frame
-    val (clean, nClean) = ckptWithCount(definedCosine(src))
-    if (nClean == 0)
-      return clean.select(col("vec_id"), col("vec_id").as("cluster_id"),
-        lit(0.0).as("cos_dist"), lit(0.0).as("z"), lit(false).as("is_outlier"))
-    val spark = src.sparkSession
-    import spark.implicits._
-    val seeds = Quantizers.fitCentroids(clean, k).zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("seed_id", "sv")
-    outlierTail(clean, seeds)
-  }
-
-  /** Null and zero-norm vectors have no defined cosine distance (NULL / NaN
-    * d) and would win Spark's min(struct) NULL-first ordering while the
-    * oracle's NULLS-LAST rank picks the best real distance — exclude them
-    * from seeding AND assignment (q85's .isNotNull guard, plus the 0-norm
-    * case cosine can't serve).
-    */
-  private def definedCosine(src: DataFrame): DataFrame =
-    src.filter(col("v").isNotNull && vectors.dot(col("v"), col("v")) > 0)
-
-  /** The shared assign→stats→z tail over a clean (vec_id, v) frame and a
-    * broadcastable (seed_id, sv) centroid frame.
-    */
-  private def outlierTail(clean: DataFrame, seeds: DataFrame): DataFrame = {
     // argmin via map-side-combinable min(struct): the broadcast join leaves
     // the corpus partitioning intact, so all K candidate rows of a vector
     // collapse to one BEFORE any exchange (a window here would shuffle N×K)
@@ -518,7 +483,7 @@ object Similarity {
     // self-join's bucket fan-in must shrink as the corpus grows
     val planes = planesFor(nB)
     // Vectors RIDE the bucket join and cosine evaluates inside it — the
-    // r18 sf10 decomposition (tools/q24_distinct_probe_r18) killed the
+    // r18 sf10 decomposition (bench/SCALE_CHECK_sf10_r18.txt) killed the
     // previous ids-first plan at this geometry: with bucket target 256,
     // every vector averages ~NTables·256/2 ≈ 500 candidate pairs, so the
     // "dedupe ids, then fetch vectors per pair" tail shipped dim·pairs
@@ -1379,8 +1344,7 @@ object Similarity {
 
   /** The q103 core over any clean (vec_id, v) frame and a fitted
     * quantizer + PQ codebooks — specs run it directly, and a TRAINED
-    * (or [[graft.sources.ModelStore]]-reloaded) model plugs in the same
-    * way to calibrate the production index.
+    * model plugs in the same way to calibrate the production index.
     */
   def annSweep(base: DataFrame, quant: CellQuantizer,
       cbs: Array[Array[Array[Double]]]): DataFrame = {
@@ -1997,15 +1961,15 @@ object Similarity {
     * per-dimension mean of its member slices, and a codeword with no
     * members keeps its old value (q111's empty-cell rule). Output: the
     * per-(m, cw, dim) refresh report — member count, new mean, old value,
-    * shift — the "how stale is the storage tier" table reviewed before
-    * [[refreshedPqCodebooks]] + ModelStore swap the artifact.
+    * shift — the "how stale is the storage tier" table to read before a
+    * refreshed codebook replaces the artifact.
     *
     * Determinism is q111's verbatim: member dims quantize to
     * q = floor(v·1e4) so per-codeword sums are exact integers in both
     * engines; ONE IEEE division then floor to e6; old values floor to e6
     * directly. The codebook is q98b's deterministic-seed idiom, so the
-    * whole encode→aggregate→blend path carries a DuckDB hash; a trained /
-    * ModelStore-loaded codebook plugs into the same [[pqRefresh]] core.
+    * whole encode→aggregate→blend path carries a DuckDB hash; a trained
+    * codebook plugs into the same [[pqRefresh]] core.
     *
     * Shape for 100 TB: ONE corpus scan — all M per-subspace assignments
     * ride the same codegen'd pass ([[pqCodeCols]], M plan-literal argmins
@@ -2034,8 +1998,7 @@ object Similarity {
   }
 
   /** The q122 core over any clean (vec_id, v: array<double>) frame and any
-    * per-subspace codebooks — planted specs and ModelStore-loaded models
-    * run it directly.
+    * per-subspace codebooks — planted specs run it directly.
     */
   def pqRefresh(base: DataFrame,
       cbs: Array[Array[Array[Double]]]): DataFrame = {
@@ -2071,22 +2034,6 @@ object Similarity {
       .withColumn("shift_e6", col("new_mean_e6") - col("old_e6"))
       .orderBy(col("m"), col("cw"), col("dim"))
   }
-
-  /** Materialize the refreshed per-subspace codebooks from [[pqRefresh]]'s
-    * output — the array a caller hands to
-    * [[graft.sources.ModelStore.savePqCodebooks]] to complete the
-    * monitor→refresh→persist loop for the storage tier. Model-sized
-    * collect (K×dim rows).
-    */
-  def refreshedPqCodebooks(refresh: DataFrame): Array[Array[Array[Double]]] =
-    refresh.select(col("m"), col("cw"), col("dim"), col("new_mean_e6"))
-      .collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) =>
-        rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (_, rs) =>
-          rs.sortBy(_.getInt(2)).map(_.getLong(3) / 1e6)
-        }.toArray
-      }.toArray
 
   /** MMR trade-off λ: 0.5 is the Carbonell & Goldstein '98 balanced point
     * (and keeps 1−λ = 0.5 an exact double — a λ like 0.7 would make the

@@ -924,31 +924,46 @@ object TextAnalysis {
       .limit(limit).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
 
-  /** Learn `steps` merges; returns (step, lhs, rhs, weight) in order. */
-  def bpeLearnMerges(docs: DataFrame,
-      steps: Int = BpeSteps): Seq[(Int, String, String, Long)] = {
+  /** The one BPE learner loop: per round, rank the first `lookahead`
+    * adjacent pairs of the vocab with every merge so far applied, let
+    * `pick` choose the round's merges from them (given how many of the
+    * `steps` are left), and queue those merges on the vocab lineage,
+    * re-materializing it every [[BpeCkptEveryMerges]] merges. Stops at
+    * `steps` merges or when no pair is left. Returns the merges as (step,
+    * lhs, rhs, weight) in order, and the number of rounds.
+    */
+  private def bpeLearn(docs: DataFrame, steps: Int, lookahead: Int)(
+      pick: (Array[(String, String, Long)], Int) => Seq[(String, String, Long)])
+      : (Seq[(Int, String, String, Long)], Int) = {
     var base = bpeVocab(docs).localCheckpoint()
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var k = 1
+    var rounds = 0
     var exhausted = false
-    while (k <= steps && !exhausted) {
+    while (out.size < steps && !exhausted) {
       if (pending.size >= BpeCkptEveryMerges) {
         base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
         pending.clear()
       }
-      // the argmax: 1 row, a model-fit boundary
-      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), 1)
+      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), lookahead)
       if (top.isEmpty) exhausted = true
       else {
-        val (l, r, c) = top.head
-        out += ((k, l, r, c))
-        pending += ((l, r))
-        k += 1
+        rounds += 1
+        val kept = pick(top, steps - out.size)
+        kept.foreach { case (l, r, c) => out += ((out.size + 1, l, r, c)) }
+        pending ++= kept.map { case (l, r, _) => (l, r) }
       }
     }
-    out.toSeq
+    (out.toSeq, rounds)
   }
+
+  /** Learn `steps` merges; returns (step, lhs, rhs, weight) in order. One
+    * argmax per round: the batched learner with a 1-row lookahead and one
+    * pick per round, whose guard then keeps exactly the top pair.
+    */
+  def bpeLearnMerges(docs: DataFrame,
+      steps: Int = BpeSteps): Seq[(Int, String, String, Long)] =
+    bpeLearnMergesBatched(docs, steps, maxPerRound = 1, lookahead = 1)._1
 
   /** q139: the learned merge table — (step, lhs, rhs, merged, weight). */
   def q139BpeMerges(spark: SparkSession, dir: String): DataFrame = {
@@ -1035,56 +1050,37 @@ object TextAnalysis {
     */
   def bpeLearnMergesBatched(docs: DataFrame, steps: Int = BpeSteps,
       maxPerRound: Int = 16, lookahead: Int = 64)
-      : (Seq[(Int, String, String, Long)], Int) = {
-    var base = bpeVocab(docs).localCheckpoint()
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    while (out.size < steps && !exhausted) {
-      if (pending.size >= BpeCkptEveryMerges) {
-        base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
-        pending.clear()
+      : (Seq[(Int, String, String, Long)], Int) =
+    bpeLearn(docs, steps, lookahead) { (top, left) =>
+      val used = scala.collection.mutable.Set.empty[String]
+      val accepted =
+        scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      // cq: the count bound below which sequential picks could diverge —
+      // the first conflicting pair, or the last collected row when the
+      // ranked table extends past the lookahead window
+      var cq = -1L
+      var i = 0
+      while (cq < 0 && i < top.length &&
+          accepted.size < math.min(maxPerRound, left)) {
+        val (l, r, c) = top(i)
+        if (used(l) || used(r)) cq = c
+        else { accepted += top(i); used += l; used += r }
+        i += 1
       }
-      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), lookahead)
-      if (top.isEmpty) exhausted = true
-      else {
-        rounds += 1
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted =
-          scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        // cq: the count bound below which sequential picks could diverge —
-        // the first conflicting pair, or the last collected row when the
-        // ranked table extends past the lookahead window
-        var cq = -1L
-        var i = 0
-        while (cq < 0 && i < top.length &&
-            accepted.size < math.min(maxPerRound, steps - out.size)) {
-          val (l, r, c) = top(i)
-          if (used(l) || used(r)) cq = c
-          else { accepted += top(i); used += l; used += r }
-          i += 1
-        }
-        // loop may also exit at the cap or the lookahead horizon: every
-        // UNEXAMINED pair is a potential conflict, so the bound must cover
-        // the best of them (the next uncollected rank / the last collected
-        // row when the table extends past the window)
-        if (cq < 0 && i < top.length) cq = top(i)._3
-        else if (cq < 0 && top.length == lookahead) cq = top.last._3
-        val kept = accepted.head +:
-          accepted.tail.takeWhile(_._3 > cq).toSeq
-        kept.foreach { case (l, r, c) => out += ((out.size + 1, l, r, c)) }
-        pending ++= kept.map { case (l, r, _) => (l, r) }
-      }
+      // loop may also exit at the cap or the lookahead horizon: every
+      // UNEXAMINED pair is a potential conflict, so the bound must cover
+      // the best of them (the next uncollected rank / the last collected
+      // row when the table extends past the window)
+      if (cq < 0 && i < top.length) cq = top(i)._3
+      else if (cq < 0 && top.length == lookahead) cq = top.last._3
+      accepted.head +: accepted.tail.takeWhile(_._3 > cq).toSeq
     }
-    (out.toSeq, rounds)
-  }
 
   /** Deep-K operating point of the tie-ACCEPTING batcher (q145): deep
     * enough that q142's exactness guard visibly plateaus on the fixture
-    * (its K=64 gain is only ×1.3 — tools/bpe_batch_probe_r17), small
-    * enough for the driver's verify budget. The probe measures K ∈
-    * {256, 1024} for SCALE.md.
+    * (its K=64 gain is only ×1.3 — SCALE.md, "Round-17 rows"), small
+    * enough for Verify's time budget. K ∈ {256, 1024} is measured in
+    * SCALE.md's "Round-18 rows".
     */
   val BpeDeepSteps = 64
 
@@ -1116,39 +1112,21 @@ object TextAnalysis {
     */
   def bpeLearnMergesDeep(docs: DataFrame, steps: Int = BpeDeepSteps,
       maxPerRound: Int = 64, lookahead: Int = 256)
-      : (Seq[(Int, String, String, Long)], Int) = {
-    var base = bpeVocab(docs).localCheckpoint()
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    while (out.size < steps && !exhausted) {
-      if (pending.size >= BpeCkptEveryMerges) {
-        base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
-        pending.clear()
+      : (Seq[(Int, String, String, Long)], Int) =
+    bpeLearn(docs, steps, lookahead) { (top, left) =>
+      val used = scala.collection.mutable.Set.empty[String]
+      val accepted =
+        scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      var i = 0
+      while (i < top.length && accepted.size < math.min(maxPerRound, left)) {
+        val (l, r, _) = top(i)
+        if (!used(l) && !used(r)) { accepted += top(i); used += l; used += r }
+        i += 1
       }
-      val top = rankedPairs(vocabWithMerges(base, pending.toSeq), lookahead)
-      if (top.isEmpty) exhausted = true
-      else {
-        rounds += 1
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted =
-          scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var i = 0
-        while (i < top.length &&
-            accepted.size < math.min(maxPerRound, steps - out.size)) {
-          val (l, r, _) = top(i)
-          if (!used(l) && !used(r)) { accepted += top(i); used += l; used += r }
-          i += 1
-        }
-        accepted.foreach { case (l, r, c) => out += ((out.size + 1, l, r, c)) }
-        // rank order application — and because accepted pairs are symbol-
-        // disjoint, the application order is immaterial to the result
-        pending ++= accepted.map { case (l, r, _) => (l, r) }
-      }
+      // rank order application — and because accepted pairs are symbol-
+      // disjoint, the application order is immaterial to the result
+      accepted.toSeq
     }
-    (out.toSeq, rounds)
-  }
 
   /** q145: the deep-K merge table — same columns as q139/q142, learned by
     * the tie-accepting batcher at [[BpeDeepSteps]].

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistence for the trained ANN artifacts — the fitted coarse-quantizer
-  * codebooks (flat or IMI) and the per-subspace PQ codebooks the
-  * q39/q85/q92b/q98/q101 family fits from its bounded sample.
+  * codebooks (flat or IMI) the q39/q85/q92b/q101 family fits from its
+  * bounded sample, and the encoded corpus index the IVF/IVF-PQ tier
+  * serves from.
   *
   * Why this exists (the production train-once/serve-many contract): every
   * fit is sample-seeded KMeans, so REFITTING per job moves the cell
@@ -15,19 +16,18 @@ import org.apache.spark.sql.functions._
   * q98/q101-style invocation pays the fit wall again. Persisting the fitted
   * codebooks once (the same artifact discipline as CurationRun's `shards/`)
   * makes reloaded runs bit-identical: the quantizer IS its centroid arrays,
-  * so a loaded codebook reproduces every assignment and ADC score exactly
+  * so a loaded codebook reproduces every assignment exactly
   * (reload-equality spec'd in QuantizerSpec).
   *
-  * Layout: one parquet table per artifact with rows
+  * Codebook layout: one parquet table per artifact with rows
   * (kind: string, side: int, idx: int, centroid: array<double>) —
   *   - flat coarse codebook: kind "flat", side 0, idx = cell id
   *   - IMI product codebooks: kind "imi", side 0 = first-half codebook A,
   *     side 1 = second-half codebook B, idx = per-side codeword id
-  *   - PQ codebooks: kind "pq", side = subspace m, idx = codeword id
   * Model state is KB-to-MB scale by the quantizer contract (≤ FlatCellCap
-  * centroids per side, M×K PQ codewords), so the load-side collect is the
-  * legitimate model-fit boundary, not a data-path collect — the same rule
-  * as the fit's own clusterCenters materialization.
+  * centroids per side), so the load-side collect is the legitimate
+  * model-fit boundary, not a data-path collect — the same rule as the
+  * fit's own clusterCenters materialization.
   */
 object ModelStore {
 
@@ -71,29 +71,6 @@ object ModelStore {
         throw new IllegalArgumentException(
           s"$path holds a '$other' artifact, not a coarse quantizer")
     }
-  }
-
-  /** Write fitted per-subspace PQ codebooks under `path` (overwrite). */
-  def savePqCodebooks(spark: SparkSession, cbs: Array[Array[Array[Double]]],
-      path: String): Unit =
-    toDf(spark, "pq", cbs.toIndexedSeq)
-      .coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Reload PQ codebooks written by [[savePqCodebooks]] — cbs(m)(cw) in
-    * subspace-then-codeword order, bit-identical to the fitted original.
-    */
-  def loadPqCodebooks(spark: SparkSession,
-      path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(path)
-      .select(col("kind"), col("side"), col("idx"), col("centroid"))
-      .orderBy(col("side"), col("idx"))
-      .collect()
-    require(rows.nonEmpty, s"no PQ artifact at $path")
-    require(rows.head.getString(0) == "pq",
-      s"$path holds a '${rows.head.getString(0)}' artifact, not PQ codebooks")
-    rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (_, rs) =>
-      rs.sortBy(_.getInt(2)).map(_.getSeq[Double](3).toArray)
-    }.toArray
   }
 
   /** Persist an ENCODED corpus index — the (vec_id, cell[, c0..cM-1])

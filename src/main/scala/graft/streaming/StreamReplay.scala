@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.QueryDef
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -102,6 +102,18 @@ object StreamReplay {
       try body
       finally spark.conf.set("spark.sql.shuffle.partitions", saved)
     }
+
+  /** q107's MinHash LSH band keys: 3-token shingles, 8 bands × 2 rows. */
+  private def bandsOf(text: Column): Column =
+    graft.functions.expressions.sketch.mdBandKeys(text, 3, 8, 2)
+
+  /** q107's band-index core over a (doc_id, text) batch or stream: per
+    * band key, the arrival count and the keeper (lowest doc_id).
+    */
+  private[graft] def bandIndex(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(bandsOf(col("text"))).as("band"))
+      .groupBy(col("band"))
+      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
 
   def q55(spark: SparkSession, dir: String): DataFrame =
     drain(EventStreams.tumblingCounts(replayEvents(spark, dir)),
@@ -298,8 +310,6 @@ object StreamReplay {
     * the join shuffles ids, never payloads.
     */
   def q107(spark: SparkSession, dir: String): DataFrame = {
-    val bandsOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      t => graft.functions.expressions.sketch.mdBandKeys(t, 3, 8, 2)
     // Tables.spread with a 256 KB floor: the serve-side band pass is 16
     // MD5 draws per shingle — measured ~2 s/MB single-core (r19), ~10x
     // the regex-battery intensity the default 4 MB floor is calibrated
@@ -308,10 +318,7 @@ object StreamReplay {
     val batchDocs = graft.Tables.spread(
       graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"), minBytes = 256L << 10)
-    val stream = replayTable(spark, dir, "documents")
-      .select(col("doc_id"), explode(bandsOf(col("text"))).as("band"))
-    val index = drain(stream.groupBy(col("band"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper")),
+    val index = drain(bandIndex(replayTable(spark, dir, "documents")),
       "q107_neardup_sink", "complete")
     val docBands = batchDocs
       .select(col("doc_id"), explode(bandsOf(col("text"))).as("band"))

@@ -43,7 +43,6 @@ class AdaptiveSkewSpec extends AnyFunSuite {
     * median hash partition.
     */
   private def hotLeft = {
-    import spark.implicits._
     spark.range(0, 300000).select(
       when(col("id") % 2 === 0, lit(7L)).otherwise(col("id")).as("k"),
       concat(lit("payload-payload-payload-payload-"), col("id")).as("v"))

@@ -477,7 +477,6 @@ class CurationRunSpec extends AnyFunSuite {
       .filter(_.isDirectory).map(_.getName)
     assert(shardDirs.nonEmpty && shardDirs.forall(_.startsWith("shard=")),
       "shards must be Hive-partitioned by shard")
-    import spark.implicits._
     val want = Pipeline.trainShards(
         spark.read.parquet(s"${art(outDir)}/corpus").select(col("doc_id"), col("text")))
       .select(col("doc_id"), col("shard"), col("pos")).collect()

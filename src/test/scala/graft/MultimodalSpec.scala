@@ -4,7 +4,7 @@ import graft.operators.{MediaRow, Multimodal}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plumbing checks for the multimodal tier: binary round-trip fidelity,
-  * feature shape, resize bound, frame sampling — everything real except the
+  * feature shape, resize bound — everything real except the
   * decode math, which is an explicit stub.
   */
 class MultimodalSpec extends AnyFunSuite {
@@ -153,16 +153,6 @@ class MultimodalSpec extends AnyFunSuite {
     val neighbors = Set(0L, 8L, 1L, 9L, 2L, 10L, 3L, 11L)
     profile.foreach { case (id, nn) =>
       assert(nn === (if (neighbors(id)) 1L else 0L), s"profile id=$id nn=$nn")
-    }
-  }
-
-  test("frame sampling yields n frames of bounded size per asset") {
-    val frames = Multimodal.sampleFrames(
-      Multimodal.mediaTable(spark, dir), frameBytes = 32, nFrames = 4)
-    val counts = frames.groupBy("media_id").count().collect()
-    assert(counts.forall(_.getLong(1) === 4))
-    frames.collect().foreach { r =>
-      assert(r.getAs[Array[Byte]]("frame").length <= 32)
     }
   }
 

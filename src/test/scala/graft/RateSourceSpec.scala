@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{EventStreams, RateIngest}
+import graft.streaming.{EventStreams, RateIngest, StreamReplay}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,11 +22,11 @@ class RateSourceSpec extends AnyFunSuite {
   test("rate-driven band index equals the file-replay path and is multi-batch") {
     val docs = RateIngest.docsBySeq(spark, dir).cache()
     val n = docs.count()
-    val mirror = RateIngest.bandIndex(docs) // batch form of the same core
+    val mirror = StreamReplay.bandIndex(docs) // batch form of the same core
     val distinctBands = mirror.count()
 
     val (rateIdx, stats) = RateIngest.drainUntil(spark,
-      RateIngest.bandIndex(
+      StreamReplay.bandIndex(
         RateIngest.deliver(RateIngest.microBatchTicks(spark, 64), docs)),
       "rate_band_idx", "complete", targetInput = n)
     assert(stats.batches >= 4,
@@ -43,11 +43,11 @@ class RateSourceSpec extends AnyFunSuite {
   test("band-index state is O(distinct bands), independent of arrival count") {
     val docs = RateIngest.docsBySeq(spark, dir).cache()
     val n = docs.count()
-    val mirror = RateIngest.bandIndex(docs)
+    val mirror = StreamReplay.bandIndex(docs)
     val distinctBands = mirror.count()
     // every doc delivered 3x on consecutive ticks: 3n arrivals, same bands
     val (idx3, stats3) = RateIngest.drainUntil(spark,
-      RateIngest.bandIndex(
+      StreamReplay.bandIndex(
         RateIngest.deliver(RateIngest.microBatchTicks(spark, 192), docs,
           repeats = 3)),
       "rate_band_idx3", "complete", targetInput = 3 * n)

@@ -131,7 +131,6 @@ class SimilaritySpec extends AnyFunSuite {
     // gives per-plane p = 1 - acos(c)/pi >= 0.90, so 4 tables x 6 planes
     // recall 1-(1-p^6)^4 >= 0.95 — THIS is the operating point the
     // fixture-threshold test above cannot exercise.
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(7)
     val dim = 64
     def vec(): Array[Double] = Array.fill(dim)(rnd.nextGaussian())
@@ -659,27 +658,6 @@ class SimilaritySpec extends AnyFunSuite {
       (7L, 1L, 0.0, -0.4472, false),
       (8L, 1L, 0.0, -0.4472, false),
       (9L, 1L, 1.6, 2.2361, true)))
-  }
-
-  /** The KMeans-fed production form must reach the same VERDICTS as the
-    * lowest-id-seed anchor on planted strays: two tight direction modes
-    * (30 vectors each, ids interleaved so the anchor's two lowest-id seeds
-    * land one per mode) plus one stray pointing away from both — far from
-    * every mode, so its within-cluster z is extreme under either
-    * quantizer.
-    */
-  test("embedding outliers: KMeans-fed form flags the same planted strays as the anchor") {
-    import spark.implicits._
-    val modeA = (0 until 30).map(i => (i * 2L, Seq(10.0, (i % 5) * 0.1)))
-    val modeB = (0 until 30).map(i => (i * 2L + 1, Seq((i % 5) * 0.1, 10.0)))
-    val stray = Seq((1000L, Seq(-7.0, -7.0)))
-    val rows = (modeA ++ modeB ++ stray).toDF("vec_id", "v")
-    def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getBoolean(4)).toMap
-    val anchor = verdicts(Similarity.embeddingOutliers(rows, 2))
-    val trained = verdicts(Similarity.embeddingOutliersKMeans(rows, 2))
-    assert(anchor(1000L) && trained(1000L), "planted stray must be flagged by both")
-    assert(anchor === trained, "verdict drift between quantizers")
   }
 
   /** Null and zero-norm embeddings have no defined cosine distance; without

@@ -44,7 +44,7 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("winnowing fingerprints match the Scala model and detect shared substrings") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     import graft.functions.expressions.sketch
     val k = 8; val w = 4
     def model(s: String): Seq[Long] = {
@@ -114,7 +114,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     */
   test("OOV rate: deterministic vocab cutoff incl. tie-break, token-less docs restored") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val df = Seq(
       (1L, "aa bb cc"), // 1 oov of 3
       (2L, "aa bb"), // 0 oov

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Rate-driven ingest twins for the streaming tier (VERDICT r16 #2).
+/** Test harness for RateSourceSpec: rate-driven ingest twins for the
+  * streaming tier (VERDICT r16 #2).
   *
   * The registered replays (q55/q61/q107/…) stream fixture FILES, and the
   * round-16 trigger-sizing probe measured their per-micro-batch commit
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * sizing rule is for (a Kafka-shaped 100 TB/day feed never drains to
   * "done"; Spark sizes each micro-batch to whatever accumulated during the
   * previous commit). This module maps a `rate-micro-batch` arrival
-  * process onto the fixture tables so the SAME stateful cores (q107's band
-  * index, q61's exact dedup) run under sustained arrival with real
-  * payloads:
+  * process onto the fixture tables so the SAME stateful cores
+  * ([[StreamReplay.bandIndex]], q61's exact dedup) run under sustained
+  * arrival with real payloads:
   *
   *   - the rate source emits (timestamp, value) ticks, value = 0,1,2,…;
   *   - a stream-static join maps tick `value` (mod `cycles`·N) to the row
@@ -113,24 +113,12 @@ object RateIngest {
       .join(s, "seq")
   }
 
-  /** q107's band-index core, verbatim shape: per band key, arrival count
-    * and keeper (lowest doc_id). Complete mode.
-    */
-  def bandIndex(docStream: DataFrame): DataFrame = {
-    val bands: Column => Column =
-      t => graft.functions.expressions.sketch.mdBandKeys(t, 3, 8, 2)
-    docStream.select(col("doc_id"), explode(bands(col("text"))).as("band"))
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
-  }
-
   /** Drain stats: evidence the spec asserts on. `maxStateRows` is the
     * gauge over batches (state growth bound), `inputRows` the total ticks
-    * consumed, `maxBatchRows` the largest single micro-batch (under a
-    * wall-clock rate source, the adaptive-batching/backpressure signal).
+    * consumed.
     */
   final case class DrainStats(batches: Long, inputRows: Long,
-      maxStateRows: Long, maxBatchRows: Long, wallSec: Double)
+      maxStateRows: Long)
 
   /** Start `df` to a memory sink and poll progress until `targetInput`
     * ticks were consumed AND `settleBatches` further batches committed
@@ -142,7 +130,6 @@ object RateIngest {
       mode: String, targetInput: Long, settleBatches: Int = 2,
       timeoutMs: Long = 180000L): (DataFrame, DrainStats) =
     StreamReplay.withStatePartitions(spark) {
-      val t0 = System.nanoTime()
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()
       try {
@@ -174,9 +161,7 @@ object RateIngest {
         q.stop()
         (spark.table(name),
           DrainStats(perBatch.size, perBatch.values.map(_._1).sum,
-            perBatch.values.map(_._2).foldLeft(0L)(math.max),
-            perBatch.values.map(_._1).foldLeft(0L)(math.max),
-            (System.nanoTime() - t0) / 1e9))
+            perBatch.values.map(_._2).foldLeft(0L)(math.max)))
       } finally if (q.isActive) q.stop()
     }
 }

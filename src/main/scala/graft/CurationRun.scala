@@ -169,9 +169,11 @@ final case class CurationParams(
   * the job count. On the benchmark's
   * sf0.1 curate input (4 cores, warm pass) the index and scores branch
   * finishes inside the funnel, so the run's wall is the chain plus the
-  * artifacts stage, whose residual tail is the `shards/` write: AQE
-  * coalesces its range exchange to one partition, so one task writes
-  * every shard file (SCALE.md, "CurationRun's critical path").
+  * artifacts stage. Neither runs a job that is not a shuffle or a
+  * materialization something reads: no presentation sort inside the
+  * chain, one aggregate for the manifest, connected components finished
+  * on the driver once the edge set fits, and shard files written by one
+  * task per core (SCALE.md, "CurationRun's critical path").
   */
 object CurationRun {
 
@@ -448,10 +450,9 @@ object CurationRun {
             }
             case None => Similarity.semCells(subject, quant)
           }
-          ModelStore.saveIndex(cells, s"$art/model/index")
           val verdict = Similarity.semanticDedupCells(
             subject.select(col("vec_id")), subject,
-            ModelStore.loadIndex(spark, s"$art/model/index")
+            ModelStore.saveIndex(cells, s"$art/model/index")
               .select(col("vec_id"), col("cell")),
             params.semDedupCosine)
           dec.join(
@@ -462,10 +463,16 @@ object CurationRun {
         }
       }
 
+      // Stages 7 to 10 call the unsorted cores of q80b, q84, q89 and q75:
+      // their registered queries sort for presentation, and inside the
+      // chain each such global sort would be two more jobs (range sampling,
+      // which re-runs the child, then the exchange) with nothing reading
+      // the order.
       // stage 7: strip corpus-duplicated lines (q80b's 64-bit-key form);
       // boilerplate-only docs empty out and leave the corpus here
       val lined = timed("line_dedup") {
-        Pipeline.lineDedupHashed(semdeduped.select(col("doc_id"), col("text")))
+        Pipeline.lineDedupHashedUnsorted(
+            semdeduped.select(col("doc_id"), col("text")))
           .filter(col("n_kept") > 0)
           .select(col("doc_id"), col("cleaned").as("text"))
           .withColumn("n_tokens", graft.functions.text.tokenCount(col("text")))
@@ -476,7 +483,7 @@ object CurationRun {
       // leave. Post-cut token count is exact arithmetic on spanCut's own
       // columns (kept = n_tokens - n_cut), not a re-tokenize.
       val cut = timed("span_cut") {
-        Dedup.spanCut(lined.select(col("doc_id"), col("text")))
+        Dedup.spanCutUnsorted(lined.select(col("doc_id"), col("text")))
           .filter(col("n_tokens") - col("n_cut") > 0)
           .select(col("doc_id"), col("cleaned").as("text"),
             (col("n_tokens") - col("n_cut")).as("n_tokens"))
@@ -486,21 +493,21 @@ object CurationRun {
       // stage 9: per-source cap (q89's salted two-phase rank — the verdict
       // frame is the artifact; the survivor frame is an id-only semi join)
       val (capVerdict, capped) = timed("source_cap") {
-        val v = Pipeline.sourceCap(
+        val v = Pipeline.sourceCapUnsorted(
           cut.join(docs.select(col("doc_id"), col("source")), Seq("doc_id")),
           params.sourceCap).localCheckpoint()
         (v, cut.join(v.select(col("doc_id")), Seq("doc_id")).localCheckpoint())
       }
 
       // stage 10: language-mixture sampling (q75) — verdict keeps the losers
-      // (audit trail); the corpus keeps the winners
-      val (sampleVerdict, sampled) = timed("sampled") {
-        val v = Pipeline.mixtureSample(
+      // (audit trail); the corpus keeps the winners. The survivor count
+      // sizes the corpus and shards writes below.
+      val (sampleVerdict, (sampled, nSampled)) = timed("sampled") {
+        val v = Pipeline.mixtureSampleUnsorted(
           capped.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
             .select(col("doc_id"), col("lang"), col("text"))).localCheckpoint()
-        (v, capped
-          .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))
-          .localCheckpoint())
+        (v, Similarity.ckptWithCount(capped
+          .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))))
       }
 
       // stage 10.5 (opt-in): q135's token-budget selection over the sampled
@@ -508,14 +515,13 @@ object CurationRun {
       // fits tokenBudgetPct% of the surviving total. The verdict frame (per
       // selected doc: score, tokens, cumulative) is the artifact; the
       // survivor frame is an id-only semi join, the source-cap idiom.
-      val (budgetVerdict, selected) = params.tokenBudgetPct match {
-        case None => (None, sampled)
+      val (budgetVerdict, (selected, nSelected)) = params.tokenBudgetPct match {
+        case None => (None, (sampled, nSampled))
         case Some(pct) => timed("token_budget") {
           val v = Pipeline.tokenBudgetSelect(
             sampled.select(col("doc_id"), col("text")), pct).localCheckpoint()
-          (Some(v),
-            sampled.join(v.select(col("doc_id")), Seq("doc_id"))
-              .localCheckpoint())
+          (Some(v), Similarity.ckptWithCount(
+            sampled.join(v.select(col("doc_id")), Seq("doc_id"))))
         }
       }
 
@@ -527,10 +533,29 @@ object CurationRun {
           "source_cap" -> capped, "sampled" -> sampled) ++
         (if (params.tokenBudgetPct.isDefined)
           Seq("token_budget" -> selected) else Seq.empty)
+      val stageName = typedLit(
+        stages.zipWithIndex.map { case ((name, _), i) => i -> name }.toMap)
+      // the manifest: q88's funnel row per stage, as ONE fold over the
+      // union of every stage's (stage_idx, n_tokens) rows (the fates fold's
+      // idiom below) — one aggregate job, where one two-long aggregate per
+      // stage was one exchange job each. A zero row per stage keeps an
+      // emptied stage in the table as (0 docs, 0 tokens); one sorted
+      // partition needs no range exchange.
       val manifest = stages.zipWithIndex
-        .map { case ((name, df), i) => Pipeline.funnelStat(df, i, name) }
+        .map { case ((_, df), i) =>
+          df.select(lit(i).as("stage_idx"), lit(1L).as("doc"),
+            col("n_tokens").cast("long").as("n_tokens")) }
         .reduce(_.union(_))
-        .orderBy(col("stage_idx"))
+        .union(spark.range(0, stages.size, 1, 1).select(
+          col("id").cast("int").as("stage_idx"), lit(0L).as("doc"),
+          lit(null).cast("long").as("n_tokens")))
+        .groupBy(col("stage_idx"))
+        .agg(sum(col("doc")).as("docs"),
+          coalesce(sum(col("n_tokens")), lit(0L)).as("tokens"))
+        .select(col("stage_idx"),
+          element_at(stageName, col("stage_idx")).as("stage"),
+          col("docs"), col("tokens"))
+        .coalesce(1).sortWithinPartitions(col("stage_idx"))
 
       // per-doc fate: survivor sets are strictly nested, so the last stage a
       // doc appears in is its fate — ONE union of (doc_id, stage_idx) pairs
@@ -538,8 +563,6 @@ object CurationRun {
       // One shuffle total, vs round 12's ten chained id-keyed left joins
       // over the full raw frame (the widest plan in the artifacts stage —
       // equivalent by the nesting, measured cheaper at sf10).
-      val stageName = typedLit(
-        stages.zipWithIndex.map { case ((name, _), i) => i -> name }.toMap)
       val fates = stages.zipWithIndex
         .map { case ((_, df), i) =>
           df.select(col("doc_id"), lit(i).as("stage_idx")) }
@@ -590,10 +613,12 @@ object CurationRun {
         def write(path: String)(f: => Unit): Unit =
           branches.fork(timed(path)(f))
         write("corpus") {
-          PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id")
+          PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id",
+            rows = nSelected)
         }
         write("shards") {
-          PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos")
+          PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos",
+            rows = nSelected)
         }
         write("verdicts/source_cap") {
           capVerdict.write.mode("overwrite").parquet(s"$art/verdicts/source_cap")
@@ -614,7 +639,7 @@ object CurationRun {
           runParams.coalesce(1).write.mode("overwrite").parquet(s"$art/run_params")
         }
         write("manifest") {
-          manifest.coalesce(1).write.mode("overwrite").parquet(s"$art/manifest")
+          manifest.write.mode("overwrite").parquet(s"$art/manifest")
         }
         // opt-in q124 layout: the packed training-sequence plan over the
         // SAME survivors the shards stage laid out (next-fit in q100's

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.expressions.sketch
+import graft.functions.expressions.{sketch, textnative}
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -210,6 +210,13 @@ object Dedup {
 
   // ---- dup-cluster resolution (connected components) ----------------------
 
+  /** Directed edge count at or below which [[connectedComponents]]
+    * collects its graph and finishes on the driver: 2^20 id pairs are
+    * 16 MB, and union-find over them takes well under a second, where each
+    * distributed round is at least two jobs.
+    */
+  val DriverFinishEdges: Long = 1L << 20
+
   /** Connected components by iterative min-label propagation: every node
     * starts labeled with itself; each round every node takes the minimum
     * label among itself and its neighbors, until a fixpoint. The result
@@ -234,13 +241,42 @@ object Dedup {
     * join). The fixpoint is exactly component-min: labels only travel
     * edges, and a fixpoint under neighbor-min forces labels constant per
     * component, pinned at the minimum id.
+    *
+    * Driver finish (the MapReduce connected-components practice of
+    * Kiveris et al.: distributed rounds until the graph fits one machine,
+    * then finish there): once the edge set is at most `driverEdges` rows
+    * it is collected and union-find gives the component minima directly.
+    * A graph that fits from the start runs no round at all; a larger one
+    * runs rounds until its contracted edge set fits (see the loop).
     */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 25): DataFrame = {
-    var edges = pairs
+      maxRounds: Int = 25,
+      driverEdges: Long = DriverFinishEdges): DataFrame = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val (edges0, nEdges) = Similarity.ckptWithCount(pairs
       .select(col("a_id").as("s"), col("b_id").as("d"))
-      .union(pairs.select(col("b_id").as("s"), col("a_id").as("d")))
-      .localCheckpoint() // eager: reused by every round's join
+      .union(pairs.select(col("b_id").as("s"), col("a_id").as("d"))))
+    val labels =
+      if (nEdges <= driverEdges) {
+        // the whole graph fits: only nodes that are not their component's
+        // minimum need a row (the final join labels the rest with v)
+        val (v, lab) = componentMins(edges0.as[(Long, Long)].collect())
+        v.indices.filter(i => v(i) != lab(i)).map(i => (v(i), lab(i)))
+          .toDF("v", "lab")
+      } else propagate(edges0, maxRounds, driverEdges)
+    ids.join(labels, Seq("v"), "left")
+      .select(col("v"), coalesce(col("lab"), col("v")).as("lab"))
+  }
+
+  /** [[connectedComponents]]' distributed rounds over the checkpointed
+    * bidirectional edge set: (v, lab) for every edge-incident node.
+    */
+  private def propagate(edges0: DataFrame, maxRounds: Int,
+      driverEdges: Long): DataFrame = {
+    val spark = edges0.sparkSession
+    import spark.implicits._
+    var edges = edges0
     // Only edge-incident nodes iterate — at production dup rates that is a
     // few percent of the corpus; everyone else is a singleton (lab = v)
     // resolved by one post-loop join, never shuffled per round.
@@ -327,17 +363,67 @@ object Dedup {
       // below 65k edges" policy blew the round count up (q56 5 -> 7,
       // q56b 5 -> 13 rounds) and cost more in extra rounds than it saved
       // in contraction jobs.
-      if (!done) edges = edges
-        .join(next.select(col("v").as("s"), col("lab").as("ls")), Seq("s"))
-        .join(next.select(col("v").as("d"), col("lab").as("ld")), Seq("d"))
-        .filter(col("ls") =!= col("ld"))
-        .select(col("ls").as("s"), col("ld").as("d")).distinct()
-        .localCheckpoint()
+      if (!done) {
+        val (contracted, nContracted) = Similarity.ckptWithCount(edges
+          .join(next.select(col("v").as("s"), col("lab").as("ls")), Seq("s"))
+          .join(next.select(col("v").as("d"), col("lab").as("ld")), Seq("d"))
+          .filter(col("ls") =!= col("ld"))
+          .select(col("ls").as("s"), col("ld").as("d")).distinct())
+        edges = contracted
+        // Mid-loop driver finish. Labels from here on only flow along the
+        // contracted edges and the pointers v -> lab(v), so every node's
+        // fixpoint label is the minimum of its component in that graph.
+        // A node that is neither a label nor an edge end is a leaf there,
+        // hanging off its smaller label; dropping the leaves leaves the
+        // contracted edges plus the pointers of the label nodes, both
+        // collected only when together they fit. The edges alone do not
+        // suffice: the contraction can empty them while pointer chains
+        // are still unresolved.
+        if (nContracted <= driverEdges) {
+          val (pointers, nPointers) = Similarity.ckptWithCount(next
+            .join(next.select(col("lab").as("v")), Seq("v"), "left_semi")
+            .filter(col("v") =!= col("lab"))
+            .select(col("v").as("s"), col("lab").as("d")))
+          if (nContracted + nPointers <= driverEdges) {
+            val (x, root) = componentMins(
+              edges.union(pointers).as[(Long, Long)].collect())
+            val moved = x.indices.filter(i => x(i) != root(i))
+              .map(i => (x(i), root(i))).toDF("x", "root")
+            labels = next.join(broadcast(moved), col("lab") === col("x"),
+                "left")
+              .select(col("v"), coalesce(col("root"), col("lab")).as("lab"))
+            done = true
+          }
+        }
+      }
       round += 1
     }
     require(done, s"connectedComponents did not converge in $maxRounds rounds")
-    ids.join(labels, Seq("v"), "left")
-      .select(col("v"), coalesce(col("lab"), col("v")).as("lab"))
+    labels
+  }
+
+  /** Union-find over an undirected edge list, on the driver: (every node
+    * id, sorted; its component's minimum id). Every union links the larger
+    * root under the smaller, and ids are indexed in sorted order, so each
+    * root IS its component's minimum.
+    */
+  private def componentMins(
+      edges: Array[(Long, Long)]): (Array[Long], Array[Long]) = {
+    val ids = edges.flatMap { case (a, b) => Array(a, b) }.distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val up = parent(j); parent(j) = r; j = up }
+      r
+    }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(at(a)), find(at(b)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (ids, ids.indices.map(i => ids(find(i))).toArray)
   }
 
   /** q56: near-dup cluster resolution over the exact cosine pair graph
@@ -470,15 +556,18 @@ object Dedup {
     * Shape for 100 TB: q74's positional gram pipeline (ONE codegen'd
     * tokenize+chain pass, one wide shuffle on the 64-bit gram key) plus a
     * doc-keyed rollup of flagged start positions; the final cut is a
-    * per-row expression over (tokens, starts) — no extra corpus shuffle.
-    * The exists() scan per token is O(flagged starts) with starts bounded
-    * by doc length; fine for the corpus-cleaning pass it is.
+    * per-row expression over (tokens, starts) — no extra corpus shuffle —
+    * that walks the sorted starts once beside the tokens
+    * ([[graft.functions.expressions.CutSpansExpr]]).
     */
   def q84(spark: SparkSession, dir: String): DataFrame =
     spanCut(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
 
   /** The q84 core over any (doc_id, text) frame. */
-  def spanCut(docs: DataFrame): DataFrame = {
+  def spanCut(docs: DataFrame): DataFrame = sortedCut(spanCutUnsorted(docs))
+
+  /** [[spanCut]] without the materialization and the presentation sort. */
+  def spanCutUnsorted(docs: DataFrame): DataFrame = {
     val cores = docs.sparkSession.sparkContext.defaultParallelism
     val grams = docs
       .filter(col("doc_id").isNotNull)
@@ -498,6 +587,17 @@ object Dedup {
       .agg(sort_array(collect_list(col("pos"))).as("starts"))
     cutFlagged(docs, flagged)
   }
+
+  /** q84/q86's presentation: the presentation sort's range sampling would
+    * re-execute the join + the per-token zip_with/exists cut chain (the
+    * expensive part of the cut), so the finished rows are materialized
+    * once (q112/q141's lesson) and sorted from the checkpoint. PlanSpec
+    * pins the plan this checkpoint action executes, read off Spark's
+    * query-execution listener (the checkpoint truncates the frame's own
+    * visible plan to a scan+sort, exactly like q88's staged frames).
+    */
+  private def sortedCut(cut: DataFrame): DataFrame =
+    cut.localCheckpoint().orderBy(col("doc_id"))
 
   /** Shared cut tail of q84/q86: given (doc_id, text) rows and per-doc
     * sorted flagged window starts, remove every covered token position
@@ -519,23 +619,10 @@ object Dedup {
         coalesce(col("starts"), array().cast("array<int>")).as("starts"))
       .select(col("doc_id"),
         size(col("toks")).as("n_tokens"),
-        filter(zip_with(col("toks"),
-            sequence(lit(0), greatest(size(col("toks")), lit(1)) - 1),
-            (t, i) => when(!exists(col("starts"),
-              s => i >= s && i < s + lit(SpanTokens)), t)),
-          x => x.isNotNull).as("kept"))
+        textnative.cutSpans(col("toks"), col("starts"), SpanTokens).as("kept"))
       .select(col("doc_id"), col("n_tokens"),
         (col("n_tokens") - size(col("kept"))).as("n_cut"),
         array_join(col("kept"), " ").as("cleaned"))
-      // the presentation sort's range sampling re-executes the join + the
-      // per-token zip_with/exists cut chain (the expensive part of this
-      // tail) — materialize the finished rows once (q112/q141's lesson);
-      // shared by q84 and q86. PlanSpec pins the plan this checkpoint
-      // action executes, read off Spark's query-execution listener (the
-      // checkpoint truncates the frame's own visible plan to a scan+sort,
-      // exactly like q88's staged frames).
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
 
   /** q86: benchmark decontamination SURGERY — the remove step downstream of
     * q57/q66's detection (window semantics shared with q84): every 8-token
@@ -579,7 +666,7 @@ object Dedup {
       // needs no exchange
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("starts"))
-    cutFlagged(train, flagged)
+    sortedCut(cutFlagged(train, flagged))
   }
 
   // ---- End-to-end dedup verdict (q76) -------------------------------------

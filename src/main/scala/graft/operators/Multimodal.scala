@@ -16,7 +16,7 @@ case class MediaFeatures(media_id: Long, width: Int, height: Int,
     n_bytes: Int, features: Array[Float])
 
 /** Multimodal columns (LLM-pipeline tier): binary media columns with typed
-  * metadata, plus decode / feature-extract / resize plumbing.
+  * metadata, plus decode / feature-extract plumbing.
   *
   * No EXTERNAL codecs exist in this environment, so `decodeStub` is a
   * clearly-marked deterministic FAKE (byte histogram as "pixels") — swap it
@@ -111,22 +111,6 @@ object Multimodal {
       rows.filter(_.media != null).map { r =>
         MediaFeatures(r.media_id, r.width, r.height, r.media.length,
           decode(r.media))
-      }
-    }
-  }
-
-  /** Resize stub: stride-sample the payload to a fixed byte budget —
-    * placeholder for pixel resampling; the plumbing point is that output
-    * stays binary and bounded.
-    */
-  def resize(media: Dataset[MediaRow], maxBytes: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.map { r =>
-      if (r.media.length <= maxBytes) r
-      else {
-        val stride = math.ceil(r.media.length.toDouble / maxBytes).toInt
-        val out = r.media.indices.by(stride).map(r.media).toArray
-        r.copy(media = out)
       }
     }
   }

@@ -207,10 +207,10 @@ object Pipeline {
   }
 
   /** One funnel row — (stage_idx, stage, docs, tokens) — from a staged
-    * survivor frame carrying n_tokens. Shared by q88 and the CurationRun
-    * manifest (which extends the funnel with its run-only stages).
+    * survivor frame carrying n_tokens. (CurationRun's manifest computes
+    * the same rows for all its stages in one fold.)
     */
-  def funnelStat(df: DataFrame, idx: Int, name: String): DataFrame =
+  private def funnelStat(df: DataFrame, idx: Int, name: String): DataFrame =
     df.agg(count(lit(1)).as("docs"),
       coalesce(sum(col("n_tokens")), lit(0L)).as("tokens"))
       .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
@@ -365,7 +365,11 @@ object Pipeline {
     sourceCap(Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source")), SourceCap)
 
-  def sourceCap(docs: DataFrame, cap: Int): DataFrame = {
+  def sourceCap(docs: DataFrame, cap: Int): DataFrame =
+    sourceCapUnsorted(docs, cap).orderBy(col("doc_id"))
+
+  /** [[sourceCap]] without the presentation sort. */
+  def sourceCapUnsorted(docs: DataFrame, cap: Int): DataFrame = {
     val keyed = docs
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"), col("source"),
@@ -384,7 +388,6 @@ object Pipeline {
           .orderBy(col("prio"), col("doc_id"))))
       .filter(col("src_rank") <= cap)
       .select(col("doc_id"), col("source"), col("src_rank"))
-      .orderBy(col("doc_id"))
   }
 
   /** q90: eval-integrity report — the REVERSE view of q57/q66's train-side
@@ -857,10 +860,10 @@ object Pipeline {
     * doubles and therefore the same thresholds — the boundary doc cannot
     * flip between engines.
     *
-    * Shape for 100 TB: one map-side-combinable per-language aggregate, a
-    * language-cardinality window, a broadcast of the ~|languages| rate rows
-    * back onto the corpus, and a per-row hash compare — no corpus shuffle
-    * at all (the gate's orderBy is presentation).
+    * Shape for 100 TB: one map-side-combinable per-language aggregate,
+    * collected to the driver, which turns the ~|languages| rows into rates
+    * and broadcasts them back onto the corpus, and a per-row hash compare —
+    * no corpus shuffle at all (the gate's orderBy is presentation).
     */
   def q75(spark: SparkSession, dir: String): DataFrame =
     mixtureSample(Tables.documents(spark, dir))
@@ -868,12 +871,16 @@ object Pipeline {
   /** The q75 core over any (doc_id, lang, text) frame — planted-corpus
     * specs run it directly.
     */
-  def mixtureSample(docs: DataFrame): DataFrame = {
-    // one-partition windows over the language-cardinality rate table (see
-    // q59's note; the non-foldable key keeps the declared boundedness in
-    // the partition spec)
-    val w = Window.partitionBy(graft.functions.num.boundedOnePartition(col("lang")))
-    val rates = docs
+  def mixtureSample(docs: DataFrame): DataFrame =
+    mixtureSampleUnsorted(docs).orderBy(col("doc_id"))
+
+  /** [[mixtureSample]] without the presentation sort. */
+  def mixtureSampleUnsorted(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // per-language token mass: one map-side-combinable aggregate, collected
+    // (one row per language, bounded by construction)
+    val mass = docs
       .groupBy(col("lang"))
       .agg(sum(text.tokenCount(col("text"))).as("n_tokens"))
       // a zero-token language has share 0, making ratio = sw/z/share a 0/0
@@ -882,23 +889,33 @@ object Pipeline {
       // entirely (its docs carry no trainable tokens) — the oracle filters
       // identically, and the join then drops its docs in both engines
       .filter(col("n_tokens") > 0)
-      .withColumn("share",
-        col("n_tokens").cast("double") / sum(col("n_tokens")).over(w))
-      .withColumn("sw", sqrt(col("share")))
-      .withColumn("z",
-        sum(graft.functions.num.fixed4(col("sw"))).over(w).cast("double")
-          / lit(10000))
-      .withColumn("ratio", col("sw") / col("z") / col("share"))
-      .withColumn("r", col("ratio") / max(col("ratio")).over(w))
-      .select(col("lang"),
-        floor(col("r") * lit(4294967296L)).cast("long").as("thr"),
-        floor(col("r") * lit(1000000)).cast("long").as("rate_e6"))
+      .as[(String, Long)].collect()
+    val rates = mixtureRates(mass.toSeq).toDF("lang", "thr", "rate_e6")
     docs
       .join(broadcast(rates), Seq("lang"))
       .select(col("doc_id"), col("lang"), col("rate_e6"),
         (conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8),
           16, 10).cast("long") < col("thr")).as("kept"))
-      .orderBy(col("doc_id"))
+  }
+
+  /** q75's per-language (lang, thr, rate_e6) from (lang, token mass), on
+    * the driver: the operations of q59's mixture in the same order on the
+    * same IEEE doubles (exact long sums, one division, correctly-rounded
+    * sqrt, the fixed-point Z), so every threshold equals the oracle's.
+    */
+  private def mixtureRates(
+      mass: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
+    val total = mass.map(_._2).sum.toDouble
+    val share = mass.map(_._2.toDouble / total)
+    val sw = share.map(math.sqrt)
+    val z = sw.map(x => math.floor(x * 10000).toLong).sum.toDouble / 10000
+    val ratio = sw.zip(share).map { case (w, sh) => w / z / sh }
+    val top = if (ratio.isEmpty) 0.0 else ratio.max
+    mass.zip(ratio).map { case ((lang, _), q) =>
+      val r = q / top
+      (lang, math.floor(r * 4294967296L).toLong,
+        math.floor(r * 1000000).toLong)
+    }
   }
 
   /** Corpus-wide line occurrence threshold: a line appearing this many
@@ -940,10 +957,14 @@ object Pipeline {
     * parity form).
     */
   def lineDedup(docs: DataFrame): DataFrame =
-    lineDedupImpl(docs, hashedKey = false)
+    lineDedupImpl(docs, hashedKey = false).orderBy(col("doc_id"))
 
   /** q80b core: xxhash64(line) as the count/join key. */
   def lineDedupHashed(docs: DataFrame): DataFrame =
+    lineDedupHashedUnsorted(docs).orderBy(col("doc_id"))
+
+  /** [[lineDedupHashed]] without the presentation sort. */
+  def lineDedupHashedUnsorted(docs: DataFrame): DataFrame =
     lineDedupImpl(docs, hashedKey = true)
 
   private def lineDedupImpl(docs: DataFrame, hashedKey: Boolean): DataFrame = {
@@ -978,7 +999,6 @@ object Pipeline {
       .select(col("doc_id"), col("n_lines"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("cleaned"), lit("")).as("cleaned"))
-      .orderBy(col("doc_id"))
   }
 
   /** Shared oracle for q80 and its hashed-key twin q80b (identical output

@@ -1065,9 +1065,8 @@ object Similarity {
     // temp dir per invocation would leak one data-sized copy per bench
     // sample, while one fixed path would collide across concurrent runs
     val tmp = graft.sources.Scratch.dir("q121-index")
-    graft.sources.ModelStore.saveIndex(
-      ivfPqEncode(base, quant, cbs), s"$tmp/index")
-    ivfPqServe(graft.sources.ModelStore.loadIndex(spark, s"$tmp/index"),
+    ivfPqServe(graft.sources.ModelStore.saveIndex(
+        ivfPqEncode(base, quant, cbs), s"$tmp/index"),
       base, quant, cbs)
   }
 
@@ -1082,7 +1081,8 @@ object Similarity {
     * needs a new dir or a new session, same as a prod index rebuild).
     */
   private val servedIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, (FlatQuantizer, Array[Array[Array[Double]]], String)]()
+    String, (FlatQuantizer, Array[Array[Array[Double]]], String,
+      org.apache.spark.sql.types.StructType)]()
 
   private def canonicalDir(dir: String): String =
     try new java.io.File(dir).getCanonicalPath
@@ -1121,13 +1121,14 @@ object Similarity {
           java.security.MessageDigest.getInstance("MD5")
             .digest(dir.getBytes("UTF-8"))
             .map("%02x".format(_)).mkString.take(16)) + "/index"
-        graft.sources.ModelStore.saveIndex(
+        val index = graft.sources.ModelStore.saveIndex(
           ivfPqEncode(base, quant, cbs), path)
-        (quant, cbs, path)
+        (quant, cbs, path, index.schema)
       }
     })
     if (entry == null) emptyTopK(spark)
-    else ivfPqServe(graft.sources.ModelStore.loadIndex(spark, entry._3),
+    else ivfPqServe(
+      graft.sources.ModelStore.loadIndex(spark, entry._3, entry._4),
       base, entry._1, entry._2)
   }
 

@@ -3,6 +3,7 @@ package graft.sources
 import graft.operators.{CellQuantizer, FlatQuantizer, ImiQuantizer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persistence for the trained ANN artifacts — the fitted coarse-quantizer
   * codebooks (flat or IMI) the q39/q85/q92b/q101 family fits from its
@@ -31,14 +32,20 @@ import org.apache.spark.sql.functions._
   */
 object ModelStore {
 
-  private val Cols = Seq("kind", "side", "idx", "centroid")
+  /** The codebook table's schema, given to the reader so a load runs no
+    * parquet footer-inference job.
+    */
+  private val CodebookSchema = StructType(Seq(
+    StructField("kind", StringType), StructField("side", IntegerType),
+    StructField("idx", IntegerType),
+    StructField("centroid", ArrayType(DoubleType, containsNull = false))))
 
   private def toDf(spark: SparkSession, kind: String,
       sides: Seq[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
     sides.zipWithIndex.flatMap { case (cb, side) =>
       cb.zipWithIndex.map { case (c, idx) => (kind, side, idx, c.toSeq) }
-    }.toDF(Cols: _*)
+    }.toDF(CodebookSchema.fieldNames.toIndexedSeq: _*)
   }
 
   /** Write a fitted coarse quantizer under `path` (overwrite). */
@@ -56,10 +63,9 @@ object ModelStore {
     * probe fan-outs are bit-identical to the fitted original's.
     */
   def loadQuantizer(spark: SparkSession, path: String): CellQuantizer = {
-    val rows = spark.read.parquet(path)
-      .select(col("kind"), col("side"), col("idx"), col("centroid"))
-      .orderBy(col("side"), col("idx"))
-      .collect()
+    // one collect job; the KB-scale rows sort on the driver
+    val rows = spark.read.schema(CodebookSchema).parquet(path)
+      .collect().sortBy(r => (r.getInt(1), r.getInt(2)))
     require(rows.nonEmpty, s"no quantizer artifact at $path")
     val kind = rows.head.getString(0)
     def side(s: Int): Array[Array[Double]] = rows
@@ -88,20 +94,31 @@ object ModelStore {
     * slice per cell (and a reader pushing `cell IN (...)` skips whole row
     * groups via parquet min/max stats). Codes are small ints — the
     * 8–64 B/vector residency the PQ tier promises is what lands on disk.
+    *
+    * Returns the written index read back under the schema it was written
+    * with, so the reader runs no footer-inference job.
     */
-  def saveIndex(index: DataFrame, path: String): Unit = {
+  def saveIndex(index: DataFrame, path: String): DataFrame = {
     val cols = index.columns
     require(cols.contains("vec_id") && cols.contains("cell"),
       s"index artifact needs (vec_id, cell[, codes...]); got ${cols.mkString(",")}")
     index.repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("vec_id"))
       .write.mode("overwrite").parquet(path)
+    loadIndex(index.sparkSession, path, index.schema)
   }
 
   /** Reload an encoded index written by [[saveIndex]]. Plain distributed
     * parquet read — the scored pass runs straight off these columns and
     * never touches raw vectors (the served-path contract q121 hashes).
+    * This form reads the schema off the files' footers (one inference
+    * job); a reader that knows it passes it to the form below.
     */
   def loadIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** [[loadIndex]] under a known schema: no footer-inference job. */
+  def loadIndex(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 }

@@ -53,6 +53,23 @@ class CurationRunSpec extends AnyFunSuite {
     d
   }
 
+  /** CI guard on the run's job count, counted by a listener: in the
+    * paper's model one unit of work is a round of map, hash-shuffle and
+    * reduce, so every job beyond the chain's necessary shuffles and
+    * materializations is scheduling overhead. The run on this fixture took
+    * 140 jobs with in-chain presentation sorts, one aggregate job per
+    * manifest stage, and distributed connected-components rounds; 103
+    * once those went, measured at 4 cores (101 at 32: AQE plans a few
+    * exchanges differently at another partition count). A change that
+    * lowers the count lowers the ceiling.
+    */
+  test("one run on the fixture stays within its job budget") {
+    val d = Files.createTempDirectory("curation_run_jobs").toString
+    val jobs = TestSpark.jobsOf(CurationRun.run(spark, sfDir, d))
+    new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
+    assert(jobs <= 103, s"CurationRun.run took $jobs jobs on the fixture")
+  }
+
   test("manifest's first six rows equal q88's funnel (the oracle surface)") {
     val manifest = spark.read.parquet(s"${art(outDir)}/manifest")
       .orderBy(col("stage_idx")).collect()

@@ -161,7 +161,8 @@ class DedupSpec extends AnyFunSuite {
     * — the measured-unsound variant, SCALE.md "CC edge contraction".)
     * The 33-node path also pins the round count at O(log diameter): 32
     * hops must close in <= 9 rounds, not 32 — `maxRounds = 9` makes the
-    * loop's convergence `require` throw past that.
+    * loop's convergence `require` throw past that. Both graphs pass
+    * `driverEdges = 0`, so they run the distributed rounds to the end.
     */
   test("CC contraction: late-arriving min crosses a settled clique; rounds stay O(log d)") {
     import spark.implicits._
@@ -170,7 +171,7 @@ class DedupSpec extends AnyFunSuite {
     val ids1 = Seq(1L, 5L, 10L, 11L, 12L).toDF("v")
     val pairs1 = Seq((10L, 11L), (11L, 12L), (10L, 12L), (5L, 10L), (1L, 5L))
       .toDF("a_id", "b_id")
-    val got1 = Dedup.connectedComponents(ids1, pairs1)
+    val got1 = Dedup.connectedComponents(ids1, pairs1, driverEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got1 === Map(1L -> 1L, 5L -> 1L, 10L -> 1L, 11L -> 1L, 12L -> 1L))
     // descending 33-node path (diameter 32; min at the far end so labels
@@ -178,29 +179,101 @@ class DedupSpec extends AnyFunSuite {
     val n = 33L
     val ids2 = (0L until n).toDF("v")
     val pairs2 = (1L until n).map(i => (i - 1, i)).toDF("a_id", "b_id")
-    val got2 = Dedup.connectedComponents(ids2, pairs2, maxRounds = 9)
+    val got2 = Dedup.connectedComponents(ids2, pairs2, maxRounds = 9,
+      driverEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2.values.forall(_ == 0L), s"path not fully resolved: $got2")
   }
 
   /** r19: the convergence scalar rides the label checkpoint via `observe`
-    * (one job per round instead of two). The degenerate inputs exercise
-    * that path's edge cases — an EMPTY pair set aggregates to a null sum
-    * (must coalesce to 0 and converge in the confirmation round, labels
-    * all singletons), and a single edge converges immediately off the
-    * folded init.
+    * (one job per round instead of two). The degenerate inputs: an EMPTY
+    * pair set has no edges to count past any bound, so it always finishes
+    * on the driver with every label a singleton; a single edge converges
+    * immediately off the folded init in the distributed rounds
+    * (`driverEdges = 0`) and needs no round on the driver.
     */
   test("CC: observe-fused convergence handles empty and singleton pair sets") {
     import spark.implicits._
     val ids = Seq(1L, 2L, 3L).toDF("v")
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
-    val got0 = Dedup.connectedComponents(ids, empty)
+    val got0 = Dedup.connectedComponents(ids, empty, driverEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got0 === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
     val one = Seq((2L, 3L)).toDF("a_id", "b_id")
-    val got1 = Dedup.connectedComponents(ids, one)
+    Seq(0L, Dedup.DriverFinishEdges).foreach { bound =>
+      val got1 = Dedup.connectedComponents(ids, one, driverEdges = bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got1 === Map(1L -> 1L, 2L -> 2L, 3L -> 2L), s"bound $bound")
+    }
+  }
+
+  /** Union-find component minima of `ids` under `pairs`: the test's own
+    * reference model, independent of [[Dedup.componentMins]].
+    */
+  private def unionFind(ids: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  /** The driver finish against the distributed rounds on seeded random
+    * graphs (sparse ones with long chains, dense ones, isolated ids): the
+    * default call fits the bound and runs no round, `driverEdges = 0`
+    * runs every round to the fixpoint, and a bound of a quarter of the
+    * edges crosses over part way. All three must give union-find's
+    * component minima.
+    */
+  test("CC: the driver finish equals the distributed rounds on random graphs") {
+    import spark.implicits._
+    val rnd = new Random(11)
+    Seq((60, 40), (60, 90), (40, 300), (80, 70)).foreach { case (n, m) =>
+      val ids = rnd.shuffle((1L to n.toLong).toList)
+      val pairs = Seq.fill(m) {
+        val a = ids(rnd.nextInt(n)); val b = ids(rnd.nextInt(n))
+        (a, b)
+      }.filter { case (a, b) => a != b }
+      def cc(bound: Long) = Dedup.connectedComponents(ids.toDF("v"),
+          pairs.toDF("a_id", "b_id"), driverEdges = bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = unionFind(ids, pairs)
+      assert(cc(Dedup.DriverFinishEdges) === want, s"driver finish, n=$n m=$m")
+      assert(cc(0) === want, s"distributed rounds, n=$n m=$m")
+      assert(cc(pairs.size / 2) === want, s"crossover, n=$n m=$m")
+    }
+  }
+
+  /** A graph that crosses the driver bound mid-loop: six 6-cliques chained
+    * into a path, ids descending so the minimum starts at the far end. Its
+    * 190 directed edges exceed the bound of 32, so round 1 runs
+    * distributed; the contraction then leaves 18 label edges plus 9
+    * pointers of unsettled labels (27 rows), which fit. `maxRounds = 1`
+    * makes that finish observable: the distributed loop alone needs 5
+    * rounds here and would fail its convergence `require`.
+    */
+  test("CC: a graph crossing the driver bound mid-loop finishes on the driver") {
+    import spark.implicits._
+    val (k, m) = (6, 6)
+    val ids = (k * m).toLong to 1L by -1L
+    val pairs = (0 until k).flatMap { c =>
+      val mem = ids.slice(c * m, (c + 1) * m)
+      val clique = for (i <- 0 until m; j <- i + 1 until m) yield (mem(i), mem(j))
+      if (c == 0) clique else clique :+ (ids(c * m - 1) -> mem.head)
+    }
+    val want = unionFind(ids, pairs)
+    assert(want.values.toSet === Set(1L), "the chain is one component")
+    val got = Dedup.connectedComponents(ids.toDF("v"),
+        pairs.toDF("a_id", "b_id"), maxRounds = 1, driverEdges = 32)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got1 === Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
+    assert(got === want)
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(ids.toDF("v"), pairs.toDF("a_id", "b_id"),
+        maxRounds = 1, driverEdges = 0)
+    }
   }
 
   test("q56b: CC over the LSH pair set matches union-find and refines q56") {
@@ -216,14 +289,7 @@ class DedupSpec extends AnyFunSuite {
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ids = Tables.embeddings(spark, dir)
       .select("vec_id").collect().map(_.getLong(0))
-    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-    def find(x: Long): Long =
-      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val want = ids.map(i => i -> find(i)).toMap
+    val want = unionFind(ids.toSeq, pairs.toSeq)
     val got = operators.Dedup.q56b(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === want)
@@ -390,6 +456,36 @@ class DedupSpec extends AnyFunSuite {
     assert(got(2L) === ((12, 8, "b1 b2 b3 b4")))
     assert(got(3L) === ((17, 16, "x")))
     assert(got(4L) === ((10, 0, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10")))
+  }
+
+  /** The native span cut against the lambda form it replaced, on seeded
+    * random token arrays and start lists (unsorted, overlapping, past the
+    * end, empty) — the whole q84/q86 cut tail rests on this equality.
+    */
+  test("native span cut equals the zip_with/exists lambda form") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.expressions.textnative
+    val rnd = new Random(5)
+    val rows = (0 until 300).map { _ =>
+      val n = rnd.nextInt(40)
+      (Seq.fill(n)(s"t${rnd.nextInt(9)}"),
+        Seq.fill(rnd.nextInt(6))(rnd.nextInt(n + 10)))
+    }
+    val df = rows.toDF("toks", "starts")
+    val lambda = filter(zip_with(col("toks"),
+        sequence(lit(0), greatest(size(col("toks")), lit(1)) - 1),
+        (t, i) => when(!exists(col("starts"),
+          s => i >= s && i < s + lit(Dedup.SpanTokens)), t)),
+      x => x.isNotNull)
+    val got = df.select(
+        textnative.cutSpans(col("toks"), col("starts"), Dedup.SpanTokens),
+        lambda)
+      .collect()
+    got.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
+    val kept = got.map(_.getSeq[String](0).size)
+    assert(rows.map(_._1.size).zip(kept).exists { case (n, k) => k < n } &&
+      kept.exists(_ > 0), "degenerate draw: nothing cut or nothing kept")
   }
 
   /** Null-input parity with the q84 oracle tail: a null text coalesces to

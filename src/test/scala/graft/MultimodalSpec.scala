@@ -4,7 +4,7 @@ import graft.operators.{MediaRow, Multimodal}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plumbing checks for the multimodal tier: binary round-trip fidelity,
-  * feature shape, resize bound — everything real except the
+  * feature shape — everything real except the
   * decode math, which is an explicit stub.
   */
 class MultimodalSpec extends AnyFunSuite {
@@ -56,14 +56,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats(0).features(0) === 1.0f)   // all-black pixels in bin 0
     assert(feats(1).features(15) === 1.0f)  // all-white pixels in bin 15
     feats.foreach(f => assert(math.abs(f.features.sum - 1.0f) < 1e-3))
-  }
-
-  test("resize bounds payload and is deterministic") {
-    val resized = Multimodal.resize(Multimodal.mediaTable(spark, dir), 64)
-    val a = resized.collect().map(r => r.media_id -> r.media.toSeq).toMap
-    val b = resized.collect().map(r => r.media_id -> r.media.toSeq).toMap
-    assert(a === b)
-    a.values.foreach(bytes => assert(bytes.length <= 64))
   }
 
   /** Perceptual near-dup on REAL planted PNGs: a textured base image, a

@@ -484,10 +484,13 @@ object CurationRun {
       // columns (kept = n_tokens - n_cut), not a re-tokenize.
       val cut = timed("span_cut") {
         Dedup.spanCutUnsorted(lined.select(col("doc_id"), col("text")))
-          .filter(col("n_tokens") - col("n_cut") > 0)
           .select(col("doc_id"), col("cleaned").as("text"),
             (col("n_tokens") - col("n_cut")).as("n_tokens"))
           .localCheckpoint()
+          // filtered above the checkpoint: below it, the optimizer pushes
+          // the filter under the cut's projection, inlining the per-token
+          // cut, so every row would be tokenized and cut twice
+          .filter(col("n_tokens") > 0)
       }
 
       // stage 9: per-source cap (q89's salted two-phase rank — the verdict
@@ -500,14 +503,14 @@ object CurationRun {
       }
 
       // stage 10: language-mixture sampling (q75) — verdict keeps the losers
-      // (audit trail); the corpus keeps the winners. The survivor count
-      // sizes the corpus and shards writes below.
-      val (sampleVerdict, (sampled, nSampled)) = timed("sampled") {
+      // (audit trail); the corpus keeps the winners
+      val (sampleVerdict, sampled) = timed("sampled") {
         val v = Pipeline.mixtureSampleUnsorted(
           capped.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
             .select(col("doc_id"), col("lang"), col("text"))).localCheckpoint()
-        (v, Similarity.ckptWithCount(capped
-          .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))))
+        (v, capped
+          .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))
+          .localCheckpoint())
       }
 
       // stage 10.5 (opt-in): q135's token-budget selection over the sampled
@@ -515,13 +518,14 @@ object CurationRun {
       // fits tokenBudgetPct% of the surviving total. The verdict frame (per
       // selected doc: score, tokens, cumulative) is the artifact; the
       // survivor frame is an id-only semi join, the source-cap idiom.
-      val (budgetVerdict, (selected, nSelected)) = params.tokenBudgetPct match {
-        case None => (None, (sampled, nSampled))
+      val (budgetVerdict, selected) = params.tokenBudgetPct match {
+        case None => (None, sampled)
         case Some(pct) => timed("token_budget") {
           val v = Pipeline.tokenBudgetSelect(
             sampled.select(col("doc_id"), col("text")), pct).localCheckpoint()
-          (Some(v), Similarity.ckptWithCount(
-            sampled.join(v.select(col("doc_id")), Seq("doc_id"))))
+          (Some(v),
+            sampled.join(v.select(col("doc_id")), Seq("doc_id"))
+              .localCheckpoint())
         }
       }
 
@@ -613,12 +617,10 @@ object CurationRun {
         def write(path: String)(f: => Unit): Unit =
           branches.fork(timed(path)(f))
         write("corpus") {
-          PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id",
-            rows = nSelected)
+          PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id")
         }
         write("shards") {
-          PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos",
-            rows = nSelected)
+          PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos")
         }
         write("verdicts/source_cap") {
           capVerdict.write.mode("overwrite").parquet(s"$art/verdicts/source_cap")

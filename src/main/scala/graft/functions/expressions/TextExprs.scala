@@ -1,8 +1,7 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -45,72 +44,6 @@ object textnative {
   def bpeMergeAll(syms: Column, merges: Seq[(String, String)]): Column =
     ColumnBridge.column(
       BpeMergeAllExpr(ColumnBridge.expression(syms), merges))
-
-  /** The tokens of `toks` that no `width`-token window starting at a
-    * position in `starts` covers, in order (null tokens dropped) — see
-    * [[CutSpansExpr]].
-    */
-  def cutSpans(toks: Column, starts: Column, width: Int): Column =
-    ColumnBridge.column(CutSpansExpr(ColumnBridge.expression(toks),
-      ColumnBridge.expression(starts), width))
-}
-
-/** The span cut of q84/q86 in one pass: token i survives unless some start
-  * s has s <= i < s + width. It equals the declarative
-  * `filter(zip_with(toks, sequence(0, n-1), (t, i) -> if(!exists(starts,
-  * s -> i >= s and i < s + width), t)), x -> x is not null)` row for row,
-  * but walks the sorted starts once beside the tokens instead of scanning
-  * every start for every token in interpreted lambdas — O(tokens + starts)
-  * in generated code, where the lambda form was O(tokens × starts) and
-  * pulled its projection out of whole-stage codegen.
-  */
-case class CutSpansExpr(left: Expression, right: Expression, width: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"cut_spans needs array<string>, array<int>; got $l, $r")
-    }
-
-  override def nullSafeEval(toks: Any, starts: Any): Any =
-    CutSpansExpr.cut(toks.asInstanceOf[ArrayData],
-      starts.asInstanceOf[ArrayData], width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) =>
-      s"${ev.value} = graft.functions.expressions.CutSpansExpr.cut($t, $s, $width);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CutSpansExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object CutSpansExpr {
-  def cut(toks: ArrayData, starts: ArrayData, width: Int): ArrayData = {
-    val s = starts.toIntArray()
-    java.util.Arrays.sort(s)
-    val kept = new Array[Any](toks.numElements())
-    var n = 0
-    var p = 0
-    // one past the last position any window started so far covers
-    var coverEnd = Long.MinValue
-    var i = 0
-    while (i < toks.numElements()) {
-      while (p < s.length && s(p) <= i) {
-        coverEnd = math.max(coverEnd, s(p).toLong + width)
-        p += 1
-      }
-      if (i >= coverEnd && !toks.isNullAt(i)) {
-        kept(n) = toks.getUTF8String(i)
-        n += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(kept.take(n))
-  }
 }
 
 case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {

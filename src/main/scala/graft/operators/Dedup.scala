@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.expressions.{sketch, textnative}
+import graft.functions.expressions.sketch
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -246,8 +246,8 @@ object Dedup {
     * Kiveris et al.: distributed rounds until the graph fits one machine,
     * then finish there): once the edge set is at most `driverEdges` rows
     * it is collected and union-find gives the component minima directly.
-    * A graph that fits from the start runs no round at all; a larger one
-    * runs rounds until its contracted edge set fits (see the loop).
+    * A graph that fits runs no round at all; a larger one runs the
+    * distributed rounds to the fixpoint.
     */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
       maxRounds: Int = 25,
@@ -264,7 +264,7 @@ object Dedup {
         val (v, lab) = componentMins(edges0.as[(Long, Long)].collect())
         v.indices.filter(i => v(i) != lab(i)).map(i => (v(i), lab(i)))
           .toDF("v", "lab")
-      } else propagate(edges0, maxRounds, driverEdges)
+      } else propagate(edges0, maxRounds)
     ids.join(labels, Seq("v"), "left")
       .select(col("v"), coalesce(col("lab"), col("v")).as("lab"))
   }
@@ -272,10 +272,7 @@ object Dedup {
   /** [[connectedComponents]]' distributed rounds over the checkpointed
     * bidirectional edge set: (v, lab) for every edge-incident node.
     */
-  private def propagate(edges0: DataFrame, maxRounds: Int,
-      driverEdges: Long): DataFrame = {
-    val spark = edges0.sparkSession
-    import spark.implicits._
+  private def propagate(edges0: DataFrame, maxRounds: Int): DataFrame = {
     var edges = edges0
     // Only edge-incident nodes iterate — at production dup rates that is a
     // few percent of the corpus; everyone else is a singleton (lab = v)
@@ -363,39 +360,12 @@ object Dedup {
       // below 65k edges" policy blew the round count up (q56 5 -> 7,
       // q56b 5 -> 13 rounds) and cost more in extra rounds than it saved
       // in contraction jobs.
-      if (!done) {
-        val (contracted, nContracted) = Similarity.ckptWithCount(edges
-          .join(next.select(col("v").as("s"), col("lab").as("ls")), Seq("s"))
-          .join(next.select(col("v").as("d"), col("lab").as("ld")), Seq("d"))
-          .filter(col("ls") =!= col("ld"))
-          .select(col("ls").as("s"), col("ld").as("d")).distinct())
-        edges = contracted
-        // Mid-loop driver finish. Labels from here on only flow along the
-        // contracted edges and the pointers v -> lab(v), so every node's
-        // fixpoint label is the minimum of its component in that graph.
-        // A node that is neither a label nor an edge end is a leaf there,
-        // hanging off its smaller label; dropping the leaves leaves the
-        // contracted edges plus the pointers of the label nodes, both
-        // collected only when together they fit. The edges alone do not
-        // suffice: the contraction can empty them while pointer chains
-        // are still unresolved.
-        if (nContracted <= driverEdges) {
-          val (pointers, nPointers) = Similarity.ckptWithCount(next
-            .join(next.select(col("lab").as("v")), Seq("v"), "left_semi")
-            .filter(col("v") =!= col("lab"))
-            .select(col("v").as("s"), col("lab").as("d")))
-          if (nContracted + nPointers <= driverEdges) {
-            val (x, root) = componentMins(
-              edges.union(pointers).as[(Long, Long)].collect())
-            val moved = x.indices.filter(i => x(i) != root(i))
-              .map(i => (x(i), root(i))).toDF("x", "root")
-            labels = next.join(broadcast(moved), col("lab") === col("x"),
-                "left")
-              .select(col("v"), coalesce(col("root"), col("lab")).as("lab"))
-            done = true
-          }
-        }
-      }
+      if (!done) edges = edges
+        .join(next.select(col("v").as("s"), col("lab").as("ls")), Seq("s"))
+        .join(next.select(col("v").as("d"), col("lab").as("ld")), Seq("d"))
+        .filter(col("ls") =!= col("ld"))
+        .select(col("ls").as("s"), col("ld").as("d")).distinct()
+        .localCheckpoint()
       round += 1
     }
     require(done, s"connectedComponents did not converge in $maxRounds rounds")
@@ -556,9 +526,9 @@ object Dedup {
     * Shape for 100 TB: q74's positional gram pipeline (ONE codegen'd
     * tokenize+chain pass, one wide shuffle on the 64-bit gram key) plus a
     * doc-keyed rollup of flagged start positions; the final cut is a
-    * per-row expression over (tokens, starts) — no extra corpus shuffle —
-    * that walks the sorted starts once beside the tokens
-    * ([[graft.functions.expressions.CutSpansExpr]]).
+    * per-row expression over (tokens, starts) — no extra corpus shuffle.
+    * The exists() scan per token is O(flagged starts) with starts bounded
+    * by doc length; fine for the corpus-cleaning pass it is.
     */
   def q84(spark: SparkSession, dir: String): DataFrame =
     spanCut(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
@@ -619,7 +589,11 @@ object Dedup {
         coalesce(col("starts"), array().cast("array<int>")).as("starts"))
       .select(col("doc_id"),
         size(col("toks")).as("n_tokens"),
-        textnative.cutSpans(col("toks"), col("starts"), SpanTokens).as("kept"))
+        filter(zip_with(col("toks"),
+            sequence(lit(0), greatest(size(col("toks")), lit(1)) - 1),
+            (t, i) => when(!exists(col("starts"),
+              s => i >= s && i < s + lit(SpanTokens)), t)),
+          x => x.isNotNull).as("kept"))
       .select(col("doc_id"), col("n_tokens"),
         (col("n_tokens") - size(col("kept"))).as("n_cut"),
         array_join(col("kept"), " ").as("cleaned"))

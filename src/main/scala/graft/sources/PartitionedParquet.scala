@@ -34,19 +34,10 @@ object PartitionedParquet {
     */
   val DefaultMaxRecordsPerFile: Long = 1L << 20
 
-  /** `rows`, when the caller knows it, sizes the range exchange: one
-    * writer task per core at least, and enough tasks that none owns more
-    * than `maxRecordsPerFile` rows. The count is explicit because AQE
-    * would otherwise coalesce a small input's exchange to ONE partition,
-    * and one task would write every file.
-    */
   def write(df: DataFrame, path: String, partitionKey: String,
       sortKey: String,
-      maxRecordsPerFile: Long = DefaultMaxRecordsPerFile,
-      rows: Long = 0L): Unit = {
+      maxRecordsPerFile: Long = DefaultMaxRecordsPerFile): Unit = {
     import org.apache.spark.sql.functions.col
-    val tasks = math.max(df.sparkSession.sparkContext.defaultParallelism.toLong,
-      (rows + maxRecordsPerFile - 1) / maxRecordsPerFile)
     // RANGE-partition on (partitionKey, sortKey): each directory is written
     // by the few tasks owning that key's range (small file count — a plain
     // repartition(col) would write every task's sliver into every
@@ -57,7 +48,11 @@ object PartitionedParquet {
     // range-sorted, so the within-task sort is nearly free. The record cap
     // then bounds what each task may put in ONE file; the writer rolls to
     // a new file at the cap, preserving the sorted order across the roll.
-    df.repartitionByRange(tasks.toInt, col(partitionKey), col(sortKey))
+    // The task count is explicit, one writer per core: left unset, AQE
+    // coalesces a small input's exchange to ONE partition, and one task
+    // writes every file.
+    df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism,
+        col(partitionKey), col(sortKey))
       .sortWithinPartitions(col(partitionKey), col(sortKey))
       .write
       .option("maxRecordsPerFile", maxRecordsPerFile)

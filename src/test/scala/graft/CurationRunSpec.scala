@@ -56,18 +56,23 @@ class CurationRunSpec extends AnyFunSuite {
   /** CI guard on the run's job count, counted by a listener: in the
     * paper's model one unit of work is a round of map, hash-shuffle and
     * reduce, so every job beyond the chain's necessary shuffles and
-    * materializations is scheduling overhead. The run on this fixture took
+    * materializations is scheduling overhead. The counted run is a warm
+    * one (after [[outDir]]'s): the first run in a JVM adds up to three
+    * file-listing and schema jobs on the fixture's tables. The run took
     * 140 jobs with in-chain presentation sorts, one aggregate job per
-    * manifest stage, and distributed connected-components rounds; 103
-    * once those went, measured at 4 cores (101 at 32: AQE plans a few
-    * exchanges differently at another partition count). A change that
-    * lowers the count lowers the ceiling.
+    * manifest stage, and distributed connected-components rounds. Without
+    * them, 15 warm runs at 1, 2, 4 and 8 cores took 98 to 101 jobs: the
+    * count moves by up to two between runs in one JVM, as AQE submits a
+    * query's stages as one job or as several depending on how the
+    * concurrent branch queries interleave. The ceiling is the largest
+    * count seen plus one. A change that lowers the count lowers it.
     */
   test("one run on the fixture stays within its job budget") {
+    outDir
     val d = Files.createTempDirectory("curation_run_jobs").toString
     val jobs = TestSpark.jobsOf(CurationRun.run(spark, sfDir, d))
     new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
-    assert(jobs <= 103, s"CurationRun.run took $jobs jobs on the fixture")
+    assert(jobs <= 102, s"CurationRun.run took $jobs jobs on the fixture")
   }
 
   test("manifest's first six rows equal q88's funnel (the oracle surface)") {

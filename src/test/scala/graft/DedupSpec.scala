@@ -186,17 +186,18 @@ class DedupSpec extends AnyFunSuite {
   }
 
   /** r19: the convergence scalar rides the label checkpoint via `observe`
-    * (one job per round instead of two). The degenerate inputs: an EMPTY
-    * pair set has no edges to count past any bound, so it always finishes
-    * on the driver with every label a singleton; a single edge converges
-    * immediately off the folded init in the distributed rounds
-    * (`driverEdges = 0`) and needs no round on the driver.
+    * (one job per round instead of two). The degenerate inputs exercise
+    * that path's edge cases (`driverEdges = -1` keeps even the empty graph
+    * off the driver finish) — an EMPTY pair set aggregates to a null sum
+    * (must coalesce to 0 and converge in the confirmation round, labels
+    * all singletons), and a single edge converges immediately off the
+    * folded init; the driver finish must agree on the single edge.
     */
   test("CC: observe-fused convergence handles empty and singleton pair sets") {
     import spark.implicits._
     val ids = Seq(1L, 2L, 3L).toDF("v")
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
-    val got0 = Dedup.connectedComponents(ids, empty, driverEdges = 0)
+    val got0 = Dedup.connectedComponents(ids, empty, driverEdges = -1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got0 === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
     val one = Seq((2L, 3L)).toDF("a_id", "b_id")
@@ -224,8 +225,7 @@ class DedupSpec extends AnyFunSuite {
   /** The driver finish against the distributed rounds on seeded random
     * graphs (sparse ones with long chains, dense ones, isolated ids): the
     * default call fits the bound and runs no round, `driverEdges = 0`
-    * runs every round to the fixpoint, and a bound of a quarter of the
-    * edges crosses over part way. All three must give union-find's
+    * runs every round to the fixpoint. Both must give union-find's
     * component minima.
     */
   test("CC: the driver finish equals the distributed rounds on random graphs") {
@@ -243,36 +243,6 @@ class DedupSpec extends AnyFunSuite {
       val want = unionFind(ids, pairs)
       assert(cc(Dedup.DriverFinishEdges) === want, s"driver finish, n=$n m=$m")
       assert(cc(0) === want, s"distributed rounds, n=$n m=$m")
-      assert(cc(pairs.size / 2) === want, s"crossover, n=$n m=$m")
-    }
-  }
-
-  /** A graph that crosses the driver bound mid-loop: six 6-cliques chained
-    * into a path, ids descending so the minimum starts at the far end. Its
-    * 190 directed edges exceed the bound of 32, so round 1 runs
-    * distributed; the contraction then leaves 18 label edges plus 9
-    * pointers of unsettled labels (27 rows), which fit. `maxRounds = 1`
-    * makes that finish observable: the distributed loop alone needs 5
-    * rounds here and would fail its convergence `require`.
-    */
-  test("CC: a graph crossing the driver bound mid-loop finishes on the driver") {
-    import spark.implicits._
-    val (k, m) = (6, 6)
-    val ids = (k * m).toLong to 1L by -1L
-    val pairs = (0 until k).flatMap { c =>
-      val mem = ids.slice(c * m, (c + 1) * m)
-      val clique = for (i <- 0 until m; j <- i + 1 until m) yield (mem(i), mem(j))
-      if (c == 0) clique else clique :+ (ids(c * m - 1) -> mem.head)
-    }
-    val want = unionFind(ids, pairs)
-    assert(want.values.toSet === Set(1L), "the chain is one component")
-    val got = Dedup.connectedComponents(ids.toDF("v"),
-        pairs.toDF("a_id", "b_id"), maxRounds = 1, driverEdges = 32)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === want)
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(ids.toDF("v"), pairs.toDF("a_id", "b_id"),
-        maxRounds = 1, driverEdges = 0)
     }
   }
 
@@ -456,36 +426,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got(2L) === ((12, 8, "b1 b2 b3 b4")))
     assert(got(3L) === ((17, 16, "x")))
     assert(got(4L) === ((10, 0, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10")))
-  }
-
-  /** The native span cut against the lambda form it replaced, on seeded
-    * random token arrays and start lists (unsorted, overlapping, past the
-    * end, empty) — the whole q84/q86 cut tail rests on this equality.
-    */
-  test("native span cut equals the zip_with/exists lambda form") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.functions.expressions.textnative
-    val rnd = new Random(5)
-    val rows = (0 until 300).map { _ =>
-      val n = rnd.nextInt(40)
-      (Seq.fill(n)(s"t${rnd.nextInt(9)}"),
-        Seq.fill(rnd.nextInt(6))(rnd.nextInt(n + 10)))
-    }
-    val df = rows.toDF("toks", "starts")
-    val lambda = filter(zip_with(col("toks"),
-        sequence(lit(0), greatest(size(col("toks")), lit(1)) - 1),
-        (t, i) => when(!exists(col("starts"),
-          s => i >= s && i < s + lit(Dedup.SpanTokens)), t)),
-      x => x.isNotNull)
-    val got = df.select(
-        textnative.cutSpans(col("toks"), col("starts"), Dedup.SpanTokens),
-        lambda)
-      .collect()
-    got.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
-    val kept = got.map(_.getSeq[String](0).size)
-    assert(rows.map(_._1.size).zip(kept).exists { case (n, k) => k < n } &&
-      kept.exists(_ > 0), "degenerate draw: nothing cut or nothing kept")
   }
 
   /** Null-input parity with the q84 oracle tail: a null text coalesces to

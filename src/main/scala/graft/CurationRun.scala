@@ -7,8 +7,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, FlatQuantizer, ImiQuantizer, Pipeline, Quantizers, Similarity}
-import graft.sources.{Artifacts, ModelStore, PartitionedParquet}
+import graft.operators.{AnnIndex, Dedup, FlatQuantizer, ImiQuantizer, Pipeline, Similarity}
+import graft.sources.{Artifacts, PartitionedParquet}
 
 /** The tunable operating points of a curation run — every knife threshold
   * that was a compile-time constant through round 12, now a run parameter
@@ -18,7 +18,7 @@ import graft.sources.{Artifacts, ModelStore, PartitionedParquet}
   * the q88 manifest parity holds.
   *
   * `reuseModels` points at a PRIOR run's outDir: the sem_dedup stage then
-  * RELOADS that run's fitted coarse codebook ([[ModelStore]]) instead of
+  * RELOADS that run's fitted coarse codebook ([[AnnIndex.load]]) instead of
   * re-fitting — the production train-once/serve-many contract. Two
   * snapshots curated under one codebook have comparable semantic-dedup
   * verdicts (cell boundaries identical); re-fitting per job would move
@@ -115,9 +115,11 @@ final case class CurationParams(
   *   - `corpus/` — the cleaned corpus, Hive-partitioned by `lang` and
   *     doc_id-sorted within files ([[PartitionedParquet]]): (doc_id, lang,
   *     source, text, n_tokens)
-  *   - `model/coarse/` — the fitted (or reused) coarse-quantizer codebook
-  *     the sem_dedup stage ran under ([[ModelStore]] layout): the artifact
-  *     a later run reuses via [[CurationParams.reuseModels]]
+  *   - `model/coarse/` and `model/index/` — the sem_dedup stage's
+  *     [[AnnIndex]] ([[AnnIndex.save]]): the fitted (or reused) coarse
+  *     codebook and the (vec_id, cell) soft assignments it ran under, the
+  *     artifacts a later run reuses via [[CurationParams.reuseModels]] and
+  *     [[CurationParams.reuseIndex]]
   *   - `verdicts/source_cap/` — q89's kept set (doc_id, source, src_rank)
   *   - `verdicts/sample/` — q75's per-doc verdict (doc_id, lang, rate_e6,
   *     kept), losers included (the run's sampling audit trail)
@@ -292,7 +294,7 @@ object CurationRun {
         "so diffing against itself fabricates an all-stable report")
     require(!params.reuseIndex.exists(samePath(_, outDir)),
       "--reuse-index must point at a DIFFERENT prior run's outDir: " +
-        s"saveIndex would overwrite $outDir/model/index while the reused " +
+        s"this run would overwrite $outDir/model/index while the reused " +
         "index is still lazily reading it")
     // every artifact writes into this staging version; ONE atomic pointer
     // swap at the end of the run publishes them as a consistent set
@@ -391,8 +393,8 @@ object CurationRun {
       // through unjudged (they were never clusterable); each ≥ 0.95-cosine
       // component keeps its min doc_id. The drop set is an id-only
       // left-anti join — text never rides the vector machinery.
-      // The quantizer is fit ONCE here (or reloaded from a prior run's
-      // artifact) and always persisted under model/coarse — see
+      // The index is fit ONCE here (or reloaded from a prior run's
+      // artifact) and always persisted under model/ — see
       // [[CurationParams.reuseModels]].
       val semdeduped = timed("sem_dedup") {
         val emb = Tables.embeddings(spark, sfDir)
@@ -404,56 +406,52 @@ object CurationRun {
             .select(col("doc_id").as("vec_id"), col("v")))
         if (n == 0) dec // nothing clusterable: the stage judges no one
         else {
-          val quant = (params.reuseIndex.orElse(params.reuseModels),
+          def prior(run: String): AnnIndex =
+            AnnIndex.load(spark, s"${Artifacts.resolve(spark, run)}/model")
+          val model = (params.reuseIndex.orElse(params.reuseModels),
               params.refreshModels) match {
-            case (Some(prior), _) => timed("quant_load") {
-              ModelStore.loadQuantizer(
-              spark, s"${Artifacts.resolve(spark, prior)}/model/coarse")
-            }
+            case (Some(p), _) => timed("quant_load") { prior(p) }
             // the production middle path: prior codebook + ONE Lloyd step
             // on THIS run's subject (q111/imiRefresh composed into the
             // pipeline) — adapts to drift for one aggregate pass instead
             // of a full KMeans refit
-            case (None, Some(prior)) => timed("quant_refresh") {
-              ModelStore.loadQuantizer(
-              spark, s"${Artifacts.resolve(spark, prior)}/model/coarse") match {
+            case (None, Some(p)) => timed("quant_refresh") {
+              AnnIndex(prior(p).quant match {
                 case FlatQuantizer(cs) => FlatQuantizer(
                   Similarity.refreshedCodebook(Similarity.codebookRefresh(
                     subject.select(col("v")), cs)))
                 case imi: ImiQuantizer =>
                   Similarity.imiRefresh(subject.select(col("v")), imi)
-              }
+              })
             }
             case (None, None) => timed("quant_fit") {
-              Quantizers.quantizerFor(subject, Similarity.ivfCellsFor(n))
+              AnnIndex.fitted(subject, n).get
             }
           }
-          ModelStore.saveQuantizer(spark, quant, s"$art/model/coarse")
           // the (vec_id, cell) soft-assignment index. With --reuse-index the
           // prior run's persisted rows serve every doc it already assigned
           // (valid because the quantizer IS that run's — assignment is a
           // pure function of (codebook, vector)) and only the ARRIVALS pay
-          // the assignment pass; the run always persists the index it USED
-          // (model/index) so any run can seed the next. The verdict then
-          // reads the just-written artifact: the candidate self-join
-          // consumes the cells frame twice, and re-reading clustered
-          // parquet beats re-executing the N×k assignment lineage.
-          val cells = params.reuseIndex match {
-            case Some(prior) => timed("index_load") {
-              val priorIdx = ModelStore.loadIndex(
-                spark, s"${Artifacts.resolve(spark, prior)}/model/index")
-                .select(col("vec_id"), col("cell"))
-              priorIdx.join(subject.select(col("vec_id")), Seq("vec_id"))
-                .unionByName(Similarity.semCells(subject.join(
-                  priorIdx.select(col("vec_id")).distinct(),
-                  Seq("vec_id"), "left_anti"), quant))
+          // the assignment pass; the run always persists the model and the
+          // index it USED (model/coarse, model/index) so any run can seed
+          // the next. The verdict then reads the just-written artifact: the
+          // candidate self-join consumes the cells frame twice, and
+          // re-reading clustered parquet beats re-executing the N×k
+          // assignment lineage.
+          val index = params.reuseIndex match {
+            case Some(_) => timed("index_load") {
+              val priorIdx = model.cells.get
+              model.copy(cells = Some(
+                priorIdx.join(subject.select(col("vec_id")), Seq("vec_id"))
+                  .unionByName(model.assignSoft(subject.join(
+                    priorIdx.select(col("vec_id")).distinct(),
+                    Seq("vec_id"), "left_anti")).cells.get)))
             }
-            case None => Similarity.semCells(subject, quant)
+            case None => model.assignSoft(subject)
           }
           val verdict = Similarity.semanticDedupCells(
             subject.select(col("vec_id")), subject,
-            ModelStore.saveIndex(cells, s"$art/model/index")
-              .select(col("vec_id"), col("cell")),
+            index.save(spark, s"$art/model").cells.get,
             params.semDedupCosine)
           dec.join(
               verdict.filter(!col("is_kept"))

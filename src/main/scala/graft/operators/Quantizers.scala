@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.functions.expressions.{NearestCellsExpr, vecexprs}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.ModelStore
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** A fitted coarse quantizer for the IVF family (q39/q85/q92b): maps an
   * `array<double>` vector column to integer cell ids. Two implementations
@@ -49,10 +51,176 @@ sealed trait CellQuantizer {
     * same probed-cell count covers the manifold less adaptively; measured
     * at the 200k decade (SCALE.md, "IMI at the 200k decade"),
     * hard-negative recall through a 462-cell IMI steps 0.0 → 1.0 between
-    * 1× and 2× the ⌈√k⌉ fan-out where flat hits 1.0 at exactly 1×. Consumers multiply
-    * [[Similarity.ivfProbesFor]] by this (capped at nCells).
+    * 1× and 2× the ⌈√k⌉ fan-out where flat hits 1.0 at exactly 1×.
+    * [[AnnIndex]]'s fan-out multiplies its ⌈√cells⌉ by this (capped at
+    * nCells).
     */
   def probeWidthFactor: Int = 1
+}
+
+/** The IVF / IVF-PQ index — the paper's inverted index with cells as terms
+  * (`cell → vec_ids`): one value that is built, saved, loaded and probed.
+  *   - `quant` routes: every vector to one cell, every probe to its
+  *     fan-out of nearest cells.
+  *   - `pq`, when present, holds the per-subspace PQ codebooks: scoring
+  *     reads M small codes per vector, not the vector.
+  *   - `cells` is the assignment frame ([[assign]], [[assignSoft]]), or
+  *     None for a model-only index (q104's and the served codebook's).
+  *
+  * [[AnnIndex.seeded]] and [[AnnIndex.fitted]] build it; [[save]] and
+  * [[AnnIndex.load]] persist it in the [[graft.sources.ModelStore]] layout
+  * (`<path>/coarse`, `<path>/index`); [[probe]] and [[search]] serve it.
+  * Both serving operations fan out through [[fanOut]], the one place the
+  * probe fan-out ([[AnnIndex.ivfProbesFor]]) is chosen. Each query keeps
+  * its own tail (top-k rank, hard-negative gate, decon argmax, dedup CC,
+  * sweep grading).
+  */
+final case class AnnIndex(quant: CellQuantizer,
+    pq: Option[Array[Array[Array[Double]]]] = None,
+    cells: Option[DataFrame] = None) {
+
+  /** This index assigned over a clean (vec_id, v, ...) `frame` (lazy, no
+    * job). Flat: `frame`'s rows plus their `cell`, since scoring reads
+    * their vectors. IVF-PQ: the resident form (vec_id, cell, c0..cM-1),
+    * vectors dropped, since scoring reads codes.
+    */
+  def assign(frame: DataFrame): AnnIndex = copy(cells = Some(pq match {
+    case None => frame.select(col("*"), quant.assign(col("v")).as("cell"))
+    case Some(cbs) => frame.select(col("vec_id") +:
+      quant.assign(col("v")).as("cell") +: Similarity.pqCodeCols(cbs): _*)
+  }))
+
+  /** q85's soft assignment over a (vec_id, v) `frame`: one (vec_id, cell)
+    * row per each of a row's [[Similarity.SemProbeCells]] nearest cells.
+    */
+  def assignSoft(frame: DataFrame): AnnIndex = copy(cells = Some(
+    frame.select(col("vec_id"),
+      explode(quant.probeCells(col("v"), Similarity.SemProbeCells)).as("cell"))))
+
+  /** Each probe row's fan-out: its [[AnnIndex.ivfProbesFor]] nearest cells,
+    * one row each.
+    */
+  private def fanOut(v: Column): Column =
+    explode(quant.probeCells(v, AnnIndex.ivfProbesFor(quant))).as("cell")
+
+  /** The cell-mates of every `probes` row (its vector in column `pv`): the
+    * probes fan out, broadcast, and equi-join the assignment frame on
+    * `cell`, so the corpus side never shuffles. Each row carries both
+    * sides' columns; the caller scores and ranks.
+    */
+  def probe(probes: DataFrame, pv: String = "pv"): DataFrame =
+    cells.get.join(broadcast(probes.select(col("*"), fanOut(col(pv)))),
+      Seq("cell"))
+
+  /** IVF-PQ top-k for the fixed probes (vec_id < 5) of the clean (vec_id, v)
+    * `base` this index encodes: the probes fan out with their ADC lookup
+    * tables, the cell equi-join reads codes only, ADC ranks a
+    * [[Similarity.PqShortlist]] per probe, and the exact refine orders it.
+    * Raw vectors are read only for the probe rows and the refine fetch.
+    */
+  def search(base: DataFrame): DataFrame = {
+    val cbs = pq.get
+    val probeLut = base.filter(col("vec_id") < 5).select(
+      col("vec_id").as("probe_id") +:
+        vecexprs.dotProduct(col("v"), col("v")).as("np2") +:
+        fanOut(col("v")) +: Similarity.pqLutCols(cbs): _*)
+    val shortlist = cells.get.join(broadcast(probeLut), Seq("cell"))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .transform(Similarity.pqAdcShortlist(cbs))
+    Similarity.pqRefine(base, shortlist)
+  }
+
+  /** Write this index under `path`: the codebook table (quantizer plus any
+    * PQ codebooks) at `path/coarse` and, when the index holds one, the
+    * assignment frame at `path/index`, narrowed to (vec_id, cell[, codes])
+    * and clustered by cell. Returns this index serving from the written
+    * frame, read back under its schema (no footer-inference job).
+    */
+  def save(spark: SparkSession, path: String): AnnIndex = {
+    ModelStore.saveQuantizer(spark, quant, pq, s"$path/coarse")
+    copy(cells = cells.map(c => ModelStore.saveIndex(
+      c.select(AnnIndex.indexSchema(pq).fieldNames.toIndexedSeq.map(col): _*),
+      s"$path/index")))
+  }
+}
+
+object AnnIndex {
+
+  /** Quantizer cell count for an n-vector corpus: ~√n, floored at the
+    * fixture's [[Similarity.IvfCells]], capped at FlatCellCap² (the IMI
+    * ceiling [[Quantizers.quantizerFor]] switches to past FlatCellCap).
+    * √n keeps the within-cell candidate mass sub-quadratic: soft top-2
+    * cells of average size 2n/k give Σ|cell|² ≈ 4n²/k = 4n^1.5 pairs —
+    * measured on the dup-heavy fixture, a FIXED 16 cells left 47.8M
+    * candidates over 20k vectors (N²/4) where √n cells leave ~8M.
+    */
+  private def ivfCellsFor(n: Long): Int =
+    math.max(Similarity.IvfCells,
+      math.min(Quantizers.FlatCellCap.toLong * Quantizers.FlatCellCap,
+        math.round(math.sqrt(n.toDouble))).toInt)
+
+  /** Probe fan-out for a k-cell quantizer: max([[Similarity.IvfProbes]],
+    * ⌈√k⌉) times its [[CellQuantizer.probeWidthFactor]], capped at k. A
+    * FIXED fan-out over √n-scaled cells probes a shrinking 4/√n fraction,
+    * so recall decayed with scale (q92b: 0.48 at 22 cells → 0.37 at 71);
+    * √k probes shrink it only as n^(-1/4) while per-probe scanned mass
+    * stays n^(3/4) — the nlist/nprobe co-scaling rule. At the fixture's 16
+    * cells this is exactly IvfProbes, so the seeded twins' oracles hold.
+    */
+  private def ivfProbesFor(quant: CellQuantizer): Int =
+    math.min(quant.nCells, quant.probeWidthFactor * math.max(
+      Similarity.IvfProbes, math.ceil(math.sqrt(quant.nCells.toDouble)).toInt))
+
+  /** The lowest-id builder: the [[Similarity.IvfCells]] lowest-id vectors
+    * of a clean (vec_id, v) `base` ARE the flat codebook (q39b's init-free
+    * idiom, every step SQL-mirrorable), and with `pq` the
+    * [[Similarity.PqCodewords]] lowest-id vectors, sliced per subspace, are
+    * the PQ codebooks. One k-row collect of model state; None for an empty
+    * `base`.
+    */
+  def seeded(base: DataFrame, pq: Boolean = false): Option[AnnIndex] = {
+    val seeds = Similarity.lowestIdSeeds(base,
+      if (pq) math.max(Similarity.IvfCells, Similarity.PqCodewords)
+      else Similarity.IvfCells)
+    Option.when(seeds.nonEmpty)(AnnIndex(
+      FlatQuantizer(seeds.take(Similarity.IvfCells)),
+      Option.when(pq)(Similarity.pqCodebooksFromSeeds(
+        seeds.take(Similarity.PqCodewords)))))
+  }
+
+  /** The trained builder over a clean (vec_id, v) `clean` frame of `n`
+    * rows (materialized by the caller, whose count sizes the fit):
+    * [[Quantizers.quantizerFor]] at [[ivfCellsFor]] cells and, with `pq`,
+    * [[Quantizers.pqFitCodebooks]] — one sample collect per fit. None when
+    * n is 0: no quantizer fits an empty corpus.
+    */
+  def fitted(clean: DataFrame, n: Long, pq: Boolean = false): Option[AnnIndex] =
+    Option.when(n > 0)(AnnIndex(
+      Quantizers.quantizerFor(clean, ivfCellsFor(n)),
+      Option.when(pq)(Quantizers.pqFitCodebooks(
+        clean, Similarity.PqSubspaces, Similarity.PqCodewords))))
+
+  /** The persisted assignment frame's schema: (vec_id, cell) plus one code
+    * column per PQ subspace. [[save]] writes exactly these columns and
+    * [[load]] reads them back under it.
+    */
+  private def indexSchema(pq: Option[Array[Array[Array[Double]]]]): StructType =
+    StructType((Seq(StructField("vec_id", LongType)) ++
+      (Seq("cell") ++ pq.toSeq.flatMap(_.indices.map(i => s"c$i")))
+        .map(StructField(_, IntegerType))))
+
+  /** Read back an index [[save]] wrote under `path`: the codebooks (one
+    * KB-scale collect) and, when `path/index` exists, the assignment frame
+    * under [[indexSchema]] (lazy, no job).
+    */
+  def load(spark: SparkSession, path: String): AnnIndex = {
+    val (quant, pq) = ModelStore.loadQuantizer(spark, s"$path/coarse")
+    val index = new org.apache.hadoop.fs.Path(s"$path/index")
+    val written = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(index)
+    AnnIndex(quant, pq, Option.when(written)(
+      ModelStore.loadIndex(spark, index.toString, indexSchema(pq))))
+  }
 }
 
 /** One plan-literal codebook (the pre-round-12 behavior, unchanged). */

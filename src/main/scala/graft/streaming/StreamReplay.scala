@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.QueryDef
+import graft.operators.{AnnIndex, FlatQuantizer}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -230,39 +231,40 @@ object StreamReplay {
     * replay needs the all-time totals to stay batch-mirrorable.
     */
   /** Offline-train + artifact round trip shared by the serving monitors
-    * (q106, q108): the [[graft.operators.Similarity.IvfCells]] lowest-id
-    * vectors ARE the codebook (q39b's init-free idiom — KB-scale model
-    * state, not a data-path collect), written through the
-    * [[graft.sources.ModelStore]] save→load seam so the serving plan runs
-    * a LOADED artifact. None when the corpus is empty (no codebook can be
-    * trained). Returns the loaded quantizer, the broadcastable (cell,
-    * centroid) frame, and the raw centroid rows (for sentinel payloads).
+    * (q106, q108, q123): the lowest-id codebook
+    * ([[graft.operators.AnnIndex.seeded]], q39b's init-free idiom —
+    * KB-scale model state, not a data-path collect), written and read back
+    * through [[graft.operators.AnnIndex.save]] / `load` so the serving plan
+    * runs a LOADED artifact. None when the corpus is empty (no codebook
+    * can be trained). Returns the loaded model-only index, the
+    * broadcastable (cell, centroid) frame, and the raw centroid rows (for
+    * sentinel payloads).
     */
   private def servedQuantizer(spark: SparkSession, dir: String): Option[
-      (graft.operators.CellQuantizer, DataFrame, Array[Array[Double]])] = {
-    import graft.operators.{FlatQuantizer, Similarity}
+      (AnnIndex, DataFrame, Array[Array[Double]])] = {
     val base = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         graft.functions.vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    val seeds = Similarity.lowestIdSeeds(base, Similarity.IvfCells)
-    if (seeds.isEmpty) return None
-    // per-process scratch, overwritten in place (q121's idiom): a temp dir
-    // per invocation would leak one codebook per call
-    val path = graft.sources.Scratch.dir("serve-model") + "/coarse"
-    graft.sources.ModelStore.saveQuantizer(spark, FlatQuantizer(seeds), path)
-    val quant = graft.sources.ModelStore.loadQuantizer(spark, path)
-    val centroids = quant match { case FlatQuantizer(cs) => cs; case _ => seeds }
-    import spark.implicits._
-    val centroidDf = centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "c")
-    Some((quant, centroidDf, centroids))
+    AnnIndex.seeded(base).map { seeded =>
+      // per-process scratch, overwritten in place (q121's idiom): a temp
+      // dir per invocation would leak one codebook per call
+      val path = graft.sources.Scratch.dir("serve-model")
+      seeded.save(spark, path)
+      val served = AnnIndex.load(spark, path)
+      // a seeded codebook is flat
+      val FlatQuantizer(centroids) = served.quant
+      import spark.implicits._
+      val centroidDf = centroids.zipWithIndex.toSeq
+        .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "c")
+      (served, centroidDf, centroids)
+    }
   }
 
   def q106(spark: SparkSession, dir: String): DataFrame = {
     val served = servedQuantizer(spark, dir)
     if (served.isEmpty) return emptyMonitor(spark)
-    val (quant, centroidDf, _) = served.get
+    val (AnnIndex(quant, _, _), centroidDf, _) = served.get
     import graft.operators.Similarity
     val stream = replayTable(spark, dir, "embeddings")
       .select(graft.functions.vectors.toDouble(col("embedding")).as("v"))
@@ -406,7 +408,7 @@ object StreamReplay {
   def q108(spark: SparkSession, dir: String): DataFrame = {
     val served = servedQuantizer(spark, dir)
     if (served.isEmpty) return emptyWindowedMonitor(spark)
-    val (quant, centroidDf, centroids) = served.get
+    val (AnnIndex(quant, _, _), centroidDf, centroids) = served.get
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = replayTable(spark, dir, "embeddings")
@@ -570,7 +572,7 @@ object StreamReplay {
   /** q123: streaming served-index maintenance for the ANN tier — q107
     * maintains the near-dup band index online; this is its embedding
     * sibling, completing the online family's index story: a codebook
-    * trained offline goes through the ModelStore save→load seam
+    * trained offline goes through the AnnIndex save→load seam
     * ([[servedQuantizer]] — q106/q108's serving path), the corpus then
     * streams through a REAL file-stream source with the LOADED quantizer
     * assigning every arrival its IVF cell INSIDE the micro-batch
@@ -594,19 +596,19 @@ object StreamReplay {
     * the big side and shuffles ids, never payloads, while the probe side
     * stays broadcast (q39's contract). The PQ composition (codes in the
     * state row, q121's served ADC off the drained index) is the same plan
-    * with [[graft.operators.Similarity.ivfPqEncode]]'s columns riding the
-    * arrival projection.
+    * with an IVF-PQ index's encode columns
+    * ([[graft.operators.AnnIndex.assign]]) riding the arrival projection.
     */
   def q123(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val served = servedQuantizer(spark, dir)
     if (served.isEmpty) return Similarity.emptyTopK(spark)
-    val (quant, _, _) = served.get
+    val (model, _, _) = served.get
     val stream = replayTable(spark, dir, "embeddings")
       .select(col("vec_id"),
         graft.functions.vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-      .select(quant.assign(col("v")).as("cell"), col("vec_id"))
+      .select(model.quant.assign(col("v")).as("cell"), col("vec_id"))
     val index = drain(stream.groupBy(col("cell"))
         .agg(sort_array(collect_list(col("vec_id"))).as("ids")),
       "q123_annindex_sink", "complete")
@@ -615,7 +617,7 @@ object StreamReplay {
       .select(col("vec_id"),
         graft.functions.vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    Similarity.ivfServe(index, base, quant)
+    Similarity.ivfServe(model.copy(cells = Some(index)), base)
   }
 
   /** Empty, schema-correct q108 result — the windowed monitor for a corpus

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.Pipeline
+import graft.operators.{AnnIndex, Pipeline}
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.parquet.hadoop.ParquetOutputCommitter
@@ -148,8 +148,7 @@ class CurationRunSpec extends AnyFunSuite {
     */
   test("a reuse-models rerun loads the prior codebook and reproduces the manifest exactly") {
     // the first run (outDir) must have written its model artifact
-    val stored = graft.sources.ModelStore.loadQuantizer(
-      spark, s"${art(outDir)}/model/coarse")
+    val stored = AnnIndex.load(spark, s"${art(outDir)}/model").quant
     assert(stored.nCells > 0, "first run wrote an empty codebook")
     val reuseDir = Files.createTempDirectory("curation_run_reuse").toString
     CurationRun.run(spark, sfDir, reuseDir,
@@ -162,8 +161,7 @@ class CurationRunSpec extends AnyFunSuite {
       "manifest drift under a reused codebook — verdicts not comparable")
     // the reused run re-publishes the codebook it served from, so ANY run
     // can seed the next; it must be the same model bit-for-bit
-    val republished = graft.sources.ModelStore.loadQuantizer(
-      spark, s"${art(reuseDir)}/model/coarse")
+    val republished = AnnIndex.load(spark, s"${art(reuseDir)}/model").quant
     (stored, republished) match {
       case (graft.operators.FlatQuantizer(a), graft.operators.FlatQuantizer(b)) =>
         assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq,
@@ -185,8 +183,7 @@ class CurationRunSpec extends AnyFunSuite {
     * vector scan per run; the index artifact doesn't.
     */
   test("a reuse-index rerun serves assignments from the prior artifact and reproduces the manifest") {
-    val priorIdx = graft.sources.ModelStore.loadIndex(
-      spark, s"${art(outDir)}/model/index")
+    val priorIdx = AnnIndex.load(spark, s"${art(outDir)}/model").cells.get
     assert(priorIdx.count() > 0, "first run wrote an empty assignment index")
     assert(priorIdx.columns.toSet === Set("vec_id", "cell"))
     val reuseDir = Files.createTempDirectory("curation_run_ridx").toString
@@ -200,8 +197,7 @@ class CurationRunSpec extends AnyFunSuite {
       "manifest drift under a reused assignment index")
     // the reused run re-publishes the index it served from (any run can
     // seed the next) — same (vec_id, cell) multiset bit-for-bit
-    def idx(d: String) = graft.sources.ModelStore
-      .loadIndex(spark, s"${art(d)}/model/index")
+    def idx(d: String) = AnnIndex.load(spark, s"${art(d)}/model").cells.get
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(idx(reuseDir) === idx(outDir), "republished index drifted")
     val rp = spark.read.parquet(s"${art(reuseDir)}/run_params").head()
@@ -331,7 +327,6 @@ class CurationRunSpec extends AnyFunSuite {
   test("refresh-models takes one Lloyd step on the current run's subject") {
     import spark.implicits._
     import graft.operators.{FlatQuantizer, Similarity}
-    import graft.sources.ModelStore
     def alpha(n: Int): String =
       n.toString.map(c => ('a' + (c - '0')).toChar)
     def prose(i: Int): String = {
@@ -359,7 +354,7 @@ class CurationRunSpec extends AnyFunSuite {
     CurationRun.run(spark, sfB, outB,
       CurationParams(refreshModels = Some(outA))).collect()
     def load(dir: String): Array[Array[Double]] =
-      ModelStore.loadQuantizer(spark, s"${art(dir)}/model/coarse") match {
+      AnnIndex.load(spark, s"${art(dir)}/model").quant match {
         case FlatQuantizer(c) => c
         case other => fail(s"expected a flat codebook, got $other")
       }

@@ -353,12 +353,19 @@ class PlanSpec extends AnyFunSuite {
     // the composed stack must keep both tiers' contracts at once: the
     // probe-cell × LUT frame broadcasts into a cell EQUI-join (never the
     // flat q98 cross product, never a cartesian), and all encode/ADC
-    // arithmetic stays native
-    val p = plan(Similarity.q101b(spark, dir))
-    assert(p.contains("BroadcastHashJoin"), p.take(500))
-    assert(!p.contains("CartesianProduct"), p.take(1500))
-    assert(!p.contains("ScalaUDF") && !p.contains("lambdafunction"),
-      "interpreted code crept into the IVF-PQ path")
+    // arithmetic stays native — in the one-shot form (q101b) and served
+    // off the saved index (q121 and q121b, the second call reading the
+    // session's cached index)
+    for ((name, df) <- Seq("q101b" -> Similarity.q101b(spark, dir),
+        "q121" -> Similarity.q121(spark, dir),
+        "q121b" -> Similarity.q121b(spark, dir),
+        "q121b served" -> Similarity.q121b(spark, dir))) {
+      val p = plan(df)
+      assert(p.contains("BroadcastHashJoin"), s"$name: ${p.take(500)}")
+      assert(!p.contains("CartesianProduct"), s"$name: ${p.take(1500)}")
+      assert(!p.contains("ScalaUDF") && !p.contains("lambdafunction"),
+        s"$name: interpreted code crept into the IVF-PQ path")
+    }
   }
 
   test("q93: seeds and stats broadcast; the corpus never shuffles for assignment") {
@@ -374,10 +381,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("IVF cell assignment is a native expression — no ScalaUDF in q39/q85 paths") {
-    // the corpus-wide assignment pass (q85) and the probe fan-out (q39)
-    // both build on vecexprs.nearestCells; a Scala UDF creeping back in
-    // would add per-row serialization and break whole-stage codegen on the
-    // one pass that touches every vector
+    // the corpus-wide assignment pass (q85), the probe fan-out (q39) and
+    // q123's serve off its streamed index all build on
+    // vecexprs.nearestCells; a Scala UDF creeping back in would add
+    // per-row serialization and break whole-stage codegen on the one pass
+    // that touches every vector
     import org.apache.spark.sql.functions._
     import graft.functions.{expressions => fe, vectors}
     val assign = Tables.embeddings(spark, dir)
@@ -388,7 +396,10 @@ class PlanSpec extends AnyFunSuite {
           Array(Array(1.0, 0.0), Array(0.0, 1.0)), 2)).as("cell"))
     val p39 = plan(Similarity.q39(spark, dir))
     val p39b = plan(Similarity.q39b(spark, dir))
-    for (p <- Seq(assign.queryExecution.optimizedPlan.toString, p39, p39b)) {
+    val p123 = plan(graft.streaming.StreamReplay.q123(spark, dir))
+    assert(p123.contains("BroadcastHashJoin"), p123.take(800))
+    for (p <- Seq(assign.queryExecution.optimizedPlan.toString, p39, p39b,
+        p123)) {
       assert(!p.contains("UDF("), p.take(800))
       assert(!p.contains("lambdafunction"), p.take(800))
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{FlatQuantizer, ImiQuantizer, Quantizers, Similarity}
+import graft.operators.{AnnIndex, FlatQuantizer, ImiQuantizer, Quantizers, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -213,84 +213,117 @@ class QuantizerSpec extends AnyFunSuite {
     assert(jobsOf(Quantizers.pqFitCodebooks(df, 4, 16)) === 1, "PQ fit")
   }
 
-  /** Reload equality (round-13 #1): a persisted model must reproduce the
-    * fitted original EXACTLY — same centroid doubles, and therefore
-    * bit-identical assignments / probe fan-outs / ADC rankings. This is
-    * the train-once/serve-many contract: two corpus snapshots deduped
-    * under one reloaded codebook have comparable verdicts, where per-job
-    * refits would move the cell boundaries. The q39b/q98b oracles already
-    * pin the downstream machinery; these tests pin the save/load seam.
+  /** Reload equality (round-13 #1): a persisted index must reproduce the
+    * original EXACTLY — same codebook doubles, same assignment rows, and
+    * therefore bit-identical probe output and ADC rankings. This is the
+    * train-once/serve-many contract: two corpus snapshots deduped under
+    * one reloaded codebook have comparable verdicts, where per-job refits
+    * would move the cell boundaries. The q39b/q98b oracles already pin the
+    * downstream machinery; these tests pin the AnnIndex save/load seam for
+    * the flat, IMI and IVF-PQ forms.
     */
+  private def reloaded(index: AnnIndex)(check: AnnIndex => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("annindex").toFile
+    try {
+      index.save(spark, tmp.toString)
+      check(AnnIndex.load(spark, tmp.toString))
+    } finally new scala.reflect.io.Directory(tmp).deleteRecursively()
+  }
+
+  /** (vec_id, cell) assignment rows, and the (probe_id, vec_id, cell)
+    * candidate rows [[AnnIndex.probe]] returns for `base`'s fixed probes.
+    */
+  private def served(index: AnnIndex, base: DataFrame) = {
+    val probes = base.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("probe_id"), col("v").as("pv"))
+    (index.cells.get.select(col("vec_id"), col("cell"))
+        .orderBy(col("vec_id"), col("cell")).collect().toSeq,
+      index.probe(probes).select(col("probe_id"), col("vec_id"), col("cell"))
+        .orderBy(col("probe_id"), col("vec_id")).collect().toSeq)
+  }
+
   test("ModelStore round-trips a fitted flat quantizer: centroids and assignments bit-identical") {
     import graft.functions.vectors
-    val tmp = java.nio.file.Files.createTempDirectory("modelstore").toString
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
-      .filter(col("v").isNotNull)
-    val fitted = Quantizers.quantizerFor(emb, Similarity.IvfCells)
-    graft.sources.ModelStore.saveQuantizer(spark, fitted, s"$tmp/coarse")
-    val loaded = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
-    assert(loaded.isInstanceOf[FlatQuantizer])
-    assert(loaded.asInstanceOf[FlatQuantizer].centroids.map(_.toSeq).toSeq ===
-      fitted.asInstanceOf[FlatQuantizer].centroids.map(_.toSeq).toSeq,
-      "centroids drifted through the store")
-    val both = emb.select(fitted.assign(col("v")).as("a"),
-      loaded.assign(col("v")).as("b"),
-      fitted.probeCells(col("v"), Similarity.IvfProbes).as("pa"),
-      loaded.probeCells(col("v"), Similarity.IvfProbes).as("pb")).collect()
-    both.foreach { r =>
-      assert(r.getInt(0) === r.getInt(1), "assignment drift after reload")
-      assert(r.getSeq[Int](2) === r.getSeq[Int](3), "probe drift after reload")
-    }
-  }
-
-  test("ModelStore round-trips an IMI quantizer: both codebooks and assignments bit-identical") {
-    val tmp = java.nio.file.Files.createTempDirectory("modelstore").toString
-    val df = synthetic(1000).localCheckpoint()
-    val (cbA, cbB) = Quantizers.fitImiCodebooks(df, Quantizers.FlatCellCap + 1)
-    val fitted = ImiQuantizer(cbA, cbB)
-    graft.sources.ModelStore.saveQuantizer(spark, fitted, s"$tmp/coarse")
-    val loaded = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
-    assert(loaded.isInstanceOf[ImiQuantizer])
-    val l = loaded.asInstanceOf[ImiQuantizer]
-    assert(l.cbA.map(_.toSeq).toSeq === cbA.map(_.toSeq).toSeq, "cbA drift")
-    assert(l.cbB.map(_.toSeq).toSeq === cbB.map(_.toSeq).toSeq, "cbB drift")
-    assert(l.nCells === fitted.nCells)
-    val both = df.select(fitted.assign(col("v")).as("a"),
-      loaded.assign(col("v")).as("b")).collect()
-    both.foreach(r => assert(r.getInt(0) === r.getInt(1),
-      "IMI assignment drift after reload"))
-  }
-
-  /** The round-14 seam one level below the codebooks: the ENCODED corpus
-    * (vec_id, cell, c0..cM-1) through ModelStore.saveIndex/loadIndex must
-    * reproduce (a) the encoded rows exactly — codes are small exact ints,
-    * so parquet is bit-lossless — and (b) the served search: ivfPqServe
-    * off the LOADED index ≡ the one-shot ivfPqTopK that encodes inline.
-    * This is what lets a deployment pay the fit+encode wall once (q121's
-    * oracle hashes the same claim against DuckDB).
-    */
-  test("ModelStore round-trips an encoded IVF-PQ index: rows and served search bit-identical") {
-    import graft.functions.vectors
-    val tmp = java.nio.file.Files.createTempDirectory("modelstore-idx").toString
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
       .localCheckpoint()
-    val quant = Quantizers.quantizerFor(emb, Similarity.IvfCells)
-    val cbs = Quantizers.pqFitCodebooks(
-      emb, Similarity.PqSubspaces, Similarity.PqCodewords)
-    val encoded = Similarity.ivfPqEncode(emb, quant, cbs).localCheckpoint()
-    graft.sources.ModelStore.saveIndex(encoded, s"$tmp/index")
-    val loaded = graft.sources.ModelStore.loadIndex(spark, s"$tmp/index")
-    assert(loaded.columns.sorted.toSeq === encoded.columns.sorted.toSeq)
-    val wantRows = encoded.orderBy(col("vec_id")).collect().toSeq
-    val gotRows = loaded.select(encoded.columns.map(col).toIndexedSeq: _*)
-      .orderBy(col("vec_id")).collect().toSeq
-    assert(gotRows === wantRows, "encoded rows drifted through the store")
-    val want = Similarity.ivfPqTopK(emb, quant, cbs).collect().toSeq
-    val got = Similarity.ivfPqServe(loaded, emb, quant, cbs).collect().toSeq
-    assert(got === want, "served search drifted off the loaded index")
+    val fitted = AnnIndex.fitted(emb, emb.count()).get.assign(emb)
+    reloaded(fitted) { loaded =>
+      assert(loaded.quant.isInstanceOf[FlatQuantizer] && loaded.pq.isEmpty)
+      assert(loaded.quant.asInstanceOf[FlatQuantizer].centroids.map(_.toSeq).toSeq ===
+        fitted.quant.asInstanceOf[FlatQuantizer].centroids.map(_.toSeq).toSeq,
+        "centroids drifted through the store")
+      val both = emb.select(fitted.quant.assign(col("v")).as("a"),
+        loaded.quant.assign(col("v")).as("b"),
+        fitted.quant.probeCells(col("v"), Similarity.IvfProbes).as("pa"),
+        loaded.quant.probeCells(col("v"), Similarity.IvfProbes).as("pb")).collect()
+      both.foreach { r =>
+        assert(r.getInt(0) === r.getInt(1), "assignment drift after reload")
+        assert(r.getSeq[Int](2) === r.getSeq[Int](3), "probe drift after reload")
+    }
+    val (wantCells, wantProbe) = served(fitted, emb)
+    val (gotCells, gotProbe) = served(loaded, emb)
+    assert(wantProbe.nonEmpty, "the probes found no cell-mates")
+    assert(gotCells === wantCells, "assignment rows drifted through the store")
+    assert(gotProbe === wantProbe, "probe output drifted after reload")
+    }
+  }
+
+  test("ModelStore round-trips an IMI quantizer: both codebooks and assignments bit-identical") {
+    val df = synthetic(1000).localCheckpoint()
+    val (cbA, cbB) = Quantizers.fitImiCodebooks(df, Quantizers.FlatCellCap + 1)
+    val fitted = AnnIndex(ImiQuantizer(cbA, cbB)).assign(df)
+    reloaded(fitted) { loaded =>
+      assert(loaded.quant.isInstanceOf[ImiQuantizer])
+      val l = loaded.quant.asInstanceOf[ImiQuantizer]
+      assert(l.cbA.map(_.toSeq).toSeq === cbA.map(_.toSeq).toSeq, "cbA drift")
+      assert(l.cbB.map(_.toSeq).toSeq === cbB.map(_.toSeq).toSeq, "cbB drift")
+      assert(l.nCells === fitted.quant.nCells)
+      val both = df.select(fitted.quant.assign(col("v")).as("a"),
+        loaded.quant.assign(col("v")).as("b")).collect()
+      both.foreach(r => assert(r.getInt(0) === r.getInt(1),
+        "IMI assignment drift after reload"))
+      val (wantCells, wantProbe) = served(fitted, df)
+      val (gotCells, gotProbe) = served(loaded, df)
+      assert(wantProbe.nonEmpty, "the probes found no cell-mates")
+      assert(gotCells === wantCells, "IMI assignment rows drifted through the store")
+      assert(gotProbe === wantProbe, "IMI probe output drifted after reload")
+    }
+  }
+
+  /** The round-14 seam one level below the codebooks: the ENCODED corpus
+    * (vec_id, cell, c0..cM-1) through AnnIndex.save/load must reproduce
+    * (a) the PQ codebooks and the encoded rows exactly — codes are small
+    * exact ints, so parquet is bit-lossless — and (b) the served search:
+    * search off the LOADED index ≡ search off the in-memory encode. This
+    * is what lets a deployment pay the fit+encode wall once (q121's oracle
+    * hashes the same claim against DuckDB).
+    */
+  test("ModelStore round-trips an encoded IVF-PQ index: rows and served search bit-identical") {
+    import graft.functions.vectors
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
+      .filter(col("v").isNotNull)
+      .localCheckpoint()
+    val fitted = AnnIndex.fitted(emb, emb.count(), pq = true).get
+    val encoded = fitted.copy(cells = fitted.assign(emb).cells.map(_.localCheckpoint()))
+    reloaded(encoded) { loaded =>
+      assert(loaded.pq.get.map(_.map(_.toSeq).toSeq).toSeq ===
+        fitted.pq.get.map(_.map(_.toSeq).toSeq).toSeq, "PQ codebooks drifted")
+      assert(loaded.cells.get.columns.toSeq === encoded.cells.get.columns.toSeq)
+      val wantRows = encoded.cells.get.orderBy(col("vec_id")).collect().toSeq
+      val gotRows = loaded.cells.get.orderBy(col("vec_id")).collect().toSeq
+      assert(gotRows === wantRows, "encoded rows drifted through the store")
+      val (_, wantProbe) = served(encoded, emb)
+      val (_, gotProbe) = served(loaded, emb)
+      assert(wantProbe.nonEmpty, "the probes found no cell-mates")
+      assert(gotProbe === wantProbe, "probe output drifted after reload")
+      val want = encoded.search(emb).collect().toSeq
+      val got = loaded.search(emb).collect().toSeq
+      assert(want.nonEmpty)
+      assert(got === want, "served search drifted off the loaded index")
+    }
   }
 
   test("semantic dedup through a forced IMI quantizer resolves the planted clique identically") {
@@ -365,7 +398,7 @@ class QuantizerSpec extends AnyFunSuite {
   /** The q111 retrain step through an IMI quantizer: each half refreshes
     * via the shared codebookRefresh core, per-half SSE never increases
     * (the Lloyd contract, half-space form), and the refreshed model
-    * survives the ModelStore seam bit-identically — so the
+    * survives the AnnIndex save/load seam bit-identically — so the
     * monitor→refresh→persist loop also covers the tier past the flat
     * plan-literal ceiling.
     */
@@ -388,9 +421,8 @@ class QuantizerSpec extends AnyFunSuite {
     assert(sse(after.cbB, split, split + cbB.head.length) <=
       sse(cbB, split, split + cbB.head.length) + 1e-2, "B-half SSE rose")
     val tmp = java.nio.file.Files.createTempDirectory("graft-imiref").toString
-    graft.sources.ModelStore.saveQuantizer(spark, after, s"$tmp/coarse")
-    val loaded = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
-      .asInstanceOf[ImiQuantizer]
+    AnnIndex(after).save(spark, tmp)
+    val loaded = AnnIndex.load(spark, tmp).quant.asInstanceOf[ImiQuantizer]
     assert(loaded.cbA.zip(after.cbA).forall { case (a, b) => a.sameElements(b) })
     assert(loaded.cbB.zip(after.cbB).forall { case (a, b) => a.sameElements(b) })
     new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()

@@ -239,7 +239,7 @@ class SimilaritySpec extends AnyFunSuite {
     *
     * The floor is the HONEST one (VERDICT r11 #3): the pipeline is fully
     * deterministic (hash-keyed fit sample, driver-side Lloyd fit in
-    * sample order), and measured recall under ivfProbesFor's √cells
+    * sample order), and measured recall under AnnIndex's √cells
     * fan-out is 0.754 here (sf0.001), 0.692 at sf0.01, 0.532 at sf0.1 —
     * scale-stable where the old fixed 4-probe fan-out decayed (0.477 →
     * 0.368). 0.6 fails on any quiet cell-assignment or fan-out
@@ -544,8 +544,7 @@ class SimilaritySpec extends AnyFunSuite {
     val base = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    val quant = graft.operators.Quantizers.quantizerFor(
-      base, Similarity.ivfCellsFor(base.count()))
+    val quant = graft.operators.AnnIndex.fitted(base, base.count()).get.quant
     val cents = quant match {
       case graft.operators.FlatQuantizer(c) => c
       case other => fail(s"fixture-scale quantizer should be flat: $other")
@@ -877,9 +876,9 @@ class SimilaritySpec extends AnyFunSuite {
     assert(after <= before + 1e-2, s"SSE rose: $before -> $after")
     // round trip: the refreshed artifact reloads bit-identically
     val tmp = java.nio.file.Files.createTempDirectory("graft-q111").toString
-    graft.sources.ModelStore.saveQuantizer(spark,
-      graft.operators.FlatQuantizer(refreshed), s"$tmp/coarse")
-    val loaded = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
+    graft.operators.AnnIndex(graft.operators.FlatQuantizer(refreshed))
+      .save(spark, tmp)
+    val loaded = graft.operators.AnnIndex.load(spark, tmp).quant
       .asInstanceOf[graft.operators.FlatQuantizer].centroids
     assert(loaded.length === refreshed.length &&
       loaded.zip(refreshed).forall { case (a, b) => a.sameElements(b) })

@@ -148,16 +148,22 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  /** The queries that save an [[graft.operators.AnnIndex]] (q104's and the
+    * served codebook, q121's and q121b's encoded index) write it under the
+    * process's `graft-scratch-*` root, overwritten in place: no run leaves
+    * a new top-level entry in `java.io.tmpdir`.
+    */
   test("served-model queries write their codebook to scratch, not a fresh temp dir") {
+    spark.sparkContext // the session's own start-up dirs are not the queries'
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def modelDirs(): Set[String] =
-      Option(tmp.list()).getOrElse(Array.empty[String]).toSet.filter(n =>
-        n.startsWith("graft-q104-model") || n.startsWith("graft-serve-model"))
-    val before = modelDirs()
-    for (q <- Seq("q104", "q106"); _ <- 1 to 2)
+    def entries(): Set[String] =
+      Option(tmp.list()).getOrElse(Array.empty[String]).toSet
+        .filterNot(_.startsWith("graft-scratch-"))
+    val before = entries()
+    for (q <- Seq("q104", "q106", "q121", "q121b"); _ <- 1 to 2)
       Registry.all.find(_.name.startsWith(q + "_")).get
         .build(spark, dir).count()
-    assert(modelDirs() -- before == Set.empty)
+    assert(entries() -- before == Set.empty)
   }
 
   test("streaming parquet sink restarts from checkpoint exactly once") {

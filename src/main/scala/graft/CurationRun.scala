@@ -7,7 +7,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, Dedup, FlatQuantizer, ImiQuantizer, Pipeline, Similarity}
+import graft.operators.{AnnIndex, Dedup, FlatQuantizer, ImiQuantizer, Materialize,
+  Pipeline, Similarity}
 import graft.sources.{Artifacts, PartitionedParquet}
 
 /** The tunable operating points of a curation run — every knife threshold
@@ -75,15 +76,7 @@ final case class CurationParams(
     // selection step). A gate, not a layout: dropped docs leave
     // corpus/shards and fate at the prior stage; the per-doc selection
     // table persists under verdicts/token_budget
-    tokenBudgetPct: Option[Long] = None,
-    // round-15: serve q78's batch-vs-corpus verdict as a RUN MODE — a new
-    // snapshot's ARRIVALS (ids the prior run has no fate for) are
-    // verdicted against the prior run's persisted dedup-index artifacts
-    // (index/dedup/{exact,shingles,bands}) instead of re-deduping — or
-    // even rescanning — the corpus. Dispatches to [[CurationRun
-    // .incremental]]; mutually exclusive with the model/drift flags
-    // (those describe full runs).
-    incremental: Option[String] = None)
+    tokenBudgetPct: Option[Long] = None)
 
 /** The end-to-end curation RUN: every stage of the shipped curation family,
   * chained as ONE artifact-writing job (reference: the pipeline a
@@ -143,7 +136,7 @@ final case class CurationParams(
   * on plain unversioned directories).
   *
   * Shape for 100 TB: per-stage costs are the member operators' own (each
-  * documented at its definition); the chain adds only (a) localCheckpoints
+  * documented at its definition); the chain adds only (a) checkpoints
   * at frames consumed by 2+ downstream branches (stat + next stage — q78's
   * between-stages lesson: re-reading materialized partitions beats
   * re-executing a gram-explode or CC lineage per branch), and (b) id-only
@@ -181,7 +174,7 @@ object CurationRun {
 
   /** Stage-wall timer for the scale audits (SCALE.md's CurationRun table):
     * every stage boundary in [[run]] is an EAGER materialization
-    * (localCheckpoint / sink write), so wrapping the block bounds that
+    * ([[operators.Materialize]] / sink write), so wrapping the block bounds that
     * stage's wall. Branch stages overlap the chain, so walls no longer sum
     * to the run: each line also carries the stage's start offset from the
     * timer's creation (the run's start). stderr-only observability — no
@@ -283,8 +276,6 @@ object CurationRun {
       "--refresh-models takes a Lloyd step on the prior codebook; it " +
         "cannot combine with --reuse-models/--reuse-index (which pin the " +
         "codebook verbatim)")
-    require(params.incremental.isEmpty,
-      "--incremental dispatches to CurationRun.incremental, not run()")
     require(params.tokenBudgetPct.forall(p => p >= 1 && p <= 100),
       s"--token-budget-pct must be in [1, 100], got " +
         s"${params.tokenBudgetPct.getOrElse(-1L)}")
@@ -307,23 +298,23 @@ object CurationRun {
       val scanned = timed("scan") {
         Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          .localCheckpoint()
+          .transform(Materialize(_))
       }
       // opt-in q114 transform: markup out of every payload before any gate
       // reads it (per-row codegen chain; no doc dropped, so no manifest row)
       val stripped =
         if (!params.stripMarkup) scanned
         else timed("markup_strip") {
-          scanned.withColumn("text",
-            graft.functions.text.stripMarkup(col("text"))).localCheckpoint()
+          Materialize(scanned.withColumn("text",
+            graft.functions.text.stripMarkup(col("text"))))
         }
       // opt-in q112 gate: the published Gopher battery ahead of the funnel;
       // the funnel's "raw" row then counts gated survivors
       val docs =
         if (!params.gopherGate) stripped
         else timed("gopher_gate") {
-          stripped.filter(
-            operators.TextAnalysis.gopherVerdict(col("text"))).localCheckpoint()
+          Materialize(stripped.filter(
+            operators.TextAnalysis.gopherVerdict(col("text"))))
         }
       // branch: the dedup index and the scores read only the scan, never a
       // chain frame, so one branch thread writes them under the funnel.
@@ -339,7 +330,7 @@ object CurationRun {
           val keyed = docs.select(col("doc_id"), col("text"))
           Dedup.exactKeyIndex(keyed)
             .write.mode("overwrite").parquet(s"$art/index/dedup/exact")
-          val sh = Dedup.nearDupShingles(keyed).localCheckpoint()
+          val sh = Materialize(Dedup.nearDupShingles(keyed))
           sh.write.mode("overwrite").parquet(s"$art/index/dedup/shingles")
           Dedup.nearDupBandIndex(sh)
             .write.mode("overwrite").parquet(s"$art/index/dedup/bands")
@@ -380,7 +371,7 @@ object CurationRun {
       }
       // decontaminated survivors: stat + line-dedup input (gram-join lineage
       // behind it — materialize, q78 precedent)
-      val dec = timed("decon_ckpt") { funnel.last._2.localCheckpoint() }
+      val dec = timed("decon_ckpt") { Materialize(funnel.last._2) }
 
       // stage 6: semantic dedup (q85, the SemDeDup step) over survivors that
       // CARRY embeddings — text dedup cannot see a paraphrased copy, the
@@ -401,7 +392,7 @@ object CurationRun {
           .select(col("vec_id").as("doc_id"),
             graft.functions.vectors.toDouble(col("embedding")).as("v"))
           .filter(col("v").isNotNull)
-        val (subject, n) = Similarity.ckptWithCount(
+        val (subject, n) = Materialize.observed(
           dec.select(col("doc_id")).join(emb, Seq("doc_id"))
             .select(col("doc_id").as("vec_id"), col("v")))
         if (n == 0) dec // nothing clusterable: the stage judges no one
@@ -457,7 +448,7 @@ object CurationRun {
               verdict.filter(!col("is_kept"))
                 .select(col("vec_id").as("doc_id")),
               Seq("doc_id"), "left_anti")
-            .localCheckpoint()
+            .transform(Materialize(_))
         }
       }
 
@@ -474,7 +465,7 @@ object CurationRun {
           .filter(col("n_kept") > 0)
           .select(col("doc_id"), col("cleaned").as("text"))
           .withColumn("n_tokens", graft.functions.text.tokenCount(col("text")))
-          .localCheckpoint()
+          .transform(Materialize(_))
       }
 
       // stage 8: cut corpus-duplicated 8-token spans (q84); span-only docs
@@ -484,7 +475,7 @@ object CurationRun {
         Dedup.spanCutUnsorted(lined.select(col("doc_id"), col("text")))
           .select(col("doc_id"), col("cleaned").as("text"),
             (col("n_tokens") - col("n_cut")).as("n_tokens"))
-          .localCheckpoint()
+          .transform(Materialize(_))
           // filtered above the checkpoint: below it, the optimizer pushes
           // the filter under the cut's projection, inlining the per-token
           // cut, so every row would be tokenized and cut twice
@@ -494,21 +485,21 @@ object CurationRun {
       // stage 9: per-source cap (q89's salted two-phase rank — the verdict
       // frame is the artifact; the survivor frame is an id-only semi join)
       val (capVerdict, capped) = timed("source_cap") {
-        val v = Pipeline.sourceCapUnsorted(
+        val v = Materialize(Pipeline.sourceCapUnsorted(
           cut.join(docs.select(col("doc_id"), col("source")), Seq("doc_id")),
-          params.sourceCap).localCheckpoint()
-        (v, cut.join(v.select(col("doc_id")), Seq("doc_id")).localCheckpoint())
+          params.sourceCap))
+        (v, Materialize(cut.join(v.select(col("doc_id")), Seq("doc_id"))))
       }
 
       // stage 10: language-mixture sampling (q75) — verdict keeps the losers
       // (audit trail); the corpus keeps the winners
       val (sampleVerdict, sampled) = timed("sampled") {
-        val v = Pipeline.mixtureSampleUnsorted(
+        val v = Materialize(Pipeline.mixtureSampleUnsorted(
           capped.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-            .select(col("doc_id"), col("lang"), col("text"))).localCheckpoint()
+            .select(col("doc_id"), col("lang"), col("text"))))
         (v, capped
           .join(v.filter(col("kept")).select(col("doc_id")), Seq("doc_id"))
-          .localCheckpoint())
+          .transform(Materialize(_)))
       }
 
       // stage 10.5 (opt-in): q135's token-budget selection over the sampled
@@ -519,11 +510,11 @@ object CurationRun {
       val (budgetVerdict, selected) = params.tokenBudgetPct match {
         case None => (None, sampled)
         case Some(pct) => timed("token_budget") {
-          val v = Pipeline.tokenBudgetSelect(
-            sampled.select(col("doc_id"), col("text")), pct).localCheckpoint()
+          val v = Materialize(Pipeline.tokenBudgetSelect(
+            sampled.select(col("doc_id"), col("text")), pct))
           (Some(v),
             sampled.join(v.select(col("doc_id")), Seq("doc_id"))
-              .localCheckpoint())
+              .transform(Materialize(_)))
         }
       }
 
@@ -770,7 +761,7 @@ object CurationRun {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"))
         .join(seen, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+        .transform(Materialize(_))
     }
     val arrivals = {
       val stripped =
@@ -781,15 +772,15 @@ object CurationRun {
         if (!params.gopherGate) stripped
         else stripped.filter(
           operators.TextAnalysis.gopherVerdict(col("text")))
-      if (gated eq arrived) arrived else gated.localCheckpoint()
+      if (gated eq arrived) arrived else Materialize(gated)
     }
     val exact = spark.read.parquet(s"$priorRoot/index/dedup/exact")
     val shingles = spark.read.parquet(s"$priorRoot/index/dedup/shingles")
     val bands = spark.read.parquet(s"$priorRoot/index/dedup/bands")
     val verdict = timed("verdict") {
-      Dedup.incrementalDedupIndexed(exact, shingles, bands,
+      Materialize(Dedup.incrementalDedupIndexed(exact, shingles, bands,
         arrivals.select(col("doc_id"), col("text")),
-        params.nearDupJaccard).localCheckpoint()
+        params.nearDupJaccard))
     }
     verdict.write.mode("overwrite").parquet(s"$art/verdicts/incremental")
     timed("index_merge") {
@@ -806,7 +797,7 @@ object CurationRun {
       exact.unionByName(Dedup.exactKeyIndex(arrivalsKeyed))
         .groupBy(col("h")).agg(min(col("ex_id")).as("ex_id"))
         .write.mode("overwrite").parquet(s"$art/index/dedup/exact")
-      val arrSh = Dedup.nearDupShingles(arrivalsKeyed).localCheckpoint()
+      val arrSh = Materialize(Dedup.nearDupShingles(arrivalsKeyed))
       shingles.unionByName(arrSh)
         .write.mode("overwrite").parquet(s"$art/index/dedup/shingles")
       bands.unionByName(Dedup.nearDupBandIndex(arrSh))
@@ -856,7 +847,6 @@ object CurationRun {
         p.copy(writeScores = v.toBoolean)
       case (p, Seq("--token-budget-pct", v)) =>
         p.copy(tokenBudgetPct = Some(v.toLong))
-      case (p, Seq("--incremental", v)) => p.copy(incremental = Some(v))
       case (_, other) =>
         throw new IllegalArgumentException(
           s"unknown flag ${other.headOption.getOrElse("")}")
@@ -872,13 +862,18 @@ object CurationRun {
         "[--prev-run priorOutDir] [--strip-markup B] [--gopher-gate B] " +
         "[--quality-keeper B] [--pack-sequences B] [--write-scores B] " +
         "[--token-budget-pct N] [--incremental priorOutDir]")
-    val params = parseParams(args.drop(2).toSeq)
+    // `--incremental <priorOutDir>` is not an operating point but the run
+    // mode: q78's batch-vs-corpus verdict served for a new snapshot's
+    // arrivals off the prior run's persisted dedup index ([[incremental]])
+    val (incr, flags) = args.drop(2).toSeq.grouped(2).toSeq
+      .partition(_.head == "--incremental")
+    require(incr.forall(_.length == 2), "dangling flag: --incremental")
+    val params = parseParams(flags.flatten)
     val spark = Sessions.local("graft-curation-run")
     val t0 = System.nanoTime()
-    params.incremental match {
+    incr.lastOption.map(_(1)) match {
       case Some(prior) =>
-        val verdict = incremental(spark, args(0), args(1), prior,
-          params.copy(incremental = None))
+        val verdict = incremental(spark, args(0), args(1), prior, params)
         verdict.groupBy(col("reason")).count()
           .orderBy(col("reason")).collect()
           .foreach(r => println(

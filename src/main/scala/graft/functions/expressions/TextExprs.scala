@@ -26,19 +26,12 @@ object textnative {
   def wordNgrams(text: Column, n: Int): Column =
     ColumnBridge.column(WordNgramsExpr(ColumnBridge.expression(text), n))
 
-  /** One BPE merge step (adjacent lhs,rhs → lhs+rhs, greedy left-to-right)
-    * over a symbol-array column — see [[BpeMergeStepExpr]].
-    */
-  def bpeMergeStep(syms: Column, lhs: String, rhs: String): Column =
-    ColumnBridge.column(
-      BpeMergeStepExpr(ColumnBridge.expression(syms), lhs, rhs))
-
   /** An ordered CHAIN of BPE merge steps in one expression — semantically
-    * identical to folding [[bpeMergeStep]] left-to-right over `merges`
-    * (asserted in TextAnalysisSpec), but the merge table rides the plan as
-    * ONE reference object instead of k nested expression nodes, so every
-    * learner round and every consumer query generates the SAME whole-stage
-    * source. See [[BpeMergeAllExpr]] for why that matters (codegen-cache
+    * identical to folding [[BpeMergeStepExpr.compute]] left-to-right over
+    * `merges` (asserted in TextAnalysisSpec), but the merge table rides the
+    * plan as ONE reference object instead of k nested expression nodes, so
+    * every learner round and every consumer query generates the SAME
+    * whole-stage source. See [[BpeMergeAllExpr]] for why that matters (codegen-cache
     * identity; measured 27 janino recompiles per warm q135b run without it).
     */
   def bpeMergeAll(syms: Column, merges: Seq[(String, String)]): Column =
@@ -126,62 +119,12 @@ object WordNgramsExpr {
   }
 }
 
-/** One BPE merge step over a symbol sequence: every adjacent (lhs, rhs)
-  * occurrence is replaced by their concatenation in ONE left-to-right
-  * greedy pass — the published byte-pair-encoding application rule
-  * (Sennrich et al. 2016; also how the reference-grade tokenizer
-  * libraries apply a learned merge). Greedy-left is equivalent to
-  * "repeatedly merge the leftmost occurrence until none remain": a merge
-  * output `lhs+rhs` can never itself equal `lhs` or `rhs` (both
-  * non-empty), so merging never creates a new occurrence to the left of
-  * the scan point.
-  *
-  * Codegen'd via a static one-pass compute over the array — the merge
-  * learning loop chains one of these per learned step over the
-  * vocabulary table (words × symbols, never the corpus), so it must not
-  * knock the projection out of whole-stage codegen the way an
-  * ArrayTransform lambda would.
-  */
-case class BpeMergeStepExpr(child: Expression, lhs: String, rhs: String)
-    extends UnaryExpression {
-  require(lhs.nonEmpty && rhs.nonEmpty, "BPE merge symbols must be non-empty")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_merge_step needs array<string>, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BpeMergeStepExpr.compute(input.asInstanceOf[ArrayData],
-      org.apache.spark.unsafe.types.UTF8String.fromString(lhs),
-      org.apache.spark.unsafe.types.UTF8String.fromString(rhs))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("bpeLhs",
-      org.apache.spark.unsafe.types.UTF8String.fromString(lhs))
-    val rRef = ctx.addReferenceObj("bpeRhs",
-      org.apache.spark.unsafe.types.UTF8String.fromString(rhs))
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.BpeMergeStepExpr" +
-        s".compute($c, $lRef, $rRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMergeStepExpr =
-    copy(child = newChild)
-}
-
 /** An ordered chain of BPE merge steps applied in ONE expression node.
   *
   * Each merge is applied as its own complete greedy left-to-right pass —
   * pass m runs [[BpeMergeStepExpr.compute]]'s exact algorithm over the
-  * output of pass m-1 — so the result is bit-identical to stacking k
-  * [[BpeMergeStepExpr]] projections (property-asserted in
-  * TextAnalysisSpec).
+  * output of pass m-1 — so the result is bit-identical to folding k
+  * single-merge steps (property-asserted in TextAnalysisSpec).
   *
   * Why it exists (r19, measured): the learners re-plan their pair-count
   * aggregation once per round over a vocab lineage carrying one MORE
@@ -275,6 +218,19 @@ object BpeMergeAllExpr {
   }
 }
 
+/** One BPE merge step over a symbol sequence: every adjacent (lhs, rhs)
+  * occurrence is replaced by their concatenation in ONE left-to-right
+  * greedy pass — the published byte-pair-encoding application rule
+  * (Sennrich et al. 2016; also how the reference-grade tokenizer
+  * libraries apply a learned merge). Greedy-left is equivalent to
+  * "repeatedly merge the leftmost occurrence until none remain": a merge
+  * output `lhs+rhs` can never itself equal `lhs` or `rhs` (both
+  * non-empty), so merging never creates a new occurrence to the left of
+  * the scan point.
+  *
+  * The engine applies merges only through [[BpeMergeAllExpr]]; this
+  * one-step form is the reference TextAnalysisSpec checks it against.
+  */
 object BpeMergeStepExpr {
   import org.apache.spark.unsafe.types.UTF8String
 

@@ -234,7 +234,7 @@ object Dedup {
     * post-round-1 state, so a graph needs one fewer loop round than under
     * the pre-r18 convention — `maxRounds` bounds the loop rounds, and
     * DedupSpec pins a diameter-32 path at `maxRounds = 9`).
-    * `localCheckpoint` truncates the lineage so
+    * [[Materialize]] truncates the lineage so
     * round N's plan doesn't replay rounds 1..N-1. The only driver-side
     * value per round is one scalar (the label sum, which strictly decreases
     * until the fixpoint — the convergence test needs no row-level diff
@@ -254,7 +254,7 @@ object Dedup {
       driverEdges: Long = DriverFinishEdges): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    val (edges0, nEdges) = Similarity.ckptWithCount(pairs
+    val (edges0, nEdges) = Materialize.observed(pairs
       .select(col("a_id").as("s"), col("b_id").as("d"))
       .union(pairs.select(col("b_id").as("s"), col("a_id").as("d"))))
     val labels =
@@ -287,12 +287,7 @@ object Dedup {
     // algorithm's job COUNT is the wall here, not data volume). The label
     // math is untouched; DedupSpec's exactness + union-find cross-checks
     // pin it.
-    def withSum(df: DataFrame): (DataFrame, () => Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, coalesce(sum(col("lab")), lit(0L)).as("s"))
-        .localCheckpoint()
-      (ck, () => obs.get("s").asInstanceOf[Number].longValue)
-    }
+    def labSum: Column = coalesce(sum(col("lab")), lit(0L)).as("s")
     // Init = the post-round-1 state computed directly (r18): with identity
     // labels, round 1's neighbor-min is min(v, min incoming source) and
     // its pointer jump contributes only identity rows — so labels can
@@ -304,12 +299,12 @@ object Dedup {
     // contraction is a per-round optimization, not a correctness input,
     // so the fixpoint is unchanged; exactness + contraction-soundness +
     // union-find cross-check specs in DedupSpec pin this).
-    val (labels0, sum0) = withSum(
+    val (labels0, labSum0) = Materialize.observed(
       edges.select(col("s").as("v"), col("s").as("lab"))
         .union(edges.select(col("d").as("v"), col("s").as("lab")))
-        .groupBy(col("v")).agg(min(col("lab")).as("lab")))
+        .groupBy(col("v")).agg(min(col("lab")).as("lab")), labSum)
     var labels = labels0
-    var cur = sum0()
+    var cur = labSum0
     var done = false
     var round = 0
     while (!done && round < maxRounds) {
@@ -325,10 +320,9 @@ object Dedup {
         .join(labels.select(col("v").as("ptr2"), col("lab")),
           col("ptr") === col("ptr2"))
         .select(col("v"), col("lab"))
-      val (next, nextSumF) = withSum(
+      val (next, nextSum) = Materialize.observed(
         labels.union(neigh).union(jump)
-          .groupBy(col("v")).agg(min(col("lab")).as("lab")))
-      val nextSum = nextSumF()
+          .groupBy(col("v")).agg(min(col("lab")).as("lab")), labSum)
       done = nextSum == cur
       cur = nextSum
       labels = next
@@ -365,7 +359,7 @@ object Dedup {
         .join(next.select(col("v").as("d"), col("lab").as("ld")), Seq("d"))
         .filter(col("ls") =!= col("ld"))
         .select(col("ls").as("s"), col("ld").as("d")).distinct()
-        .localCheckpoint()
+        .transform(Materialize(_))
       round += 1
     }
     require(done, s"connectedComponents did not converge in $maxRounds rounds")
@@ -567,7 +561,7 @@ object Dedup {
     * visible plan to a scan+sort, exactly like q88's staged frames).
     */
   private def sortedCut(cut: DataFrame): DataFrame =
-    cut.localCheckpoint().orderBy(col("doc_id"))
+    Materialize(cut).orderBy(col("doc_id"))
 
   /** Shared cut tail of q84/q86: given (doc_id, text) rows and per-doc
     * sorted flagged window starts, remove every covered token position
@@ -700,9 +694,9 @@ object Dedup {
     // corpus scan+md5 through lineage (same fix measured on q78)
     val keyed = docs.select(col("doc_id"),
       md5(col("text").cast("binary")).as("h"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val keepers = keyed.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val doc2keeper = keyed.join(keepers, Seq("h"))
       .select(col("doc_id"), col("keeper"))
     // near-dup runs on the exact survivors only: exact copies of a keeper
@@ -758,7 +752,7 @@ object Dedup {
       TextAnalysis.classifierScoresUnsorted(docs)
         .select(col("doc_id"), col("mean_e6")),
       Seq("doc_id"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     // keeper = argmax (mean_e6, -doc_id): a map-side-combined min(struct),
     // never a cluster-partitioned window
     val best = scored.groupBy(col("rep_id"))
@@ -819,7 +813,7 @@ object Dedup {
     // re-running the corpus scan through its own lineage)
     val sh = nearDupShingles(existing.select(col("doc_id"), col("text")))
     incrementalDedupIndexed(
-      exactKeyIndex(existing).localCheckpoint(),
+      Materialize(exactKeyIndex(existing)),
       sh, nearDupBandIndex(sh), batch, threshold)
   }
 
@@ -856,18 +850,18 @@ object Dedup {
     // without materialization each re-executes scan+md5 through lineage
     val bk = batch.select(col("doc_id"), col("text"),
       md5(col("text").cast("binary")).as("h"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     // 1. exact vs corpus
     val m1 = bk.join(exKeys, Seq("h"))
       .select(col("doc_id"), col("ex_id").as("matched_id"),
         lit("exact_corpus").as("reason"))
-    val r1 = bk.join(exKeys, Seq("h"), "left_anti").localCheckpoint()
+    val r1 = Materialize(bk.join(exKeys, Seq("h"), "left_anti"))
     // 2. near vs corpus (batch side drives; min matching corpus id):
     // batch shingles/bands computed live, corpus side read from the index.
     // aSh feeds the band join AND the Jaccard verify — batch-sized, so the
     // checkpoint is cheap insurance against re-shingling
     val aSh = shingledDocs(r1.select(col("doc_id"), col("text")))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val candidates = bandedKeys(aSh)
       .select(col("band_key"), col("doc_id").as("a_id"))
       .join(corpusBands.select(col("band_key"), col("doc_id").as("b_id")),
@@ -879,7 +873,7 @@ object Dedup {
       .agg(min(col("b_id")).as("matched_id"))
       .select(col("doc_id"), col("matched_id"), lit("near_corpus").as("reason"))
     val r2 = r1.join(m2.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Materialize(_))
     // 3. exact within the batch remainder
     val bKeep = r2.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
     val m3 = r2.join(bKeep, Seq("h"))
@@ -890,7 +884,7 @@ object Dedup {
     // (which shingles it twice more) — batch-sized, checkpoint
     val r3 = r2.join(bKeep, r2("doc_id") === bKeep("keeper"))
       .select(r2("doc_id"), r2("text"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     // 4. near-dup clusters within the batch keepers (q56's CC, min-id rep)
     val comp = connectedComponents(
       r3.select(col("doc_id").as("v")),
@@ -963,14 +957,14 @@ object Dedup {
     import spark.implicits._
     val sample = docs.filter(col("doc_id").isNotNull)
       .orderBy(col("doc_id")).limit(LshSweepSample)
-      .localCheckpoint()
+      .transform(Materialize(_))
     // distinct STRING 3-shingles — the md5-able twin of the production
     // xxhash64 shingles (q23's oracle-proven construction)
     val sh = sample.select(col("doc_id"),
         array_distinct(graft.functions.expressions.textnative
           .wordNgrams(col("text"), 3)).as("shs"))
       .filter(size(col("shs")) > 0)
-      .localCheckpoint()
+      .transform(Materialize(_))
     // 28-bit shingle keys + md5-derived (a_i, b_i) family — plan literals
     // on the engine side, a md5 CTE on the oracle side, identical values
     def h7(s: String): Long = java.lang.Long.parseLong(
@@ -1004,7 +998,7 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select(col("bands"), col("a_id"), col("b_id"))
       .distinct()
-      .localCheckpoint() // feeds the count AND the hit join
+      .transform(Materialize(_)) // feeds the count AND the hit join
     // exact ground truth WITHOUT a sample² nested loop: a pair can clear a
     // positive threshold only if it shares a gram, so intersections come
     // from a shared-gram equi-join (per-doc grams already distinct) and
@@ -1024,7 +1018,7 @@ object Dedup {
       .filter(col("c").cast("double") /
         (col("na") + col("nb") - col("c")) >= threshold)
       .select(col("a_id"), col("b_id"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val hits = cand.join(truth, Seq("a_id", "b_id"))
       .groupBy(col("bands")).agg(count(lit(1)).as("n_hit"))
     val cands = cand.groupBy(col("bands"))

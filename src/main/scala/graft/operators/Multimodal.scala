@@ -238,7 +238,7 @@ object Multimodal {
     *
     * Two scale rules, both measured:
     *
-    *  - the (id, fp) frame is localCheckpointed ONCE: downstream it is
+    *  - the (id, fp) frame is checkpointed ONCE: downstream it is
     *    read several times (class agg, join-back, presentation sort's
     *    range sampling), and uncached each execution re-ran the whole
     *    decode subtree — q143 was 14.95 s at sf0.1 on exactly this
@@ -255,7 +255,7 @@ object Multimodal {
     *    same number the id-level join produced, hash-identical output.
     */
   def neardupProfile(fp: DataFrame): DataFrame = {
-    val fpC = fp.localCheckpoint()
+    val fpC = Materialize(fp)
     // classes is NOT checkpointed: it is |distinct fp|-sized and one cheap
     // agg over the checkpointed fp blocks — a checkpoint here would add a
     // whole eager job to a sub-second frame (q143's sf0.1 wall is fixed
@@ -784,7 +784,7 @@ object Multimodal {
       // subtree — the ×19.1 sf1→sf10 decade blowup of r17's sweep
       // (SCALE_CHECK_sf10_r17 finding 3). Payload left the plan at
       // decode; what checkpoints is 5 longs per window.
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("media_id"), col("window_no"))
 
   /** q141's decode + windowed-feature pass over ANY (media_id, media) WAV

@@ -138,7 +138,7 @@ object Pipeline {
       .select(col("g"), col("m.doc_id").as("rep_id"), col("m.text").as("text"),
         when(substring(col("g"), 1, 1).isin("0", "1"), "heldout")
           .otherwise("train").as("split"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     // pairs feeds BOTH the CC edge set and the incident-node scan below —
     // unmaterialized, the banded LSH pair generation (shingle + band join +
     // Jaccard verify over rep texts) executed once per consumer (r18
@@ -146,7 +146,7 @@ object Pipeline {
     val pairs = Dedup.nearDupPairsUnsorted(
       reps.select(col("rep_id").as("doc_id"), col("text")), 0.8)
       .select(col("a_id"), col("b_id"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val labels = Dedup.connectedComponents(
       reps.select(col("rep_id").as("v")), pairs)
     val labeled = labels.join(
@@ -186,7 +186,7 @@ object Pipeline {
     * Shape for 100 TB: per-stage costs are the member operators' own (gates
     * are one codegen'd projection; dedup one md5 shuffle; pairs ids-only
     * banded joins; decontam a broadcast membership test). The reused
-    * survivor frames are localCheckpoint-materialized (q78's lesson) so the
+    * survivor frames are checkpointed (q78's lesson) so the
     * six stat branches re-read materialized partitions instead of
     * re-executing the gate/window/CC lineage per branch; each stat is a
     * two-long aggregate.
@@ -261,7 +261,7 @@ object Pipeline {
           .as("n_tokens"),
         text.alphaRatio(col("text")).as("alpha_ratio"),
         text.tokenSetRatio(col("text"), text.stopwords("en")).as("sw_ratio"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val qual = base.filter(col("n_tokens") >= 20 &&
       col("alpha_ratio") >= 0.5 && col("sw_ratio") <= 0.5)
     // model gate (q94's scorer at the funnel's operating point): the
@@ -270,14 +270,14 @@ object Pipeline {
         qual.select(col("doc_id"), col("text")))
       .filter(col("mean_e6") >= classifierFloorE6)
       .select(col("doc_id"))
-    val clf = qual.join(clfIds, Seq("doc_id")).localCheckpoint()
+    val clf = Materialize(qual.join(clfIds, Seq("doc_id")))
     val exs = clf
       .withColumn("rn", row_number().over(
         Window.partitionBy(md5(col("text").cast("binary")))
           .orderBy(col("doc_id"))))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("text"), col("n_tokens"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val pairs = Dedup.nearDupPairsUnsorted(
       exs.select(col("doc_id"), col("text")), nearDupJaccard)
       .select(col("a_id"), col("b_id"))
@@ -298,7 +298,7 @@ object Pipeline {
           .select(col("b.kid").as("doc_id"))
       }
     val nears = exs.join(keeperIds, Seq("doc_id"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val evalGh = docs
       .filter(col("doc_id").isNotNull && col("doc_id") % evalEvery === 0)
       .select(explode(sketch.gramHashes(
@@ -429,7 +429,7 @@ object Pipeline {
       // windows, not negative-one windows
       .select(col("doc_id"), col("ghs"),
         greatest(size(col("ghs")), lit(0)).cast("long").as("n_windows"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val evalGh = evalDocs
       .select(col("doc_id").as("eval_id"), explode(col("ghs")).as("gh"))
     val trainGh = grams(base.filter(col("doc_id") % evalEvery =!= 0))
@@ -482,7 +482,7 @@ object Pipeline {
       // presentation-sort range sampling re-executes this scan-level
       // child (no shuffle below to resume from) — uncheckpointed, the
       // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("doc_id"))
 
   /** q114: markup strip — the HTML-to-text preprocessing every web-crawl
@@ -529,7 +529,7 @@ object Pipeline {
       // per-row expression work ran twice per run (the q112/q141 lesson).
       // PlanSpec pins the plan this checkpoint action executes, read off
       // Spark's query-execution listener.
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("doc_id"))
   }
 
@@ -1551,7 +1551,7 @@ object Pipeline {
     */
   def contrastivePairs(docs: DataFrame, emb: DataFrame): DataFrame = {
     val pairs = Dedup.nearDupPairsUnsorted(docs, 0.8)
-      .select(col("a_id"), col("b_id")).localCheckpoint()
+      .select(col("a_id"), col("b_id")).transform(Materialize(_))
     val pos = pairs
       .select(col("a_id").as("anchor_id"), col("b_id").as("partner"))
       .union(pairs.select(col("b_id"), col("a_id")))
@@ -1750,9 +1750,9 @@ object Pipeline {
     // join back) — unmaterialized, each consumer re-executed the whole
     // classifier token-explode scoring pass (r18 baseline plan: the
     // documents scan appeared 10x in q135, 21x in q135b with the BPE
-    // chain upstream). localCheckpoint is the q88/q78 lesson applied here:
+    // chain upstream). The checkpoint is the q88/q78 lesson applied here:
     // one scoring pass, every consumer re-reads materialized partitions.
-    val per = (tokenCounts match {
+    val per = Materialize(tokenCounts match {
       case None => TextAnalysis.classifierScoresUnsorted(docs)
         .select(col("doc_id"), col("n_tokens"), col("score_milli"))
       case Some(tc) => TextAnalysis.classifierScoresUnsorted(docs)
@@ -1761,7 +1761,7 @@ object Pipeline {
         .select(col("doc_id"),
           coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
           col("score_milli"))
-    }).localCheckpoint()
+    })
     // budget = (total × pct) DIV 100: exact BIGINT division (non-negative
     // operands, so truncation == floor) — matches the oracle's `//` at ANY
     // corpus magnitude, where a double quotient could cross an integer

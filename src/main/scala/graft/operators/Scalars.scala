@@ -69,7 +69,7 @@ object Scalars {
       // presentation-sort range sampling re-executes this scan-level
       // child (no shuffle below to resume from) — uncheckpointed, the
       // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("o_orderkey"))
 
   /** Q17a: JSON scalar extraction over events.props. The path is extracted
@@ -90,7 +90,7 @@ object Scalars {
       // presentation-sort range sampling re-executes this scan-level
       // child (no shuffle below to resume from) — uncheckpointed, the
       // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("event_id"))
 
   /** Q17b: array scalars over documents tokens. */
@@ -108,7 +108,7 @@ object Scalars {
       // presentation-sort range sampling re-executes this scan-level
       // child (no shuffle below to resume from) — uncheckpointed, the
       // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("doc_id"))
   }
 
@@ -133,7 +133,7 @@ object Scalars {
       // presentation-sort range sampling re-executes this scan+parse
       // child (no shuffle below to resume from): uncheckpointed, every
       // row paid from_json twice per run (the q112/q141 lesson)
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("event_id"))
   }
 

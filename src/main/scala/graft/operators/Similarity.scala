@@ -31,19 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Eager localCheckpoint + row count in ONE job (r19, the CC `observe`
-    * idiom): the sizing/empty-test count that every ANN entry takes right
-    * after materializing its base frame was a second scan-the-checkpoint
-    * job — pure scheduling latency. The CollectMetrics node fires on the
-    * checkpoint action itself, so the count is free; the returned frame's
-    * rows are untouched.
-    */
-  private[graft] def ckptWithCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    (ck, obs.get("n").asInstanceOf[Number].longValue)
-  }
-
   /** The spread read (the header's spread policy): `embeddings`
     * hash-repartitioned on vec_id over every core, then
     * (vec_id, `keep`..., v: array<double>).
@@ -244,8 +231,8 @@ object Similarity {
   def hardNegativesIvf(probeSrc: DataFrame, candidateSrc: DataFrame,
       k: Int): DataFrame = {
     // one captured count serves both the empty-corpus test and the cell
-    // sizing, riding the checkpoint job itself (ckptWithCount)
-    val (cand, n) = ckptWithCount(candidateSrc)
+    // sizing, riding the checkpoint job itself (Materialize.observed)
+    val (cand, n) = Materialize.observed(candidateSrc)
     AnnIndex.fitted(cand.select(col("id").as("vec_id"), col("v")), n) match {
       case Some(index) => hardNegativesQuantized(probeSrc, index.assign(cand), k)
       case None => cand.select(col("id").as("probe_id"), lit(1).as("rnk"),
@@ -461,8 +448,8 @@ object Similarity {
     // Materialize the (id, v) frame ONCE before anything reads it: the
     // plane-sizing count and the bucketing explode would otherwise re-run
     // the whole upstream pipeline (ADVICE r17 — a real extra pass at sf10).
-    // (checkpoint + plane-sizing count in one job — ckptWithCount)
-    val (b, nB) = ckptWithCount(base)
+    // (checkpoint + plane-sizing count in one job — Materialize.observed)
+    val (b, nB) = Materialize.observed(base)
     // the count sizes the planes (the q92b captured-count idiom): the
     // self-join's bucket fan-in must shrink as the corpus grows
     val planes = planesFor(nB)
@@ -619,7 +606,7 @@ object Similarity {
       // null embeddings can't train or be assigned a cell; the cosine
       // tiers drop them via null propagation, the IVF tier drops them here
       .filter(col("v").isNotNull)
-    val (base, n) = ckptWithCount(baseRaw)
+    val (base, n) = Materialize.observed(baseRaw)
     AnnIndex.fitted(base, n).fold(emptyTopK(spark))(ivfTopK(base))
   }
 
@@ -776,7 +763,7 @@ object Similarity {
       cbs: Array[Array[Array[Double]]]): DataFrame = {
     // the resident form: M small ints per vector, vectors dropped
     val codes = base.select(col("vec_id") +: pqCodeCols(cbs): _*)
-      .localCheckpoint()
+      .transform(Materialize(_))
     val probeLut = base.filter(col("vec_id") < 5).select(
       col("vec_id").as("probe_id") +:
         vecexprs.dotProduct(col("v"), col("v")).as("np2") +: pqLutCols(cbs): _*)
@@ -883,7 +870,7 @@ object Similarity {
     * q98's n × M bytes and the exact q20's n × dim floats.
     */
   private def ivfPqTopK(base: DataFrame)(index: AnnIndex): DataFrame =
-    index.copy(cells = index.assign(base).cells.map(_.localCheckpoint()))
+    index.copy(cells = index.assign(base).cells.map(Materialize(_)))
       .search(base)
 
   /** q101: IVF-PQ, production form — the trained coarse quantizer (q39's)
@@ -894,7 +881,7 @@ object Similarity {
   def q101(spark: SparkSession, dir: String): DataFrame = {
     val baseRaw = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val (base, n) = ckptWithCount(baseRaw)
+    val (base, n) = Materialize.observed(baseRaw)
     AnnIndex.fitted(base, n, pq = true).fold(emptyTopK(spark))(ivfPqTopK(base))
   }
 
@@ -1203,7 +1190,7 @@ object Similarity {
     val (quant, cbs) = (index.quant, index.pq.get)
     val maxP = math.min(SweepProbes.max, quant.nCells)
     // the resident form once (q101's encode pass), reused by every point
-    val codes = index.assign(base).cells.get.localCheckpoint()
+    val codes = Materialize(index.assign(base).cells.get)
     // probe side: ALL maxP ranked cells (prnk = how deep a fan-out must
     // reach to see this cell) + the ADC LUTs, broadcast once
     val pl = base.filter(col("vec_id") < 5).select(
@@ -1221,7 +1208,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         col("prnk"), pqAdcScoreCol(cbs).as("adc"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val graded = SweepProbes.map { p =>
       scored.filter(col("prnk") <= math.min(p, maxP))
         .withColumn("arnk", row_number().over(
@@ -1242,7 +1229,7 @@ object Similarity {
           .orderBy(col("c").desc, col("neighbor_id"))))
       .filter(col("rnk") <= TopK)
       .select(col("probe_id"), col("neighbor_id"), lit(true).as("is_true"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val tot = exact.agg(count(lit(1)).as("exact_pairs"))
     val slGrid = SweepShortlists.toDF("shortlist")
     val counts = graded
@@ -1276,7 +1263,7 @@ object Similarity {
   def q98(spark: SparkSession, dir: String): DataFrame = {
     val baseRaw = vectorBase(spark, dir)
       .filter(col("v").isNotNull)
-    val (base, n) = ckptWithCount(baseRaw)
+    val (base, n) = Materialize.observed(baseRaw)
     if (n == 0) return emptyTopK(spark)
     pqAdcTopK(base,
       Quantizers.pqFitCodebooks(base, PqSubspaces, PqCodewords))
@@ -1392,8 +1379,8 @@ object Similarity {
   def semanticDeconQuantized(evalSet: DataFrame, train: DataFrame,
       threshold: Double): DataFrame = {
     // one captured count: empty short-circuit AND cell sizing (the q92b
-    // single-probe idiom), riding the checkpoint job (ckptWithCount)
-    val (tr, n) = ckptWithCount(train)
+    // single-probe idiom), riding the checkpoint job (Materialize.observed)
+    val (tr, n) = Materialize.observed(train)
     val index = AnnIndex.fitted(tr, n) match {
       case Some(fit) => fit.assign(tr)
       case None =>
@@ -1463,7 +1450,7 @@ object Similarity {
     // vectors feed the quantizer fit, the cell explode, and two candidate
     // fetch joins: materialize once (q76 precedent); one captured count
     // serves both the empty test and the cell sizing
-    val (b, n) = ckptWithCount(base)
+    val (b, n) = Materialize.observed(base)
     // bounded sample fit + native corpus-wide soft assignment: no
     // full-corpus pass belongs to the fit, and no ScalaUDF or interpreted
     // lambda touches the N-row assignment pass (PlanSpec-pinned). Cells
@@ -1492,7 +1479,7 @@ object Similarity {
     */
   def q104(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
-    val (b, n) = ckptWithCount(vectorBase(spark, dir).filter(col("v").isNotNull))
+    val (b, n) = Materialize.observed(vectorBase(spark, dir).filter(col("v").isNotNull))
     AnnIndex.fitted(b, n) match {
       case None => semanticDedup(ids, b, SemDedupCosine)
       case Some(fit) =>
@@ -1501,8 +1488,8 @@ object Similarity {
         val path = graft.sources.Scratch.dir("q104-model")
         fit.save(spark, path)
         // [[semanticDedupQuantized]] minus its checkpoint: `b` is already
-        // materialized by the ckptWithCount above, and a second
-        // localCheckpoint would re-materialize the full corpus frame — one
+        // materialized by the Materialize.observed above, and a second
+        // checkpoint would re-materialize the full corpus frame — one
         // wasted corpus-sized job per q104 run (r19c job-trace find)
         semanticDedupCells(ids, b,
           AnnIndex.load(spark, path).assignSoft(b).cells.get, SemDedupCosine)
@@ -1516,7 +1503,7 @@ object Similarity {
     */
   def semanticDedupQuantized(ids: DataFrame, base: DataFrame,
       threshold: Double, quant: CellQuantizer): DataFrame = {
-    val b = base.localCheckpoint()
+    val b = Materialize(base)
     semanticDedupCells(ids, b, AnnIndex(quant).assignSoft(b).cells.get,
       threshold)
   }
@@ -1921,7 +1908,7 @@ object Similarity {
     * carry their pairwise-sim maps (probes × Pool rows, Pool-sized maps)
     * into a per-probe `flatMapGroups` walk over the ≤ [[MmrPool]]
     * in-memory candidates. Round 13 scheduled the walk as MmrK−1
-    * sequential Spark jobs with a localCheckpoint each (~3 s of fixed
+    * sequential Spark jobs with a checkpoint each (~3 s of fixed
     * job-dispatch overhead on KB-scale frames — flat in the corpus, but
     * pure waste). Every hash-bearing double is computed BEFORE the typed
     * walk by the same codegen'd expressions as before (rounded rel and
@@ -1946,7 +1933,7 @@ object Similarity {
         Window.partitionBy(col("probe_id"))
           .orderBy(col("rel").desc, col("cand_id"))))
       .filter(col("rnk") <= MmrPool)
-      .localCheckpoint() // bounded: probes × Pool rows; feeds 3 consumers
+      .transform(Materialize(_)) // bounded: probes × Pool rows; feeds 3 consumers
     // pairwise sims within each pool (probes × Pool² rounded scalars),
     // folded to a Pool-sized map per candidate; null sims (zero-norm
     // members) drop here exactly as max(s) ignored them before
@@ -2263,7 +2250,7 @@ object Similarity {
     // the K-sized per-(probe, d) shortlists feed TWO branches (full-dim
     // anchor + overlap join); materialize so the quadratic scoring
     // lineage runs once
-    val topk = matryoshkaShortlists(emb).localCheckpoint()
+    val topk = Materialize(matryoshkaShortlists(emb))
     val full = topk.filter(col("prefix_dim") === MatryoshkaDims.max)
       .select(col("probe_id"), col("neighbor_id"), lit(1L).as("hit"))
     topk.join(full, Seq("probe_id", "neighbor_id"), "left")

@@ -133,7 +133,7 @@ object TextAnalysis {
       // pins the plan this checkpoint action executes, read off Spark's
       // query-execution listener (the checkpoint truncates the frame's
       // own visible plan to a scan + sort).
-      .localCheckpoint()
+      .transform(Materialize(_))
       .orderBy(col("doc_id"))
 
   /** The seven q112 signal columns over a raw text column. */
@@ -720,7 +720,7 @@ object TextAnalysis {
     val counts = toks.groupBy(col("tok"))
       .agg(count(lit(1)).as("nc"),
         sum(when(col("is_prev"), 1L).otherwise(0L)).as("np"))
-      .localCheckpoint() // vocab-sized; feeds the axis, the join, totals
+      .transform(Materialize(_)) // vocab-sized; feeds the axis, the join, totals
     val axis = counts.orderBy(col("nc").desc, col("tok"))
       .limit(TokenDriftVocab)
       // one-partition rank over the LIMITed axis (<= TokenDriftVocab rows);
@@ -837,11 +837,11 @@ object TextAnalysis {
     * scale), not corpus bytes. Each learning step is one map-side-
     * combinable pair-count aggregation plus a 1-row collect (the argmax —
     * a model-fit boundary, same rule as the quantizer seeds) and one
-    * codegen'd merge projection ([[graft.functions.expressions
-    * .BpeMergeStepExpr]]), localCheckpointed so step k+1's aggregation
-    * re-reads materialized partitions instead of re-running k merge
-    * projections. K steps = K bounded shuffles of the vocab table; the
-    * corpus never reshuffles.
+    * codegen'd merge projection
+    * ([[graft.functions.expressions.textnative.bpeMergeAll]]), checkpointed
+    * so step k+1's aggregation re-reads materialized partitions instead of
+    * re-running k merge projections. K steps = K bounded shuffles of the
+    * vocab table; the corpus never reshuffles.
     *
     * Operating points: [[BpeSteps]] merges; words longer than
     * [[BpeMaxWordLen]] chars are excluded from BOTH the pair statistics
@@ -875,7 +875,7 @@ object TextAnalysis {
       .withColumn("syms", filter(split(col("word"), ""), s => s =!= lit("")))
 
   /** Merge projections accumulated on the vocab lineage before the next
-    * round's pair count pays a re-materialization (localCheckpoint) job.
+    * round's pair count pays a re-materialization ([[Materialize]]) job.
     * The merge application is a cheap codegen expression over the
     * vocab-sized frame, so recomputing a bounded chain of merges inside
     * the next aggregation job is cheaper than a dedicated materialization
@@ -886,19 +886,20 @@ object TextAnalysis {
     * materialized copy); the final round's vocab, which nothing reads,
     * no longer pays a materialization at all.
     *
-    * The un-checkpointed merges ride ONE [[graft.functions.expressions
-    * .BpeMergeAllExpr]] projection (merge table as a reference object,
-    * never k stacked expression nodes), so every round's generated
-    * whole-stage source is byte-identical and the codegen cache serves
-    * rounds 2..n — stacked per-merge projections made each round's source
-    * structurally new, and the measured cost was 45 janino compiles per
-    * fresh q139 session and 27 per WARM q135b run (cache self-thrash).
+    * The un-checkpointed merges ride ONE
+    * [[graft.functions.expressions.textnative.bpeMergeAll]] projection
+    * (merge table as a reference object, never k stacked expression
+    * nodes), so every round's generated whole-stage source is
+    * byte-identical and the codegen cache serves rounds 2..n — stacked
+    * per-merge projections made each round's source structurally new, and
+    * the measured cost was 45 janino compiles per fresh q139 session and 27
+    * per WARM q135b run (cache self-thrash).
     */
   private val BpeCkptEveryMerges = 32
 
   /** The vocab frame `base` with `pending` merges applied in order — one
-    * [[graft.functions.expressions.BpeMergeAllExpr]] projection, or `base`
-    * itself while no merges are pending.
+    * [[graft.functions.expressions.textnative.bpeMergeAll]] projection, or
+    * `base` itself while no merges are pending.
     */
   private def vocabWithMerges(base: DataFrame,
       pending: Seq[(String, String)]): DataFrame =
@@ -935,14 +936,14 @@ object TextAnalysis {
   private def bpeLearn(docs: DataFrame, steps: Int, lookahead: Int)(
       pick: (Array[(String, String, Long)], Int) => Seq[(String, String, Long)])
       : (Seq[(Int, String, String, Long)], Int) = {
-    var base = bpeVocab(docs).localCheckpoint()
+    var base = Materialize(bpeVocab(docs))
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rounds = 0
     var exhausted = false
     while (out.size < steps && !exhausted) {
       if (pending.size >= BpeCkptEveryMerges) {
-        base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
+        base = Materialize(vocabWithMerges(base, pending.toSeq))
         pending.clear()
       }
       val top = rankedPairs(vocabWithMerges(base, pending.toSeq), lookahead)
@@ -1108,7 +1109,7 @@ object TextAnalysis {
     * Scale shape: unchanged from q139/q142 — everything runs over the
     * distinct-word vocab table; each round is one map-side-combinable
     * pair-count aggregation, one bounded `lookahead`-row collect (model-
-    * fit boundary) and one codegen'd merge projection, localCheckpointed.
+    * fit boundary) and one codegen'd merge projection, checkpointed.
     */
   def bpeLearnMergesDeep(docs: DataFrame, steps: Int = BpeDeepSteps,
       maxPerRound: Int = 64, lookahead: Int = 256)
@@ -1173,7 +1174,7 @@ object TextAnalysis {
       // consumer occurrence (21 documents scans in the r18 baseline q135b
       // plan). The frame is 2 longs/doc; materializing it is the same
       // decision q141/q143 made for their fingerprint frames.
-      .localCheckpoint()
+      .transform(Materialize(_))
 
   /** The unrolled-CTE oracle prelude shared by q139/q140: w0 = the capped
     * vocabulary with char symbol lists; per step k, mK = the argmax pair,

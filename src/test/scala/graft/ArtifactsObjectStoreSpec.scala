@@ -33,10 +33,6 @@ class ArtifactsObjectStoreSpec extends AnyFunSuite {
     s
   }
 
-  private def mkRoot(): String =
-    "mocks3://" + java.nio.file.Files
-      .createTempDirectory("art_objstore").toString
-
   private def readTag(out: String): String = {
     val resolved = graft.sources.Artifacts.resolve(spark, out)
     new String(java.nio.file.Files.readAllBytes(
@@ -53,30 +49,29 @@ class ArtifactsObjectStoreSpec extends AnyFunSuite {
   }
 
   test("object-store publish: single-object pointer PUT, no rename, crash-safe") {
-    val out = mkRoot()
-    // first commit publishes v1 through the PUT path (rename would throw)
-    publish(out, "one")
-    assert(readTag(out) === "one")
+    TestSpark.withTemp { root =>
+      val out = s"mocks3://$root"
+      // first commit publishes v1 through the PUT path (rename would throw)
+      publish(out, "one")
+      assert(readTag(out) === "one")
 
-    // crash BETWEEN artifact writes and the pointer swap: readers keep v1
-    graft.sources.Artifacts.crashBeforeCommit = true
-    try {
-      intercept[IllegalStateException] { publish(out, "torn") }
-    } finally graft.sources.Artifacts.crashBeforeCommit = false
-    assert(readTag(out) === "one",
-      "a crash before the pointer PUT must leave readers on the old version")
+      // crash BETWEEN artifact writes and the pointer swap: readers keep v1
+      graft.sources.Artifacts.crashBeforeCommit = true
+      try {
+        intercept[IllegalStateException] { publish(out, "torn") }
+      } finally graft.sources.Artifacts.crashBeforeCommit = false
+      assert(readTag(out) === "one",
+        "a crash before the pointer PUT must leave readers on the old version")
 
-    // next successful commit supersedes and GCs the crashed staging dir
-    publish(out, "two")
-    assert(readTag(out) === "two")
-    val versions = new java.io.File(
-      new java.net.URI(out + "/_versions").getPath)
-    assert(versions.listFiles().map(_.getName).sorted.toSeq ===
-      Seq("v00001", "v00003"),
-      "GC must keep exactly {committed, prior committed} on the store too")
-
-    new scala.reflect.io.Directory(
-      new java.io.File(new java.net.URI(out).getPath)).deleteRecursively()
+      // next successful commit supersedes and GCs the crashed staging dir
+      publish(out, "two")
+      assert(readTag(out) === "two")
+      val versions = new java.io.File(
+        new java.net.URI(out + "/_versions").getPath)
+      assert(versions.listFiles().map(_.getName).sorted.toSeq ===
+        Seq("v00001", "v00003"),
+        "GC must keep exactly {committed, prior committed} on the store too")
+    }
   }
 
   test("unknown schemes still fail fast at stage()") {

@@ -1,13 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.reflect.io.Directory
 
 /** Exactly-once restart semantics — the ops property a production stream
   * lives on: a query that stops and restarts from its checkpoint must
@@ -20,50 +16,49 @@ class CheckpointResumeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("file-stream restart from checkpoint is exactly-once") {
-    val work = Files.createTempDirectory("graft-ckpt").toString
-    val srcDir = s"$work/src"
-    val sinkDir = s"$work/sink"
-    val ckptDir = s"$work/ckpt"
+    TestSpark.withTemp { work =>
+      val srcDir = s"$work/src"
+      val sinkDir = s"$work/sink"
+      val ckptDir = s"$work/ckpt"
 
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    // Split by event TIME, not id: the restored watermark survives the
-    // restart, so data arriving while the query was down must carry event
-    // times at/after it (as a real stream does) — an id-interleaved split
-    // would be dropped as late by the dedup state, by design.
-    val cut = events.agg(expr("percentile(unix_micros(ts), 0.5)")).head().getDouble(0).toLong
-    val (first, second) = (events.filter(unix_micros(col("ts")) < cut),
-      events.filter(unix_micros(col("ts")) >= cut))
-    // flat landing directory: arriving data = new part-files appended to it
-    first.write.parquet(srcDir)
+      val events = Tables.events(spark, "/root/testdata/sf0.001")
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+      // Split by event TIME, not id: the restored watermark survives the
+      // restart, so data arriving while the query was down must carry event
+      // times at/after it (as a real stream does) — an id-interleaved split
+      // would be dropped as late by the dedup state, by design.
+      val cut = events.agg(expr("percentile(unix_micros(ts), 0.5)")).head().getDouble(0).toLong
+      val (first, second) = (events.filter(unix_micros(col("ts")) < cut),
+        events.filter(unix_micros(col("ts")) >= cut))
+      // flat landing directory: arriving data = new part-files appended to it
+      first.write.parquet(srcDir)
 
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(first.schema).parquet(srcDir)
-        .withWatermark("ts", EventStreams.Lateness)
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", ckptDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+      def runOnce(): Unit = {
+        val q = spark.readStream.schema(first.schema).parquet(srcDir)
+          .withWatermark("ts", EventStreams.Lateness)
+          .dropDuplicatesWithinWatermark("event_id")
+          .writeStream.format("parquet")
+          .option("path", sinkDir)
+          .option("checkpointLocation", ckptDir)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try q.awaitTermination() finally q.stop()
+      }
+
+      runOnce() // drain batch 1, stop — checkpoint records progress
+      val afterFirst = spark.read.parquet(sinkDir).count()
+      assert(afterFirst === first.count())
+
+      second.write.mode("append").parquet(srcDir) // arrives while down
+      runOnce() // restart from the SAME checkpoint
+
+      val out = spark.read.parquet(sinkDir)
+      assert(out.count() === events.count(), "restart lost or duplicated rows")
+      assert(out.select(col("event_id")).distinct().count() === events.count(),
+        "restart emitted duplicate event_ids")
     }
-
-    runOnce() // drain batch 1, stop — checkpoint records progress
-    val afterFirst = spark.read.parquet(sinkDir).count()
-    assert(afterFirst === first.count())
-
-    second.write.mode("append").parquet(srcDir) // arrives while down
-    runOnce() // restart from the SAME checkpoint
-
-    val out = spark.read.parquet(sinkDir)
-    assert(out.count() === events.count(), "restart lost or duplicated rows")
-    assert(out.select(col("event_id")).distinct().count() === events.count(),
-      "restart emitted duplicate event_ids")
-
-    new Directory(new java.io.File(work)).deleteRecursively()
   }
 
   /** q108's append contract across a restart: a (window, cell) row emits
@@ -77,69 +72,68 @@ class CheckpointResumeSpec extends AnyFunSuite {
     * batch mirror of all on-time data.
     */
   test("windowed append restart emits each window exactly once") {
-    import spark.implicits._
-    val work = Files.createTempDirectory("graft-ckpt-win").toString
-    val srcDir = s"$work/src"
-    val sinkDir = s"$work/sink"
-    val ckptDir = s"$work/ckpt"
+    TestSpark.withTemp { work =>
+      import spark.implicits._
+      val srcDir = s"$work/src"
+      val sinkDir = s"$work/sink"
+      val ckptDir = s"$work/ckpt"
 
-    val quant = operators.FlatQuantizer(
-      Array(Array(1.0, 0.0), Array(0.0, 1.0)))
-    val centroidDf = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
-      .toDF("cell", "c")
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // run-1 data: hours 0 and 2 (watermark after run 1 = 01:30, closing
-    // ONLY hour 0); run-2 data: hour 3 plus a far-future flush row whose
-    // own window stays open
-    val first = Seq(
-      (ts("2024-01-01 00:10:00"), Seq(1.0, 0.0)),
-      (ts("2024-01-01 00:40:00"), Seq(0.0, 1.0)),
-      (ts("2024-01-01 02:00:00"), Seq(1.0, 0.0)))
-    val second = Seq(
-      (ts("2024-01-01 03:20:00"), Seq(0.0, 1.0)),
-      (ts("2100-01-01 00:00:00"), Seq(1.0, 0.0)))
-    first.toDF("ts", "v").write.parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
+      val quant = operators.FlatQuantizer(
+        Array(Array(1.0, 0.0), Array(0.0, 1.0)))
+      val centroidDf = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
+        .toDF("cell", "c")
+      def ts(s: String) = java.sql.Timestamp.valueOf(s)
+      // run-1 data: hours 0 and 2 (watermark after run 1 = 01:30, closing
+      // ONLY hour 0); run-2 data: hour 3 plus a far-future flush row whose
+      // own window stays open
+      val first = Seq(
+        (ts("2024-01-01 00:10:00"), Seq(1.0, 0.0)),
+        (ts("2024-01-01 00:40:00"), Seq(0.0, 1.0)),
+        (ts("2024-01-01 02:00:00"), Seq(1.0, 0.0)))
+      val second = Seq(
+        (ts("2024-01-01 03:20:00"), Seq(0.0, 1.0)),
+        (ts("2100-01-01 00:00:00"), Seq(1.0, 0.0)))
+      first.toDF("ts", "v").write.parquet(srcDir)
+      val schema = spark.read.parquet(srcDir).schema
 
-    def runOnce(): Unit = {
-      val q = streaming.StreamReplay.windowedCellMonitor(
-          spark.readStream.schema(schema).parquet(srcDir), quant, centroidDf)
+      def runOnce(): Unit = {
+        val q = streaming.StreamReplay.windowedCellMonitor(
+            spark.readStream.schema(schema).parquet(srcDir), quant, centroidDf)
+          .select(col("window.start").as("wstart"), col("cell"), col("n"),
+            col("sum_cos_e6"))
+          .writeStream.format("parquet")
+          .option("path", sinkDir)
+          .option("checkpointLocation", ckptDir)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try q.awaitTermination() finally q.stop()
+      }
+
+      runOnce()
+      val afterFirst = spark.read.parquet(sinkDir)
+        .collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getLong(2)))
+      assert(afterFirst.length === 2, "run 1 must close exactly hour 0 (2 cells)")
+      assert(afterFirst.forall(_._1 === ts("2024-01-01 00:00:00")))
+
+      second.toDF("ts", "v").write.mode("append").parquet(srcDir)
+      runOnce()
+
+      val out = spark.read.parquet(sinkDir)
+        .filter(col("wstart") < ts("2099-01-01 00:00:00"))
+      // exactly-once per window: no (window, cell) appears twice
+      assert(out.count() ===
+        out.select(col("wstart"), col("cell")).distinct().count(),
+        "restart re-emitted a closed window")
+      // and the final feed equals the batch mirror of all on-time data
+      val expected = streaming.StreamReplay.windowedCellMonitor(
+          (first ++ second).toDF("ts", "v"), quant, centroidDf)
         .select(col("window.start").as("wstart"), col("cell"), col("n"),
           col("sum_cos_e6"))
-        .writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", ckptDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+        .filter(col("wstart") < ts("2099-01-01 00:00:00"))
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.toVector).toVector.sortBy(_.mkString("|"))
+      assert(canon(out) === canon(expected))
     }
-
-    runOnce()
-    val afterFirst = spark.read.parquet(sinkDir)
-      .collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getLong(2)))
-    assert(afterFirst.length === 2, "run 1 must close exactly hour 0 (2 cells)")
-    assert(afterFirst.forall(_._1 === ts("2024-01-01 00:00:00")))
-
-    second.toDF("ts", "v").write.mode("append").parquet(srcDir)
-    runOnce()
-
-    val out = spark.read.parquet(sinkDir)
-      .filter(col("wstart") < ts("2099-01-01 00:00:00"))
-    // exactly-once per window: no (window, cell) appears twice
-    assert(out.count() ===
-      out.select(col("wstart"), col("cell")).distinct().count(),
-      "restart re-emitted a closed window")
-    // and the final feed equals the batch mirror of all on-time data
-    val expected = streaming.StreamReplay.windowedCellMonitor(
-        (first ++ second).toDF("ts", "v"), quant, centroidDf)
-      .select(col("window.start").as("wstart"), col("cell"), col("n"),
-        col("sum_cos_e6"))
-      .filter(col("wstart") < ts("2099-01-01 00:00:00"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.toVector).toVector.sortBy(_.mkString("|"))
-    assert(canon(out) === canon(expected))
-
-    new Directory(new java.io.File(work)).deleteRecursively()
   }
 }

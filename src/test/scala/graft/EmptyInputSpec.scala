@@ -1,10 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.reflect.io.Directory
 
 /** Robustness: every registered query must run (and return an empty,
   * schema-correct result) against empty tables — operators that blow up on
@@ -14,15 +10,13 @@ import scala.reflect.io.Directory
 class EmptyInputSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private lazy val emptyDir: String = {
-    val d = Files.createTempDirectory("graft-empty").toString
+  /** Every fixture table, with its schema and no rows, under `d`. */
+  private def writeEmptyTables(d: String): Unit =
     Tables.names.foreach { t =>
       spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
         .limit(0)
         .write.mode("overwrite").parquet(s"$d/$t.parquet")
     }
-    d
-  }
 
   /** Known oracle divergence on empty input (never hit by the gate, which
     * always runs on populated sf dirs): ANSI GROUP BY ROLLUP/CUBE emits the
@@ -71,19 +65,20 @@ class EmptyInputSpec extends AnyFunSuite {
     "q133_lsh_sweep" -> graft.operators.Dedup.LshSweepRows.size.toLong)
 
   test("every registered query runs on empty tables and returns 0 rows") {
-    // q00 reads the fixed reference corpus, not the sf dir
-    val failures = Registry.all.filterNot(_.name == "q00_reference_index").flatMap { q =>
-      try {
-        val n = q.build(spark, emptyDir).count()
-        val want = expectedRows.getOrElse(q.name, 0L)
-        if (n == want) None else Some(s"${q.name}: $n rows from empty input")
-      } catch {
-        case e: Throwable =>
-          Some(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").take(100)}")
+    TestSpark.withTemp { emptyDir =>
+      writeEmptyTables(emptyDir)
+      // q00 reads the fixed reference corpus, not the sf dir
+      val failures = Registry.all.filterNot(_.name == "q00_reference_index").flatMap { q =>
+        try {
+          val n = q.build(spark, emptyDir).count()
+          val want = expectedRows.getOrElse(q.name, 0L)
+          if (n == want) None else Some(s"${q.name}: $n rows from empty input")
+        } catch {
+          case e: Throwable =>
+            Some(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").take(100)}")
+        }
       }
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
-    // cleanup regardless of outcome
-    new Directory(new java.io.File(emptyDir)).deleteRecursively()
-    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

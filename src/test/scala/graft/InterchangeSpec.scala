@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Interchange
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,27 +33,27 @@ class InterchangeSpec extends AnyFunSuite {
       Option(r.getString(2)), Option(r.getString(3)))).toSeq
 
   test("JSONL round trip is lossless on nasty strings") {
-    val tmp = Files.createTempDirectory("interchange_jsonl").toString
-    val got = rows(Interchange.jsonlRoundTrip(nasty, s"$tmp/j"))
-    assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      val got = rows(Interchange.jsonlRoundTrip(nasty, s"$tmp/j"))
+      assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
+    }
   }
 
   test("ORC round trip is lossless on nasty strings") {
-    val tmp = Files.createTempDirectory("interchange_orc").toString
-    val got = rows(Interchange.orcRoundTrip(nasty, s"$tmp/o"))
-    assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      val got = rows(Interchange.orcRoundTrip(nasty, s"$tmp/o"))
+      assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
+    }
   }
 
   test("Avro round trip is lossless on nasty strings") {
-    val tmp = Files.createTempDirectory("interchange_avro").toString
-    val got = rows(Interchange.avroRoundTrip(nasty, s"$tmp/a"))
-    assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
-    val byId = got.map(t => t._1 -> t._4).toMap
-    assert(byId(8L) === Some(""), "empty string must survive as empty")
-    assert(byId(9L) === None, "null must survive as null (union(null, string))")
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      val got = rows(Interchange.avroRoundTrip(nasty, s"$tmp/a"))
+      assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
+      val byId = got.map(t => t._1 -> t._4).toMap
+      assert(byId(8L) === Some(""), "empty string must survive as empty")
+      assert(byId(9L) === None, "null must survive as null (union(null, string))")
+    }
   }
 
   /** The q131 splittability consequence, MEASURED: the same one-file JSONL
@@ -68,31 +66,31 @@ class InterchangeSpec extends AnyFunSuite {
     * same row count.
     */
   test("compressed intake: gzip is one task per file, bzip2 splits") {
-    import org.apache.spark.sql.functions.col
-    val tmp = Files.createTempDirectory("interchange_split").toString
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-      .filter(col("doc_id").isNotNull)
-    val n = docs.count()
-    docs.coalesce(1).write.option("compression", "gzip").json(s"$tmp/gz")
-    docs.coalesce(1).write.option("compression", "bzip2").json(s"$tmp/bz")
-    def parts(p: String) = new java.io.File(p).listFiles()
-      .filter(_.getName.startsWith("part-"))
-    assert(parts(s"$tmp/gz").map(_.getName).forall(_.endsWith(".json.gz")))
-    assert(parts(s"$tmp/bz").map(_.getName).forall(_.endsWith(".json.bz2")))
-    val before = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
-      val gz = spark.read.schema(docs.schema).json(s"$tmp/gz")
-      val bz = spark.read.schema(docs.schema).json(s"$tmp/bz")
-      assert(gz.rdd.getNumPartitions === 1,
-        "gzip is non-splittable: one task per file regardless of size")
-      assert(bz.rdd.getNumPartitions > 1,
-        "bzip2 must fan one big file out to block-sized tasks")
-      assert(gz.count() === n)
-      assert(bz.count() === n, "split bzip2 read must reassemble every record")
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", before)
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      import org.apache.spark.sql.functions.col
+      val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+        .select(col("doc_id"), col("lang"), col("source"), col("text"))
+        .filter(col("doc_id").isNotNull)
+      val n = docs.count()
+      docs.coalesce(1).write.option("compression", "gzip").json(s"$tmp/gz")
+      docs.coalesce(1).write.option("compression", "bzip2").json(s"$tmp/bz")
+      def parts(p: String) = new java.io.File(p).listFiles()
+        .filter(_.getName.startsWith("part-"))
+      assert(parts(s"$tmp/gz").map(_.getName).forall(_.endsWith(".json.gz")))
+      assert(parts(s"$tmp/bz").map(_.getName).forall(_.endsWith(".json.bz2")))
+      val before = spark.conf.get("spark.sql.files.maxPartitionBytes")
+      try {
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+        val gz = spark.read.schema(docs.schema).json(s"$tmp/gz")
+        val bz = spark.read.schema(docs.schema).json(s"$tmp/bz")
+        assert(gz.rdd.getNumPartitions === 1,
+          "gzip is non-splittable: one task per file regardless of size")
+        assert(bz.rdd.getNumPartitions > 1,
+          "bzip2 must fan one big file out to block-sized tasks")
+        assert(gz.count() === n)
+        assert(bz.count() === n, "split bzip2 read must reassemble every record")
+      } finally spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+    }
   }
 
   /** Avro's scale property, measured like the gzip/bzip2 pair: container
@@ -102,40 +100,40 @@ class InterchangeSpec extends AnyFunSuite {
     * record (the reader resumes at the next sync marker per split).
     */
   test("Avro intake: one big file splits at sync markers and reassembles") {
-    import org.apache.spark.sql.functions.col
-    val tmp = Files.createTempDirectory("interchange_avro_split").toString
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-      .filter(col("doc_id").isNotNull)
-    val n = docs.count()
-    Interchange.avroWrite(docs.coalesce(1), s"$tmp/a") // ONE container file
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val key = "mapreduce.input.fileinputformat.split.maxsize"
-    val before = Option(hconf.get(key))
-    try {
-      hconf.setLong(key, 16384)
-      val back = Interchange.avroRead(spark, s"$tmp/a", docs.schema)
-      assert(back.rdd.getNumPartitions > 1,
-        "a single Avro container must fan out to byte-range splits")
-      assert(back.count() === n,
-        "split Avro read must reassemble every record")
-    } finally {
-      before match {
-        case Some(v) => hconf.set(key, v)
-        case None => hconf.unset(key)
+    TestSpark.withTemp { tmp =>
+      import org.apache.spark.sql.functions.col
+      val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+        .select(col("doc_id"), col("lang"), col("source"), col("text"))
+        .filter(col("doc_id").isNotNull)
+      val n = docs.count()
+      Interchange.avroWrite(docs.coalesce(1), s"$tmp/a") // ONE container file
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val key = "mapreduce.input.fileinputformat.split.maxsize"
+      val before = Option(hconf.get(key))
+      try {
+        hconf.setLong(key, 16384)
+        val back = Interchange.avroRead(spark, s"$tmp/a", docs.schema)
+        assert(back.rdd.getNumPartitions > 1,
+          "a single Avro container must fan out to byte-range splits")
+        assert(back.count() === n,
+          "split Avro read must reassemble every record")
+      } finally {
+        before match {
+          case Some(v) => hconf.set(key, v)
+          case None => hconf.unset(key)
+        }
       }
     }
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
   }
 
   test("CSV round trip is lossless, keeping null and empty string distinct") {
-    val tmp = Files.createTempDirectory("interchange_csv").toString
-    val got = rows(Interchange.csvRoundTrip(nasty, s"$tmp/c"))
-    assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
-    val byId = got.map(t => t._1 -> t._4).toMap
-    assert(byId(8L) === Some(""), "empty string must survive as empty")
-    assert(byId(9L) === None, "null must survive as null, not empty")
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      val got = rows(Interchange.csvRoundTrip(nasty, s"$tmp/c"))
+      assert(got === rows(nasty.orderBy(org.apache.spark.sql.functions.col("doc_id"))))
+      val byId = got.map(t => t._1 -> t._4).toMap
+      assert(byId(8L) === Some(""), "empty string must survive as empty")
+      assert(byId(9L) === None, "null must survive as null, not empty")
+    }
   }
 
   /** The documented CSV corner, pinned rather than hidden: CSV cannot
@@ -145,15 +143,15 @@ class InterchangeSpec extends AnyFunSuite {
     * it is the at-scale default.
     */
   test("CSV sentinel corner is lossy and pinned; JSONL carries the same byte") {
-    import spark.implicits._
-    val df = Seq((1L, "en", "web", Interchange.CsvNullSentinel))
-      .toDF("doc_id", "lang", "source", "text")
-    val tmp = Files.createTempDirectory("interchange_corner").toString
-    assert(rows(Interchange.csvRoundTrip(df, s"$tmp/c")).head._4 === None,
-      "the documented lossy corner: sentinel-valued text reads back null")
-    assert(rows(Interchange.jsonlRoundTrip(df, s"$tmp/j")).head._4 ===
-      Some(Interchange.CsvNullSentinel),
-      "JSONL must carry the same byte losslessly")
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      import spark.implicits._
+      val df = Seq((1L, "en", "web", Interchange.CsvNullSentinel))
+        .toDF("doc_id", "lang", "source", "text")
+      assert(rows(Interchange.csvRoundTrip(df, s"$tmp/c")).head._4 === None,
+        "the documented lossy corner: sentinel-valued text reads back null")
+      assert(rows(Interchange.jsonlRoundTrip(df, s"$tmp/j")).head._4 ===
+        Some(Interchange.CsvNullSentinel),
+        "JSONL must carry the same byte losslessly")
+    }
   }
 }

@@ -73,16 +73,12 @@ class InvertedIndexSpec extends AnyFunSuite {
   }
 
   test("S3 text sink writes the reference's formatted lines") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    try {
+    TestSpark.withTemp { out =>
       InvertedIndex.writeTextIndex(
         InvertedIndex.referenceIndex(spark, corpus).limit(100), out)
       val lines = spark.read.text(out).collect().map(_.getString(0))
       assert(lines.length === 100)
       assert(lines.forall(_.matches("""[a-z0-9]+: \(file\d+\.txt: \d+\)(, \(file\d+\.txt: \d+\))*""")))
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(out)).deleteRecursively()
     }
   }
 

@@ -41,22 +41,23 @@ class OrderedOutputSpec extends AnyFunSuite {
   }
 
   test("q01, q01b, q02: identical ordered output with and without the map-side spread") {
-    // The fixture's documents file is ONE row group, so its scan is one
-    // task and the index spreads it. The same rows written as many row
-    // groups count as splittable input, which `Tables.spread` leaves alone.
-    val dir = java.nio.file.Files.createTempDirectory("ordered_output").toString
-    spark.read.parquet(s"$sf01/documents.parquet").coalesce(1)
-      .write.option("parquet.block.size", 16384L).parquet(s"$dir/documents.parquet")
-    def spreads(d: String) =
-      InvertedIndex.documentPostings(spark, d).queryExecution.executedPlan
-        .toString.contains("xxhash64")
-    assert(spreads(sf01), "the single-row-group input was not spread")
-    assert(!spreads(dir), "the many-row-group input was spread")
-    for ((name, q) <- queries.filter(_._1 != "q15")) {
-      val want = q(spark, dir).collect().toSeq
-      assert(want.nonEmpty, s"$name produced no rows")
-      assert(q(spark, sf01).collect().toSeq == want,
-        s"$name: the spread map phase changed the output")
+    TestSpark.withTemp { dir =>
+      // The fixture's documents file is ONE row group, so its scan is one
+      // task and the index spreads it. The same rows written as many row
+      // groups count as splittable input, which `Tables.spread` leaves alone.
+      spark.read.parquet(s"$sf01/documents.parquet").coalesce(1)
+        .write.option("parquet.block.size", 16384L).parquet(s"$dir/documents.parquet")
+      def spreads(d: String) =
+        InvertedIndex.documentPostings(spark, d).queryExecution.executedPlan
+          .toString.contains("xxhash64")
+      assert(spreads(sf01), "the single-row-group input was not spread")
+      assert(!spreads(dir), "the many-row-group input was spread")
+      for ((name, q) <- queries.filter(_._1 != "q15")) {
+        val want = q(spark, dir).collect().toSeq
+        assert(want.nonEmpty, s"$name produced no rows")
+        assert(q(spark, sf01).collect().toSeq == want,
+          s"$name: the spread map phase changed the output")
+      }
     }
   }
 }

@@ -801,4 +801,28 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("rangepartitioning(user_id"), p.take(1500))
     assert(!p.contains("hashpartitioning"), p.take(1500))
   }
+
+  /** How a frame is materialized is decided in ONE module: every eager
+    * checkpoint, cache, persist or observed metric in the engine goes
+    * through [[graft.operators.Materialize]], so a change of mechanism is
+    * an edit there, not at each call site.
+    */
+  test("only Materialize materializes: no checkpoint, cache, persist or Observation elsewhere in src/main") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
+    val calls = Seq("localCheckpoint(", ".checkpoint(", "Observation(", ".cache()", ".persist(")
+    val sources = scala.util.Using.resource(Files.walk(root))(
+      _.iterator().asScala.toList.filter(_.toString.endsWith(".scala")))
+    assert(sources.exists(_.getFileName.toString == "Materialize.scala"))
+    val stray = sources.filterNot(_.getFileName.toString == "Materialize.scala")
+      .flatMap { (f: Path) =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if calls.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(stray.isEmpty, "materialize through graft.operators.Materialize:\n" +
+      stray.mkString("\n"))
+  }
 }

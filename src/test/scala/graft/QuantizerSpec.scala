@@ -222,13 +222,11 @@ class QuantizerSpec extends AnyFunSuite {
     * downstream machinery; these tests pin the AnnIndex save/load seam for
     * the flat, IMI and IVF-PQ forms.
     */
-  private def reloaded(index: AnnIndex)(check: AnnIndex => Unit): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("annindex").toFile
-    try {
-      index.save(spark, tmp.toString)
-      check(AnnIndex.load(spark, tmp.toString))
-    } finally new scala.reflect.io.Directory(tmp).deleteRecursively()
-  }
+  private def reloaded(index: AnnIndex)(check: AnnIndex => Unit): Unit =
+    TestSpark.withTemp { tmp =>
+      index.save(spark, tmp)
+      check(AnnIndex.load(spark, tmp))
+    }
 
   /** (vec_id, cell) assignment rows, and the (probe_id, vec_id, cell)
     * candidate rows [[AnnIndex.probe]] returns for `base`'s fixed probes.
@@ -403,28 +401,28 @@ class QuantizerSpec extends AnyFunSuite {
     * plan-literal ceiling.
     */
   test("imiRefresh: per-half Lloyd non-increase and ModelStore round trip") {
-    val df = synthetic(5000).localCheckpoint()
-    val (cbA, cbB) = Quantizers.fitImiCodebooks(df, 260) // 17x17 grid
-    val before = ImiQuantizer(cbA, cbB)
-    val after = Similarity.imiRefresh(df, before)
-    assert(after.cbA.length === cbA.length &&
-      after.cbB.length === cbB.length)
-    val vecs = df.collect().map(_.getSeq[Double](1).toArray)
-    def sse(cb: Array[Array[Double]], lo: Int, hi: Int): Double =
-      vecs.map { v =>
-        val h = v.slice(lo, hi)
-        cb.map(c => c.zip(h).map { case (a, b) => (a - b) * (a - b) }.sum).min
-      }.sum
-    val split = cbA.head.length
-    assert(sse(after.cbA, 0, split) <= sse(cbA, 0, split) + 1e-2,
-      "A-half SSE rose")
-    assert(sse(after.cbB, split, split + cbB.head.length) <=
-      sse(cbB, split, split + cbB.head.length) + 1e-2, "B-half SSE rose")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-imiref").toString
-    AnnIndex(after).save(spark, tmp)
-    val loaded = AnnIndex.load(spark, tmp).quant.asInstanceOf[ImiQuantizer]
-    assert(loaded.cbA.zip(after.cbA).forall { case (a, b) => a.sameElements(b) })
-    assert(loaded.cbB.zip(after.cbB).forall { case (a, b) => a.sameElements(b) })
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      val df = synthetic(5000).localCheckpoint()
+      val (cbA, cbB) = Quantizers.fitImiCodebooks(df, 260) // 17x17 grid
+      val before = ImiQuantizer(cbA, cbB)
+      val after = Similarity.imiRefresh(df, before)
+      assert(after.cbA.length === cbA.length &&
+        after.cbB.length === cbB.length)
+      val vecs = df.collect().map(_.getSeq[Double](1).toArray)
+      def sse(cb: Array[Array[Double]], lo: Int, hi: Int): Double =
+        vecs.map { v =>
+          val h = v.slice(lo, hi)
+          cb.map(c => c.zip(h).map { case (a, b) => (a - b) * (a - b) }.sum).min
+        }.sum
+      val split = cbA.head.length
+      assert(sse(after.cbA, 0, split) <= sse(cbA, 0, split) + 1e-2,
+        "A-half SSE rose")
+      assert(sse(after.cbB, split, split + cbB.head.length) <=
+        sse(cbB, split, split + cbB.head.length) + 1e-2, "B-half SSE rose")
+      AnnIndex(after).save(spark, tmp)
+      val loaded = AnnIndex.load(spark, tmp).quant.asInstanceOf[ImiQuantizer]
+      assert(loaded.cbA.zip(after.cbA).forall { case (a, b) => a.sameElements(b) })
+      assert(loaded.cbB.zip(after.cbB).forall { case (a, b) => a.sameElements(b) })
+    }
   }
 }

@@ -134,24 +134,24 @@ class ScalarsSpec extends AnyFunSuite {
     * without re-reading tokens) verbatim.
     */
   test("q95 sketch bytes survive parquet and union from disk to the same estimates") {
-    import org.apache.spark.sql.functions._
-    val toks = Tables.documents(spark, dir)
-      .select(col("source"), col("lang"),
-        explode(graft.functions.text.cleanTokens(col("text"))).as("tok"))
-    val perSnapshot = toks
-      .groupBy(col("source"), col("lang"))
-      .agg(hll_sketch_agg(col("tok"), lit(Scalars.HllLgK)).as("sketch"))
-    val d = java.nio.file.Files.createTempDirectory("q95_sketches").toString
-    perSnapshot.write.mode("overwrite").parquet(d)
-    val fromDisk = spark.read.parquet(d)
-      .groupBy(col("source"))
-      .agg(hll_sketch_estimate(
-        hll_union_agg(col("sketch"), lit(false))).as("est"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val live = Scalars.q95(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fromDisk === live,
-      "disk-unioned estimates diverge from the live pipeline")
-    new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
+    TestSpark.withTemp { d =>
+      import org.apache.spark.sql.functions._
+      val toks = Tables.documents(spark, dir)
+        .select(col("source"), col("lang"),
+          explode(graft.functions.text.cleanTokens(col("text"))).as("tok"))
+      val perSnapshot = toks
+        .groupBy(col("source"), col("lang"))
+        .agg(hll_sketch_agg(col("tok"), lit(Scalars.HllLgK)).as("sketch"))
+      perSnapshot.write.mode("overwrite").parquet(d)
+      val fromDisk = spark.read.parquet(d)
+        .groupBy(col("source"))
+        .agg(hll_sketch_estimate(
+          hll_union_agg(col("sketch"), lit(false))).as("est"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val live = Scalars.q95(spark, dir).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(fromDisk === live,
+        "disk-unioned estimates diverge from the live pipeline")
+    }
   }
 }

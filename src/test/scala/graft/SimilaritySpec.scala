@@ -858,31 +858,31 @@ class SimilaritySpec extends AnyFunSuite {
     * — the monitor->refresh->persist loop q106/q108 call for.
     */
   test("codebook refresh: Lloyd error non-increase + ModelStore round trip") {
-    val base = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"),
-        graft.functions.vectors.toDouble(col("embedding")).as("v"))
-      .filter(col("v").isNotNull)
-    val vecs = base.collect().map(_.getSeq[Double](1).toArray)
-    val seeds = base.orderBy(col("vec_id")).limit(Similarity.IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    val refreshed =
-      Similarity.refreshedCodebook(Similarity.codebookRefresh(base, seeds))
-    assert(refreshed.length === Similarity.IvfCells)
-    assert(refreshed.forall(_.length === seeds.head.length))
-    def sse(cb: Array[Array[Double]]): Double = vecs.map { v =>
-      cb.map(c => c.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum).min
-    }.sum
-    val (before, after) = (sse(seeds), sse(refreshed))
-    assert(after <= before + 1e-2, s"SSE rose: $before -> $after")
-    // round trip: the refreshed artifact reloads bit-identically
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q111").toString
-    graft.operators.AnnIndex(graft.operators.FlatQuantizer(refreshed))
-      .save(spark, tmp)
-    val loaded = graft.operators.AnnIndex.load(spark, tmp).quant
-      .asInstanceOf[graft.operators.FlatQuantizer].centroids
-    assert(loaded.length === refreshed.length &&
-      loaded.zip(refreshed).forall { case (a, b) => a.sameElements(b) })
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    TestSpark.withTemp { tmp =>
+      val base = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id"),
+          graft.functions.vectors.toDouble(col("embedding")).as("v"))
+        .filter(col("v").isNotNull)
+      val vecs = base.collect().map(_.getSeq[Double](1).toArray)
+      val seeds = base.orderBy(col("vec_id")).limit(Similarity.IvfCells)
+        .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+      val refreshed =
+        Similarity.refreshedCodebook(Similarity.codebookRefresh(base, seeds))
+      assert(refreshed.length === Similarity.IvfCells)
+      assert(refreshed.forall(_.length === seeds.head.length))
+      def sse(cb: Array[Array[Double]]): Double = vecs.map { v =>
+        cb.map(c => c.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum).min
+      }.sum
+      val (before, after) = (sse(seeds), sse(refreshed))
+      assert(after <= before + 1e-2, s"SSE rose: $before -> $after")
+      // round trip: the refreshed artifact reloads bit-identically
+      graft.operators.AnnIndex(graft.operators.FlatQuantizer(refreshed))
+        .save(spark, tmp)
+      val loaded = graft.operators.AnnIndex.load(spark, tmp).quant
+        .asInstanceOf[graft.operators.FlatQuantizer].centroids
+      assert(loaded.length === refreshed.length &&
+        loaded.zip(refreshed).forall { case (a, b) => a.sameElements(b) })
+    }
   }
 
   /** q134: planted int8 quantization profile, hand-computed in the

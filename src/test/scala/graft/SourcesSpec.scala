@@ -1,12 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.reflect.io.Directory
 
 /** Source/sink round-trips beyond parquet+text: CSV and JSON with explicit
   * schemas (values and types must survive), and the streaming parquet file
@@ -14,13 +10,8 @@ import scala.reflect.io.Directory
   */
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  import TestSpark.withTemp
   private val dir = "/root/testdata/sf0.001"
-
-  private def withTemp(f: String => Unit): Unit = {
-    val d = Files.createTempDirectory("graft-src").toString
-    try f(d)
-    finally new Directory(new java.io.File(d)).deleteRecursively()
-  }
 
   test("CSV round-trip preserves values under an explicit schema") {
     withTemp { tmp =>

@@ -179,26 +179,27 @@ class StreamingSpec extends AnyFunSuite {
     * depressed mean exactly where the drifted arrival landed.
     */
   test("q106 streaming cell monitor: planted copies and a drifted arrival") {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-q106-fix").toString
-    def ramp(i: Int): Seq[Float] = (0 until 8).map(j => (i * 8 + j).toFloat)
-    val drifted = Seq(34f, 25f, 26f, 27f, 28f, 29f, 30f, 31f) // near seed 3
-    val rows =
-      (0 until 16).map(i => (i.toLong, ramp(i), 0)) ++
-        Seq((16L, ramp(0), 0), (17L, ramp(5), 0), (18L, drifted, 0))
-    rows.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    val got = streaming.StreamReplay.q106(spark, d)
-      .collect().map(r => r.getInt(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(got.size === 16)
-    assert(got.values.map(_._1).sum === 19L)
-    assert(got(0)._1 === 2L && got(0)._3 === 1000000L)
-    assert(got(5)._1 === 2L && got(5)._3 === 1000000L)
-    assert(got(3)._1 === 2L && got(3)._3 < 1000000L &&
-      got(3)._2 < 2000000L)
-    (got.keySet -- Set(0, 3, 5)).foreach { c =>
-      assert(got(c)._1 === 1L && got(c)._3 === 1000000L, s"cell $c")
+    TestSpark.withTemp { d =>
+      import spark.implicits._
+      def ramp(i: Int): Seq[Float] = (0 until 8).map(j => (i * 8 + j).toFloat)
+      val drifted = Seq(34f, 25f, 26f, 27f, 28f, 29f, 30f, 31f) // near seed 3
+      val rows =
+        (0 until 16).map(i => (i.toLong, ramp(i), 0)) ++
+          Seq((16L, ramp(0), 0), (17L, ramp(5), 0), (18L, drifted, 0))
+      rows.toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      val got = streaming.StreamReplay.q106(spark, d)
+        .collect().map(r => r.getInt(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      assert(got.size === 16)
+      assert(got.values.map(_._1).sum === 19L)
+      assert(got(0)._1 === 2L && got(0)._3 === 1000000L)
+      assert(got(5)._1 === 2L && got(5)._3 === 1000000L)
+      assert(got(3)._1 === 2L && got(3)._3 < 1000000L &&
+        got(3)._2 < 2000000L)
+      (got.keySet -- Set(0, 3, 5)).foreach { c =>
+        assert(got(c)._1 === 1L && got(c)._3 === 1000000L, s"cell $c")
+      }
     }
   }
 
@@ -210,27 +211,28 @@ class StreamingSpec extends AnyFunSuite {
     * affinity semantics as q106, but bucketed.
     */
   test("q108 windowed drift monitor: planted arrivals bucket into their hours") {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-q108-fix").toString
-    def ramp(i: Int): Seq[Float] = (0 until 8).map(j => (i * 8 + j).toFloat)
-    val drifted = Seq(34f, 25f, 26f, 27f, 28f, 29f, 30f, 31f) // near seed 3
-    val rows =
-      (0 until 16).map(i => (i.toLong, ramp(i), 0)) ++
-        Seq((60L, ramp(0), 0), (61L, drifted, 0), (120L, ramp(5), 0))
-    rows.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    val base = streaming.StreamReplay.IngestEpochSec * 1000L
-    val got = streaming.StreamReplay.q108(spark, d)
-      .collect().map(r => (r.getLong(0), r.getInt(1)) ->
-        ((r.getLong(2), r.getLong(4)))).toMap
-    assert(got.size === 19) // 16 hour-0 cells + (cells 0,3) hour 1 + cell 5 hour 2
-    (0 until 16).foreach { c =>
-      assert(got((base, c)) === ((1L, 1000000L)), s"hour-0 cell $c")
+    TestSpark.withTemp { d =>
+      import spark.implicits._
+      def ramp(i: Int): Seq[Float] = (0 until 8).map(j => (i * 8 + j).toFloat)
+      val drifted = Seq(34f, 25f, 26f, 27f, 28f, 29f, 30f, 31f) // near seed 3
+      val rows =
+        (0 until 16).map(i => (i.toLong, ramp(i), 0)) ++
+          Seq((60L, ramp(0), 0), (61L, drifted, 0), (120L, ramp(5), 0))
+      rows.toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      val base = streaming.StreamReplay.IngestEpochSec * 1000L
+      val got = streaming.StreamReplay.q108(spark, d)
+        .collect().map(r => (r.getLong(0), r.getInt(1)) ->
+          ((r.getLong(2), r.getLong(4)))).toMap
+      assert(got.size === 19) // 16 hour-0 cells + (cells 0,3) hour 1 + cell 5 hour 2
+      (0 until 16).foreach { c =>
+        assert(got((base, c)) === ((1L, 1000000L)), s"hour-0 cell $c")
+      }
+      assert(got((base + 3600000L, 0)) === ((1L, 1000000L))) // the copy, ON its centroid
+      val (n3, mean3) = got((base + 3600000L, 3))
+      assert(n3 === 1L && mean3 < 1000000L) // the drifted arrival, depressed
+      assert(got((base + 7200000L, 5)) === ((1L, 1000000L)))
     }
-    assert(got((base + 3600000L, 0)) === ((1L, 1000000L))) // the copy, ON its centroid
-    val (n3, mean3) = got((base + 3600000L, 3))
-    assert(n3 === 1L && mean3 < 1000000L) // the drifted arrival, depressed
-    assert(got((base + 7200000L, 5)) === ((1L, 1000000L)))
   }
 
   /** The watermark contract of q108's shared core, which the registered
@@ -289,43 +291,44 @@ class StreamingSpec extends AnyFunSuite {
     * (0, 0) and being admitted (no-signal is not a drop reason).
     */
   test("q109 streaming gate monitor: planted arrivals match the batch twin") {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-q109-fix").toString
-    val rows = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog", "a"),
-      (1L, null, "a"),
-      (2L, "some other words entirely for the second doc", "b"),
-      (70L, "completely different content about query engines", "b"),
-      (130L, "third window arrival with more text", "a"))
-    rows.toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val gotRows = streaming.StreamReplay.q109(spark, d).collect()
-    val got = gotRows.map(_.toSeq.toVector).toVector.sortBy(_.mkString("|"))
-    val base = streaming.StreamReplay.IngestEpochSec
-    val expected = canon(
-      operators.TextAnalysis.classifierScoresUnsorted(
-          Tables.documents(spark, d).select(col("doc_id"), col("text")))
-        .join(Tables.documents(spark, d).select(col("doc_id"), col("source")),
-          Seq("doc_id"))
-        .select(
-          (((lit(base) + (col("doc_id") % streaming.StreamReplay.IngestCycleMin)
-            * 60) / 3600).cast("long") * 3600000L).as("bucket_ms"),
-          coalesce(col("source"), lit("")).as("source"),
-          (col("mean_e6") >= operators.Pipeline.ClassifierFloorE6)
-            .as("admitted"),
-          col("n_tokens"), col("score_milli"))
-        .groupBy(col("bucket_ms"), col("source"), col("admitted"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-          sum(col("score_milli")).as("sum_score_milli")))
-    assert(got === expected)
-    // structure: docs 0,1,2 land in hour 0; 70 in hour 1; 130 in hour 2
-    assert(gotRows.map(_.getLong(3)).sum === 5L) // every doc counted once
-    assert(gotRows.map(_.getLong(0)).distinct.sorted.toSeq ===
-      Seq(base * 1000L, base * 1000L + 3600000L, base * 1000L + 7200000L))
-    // the null-text doc is admitted with zero tokens
-    val hour0a = gotRows.filter(r =>
-      r.getLong(0) == base * 1000L && r.getString(1) == "a")
-    assert(hour0a.forall(_.getBoolean(2)), "null-text doc must be admitted")
+    TestSpark.withTemp { d =>
+      import spark.implicits._
+      val rows = Seq(
+        (0L, "the quick brown fox jumps over the lazy dog", "a"),
+        (1L, null, "a"),
+        (2L, "some other words entirely for the second doc", "b"),
+        (70L, "completely different content about query engines", "b"),
+        (130L, "third window arrival with more text", "a"))
+      rows.toDF("doc_id", "text", "source")
+        .write.mode("overwrite").parquet(s"$d/documents.parquet")
+      val gotRows = streaming.StreamReplay.q109(spark, d).collect()
+      val got = gotRows.map(_.toSeq.toVector).toVector.sortBy(_.mkString("|"))
+      val base = streaming.StreamReplay.IngestEpochSec
+      val expected = canon(
+        operators.TextAnalysis.classifierScoresUnsorted(
+            Tables.documents(spark, d).select(col("doc_id"), col("text")))
+          .join(Tables.documents(spark, d).select(col("doc_id"), col("source")),
+            Seq("doc_id"))
+          .select(
+            (((lit(base) + (col("doc_id") % streaming.StreamReplay.IngestCycleMin)
+              * 60) / 3600).cast("long") * 3600000L).as("bucket_ms"),
+            coalesce(col("source"), lit("")).as("source"),
+            (col("mean_e6") >= operators.Pipeline.ClassifierFloorE6)
+              .as("admitted"),
+            col("n_tokens"), col("score_milli"))
+          .groupBy(col("bucket_ms"), col("source"), col("admitted"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
+            sum(col("score_milli")).as("sum_score_milli")))
+      assert(got === expected)
+      // structure: docs 0,1,2 land in hour 0; 70 in hour 1; 130 in hour 2
+      assert(gotRows.map(_.getLong(3)).sum === 5L) // every doc counted once
+      assert(gotRows.map(_.getLong(0)).distinct.sorted.toSeq ===
+        Seq(base * 1000L, base * 1000L + 3600000L, base * 1000L + 7200000L))
+      // the null-text doc is admitted with zero tokens
+      val hour0a = gotRows.filter(r =>
+        r.getLong(0) == base * 1000L && r.getString(1) == "a")
+      assert(hour0a.forall(_.getBoolean(2)), "null-text doc must be admitted")
+    }
   }
 
   /** q110 on a planted corpus exercising every dimension of the two-level
@@ -337,26 +340,27 @@ class StreamingSpec extends AnyFunSuite {
     * watermark-bounded, not an all-time index).
     */
   test("q110 streaming funnel rollup: dups collapse per window, gate splits admitted mass") {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-q110-fix").toString
-    val a = "the quick brown fox jumps over the lazy dog"
-    val rows = Seq(
-      (0L, a, "web"), (1L, a, "web"),
-      (2L, Seq.fill(25)("xe").mkString(" "), "web"),
-      (3L, null.asInstanceOf[String], "web"),
-      (70L, a, "web"))
-    rows.toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val base = streaming.StreamReplay.IngestEpochSec * 1000L
-    val got = streaming.StreamReplay.q110(spark, d)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    assert(got.size === 2)
-    // hour 0: 4 arrivals, 3 distinct (a, xe-doc, ""), admitted mass
-    // excludes exactly the rejected doc
-    assert(got(base) === ((4L, 3L, 3L, 2L)))
-    // hour 1: the same text is a fresh distinct doc in its own window
-    assert(got(base + 3600000L) === ((1L, 1L, 1L, 1L)))
+    TestSpark.withTemp { d =>
+      import spark.implicits._
+      val a = "the quick brown fox jumps over the lazy dog"
+      val rows = Seq(
+        (0L, a, "web"), (1L, a, "web"),
+        (2L, Seq.fill(25)("xe").mkString(" "), "web"),
+        (3L, null.asInstanceOf[String], "web"),
+        (70L, a, "web"))
+      rows.toDF("doc_id", "text", "source")
+        .write.mode("overwrite").parquet(s"$d/documents.parquet")
+      val base = streaming.StreamReplay.IngestEpochSec * 1000L
+      val got = streaming.StreamReplay.q110(spark, d)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+      assert(got.size === 2)
+      // hour 0: 4 arrivals, 3 distinct (a, xe-doc, ""), admitted mass
+      // excludes exactly the rejected doc
+      assert(got(base) === ((4L, 3L, 3L, 2L)))
+      // hour 1: the same text is a fresh distinct doc in its own window
+      assert(got(base + 3600000L) === ((1L, 1L, 1L, 1L)))
+    }
   }
 
   /** q107 on a planted corpus: two exact-copy pairs (the higher id of each
@@ -366,30 +370,31 @@ class StreamingSpec extends AnyFunSuite {
     * banded docs × 8 bands; copies COLLIDE on all 8), never arrivals.
     */
   test("q107 streaming near-dup serve: planted copies and a short doc") {
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-q107-fix").toString
-    val a = "the quick brown fox jumps over the lazy dog and runs far away"
-    val c = "completely different content about distributed query engines and shuffles"
-    val rows = Seq(
-      (1L, a, "web"), (2L, a, "web"),
-      (3L, c, "web"), (4L, "hi there", "web"),
-      (5L, c, "web"),
-      (6L, "unique closing text sharing no shingles with anything else", "web"))
-    rows.toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val (q, progress) = TestSpark.progressOf(streaming.StreamReplay.q107(spark, d))
-    val got = q
-      .collect().map(r => r.getLong(0) ->
-        ((r.getBoolean(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))))
-      .toMap
-    assert(got.size === 6)
-    assert(got(1L) === ((false, None)))
-    assert(got(2L) === ((true, Some(1L))))
-    assert(got(3L) === ((false, None)))
-    assert(got(4L) === ((false, None)))
-    assert(got(5L) === ((true, Some(3L))))
-    assert(got(6L) === ((false, None)))
-    assert(stateRows(progress) === 24L)
+    TestSpark.withTemp { d =>
+      import spark.implicits._
+      val a = "the quick brown fox jumps over the lazy dog and runs far away"
+      val c = "completely different content about distributed query engines and shuffles"
+      val rows = Seq(
+        (1L, a, "web"), (2L, a, "web"),
+        (3L, c, "web"), (4L, "hi there", "web"),
+        (5L, c, "web"),
+        (6L, "unique closing text sharing no shingles with anything else", "web"))
+      rows.toDF("doc_id", "text", "source")
+        .write.mode("overwrite").parquet(s"$d/documents.parquet")
+      val (q, progress) = TestSpark.progressOf(streaming.StreamReplay.q107(spark, d))
+      val got = q
+        .collect().map(r => r.getLong(0) ->
+          ((r.getBoolean(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))))
+        .toMap
+      assert(got.size === 6)
+      assert(got(1L) === ((false, None)))
+      assert(got(2L) === ((true, Some(1L))))
+      assert(got(3L) === ((false, None)))
+      assert(got(4L) === ((false, None)))
+      assert(got(5L) === ((true, Some(3L))))
+      assert(got(6L) === ((false, None)))
+      assert(stateRows(progress) === 24L)
+    }
   }
 
   /** q123's two contracts on a planted corpus: (a) serve-equivalence — the
@@ -401,30 +406,30 @@ class StreamingSpec extends AnyFunSuite {
     * store).
     */
   test("q123 streaming ANN index: served top-k equals batch, state rows = cells") {
-    import spark.implicits._
-    import graft.operators.{FlatQuantizer, Similarity}
-    val d = java.nio.file.Files.createTempDirectory("graft-q123-fix").toString
-    val rnd = new scala.util.Random(7)
-    (0L until 60L).map(i =>
-        (i, Array.fill(8)(rnd.nextGaussian().toFloat), 0))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    val (q, progress) = TestSpark.progressOf(streaming.StreamReplay.q123(spark, d))
-    val got = q.collect().toSeq
-    val want = Similarity.q39b(spark, d).collect().toSeq
-    assert(got === want, "served-from-stream-index top-k drifted from batch")
-    assert(got.nonEmpty)
-    // state gauge: rows in the store == distinct cells of the batch
-    // assignment (ids grouped per cell), not 60 arrival rows
-    val base = Tables.embeddings(spark, d)
-      .select(col("vec_id"),
-        graft.functions.vectors.toDouble(col("embedding")).as("v"))
-    val seeds = base.orderBy(col("vec_id")).limit(Similarity.IvfCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    val cells = base.select(FlatQuantizer(seeds).assign(col("v")).as("c"))
-      .distinct().count()
-    assert(stateRows(progress) === cells,
-      s"state rows must equal distinct cells ($cells)")
-    new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
+    TestSpark.withTemp { d =>
+      import spark.implicits._
+      import graft.operators.{FlatQuantizer, Similarity}
+      val rnd = new scala.util.Random(7)
+      (0L until 60L).map(i =>
+          (i, Array.fill(8)(rnd.nextGaussian().toFloat), 0))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      val (q, progress) = TestSpark.progressOf(streaming.StreamReplay.q123(spark, d))
+      val got = q.collect().toSeq
+      val want = Similarity.q39b(spark, d).collect().toSeq
+      assert(got === want, "served-from-stream-index top-k drifted from batch")
+      assert(got.nonEmpty)
+      // state gauge: rows in the store == distinct cells of the batch
+      // assignment (ids grouped per cell), not 60 arrival rows
+      val base = Tables.embeddings(spark, d)
+        .select(col("vec_id"),
+          graft.functions.vectors.toDouble(col("embedding")).as("v"))
+      val seeds = base.orderBy(col("vec_id")).limit(Similarity.IvfCells)
+        .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
+      val cells = base.select(FlatQuantizer(seeds).assign(col("v")).as("c"))
+        .distinct().count()
+      assert(stateRows(progress) === cells,
+        s"state rows must equal distinct cells ($cells)")
+    }
   }
 }

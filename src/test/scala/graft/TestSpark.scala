@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.reflect.io.Directory
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -12,6 +16,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local("graft-test")
+
+  /** `f`'s value over a new directory under `java.io.tmpdir`, deleted with
+    * everything in it when `f` returns or throws: a spec that needs
+    * several directories makes them inside this one.
+    */
+  def withTemp[T](f: String => T): T = {
+    val d = Files.createTempDirectory("graft-test").toString
+    try f(d)
+    finally new Directory(new java.io.File(d)).deleteRecursively()
+  }
 
   /** Jobs started by `body` on this thread, counted by a listener. */
   def jobsOf(body: => Unit): Int = {

@@ -517,27 +517,27 @@ class TextAnalysisSpec extends AnyFunSuite {
     * counted as its characters.
     */
   test("BPE token counts: merged words count symbols, long words count chars") {
-    import spark.implicits._
-    val longWord = "z" * 30
-    val dir = java.nio.file.Files.createTempDirectory("bpe_docs").toString
-    Seq(
-      (1L, "banana banana banana", "en", "web", 20L),
-      (2L, "bandana", "en", "web", 7L),
-      (3L, "aaaa", "en", "web", 4L),
-      (4L, s"banana $longWord", "en", "web", 37L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = TextAnalysis.q140BpeTokenCounts(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the extra "banana" in doc 4 leaves the planted merge chain intact
-    // (banana cnt 4 only strengthens steps 1/2/3/5); 8 merges still end
-    // with banana/bandana/aaaa single-symbol words
-    assert(got(1L) === 3L, "3 x banana -> one symbol each")
-    assert(got(2L) === 1L)
-    assert(got(3L) === 1L)
-    assert(got(4L) === 1L + 30L,
-      "long word must count its characters, merged word one symbol")
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    TestSpark.withTemp { dir =>
+      import spark.implicits._
+      val longWord = "z" * 30
+      Seq(
+        (1L, "banana banana banana", "en", "web", 20L),
+        (2L, "bandana", "en", "web", 7L),
+        (3L, "aaaa", "en", "web", 4L),
+        (4L, s"banana $longWord", "en", "web", 37L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = TextAnalysis.q140BpeTokenCounts(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the extra "banana" in doc 4 leaves the planted merge chain intact
+      // (banana cnt 4 only strengthens steps 1/2/3/5); 8 merges still end
+      // with banana/bandana/aaaa single-symbol words
+      assert(got(1L) === 3L, "3 x banana -> one symbol each")
+      assert(got(2L) === 1L)
+      assert(got(3L) === 1L)
+      assert(got(4L) === 1L + 30L,
+        "long word must count its characters, merged word one symbol")
+    }
   }
 
   /** q142 (round-17 #4): batched merge selection must be EXACTLY the

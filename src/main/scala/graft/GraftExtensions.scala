@@ -42,10 +42,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // declaratively-written cosine folds silently become the native
-    // tight-loop expression (bit-identical; ~10x on the sf0.1 bench)
-    ext.injectOptimizerRule(_ => graft.plans.ReplaceCosineHof)
-
     ext.injectFunction((FunctionIdentifier("simhash64"),
       info("simhash64", "simhash64(array<bigint>) - 64-bit SimHash fingerprint"),
       (args: Seq[Expression]) => SimHash64Expr(args.head)))

@@ -38,7 +38,7 @@ object sketch {
   /** xxhash64 (seed 42, matching the built-in `xxhash64`) of every
     * `[a-z0-9]+` token of the lowercased text, in order, duplicates kept —
     * bit-identical to `transform(cleanTokens(text), xxhash64)` but fully
-    * codegen'd. The HOF form's ArrayFilter/ArrayTransform are
+    * codegen'd. The lambda form's ArrayTransform is
     * CodegenFallback, which drags the WHOLE enclosing projection out of
     * whole-stage codegen into interpreted eval — the dominant cost of the
     * sketch pipelines' cold runs at sf0.1.
@@ -345,11 +345,8 @@ object ShingleHashesExpr {
 }
 
 /** Ordered xxhash64 token hashes of the lowercased text (see
-  * sketch.tokenHashes). Tokens are maximal `[a-z0-9]+` byte runs of the
-  * lowercased string's UTF-8 form — identical to
-  * `split(lower(text), "[^a-z0-9]+")` minus empties (multi-byte UTF-8 units
-  * are all >= 0x80, so they can never join a token run), each hashed with
-  * the built-in xxhash64's seed (42).
+  * sketch.tokenHashes): the [[Tokenizer]]'s tokens, each hashed with the
+  * built-in xxhash64's seed (42).
   */
 case class TokenXxh64Expr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -380,33 +377,18 @@ object TokenXxh64Expr {
   import org.apache.spark.unsafe.Platform
   import org.apache.spark.unsafe.types.UTF8String
 
-  @inline private def isTokenByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-
   def compute(text: UTF8String): ArrayData = {
-    // UTF8String.toLowerCase is exactly the built-in lower()'s semantics
-    val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    var count = 0
-    var i = 0
-    var inTok = false
-    while (i < n) {
-      val t = isTokenByte(bytes(i))
-      if (t && !inTok) count += 1
-      inTok = t
-      i += 1
-    }
-    val out = new Array[Long](count)
+    val bytes = Tokenizer.lowered(text)
+    val out = new Array[Long](Tokenizer.count(bytes))
     var o = 0
-    i = 0
-    while (i < n) {
-      if (isTokenByte(bytes(i))) {
-        val start = i
-        while (i < n && isTokenByte(bytes(i))) i += 1
-        out(o) = XXH64.hashUnsafeBytes(
-          bytes, Platform.BYTE_ARRAY_OFFSET + start, i - start, 42L)
-        o += 1
-      } else i += 1
+    var sp = Tokenizer.next(bytes, 0)
+    while (sp >= 0) {
+      val s = Tokenizer.start(sp)
+      val e = Tokenizer.end(sp)
+      out(o) = XXH64.hashUnsafeBytes(
+        bytes, Platform.BYTE_ARRAY_OFFSET + s, e - s, 42L)
+      o += 1
+      sp = Tokenizer.next(bytes, e)
     }
     new GenericArrayData(out)
   }
@@ -472,28 +454,23 @@ object TokenSetCountsExpr {
       masks: java.util.HashMap[java.lang.Long, java.lang.Long],
       nSets: Int): ArrayData = {
     val counts = new Array[Long](nSets)
-    val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    var i = 0
-    while (i < n) {
-      val b = bytes(i)
-      if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) {
-        val start = i
-        while (i < n && {
-          val c = bytes(i); (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-        }) i += 1
-        val h = XXH64.hashUnsafeBytes(
-          bytes, Platform.BYTE_ARRAY_OFFSET + start, i - start, 42L)
-        val mask = masks.get(h)
-        if (mask != null) {
-          var m = mask.longValue()
-          while (m != 0L) {
-            val s = java.lang.Long.numberOfTrailingZeros(m)
-            counts(s) += 1
-            m &= m - 1
-          }
+    val bytes = Tokenizer.lowered(text)
+    var sp = Tokenizer.next(bytes, 0)
+    while (sp >= 0) {
+      val start = Tokenizer.start(sp)
+      val end = Tokenizer.end(sp)
+      val h = XXH64.hashUnsafeBytes(
+        bytes, Platform.BYTE_ARRAY_OFFSET + start, end - start, 42L)
+      val mask = masks.get(h)
+      if (mask != null) {
+        var m = mask.longValue()
+        while (m != 0L) {
+          val s = java.lang.Long.numberOfTrailingZeros(m)
+          counts(s) += 1
+          m &= m - 1
         }
-      } else i += 1
+      }
+      sp = Tokenizer.next(bytes, end)
     }
     new GenericArrayData(counts)
   }
@@ -696,11 +673,9 @@ object MinHashBandKeysExpr {
   }
 }
 
-/** See sketch.mdBandKeys. Tokenization is byte-identical to TokenXxh64Expr's
-  * (maximal `[a-z0-9]+` runs of the lowercased UTF-8 bytes, i.e. DuckDB's
-  * `list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-  * t -> t <> '')`); a shingle string is n consecutive tokens joined with
-  * single spaces, matching `array_to_string(list_slice(tk, i+1, i+n), ' ')`.
+/** See sketch.mdBandKeys. The shingle strings are [[WordNgramsExpr]]'s
+  * n-grams of the [[Tokenizer]]'s tokens (n consecutive tokens joined with
+  * single spaces, DuckDB's `array_to_string(list_slice(tk, i+1, i+n), ' ')`).
   */
 case class MdBandKeysExpr(child: Expression, n: Int, bands: Int, rows: Int)
     extends UnaryExpression {
@@ -733,59 +708,40 @@ case class MdBandKeysExpr(child: Expression, n: Int, bands: Int, rows: Int)
 object MdBandKeysExpr {
   import org.apache.spark.unsafe.types.UTF8String
 
-  private val mdTl: ThreadLocal[java.security.MessageDigest] =
+  /** The md5 digest each thread draws with (this and MdWeightScoreExpr). */
+  private[expressions] val md5: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
-  @inline private def isTokenByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
+  /** The md5 draw of what was fed to `md`: the digest's first 15 hex
+    * nibbles (first 8 bytes big-endian, high 60 bits) as an integer, i.e.
+    * `CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`.
+    */
+  private[expressions] def draw60(md: java.security.MessageDigest): Long = {
+    val d = md.digest()
+    (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
+      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
+      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
+  }
 
   def compute(text: UTF8String, n: Int, bands: Int, rows: Int): ArrayData = {
-    val bytes = text.toLowerCase.getBytes
-    val len = bytes.length
-    val starts = new scala.collection.mutable.ArrayBuffer[Int]
-    val ends = new scala.collection.mutable.ArrayBuffer[Int]
-    var i = 0
-    while (i < len) {
-      if (isTokenByte(bytes(i))) {
-        val s = i
-        while (i < len && isTokenByte(bytes(i))) i += 1
-        starts += s
-        ends += i
-      } else i += 1
-    }
-    val m = starts.length
-    if (m < n) return new GenericArrayData(Array.empty[AnyRef])
+    val bytes = Tokenizer.lowered(text)
+    val spans = Tokenizer.spans(bytes)
+    if (spans.length < n) return new GenericArrayData(Array.empty[AnyRef])
     val draws = bands * rows
     // the draw salt "j:" as ASCII bytes, built once per call
     val prefixes = Array.tabulate(draws)(j => (j.toString + ":").getBytes)
     val mins = Array.fill(draws)(Long.MaxValue)
-    val md = mdTl.get()
+    val md = md5.get()
     var s0 = 0
-    while (s0 <= m - n) {
-      var shLen = n - 1
-      var t = 0
-      while (t < n) { shLen += ends(s0 + t) - starts(s0 + t); t += 1 }
-      val sh = new Array[Byte](shLen)
-      var o = 0
-      t = 0
-      while (t < n) {
-        if (t > 0) { sh(o) = ' '; o += 1 }
-        val l = ends(s0 + t) - starts(s0 + t)
-        System.arraycopy(bytes, starts(s0 + t), sh, o, l)
-        o += l
-        t += 1
-      }
+    while (s0 <= spans.length - n) {
+      val sh = WordNgramsExpr.gram(bytes, spans, s0, n)
       var j = 0
       while (j < draws) {
         md.reset()
         md.update(prefixes(j))
         md.update(sh)
-        val d = md.digest()
-        // first 15 hex nibbles = first 8 bytes big-endian, high 60 bits
-        val v = (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-          ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-          ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-          ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
+        val v = draw60(md)
         if (v < mins(j)) mins(j) = v
         j += 1
       }
@@ -805,10 +761,10 @@ object MdBandKeysExpr {
   }
 }
 
-/** See sketch.mdWeightScore. Tokenization is MdBandKeysExpr's (byte-identical
-  * to the `cleanTokens` regexp form); the weight draw is the q94 idiom —
-  * md5 of the raw token bytes, first 15 hex nibbles as a 60-bit integer
-  * (= `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`), % 2001 − 1000.
+/** See sketch.mdWeightScore. The tokens are the [[Tokenizer]]'s; the
+  * weight draw is the q94 idiom — MdBandKeysExpr's md5 draw of the raw
+  * token bytes (= `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`),
+  * % 2001 − 1000.
   */
 case class MdWeightScoreExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = MdWeightScoreExpr.Schema
@@ -841,33 +797,20 @@ object MdWeightScoreExpr {
     StructField("n_tokens", LongType, nullable = false),
     StructField("score_milli", LongType, nullable = false)))
 
-  private val mdTl: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  @inline private def isTokenByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-
   def compute(text: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val bytes = text.toLowerCase.getBytes
-    val len = bytes.length
-    val md = mdTl.get()
+    val bytes = Tokenizer.lowered(text)
+    val md = MdBandKeysExpr.md5.get()
     var nTokens = 0L
     var score = 0L
-    var i = 0
-    while (i < len) {
-      if (isTokenByte(bytes(i))) {
-        val s = i
-        while (i < len && isTokenByte(bytes(i))) i += 1
-        md.reset()
-        md.update(bytes, s, i - s)
-        val d = md.digest()
-        val v = (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-          ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-          ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-          ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
-        score += v % 2001L - 1000L
-        nTokens += 1L
-      } else i += 1
+    var sp = Tokenizer.next(bytes, 0)
+    while (sp >= 0) {
+      val s = Tokenizer.start(sp)
+      val e = Tokenizer.end(sp)
+      md.reset()
+      md.update(bytes, s, e - s)
+      score += MdBandKeysExpr.draw60(md) % 2001L - 1000L
+      nTokens += 1L
+      sp = Tokenizer.next(bytes, e)
     }
     org.apache.spark.sql.catalyst.InternalRow(nTokens, score)
   }

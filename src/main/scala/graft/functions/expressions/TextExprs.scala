@@ -7,24 +7,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Native text expressions (with codegen) for the n-gram hot paths.
+/** Native text expressions (with codegen): the engine's one tokenizer, the
+  * word n-grams built on it, and the BPE merge chain.
   *
-  * The declarative word-ngram form (`transform(sequence(...), i ->
-  * concat_ws(" ", slice(toks, i+1, n)))` over cleanTokens) pays interpreted
-  * lambda dispatch per gram AND drags its whole projection out of
-  * whole-stage codegen (ArrayTransform/ArrayFilter are CodegenFallback).
-  * WordNgramsExpr produces the identical array in one pass over the
-  * lowercased bytes — equality with the HOF form is asserted in
-  * TextAnalysisSpec.
+  * `graft.functions.text.cleanTokens` and `text.wordNgrams` are
+  * [[WordNgramsExpr]]: their lambda forms are CodegenFallback (ArrayFilter,
+  * ArrayTransform) and drag the whole projection out of whole-stage
+  * codegen, so those forms live only in the specs, as the reference the
+  * native ones are checked against (TextAnalysisSpec, PropertySpec).
   */
 object textnative {
-
-  /** Space-joined word n-grams of the lowercased text's `[a-z0-9]+` tokens;
-    * docs with fewer than n tokens yield an empty array — bit-identical to
-    * graft.functions.text.wordNgrams.
-    */
-  def wordNgrams(text: Column, n: Int): Column =
-    ColumnBridge.column(WordNgramsExpr(ColumnBridge.expression(text), n))
 
   /** An ordered CHAIN of BPE merge steps in one expression — semantically
     * identical to folding [[BpeMergeStepExpr.compute]] left-to-right over
@@ -39,6 +31,66 @@ object textnative {
       BpeMergeAllExpr(ColumnBridge.expression(syms), merges))
 }
 
+/** The engine's one tokenizer rule: the reference's word normalization
+  * (mapreduce.c:50-61 — lowercase, keep `[a-z0-9]`) generalized past the
+  * first token. Tokens are the maximal `[a-z0-9]` byte runs of the text's
+  * lowercased UTF-8 bytes. `UTF8String.toLowerCase` gives the built-in
+  * `lower()`'s result (PropertySpec checks it on multi-byte text), and
+  * multi-byte UTF-8 units are all >= 0x80, so they never join a run: the
+  * tokens are `split(lower(text), "[^a-z0-9]+")` minus its empty edges
+  * (and DuckDB's `list_filter(regexp_split_to_array(lower(text),
+  * '[^a-z0-9]+'), t -> t <> '')`).
+  *
+  * Every native text expression walks its tokens with [[next]], which packs
+  * a token's span into one long: no per-token allocation or closure call.
+  */
+object Tokenizer {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** The lowercased UTF-8 bytes the tokens are runs of. */
+  def lowered(text: UTF8String): Array[Byte] = text.toLowerCase.getBytes
+
+  /** The first token at or after byte `from`: its start in the high 32
+    * bits, its (exclusive) end in the low 32; -1 when there is none.
+    */
+  def next(bytes: Array[Byte], from: Int): Long = {
+    val len = bytes.length
+    var i = from
+    while (i < len && !isTokenByte(bytes(i))) i += 1
+    if (i == len) return -1L
+    val s = i
+    while (i < len && isTokenByte(bytes(i))) i += 1
+    (s.toLong << 32) | i
+  }
+
+  @inline def start(span: Long): Int = (span >>> 32).toInt
+  @inline def end(span: Long): Int = span.toInt
+
+  /** The number of tokens. */
+  def count(bytes: Array[Byte]): Int = {
+    var c = 0
+    var sp = next(bytes, 0)
+    while (sp >= 0) { c += 1; sp = next(bytes, end(sp)) }
+    c
+  }
+
+  /** Every token's packed span, in order. */
+  def spans(bytes: Array[Byte]): Array[Long] = {
+    val out = new Array[Long](count(bytes))
+    var k = 0
+    var sp = next(bytes, 0)
+    while (sp >= 0) { out(k) = sp; k += 1; sp = next(bytes, end(sp)) }
+    out
+  }
+
+  @inline private def isTokenByte(b: Byte): Boolean =
+    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
+}
+
+/** Space-joined word n-grams of the text's tokens ([[Tokenizer]]), in
+  * order; docs with fewer than n tokens yield an empty array. n = 1 is the
+  * token list itself (`text.cleanTokens`).
+  */
 case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, "ngram width must be >= 1")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -66,56 +118,41 @@ case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
 
 object WordNgramsExpr {
   import org.apache.spark.unsafe.types.UTF8String
-
-  @inline private def isTokenByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
+  import Tokenizer.{end, start}
 
   def compute(text: UTF8String, n: Int): ArrayData = {
-    val bytes = text.toLowerCase.getBytes
-    val len = bytes.length
-    // token [start, end) offsets into the lowercased bytes
-    var count = 0
-    var i = 0
-    var inTok = false
-    while (i < len) {
-      val t = isTokenByte(bytes(i))
-      if (t && !inTok) count += 1
-      inTok = t
-      i += 1
-    }
-    if (count < n) return new GenericArrayData(Array.empty[AnyRef])
-    val starts = new Array[Int](count)
-    val ends = new Array[Int](count)
-    var k = 0
-    i = 0
-    while (i < len) {
-      if (isTokenByte(bytes(i))) {
-        starts(k) = i
-        while (i < len && isTokenByte(bytes(i))) i += 1
-        ends(k) = i
-        k += 1
-      } else i += 1
-    }
-    val out = new Array[AnyRef](count - n + 1)
+    val bytes = Tokenizer.lowered(text)
+    val spans = Tokenizer.spans(bytes)
+    if (spans.length < n) return new GenericArrayData(Array.empty[AnyRef])
+    val out = new Array[AnyRef](spans.length - n + 1)
     var g = 0
-    while (g <= count - n) {
-      var glen = n - 1 // the joining spaces
-      var j = g
-      while (j < g + n) { glen += ends(j) - starts(j); j += 1 }
-      val buf = new Array[Byte](glen)
-      var o = 0
-      j = g
-      while (j < g + n) {
-        if (j > g) { buf(o) = ' '; o += 1 }
-        val l = ends(j) - starts(j)
-        System.arraycopy(bytes, starts(j), buf, o, l)
-        o += l
-        j += 1
-      }
-      out(g) = UTF8String.fromBytes(buf)
+    while (g < out.length) {
+      out(g) = UTF8String.fromBytes(gram(bytes, spans, g, n))
       g += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** The bytes of the n-gram at token g: tokens g until g + n of `spans`,
+    * joined by single spaces.
+    */
+  private[expressions] def gram(
+      bytes: Array[Byte], spans: Array[Long], g: Int, n: Int): Array[Byte] = {
+    var len = n - 1 // the joining spaces
+    var j = g
+    while (j < g + n) { len += end(spans(j)) - start(spans(j)); j += 1 }
+    val buf = new Array[Byte](len)
+    var o = 0
+    j = g
+    while (j < g + n) {
+      if (j > g) { buf(o) = ' '; o += 1 }
+      val s = start(spans(j))
+      val l = end(spans(j)) - s
+      System.arraycopy(bytes, s, buf, o, l)
+      o += l
+      j += 1
+    }
+    buf
   }
 }
 

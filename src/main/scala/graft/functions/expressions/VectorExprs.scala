@@ -83,8 +83,8 @@ case class CosineSimExpr(left: Expression, right: Expression)
         TypeCheckResult.TypeCheckFailure(s"cosine_sim needs array<double>, got $l, $r")
     }
 
-  // length mismatch -> null, mirroring the HOF form (zip_with pads with
-  // null, which poisons the fold) so ReplaceCosineHof is semantics-preserving
+  // length mismatch -> null, as in a zip_with/aggregate fold (zip_with pads
+  // with null, which poisons the fold)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val l = a.asInstanceOf[ArrayData]; val r = b.asInstanceOf[ArrayData]
     if (l.numElements() != r.numElements()) null

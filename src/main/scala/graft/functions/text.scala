@@ -1,12 +1,17 @@
 package graft.functions
 
+import graft.functions.expressions.WordNgramsExpr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Text-normalization and analysis column functions.
   *
-  * All pure compositions of built-in (codegen'd) expressions — no UDFs in the
-  * hot path, so whole-stage codegen and parquet pushdown stay intact.
+  * Compositions of built-in and native (codegen'd) expressions — no UDFs in
+  * the hot path, so whole-stage codegen and parquet pushdown stay intact.
+  * Tokens are the native tokenizer's
+  * ([[graft.functions.expressions.Tokenizer]]): the maximal `[a-z0-9]` runs
+  * of the lowercased text.
   */
 object text {
 
@@ -18,17 +23,20 @@ object text {
   def normalizeWord(line: Column): Column =
     regexp_extract(lower(line), "^[a-z0-9]+", 0)
 
-  /** Generalized tokenizer (SURVEY §2.9 Q19 — P2 generalized to explode):
-    * lowercase, split on non-alphanumeric runs. May contain empty tokens at
-    * the array edges; callers filter (`t =!= ""`), keeping raw positions
-    * meaningful (mirrors the reference keeping line numbers of dropped lines).
+  /** Positional tokenizer (SURVEY §2.9 Q19 — P2 generalized to explode):
+    * lowercase, split on non-alphanumeric runs, empty tokens kept at the
+    * array edges. Only the inverted index (q01, q01b, q02) reads it: its
+    * posting positions count the leading empty token (mirroring the
+    * reference keeping line numbers of dropped lines). Everything else
+    * reads [[cleanTokens]].
     */
   def tokens(text: Column): Column =
     split(lower(text), "[^a-z0-9]+")
 
-  /** Non-empty token list. */
-  def cleanTokens(text: Column): Column =
-    filter(tokens(text), t => t =!= lit(""))
+  /** The non-empty tokens, in order — `tokens` minus its empty edges, built
+    * natively (the filter-lambda form is CodegenFallback).
+    */
+  def cleanTokens(text: Column): Column = wordNgrams(text, 1)
 
   /** Token count (non-empty tokens), as long. Counted via the native
     * tokenizer expression — `size(filter(...))` would drag the projection
@@ -37,17 +45,18 @@ object text {
   def tokenCount(text: Column): Column =
     size(expressions.sketch.tokenHashes(text)).cast("long")
 
-  /** Word-level n-grams over the non-empty token list, joined with spaces.
-    * Docs shorter than n yield an empty array (the sequence() bound would
-    * otherwise descend into negative slice starts and throw).
+  /** Word-level n-grams over the non-empty token list, joined with single
+    * spaces, in order. Docs shorter than n tokens yield an empty array.
     */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val toks = cleanTokens(text)
-    val grams = transform(
-      sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-    when(size(toks) >= n, grams).otherwise(typedLit(Array.empty[String]))
-  }
+  def wordNgrams(text: Column, n: Int): Column =
+    ColumnBridge.column(WordNgramsExpr(ColumnBridge.expression(text), n))
+
+  /** The summed length of the tokens: the count of `[a-z0-9]` characters of
+    * lower(text), since the tokens are exactly its maximal `[a-z0-9]` runs —
+    * a codegen'd regexp count instead of a fold over the token list.
+    */
+  def tokenChars(text: Column): Column =
+    length(regexp_replace(lower(text), "[^a-z0-9]", ""))
 
   /** BPE-style pre-tokenization pattern (contractions, letter runs, digit
     * runs, punctuation runs, each with optional leading space) — the
@@ -150,14 +159,10 @@ object text {
     */
   def qualitySignals(text: Column): Seq[(String, Column)] = {
     val nTok = greatest(tokenCount(text), lit(1))
-    // sum of token lengths == count of [a-z0-9] chars of lower(text)
-    // (tokens ARE the maximal [a-z0-9] runs of lower(text)) — a codegen'd
-    // regexp count instead of an interpreted aggregate-HOF fold
-    val tokenChars = length(regexp_replace(lower(text), "[^a-z0-9]", ""))
     Seq(
       "n_chars" -> length(text).cast("long"),
       "n_tokens" -> tokenCount(text),
-      "mean_token_len" -> round(tokenChars.cast("double") / nTok, 4),
+      "mean_token_len" -> round(tokenChars(text).cast("double") / nTok, 4),
       "alpha_ratio" -> round(alphaRatio(text), 4),
       "stopword_ratio" -> tokenSetRatio(text, stopwords("en")))
   }

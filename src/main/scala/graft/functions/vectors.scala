@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Dense-vector column functions over `ARRAY<FLOAT|DOUBLE>` columns.
   *
-  * Pure higher-order built-ins (`zip_with` + `aggregate`) — codegen'd, no
-  * UDF, no driver-side math. Inputs are cast to `array<double>` so the fold
+  * Pure higher-order built-ins (`zip_with` + `aggregate`) — no UDF, no
+  * driver-side math. Inputs are cast to `array<double>` so the fold
   * order and precision are identical to the DuckDB oracle's
   * `CAST(embedding AS DOUBLE[])` path.
   */
@@ -17,12 +17,4 @@ object vectors {
   /** Sequential-fold dot product. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; 0-norm inputs yield NULL (division by zero → null
-    * under ANSI-off, filtered by callers).
-    */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
 }

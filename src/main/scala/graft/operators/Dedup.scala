@@ -56,9 +56,9 @@ object Dedup {
     * size()-filter here — it would be pushed below the exchange and
     * re-evaluate the whole shingle expression in the (serial) scan stage;
     * docs with no shingles get a null band-key array, which explode drops.
-    * Tokenize+hash+chain fully native: the cleanTokens HOF form is
-    * CodegenFallback and de-optimizes the whole projection (equality with
-    * the HOF form asserted in DedupSpec).
+    * Tokenize+hash+chain fully native: hashing the token list through an
+    * xxhash64 lambda is CodegenFallback and de-optimizes the whole
+    * projection (equality with that lambda form asserted in DedupSpec).
     */
   private def shingledDocs(docs: DataFrame): DataFrame = {
     val cores = docs.sparkSession.sparkContext.defaultParallelism
@@ -196,8 +196,7 @@ object Dedup {
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(
         col("doc_id"),
-        array_distinct(graft.functions.expressions.textnative
-          .wordNgrams(col("text"), 3)).as("g"))
+        array_distinct(graft.functions.text.wordNgrams(col("text"), 3)).as("g"))
     val probes = grams.filter(col("doc_id") < 5)
       .select(col("doc_id").as("probe_id"), col("g").as("pg"))
     grams.crossJoin(broadcast(probes))
@@ -961,8 +960,7 @@ object Dedup {
     // distinct STRING 3-shingles — the md5-able twin of the production
     // xxhash64 shingles (q23's oracle-proven construction)
     val sh = sample.select(col("doc_id"),
-        array_distinct(graft.functions.expressions.textnative
-          .wordNgrams(col("text"), 3)).as("shs"))
+        array_distinct(graft.functions.text.wordNgrams(col("text"), 3)).as("shs"))
       .filter(size(col("shs")) > 0)
       .transform(Materialize(_))
     // 28-bit shingle keys + md5-derived (a_i, b_i) family — plan literals

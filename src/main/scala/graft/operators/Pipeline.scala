@@ -712,8 +712,7 @@ object Pipeline {
 
   def decontaminate(docs: DataFrame, evalEvery: Long): DataFrame = {
     val grams = docs.select(col("doc_id"),
-      array_distinct(graft.functions.expressions.textnative
-        .wordNgrams(col("text"), 3)).as("g"))
+      array_distinct(graft.functions.text.wordNgrams(col("text"), 3)).as("g"))
     val evalGrams = grams.filter(col("doc_id") % evalEvery === 0)
       .select(explode(col("g")).as("gram")).distinct()
       .withColumn("hit", lit(1))
@@ -766,8 +765,7 @@ object Pipeline {
     // compute riding the scan stage (identity on splittable input)
     val grams = Tables.spread(Tables.documents(spark, dir), col("doc_id"))
       .select(col("doc_id"),
-      array_distinct(graft.functions.expressions.textnative
-        .wordNgrams(col("text"), 3)).as("g"))
+        array_distinct(graft.functions.text.wordNgrams(col("text"), 3)).as("g"))
     val evalGrams = grams.filter(col("doc_id") % EvalEvery === 0)
       .select(explode(col("g")).as("gram")).distinct()
     // own treeAggregate, not stat.bloomFilter: same inserts (putString hashes

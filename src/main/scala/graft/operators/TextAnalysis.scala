@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 /** Text-analysis operators over `documents` (SURVEY §2.9 Q19 + the
   * LLM-pipeline text battery): token/ngram frequency, quality scoring,
   * language ID. Tokenization is the reference's P2 normalization generalized
-  * to explode (lower + split on non-alnum) — all built-in expressions, no
-  * UDFs, so the projections stay inside whole-stage codegen and the only
+  * to every `[a-z0-9]` run of the lowercased text: `text.cleanTokens` and
+  * `text.wordNgrams`, native codegen'd expressions — no UDFs and no
+  * lambdas, so the projections stay inside whole-stage codegen and the only
   * shuffle is the frequency group-by.
   */
 object TextAnalysis {
@@ -25,15 +26,12 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("token"))
       .limit(100)
 
-  /** Q19b: word-trigram frequency top-100 — same shape over the native
-    * n-gram expression (bit-identical to text.wordNgrams, asserted in
-    * TextAnalysisSpec; the HOF form is CodegenFallback).
+  /** Q19b: word-trigram frequency top-100 — same shape over the word
+    * n-grams.
     */
   def q19Ngrams(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(
-        graft.functions.expressions.textnative.wordNgrams(col("text"), 3))
-        .as("gram"))
+      .select(explode(text.wordNgrams(col("text"), 3)).as("gram"))
       .groupBy(col("gram"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("gram"))
@@ -145,8 +143,7 @@ object TextAnalysis {
     val lt = lower(t)
     val nWords = text.tokenCount(t)
     val nw = greatest(nWords, lit(1L))
-    val tokenChars = length(regexp_replace(lt, "[^a-z0-9]", ""))
-    val meanWl = round(tokenChars.cast("double") / nw, 4)
+    val meanWl = round(text.tokenChars(t).cast("double") / nw, 4)
     // symbols: '#' + the one-char ellipsis + non-overlapping '...' runs
     val symbols = regexp_count(t, lit("#")) +
       regexp_count(t, lit("…")) +
@@ -315,16 +312,14 @@ object TextAnalysis {
     // (total = sum of counts, distinct = group count, top = max count) —
     // a separate per-row branch would tokenize the corpus a second time
     val tokStats = docs
-      .select(col("doc_id"), explode(
-        graft.functions.expressions.textnative.wordNgrams(col("text"), 1)).as("t"))
+      .select(col("doc_id"), explode(text.cleanTokens(col("text"))).as("t"))
       .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_distinct"),
         max(col("c")).as("top_cnt"))
     // the 2-gram repeat signal is inherently array-local: one per-row pass
     val gramStats = docs
-      .select(col("doc_id"),
-        graft.functions.expressions.textnative.wordNgrams(col("text"), 2).as("g2"))
+      .select(col("doc_id"), text.wordNgrams(col("text"), 2).as("g2"))
       .filter(size(col("g2")) > 0)
       .select(col("doc_id"),
         (lit(1.0) - size(array_distinct(col("g2"))).cast("double") / size(col("g2")))
@@ -351,9 +346,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val tf = docs
-      .select(col("doc_id"),
-        explode(graft.functions.expressions.textnative.wordNgrams(col("text"), 1))
-          .as("term"))
+      .select(col("doc_id"), explode(text.cleanTokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tc"))
     // doc totals and document frequency as WINDOWS over the one tf
     // aggregate — separate groupBy branches would re-scan and re-tokenize
@@ -387,9 +380,7 @@ object TextAnalysis {
   def q64(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select(explode(
-        graft.functions.expressions.textnative.wordNgrams(col("text"), 1))
-        .as("token"))
+      .select(explode(text.cleanTokens(col("text"))).as("token"))
       .as[String]
       .select(new graft.functions.HeavyHittersAggregator(HeavyHittersK).toColumn)
       .toDF("hh")
@@ -418,9 +409,7 @@ object TextAnalysis {
   def q65(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select(explode(
-        graft.functions.expressions.textnative.wordNgrams(col("text"), 1))
-        .as("token"))
+      .select(explode(text.cleanTokens(col("text"))).as("token"))
       .as[String]
       .select(new graft.functions.CountMinAggregator(
         CmsProbes, CmsEps, CmsConfidence, CmsSeed).toColumn)
@@ -451,8 +440,7 @@ object TextAnalysis {
   /** The q81 core over any (doc_id, text) frame with a parametrized k. */
   def oovRate(docs: DataFrame, k: Int): DataFrame = {
     val toks = docs.select(col("doc_id"),
-        explode(graft.functions.text.tokens(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
+        explode(text.cleanTokens(col("text"))).as("tok"))
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok")).limit(k)
       .select(col("tok"), lit(true).as("in_vocab"))
@@ -516,7 +504,7 @@ object TextAnalysis {
   def classifierScoresUnsorted(docs: DataFrame): DataFrame = {
     val per = docs
       .select(col("doc_id"),
-        explode(graft.functions.text.cleanTokens(col("text"))).as("tok"))
+        explode(text.cleanTokens(col("text"))).as("tok"))
       .select(col("doc_id"), featWeight(col("tok")).as("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("w")).as("score_milli"))
@@ -712,8 +700,7 @@ object TextAnalysis {
   /** The q118 core over any (doc_id, text) frame — specs run it directly. */
   def tokenDrift(docs: DataFrame): DataFrame = {
     val toks = docs.filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), explode(text.tokens(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
+      .select(col("doc_id"), explode(text.cleanTokens(col("text"))).as("tok"))
       .select(col("tok"),
         (col("doc_id") % Pipeline.DriftHoldout =!=
           Pipeline.DriftHoldout - 1).as("is_prev"))

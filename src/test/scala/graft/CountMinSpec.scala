@@ -14,8 +14,7 @@ class CountMinSpec extends AnyFunSuite {
 
   private def exactCounts: Map[String, Long] =
     Tables.documents(spark, dir)
-      .select(explode(graft.functions.expressions.textnative
-        .wordNgrams(col("text"), 1)).as("t"))
+      .select(explode(graft.functions.text.cleanTokens(col("text"))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -43,8 +42,7 @@ class CountMinSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val reshuffled = Tables.documents(spark, dir)
       .repartition(7, col("lang"))
-      .select(explode(graft.functions.expressions.textnative
-        .wordNgrams(col("text"), 1)).as("token"))
+      .select(explode(graft.functions.text.cleanTokens(col("text"))).as("token"))
       .as[String]
       .select(new graft.functions.CountMinAggregator(
         TextAnalysis.CmsProbes, TextAnalysis.CmsEps,

@@ -286,7 +286,7 @@ class DedupSpec extends AnyFunSuite {
     */
   test("native tokenHashes/shingleFromHashes equal the HOF forms") {
     import org.apache.spark.sql.functions._
-    import graft.functions.{expressions => fe, text}
+    import graft.functions.{expressions => fe}
     import spark.implicits._
     val edge = Seq(
       (9001L, ""), (9002L, "   "), (9003L, "ONE"), (9004L, "a-b_c 42x"),
@@ -298,9 +298,9 @@ class DedupSpec extends AnyFunSuite {
     val rows = docs.select(
       col("doc_id"),
       fe.sketch.tokenHashes(col("text")).as("native_th"),
-      transform(text.cleanTokens(col("text")), t => xxhash64(t)).as("hof_th"),
+      transform(TestSpark.lambdaTokens(col("text")), t => xxhash64(t)).as("hof_th"),
       fe.sketch.shingleFromHashes(fe.sketch.tokenHashes(col("text")), 3).as("native_sh"),
-      fe.sketch.shingleHashes(text.cleanTokens(col("text")), 3).as("hof_sh"))
+      fe.sketch.shingleHashes(TestSpark.lambdaTokens(col("text")), 3).as("hof_sh"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1) === r.getSeq[Long](2),

@@ -83,21 +83,6 @@ class ExtensionsSpec extends AnyFunSuite {
     Seq("alpha", "beta", "gamma").foreach(s => assert(viaSql(s), s))
   }
 
-  test("optimizer rule rewrites the HOF cosine fold to CosineSimExpr") {
-    import graft.functions.vectors
-    // arrays derived from a column so constant folding can't collapse the plan
-    val df = spark.range(1).select(
-      transform(sequence(lit(1), lit(3)),
-        i => (col("id") + i).cast("double")).as("a"),
-      transform(sequence(lit(1), lit(3)),
-        i => (col("id") + lit(4) - i).cast("double")).as("b"))
-      .select(vectors.cosine(col("a"), col("b")).as("c"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("cosinesimexpr") ||
-      optimized.contains("CosineSimExpr"), optimized)
-    assert(math.abs(df.collect().head.getDouble(0) - 10.0 / 14.0) < 1e-12)
-  }
-
   test("HOF cosine and native agree on null/mismatched-length inputs") {
     import spark.implicits._
     val df = Seq(

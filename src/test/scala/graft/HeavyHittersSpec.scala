@@ -15,8 +15,7 @@ class HeavyHittersSpec extends AnyFunSuite {
 
   test("sketch contains every true heavy hitter within the MG error bound") {
     val exact = Tables.documents(spark, dir)
-      .select(explode(graft.functions.expressions.textnative
-        .wordNgrams(col("text"), 1)).as("t"))
+      .select(explode(graft.functions.text.cleanTokens(col("text"))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = exact.values.sum

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Relational, Similarity}
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, Lower, ScalaUDF, StringSplit}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -497,10 +497,24 @@ class PlanSpec extends AnyFunSuite {
   /** The one registered query that reads the reference corpus, not `dir`. */
   private val ReferenceIndex = "q00_reference_index"
 
-  /** Plan lint: no registered query plans a cross product or a per-row
-    * ScalaUDF — neither in its returned frame's plan nor in any plan its
-    * construction executes (eager checkpoints, collects, drains), which
-    * the returned frame's plan stops short of.
+  /** Every lambda token list in `p`: an ArrayFilter over a split of
+    * lower(...). The token list is `text.cleanTokens`, the native one; the
+    * lambda form is CodegenFallback and drags its projection out of
+    * whole-stage codegen.
+    */
+  private def hofTokenLists(p: SparkPlan): Seq[Expression] =
+    p.collectWithSubqueries { case n =>
+      n.expressions.flatMap(_.collect(hofTokenList))
+    }.flatten
+
+  private val hofTokenList: PartialFunction[Expression, Expression] = {
+    case f @ ArrayFilter(StringSplit(_: Lower, _, _), _) => f
+  }
+
+  /** Plan lint: no registered query plans a cross product, a per-row
+    * ScalaUDF or a lambda token list — neither in its returned frame's
+    * plan nor in any plan its construction executes (eager checkpoints,
+    * collects, drains), which the returned frame's plan stops short of.
     */
   private def lint(q: QueryDef): Unit = {
     val (df, built) = TestSpark.plansOf(q.build(spark, dir))
@@ -508,6 +522,8 @@ class PlanSpec extends AnyFunSuite {
       assert(p.collectWithSubqueries { case c: CartesianProductExec => c }.isEmpty,
         s"${q.name}: CartesianProduct\n${p.treeString}")
       assert(udfs(p).isEmpty, s"${q.name}: ScalaUDF ${udfs(p).mkString(", ")}")
+      assert(hofTokenLists(p).isEmpty,
+        s"${q.name}: lambda token list ${hofTokenLists(p).mkString(", ")}")
     }
   }
 

@@ -24,8 +24,13 @@ class PropertySpec extends AnyFunSuite {
 
   private val anyString: Gen[String] =
     Gen.listOf(Gen.frequency(
-      8 -> Gen.alphaNumChar,
-      2 -> Gen.oneOf(' ', '\t', '\r', '.', ',', '!', 'é', 'ß', '中', '﻿')))
+      8 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf(" ", "\t", "\r", "\n", ".", ",", "!", "é", "ß", "中",
+        "\uFEFF",
+        "\u212A", // KELVIN SIGN: lowercases to ASCII 'k', joining a token
+        "\u0130", // dotted capital I: lowercases to "i" + U+0307
+        "\u0301", // a combining mark
+        "\uD83D\uDE00"))) // an astral-plane character (a surrogate pair)
       .map(_.mkString)
 
   test("normalization model: idempotent, lowercase-alnum prefix, length-bounded") {
@@ -91,14 +96,20 @@ class PropertySpec extends AnyFunSuite {
   }
 
   /** Plain-Scala tokenizer model shared by the native-expression properties
-    * below: maximal [a-z0-9]+ runs of the (Java) lowercased string. For the
-    * generator's character set Java and UTF8String lowercasing agree
-    * (divergences like dotted-İ need locale-special characters the
-    * generator doesn't emit; UTF8String parity on those is covered by the
-    * fixture-edge tests in DedupSpec/TextAnalysisSpec).
+    * below: maximal [a-z0-9]+ runs of the (Java) lowercased string. The
+    * generator's multi-byte characters (KELVIN SIGN, dotted capital I, a
+    * combining mark, a surrogate pair) are where a byte-level tokenizer
+    * could drift from this model.
     */
   private def modelTokens(s: String): Seq[String] =
     s.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+
+  /** `CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`, from the hex digest. */
+  private def md5Draw(s: String): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.lang.Long.parseLong(d.map(b => f"$b%02x").mkString.take(15), 16)
+  }
 
   test("native token hashes: count and order match the tokenizer model") {
     import graft.functions.expressions.TokenXxh64Expr
@@ -122,6 +133,54 @@ class PropertySpec extends AnyFunSuite {
         else toks.sliding(n).map(_.mkString(" ")).toSeq
       (0 until got.numElements()).map(got.getUTF8String(_).toString) == want
     })
+  }
+
+  test("native md band keys equal md5 minima over the model's shingle strings") {
+    import graft.functions.expressions.MdBandKeysExpr
+    check(Prop.forAll(anyString, Gen.choose(1, 3), Gen.choose(1, 3),
+        Gen.choose(1, 3)) { (s, n, bands, rows) =>
+      val got = MdBandKeysExpr.compute(UTF8String.fromString(s), n, bands, rows)
+      val shingles = modelTokens(s).sliding(n).filter(_.size == n)
+        .map(_.mkString(" ")).toSeq
+      val want =
+        if (shingles.isEmpty) Seq.empty
+        else {
+          val mins = (0 until bands * rows).map(j =>
+            shingles.map(sh => md5Draw(s"$j:$sh")).min)
+          (0 until bands).map(b =>
+            (b.toString +: (0 until rows).map(r => mins(b * rows + r).toString))
+              .mkString(":"))
+        }
+      (0 until got.numElements()).map(got.getUTF8String(_).toString) == want
+    })
+  }
+
+  test("native md weight score equals the model tokens' summed weights") {
+    import graft.functions.expressions.MdWeightScoreExpr
+    check(Prop.forAll(anyString) { s =>
+      val got = MdWeightScoreExpr.compute(UTF8String.fromString(s))
+      val toks = modelTokens(s)
+      got.getLong(0) == toks.size &&
+        got.getLong(1) == toks.map(t => md5Draw(t) % 2001 - 1000).sum
+    })
+  }
+
+  /** The swap that made `text.cleanTokens` native is output-preserving
+    * only if its lowercasing (`UTF8String.toLowerCase`) gives the same
+    * tokens as the built-in `lower()` the lambda form calls.
+    */
+  test("native cleanTokens equals the lambda token list through Spark's lower()") {
+    import TestSpark.spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val docs = Gen.listOfN(200, anyString).sample.get ++
+      Seq("\u212AELVIN", "\u0130STANBUL \u0130i", "FILE \u00e9t\u00e9", "")
+    val rows = docs.toDF("text")
+      .select(col("text"), text.cleanTokens(col("text")).as("native"),
+        TestSpark.lambdaTokens(col("text")).as("lambda"))
+      .collect()
+    rows.foreach { r =>
+      assert(r.getSeq[String](1) === r.getSeq[String](2), r.getString(0))
+    }
   }
 
   test("native token set counts equal the multiset-membership model") {

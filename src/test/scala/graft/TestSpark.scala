@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.reflect.io.Directory
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
@@ -16,6 +16,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local("graft-test")
+
+  /** The lambda token list that `text.cleanTokens` natively replaces: the
+    * built-in lower() split on non-alphanumeric runs, its empty edges
+    * filtered out by a lambda. The reference the native tokenizer is
+    * checked against.
+    */
+  def lambdaTokens(t: Column): Column = {
+    import org.apache.spark.sql.functions.{filter, lit, lower, split}
+    filter(split(lower(t), "[^a-z0-9]+"), _ =!= lit(""))
+  }
 
   /** `f`'s value over a new directory under `java.io.tmpdir`, deleted with
     * everything in it when `f` returns or throws: a spec that needs

@@ -90,17 +90,27 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("native wordNgrams equals the HOF form on fixture and edge strings") {
+    import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
-    import graft.functions.expressions.textnative
     import spark.implicits._
+    // the lambda n-grams text.wordNgrams replaced; docs shorter than n
+    // take the empty branch (the sequence() bound would otherwise descend
+    // into negative slice starts and throw)
+    def hofNgrams(t: Column, n: Int): Column = {
+      val toks = TestSpark.lambdaTokens(t)
+      val grams = transform(
+        sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + 1, lit(n))))
+      when(size(toks) >= n, grams).otherwise(typedLit(Array.empty[String]))
+    }
     val edge = Seq("", "   ", "one", "one two", "one two three",
       "A-B_c 42x y!", " lead", "trail ", "Über Straße İstanbul ok",
       "a b c d e f").toDF("text")
     val docs = Tables.documents(spark, dir).select(col("text")).unionAll(edge)
     for (n <- Seq(1, 2, 3)) {
       val rows = docs.select(
-        textnative.wordNgrams(col("text"), n).as("native"),
-        text.wordNgrams(col("text"), n).as("hof"))
+        text.wordNgrams(col("text"), n).as("native"),
+        hofNgrams(col("text"), n).as("hof"))
         .collect()
       rows.foreach { r =>
         assert(r.getSeq[String](0) === r.getSeq[String](1), s"n=$n drift")

@@ -518,7 +518,7 @@ object CurationRun {
         }
       }
 
-      // the funnel's last frame is re-read by the manifest stat AND the fates
+      // the funnel's last frame is re-read by the manifest AND the fates
       // fold — swap in the checkpointed copy so neither re-executes the
       // gram-explode decontamination lineage
       val stages = (funnel.init :+ (funnel.last._1 -> dec)) ++
@@ -528,27 +528,8 @@ object CurationRun {
           Seq("token_budget" -> selected) else Seq.empty)
       val stageName = typedLit(
         stages.zipWithIndex.map { case ((name, _), i) => i -> name }.toMap)
-      // the manifest: q88's funnel row per stage, as ONE fold over the
-      // union of every stage's (stage_idx, n_tokens) rows (the fates fold's
-      // idiom below) — one aggregate job, where one two-long aggregate per
-      // stage was one exchange job each. A zero row per stage keeps an
-      // emptied stage in the table as (0 docs, 0 tokens); one sorted
-      // partition needs no range exchange.
-      val manifest = stages.zipWithIndex
-        .map { case ((_, df), i) =>
-          df.select(lit(i).as("stage_idx"), lit(1L).as("doc"),
-            col("n_tokens").cast("long").as("n_tokens")) }
-        .reduce(_.union(_))
-        .union(spark.range(0, stages.size, 1, 1).select(
-          col("id").cast("int").as("stage_idx"), lit(0L).as("doc"),
-          lit(null).cast("long").as("n_tokens")))
-        .groupBy(col("stage_idx"))
-        .agg(sum(col("doc")).as("docs"),
-          coalesce(sum(col("n_tokens")), lit(0L)).as("tokens"))
-        .select(col("stage_idx"),
-          element_at(stageName, col("stage_idx")).as("stage"),
-          col("docs"), col("tokens"))
-        .coalesce(1).sortWithinPartitions(col("stage_idx"))
+      // the manifest: q88's funnel row per stage, in one aggregate job
+      val manifest = Pipeline.funnelTable(stages)
 
       // per-doc fate: survivor sets are strictly nested, so the last stage a
       // doc appears in is its fate — ONE union of (doc_id, stage_idx) pairs

@@ -1,8 +1,7 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -53,28 +52,11 @@ object bloom {
 }
 
 case class BloomMightContainExpr(child: Expression, bf: BloomFilter)
-    extends UnaryExpression {
+    extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_might_contain needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BloomMightContainExpr.compute(input.asInstanceOf[UTF8String], bf)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // raw runtime class; the filter is one shared reference per task binary
-    val bRef = ctx.addReferenceObj("bloomFilter", bf,
-      "org.apache.spark.util.sketch.BloomFilter")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.BloomMightContainExpr.compute($c, $bRef);")
-  }
+  // one shared filter reference per task binary
+  override protected def constants: Seq[Any] = Seq(bf)
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContainExpr =
     copy(child = newChild)

@@ -1,8 +1,7 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -133,31 +132,11 @@ object sketch {
   * bit b) > 0. Empty input → null: a token-less doc would otherwise
   * fingerprint as 0L and pair with every other token-less doc at Hamming 0.
   */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
+case class SimHash64Expr(child: Expression) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash64 needs array<bigint>, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null else SimHash64Expr.compute(arr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""if ($c.numElements() == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.expressions.SimHash64Expr.compute($c);
-         |}""".stripMargin)
+  override protected def nullRule: Option[NullRule] = Some(NullRule.EmptyArray)
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
     copy(child = newChild)
@@ -192,39 +171,13 @@ object SimHash64Expr {
   * declarative version in Dedup. Empty input → null (no shingles, no
   * signature).
   */
-case class MinHashSigExpr(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
+case class MinHashSigExpr(child: Expression, k: Int, seed: Long) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig needs array<bigint>, got $t")
-    }
-
+  override protected def nullRule: Option[NullRule] = Some(NullRule.EmptyArray)
   @transient private lazy val (as, bs) = MinHashSigExpr.constants(k, seed)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null
-    else MinHashSigExpr.compute(arr, as, bs)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""if ($c.numElements() == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} =
-         |    graft.functions.expressions.MinHashSigExpr.compute($c, $aRef, $bRef);
-         |}""".stripMargin)
-  }
+  override protected def constants: Seq[Any] = Seq(as, bs)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
@@ -262,25 +215,10 @@ object MinHashSigExpr {
   * output for docs shorter than n tokens (callers treat no-shingles docs as
   * unpairable).
   */
-case class ShingleHashesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+case class ShingleHashesExpr(child: Expression, n: Int) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hashes needs array<string>, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashesExpr.compute(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.ShingleHashesExpr.compute($c, $n);")
+  override protected def constants: Seq[Any] = Seq(n)
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
     copy(child = newChild)
@@ -321,10 +259,6 @@ object ShingleHashesExpr {
     sh
   }
 
-  /** chain() boxed for the positional-gram expression. */
-  def chainKeepOrder(th: Array[Long], n: Int): ArrayData =
-    new GenericArrayData(chain(th, n))
-
   /** Chain each window of n consecutive token hashes into a shingle hash,
     * sort, dedupe — shared by the from-strings and from-hashes forms so they
     * can never drift.
@@ -348,25 +282,9 @@ object ShingleHashesExpr {
   * sketch.tokenHashes): the [[Tokenizer]]'s tokens, each hashed with the
   * built-in xxhash64's seed (42).
   */
-case class TokenXxh64Expr(child: Expression) extends UnaryExpression {
+case class TokenXxh64Expr(child: Expression) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_xxh64 needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenXxh64Expr.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.TokenXxh64Expr.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): TokenXxh64Expr =
     copy(child = newChild)
@@ -399,34 +317,12 @@ object TokenXxh64Expr {
   * up in a word-hash -> set-bitmask map.
   */
 case class TokenSetCountsExpr(child: Expression, sets: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends NativeUnary {
   require(sets.nonEmpty && sets.size <= 64, "1..64 word sets")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_set_counts needs string, got $t")
-    }
-
   @transient private lazy val masks = TokenSetCountsExpr.buildMasks(sets)
-
-  override def nullSafeEval(input: Any): Any =
-    TokenSetCountsExpr.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      masks, sets.size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // raw type: Janino's generics support is partial, and a generated-code
-    // compile failure would silently drop the stage to interpreted eval
-    val mRef = ctx.addReferenceObj("setMasks", masks, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.expressions.TokenSetCountsExpr
-         |  .compute($c, $mRef, ${sets.size});""".stripMargin)
-  }
+  override protected def constants: Seq[Any] = Seq(masks, sets.size)
 
   override protected def withNewChildInternal(newChild: Expression): TokenSetCountsExpr =
     copy(child = newChild)
@@ -479,86 +375,44 @@ object TokenSetCountsExpr {
 /** Sorted distinct n-shingle hashes from pre-hashed tokens (see
   * sketch.shingleFromHashes).
   */
-case class ShingleFromHashesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+case class ShingleFromHashesExpr(child: Expression, n: Int) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_from_hashes needs array<bigint>, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    ShingleHashesExpr.chainSortDedupe(arr.toLongArray(), n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.expressions.ShingleHashesExpr
-         |  .chainSortDedupe($c.toLongArray(), $n);""".stripMargin)
+  override protected def constants: Seq[Any] = Seq(n)
 
   override protected def withNewChildInternal(newChild: Expression): ShingleFromHashesExpr =
     copy(child = newChild)
 }
 
+object ShingleFromHashesExpr {
+  def compute(hashes: ArrayData, n: Int): ArrayData =
+    ShingleHashesExpr.chainSortDedupe(hashes.toLongArray(), n)
+}
+
 /** Position-ordered n-gram chain hashes from pre-hashed tokens, duplicates
   * kept (see sketch.gramHashes). Docs shorter than n tokens → empty array.
   */
-case class GramHashesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+case class GramHashesExpr(child: Expression, n: Int) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"gram_hashes needs array<bigint>, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    ShingleHashesExpr.chainKeepOrder(arr.toLongArray(), n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.expressions.ShingleHashesExpr
-         |  .chainKeepOrder($c.toLongArray(), $n);""".stripMargin)
+  override protected def constants: Seq[Any] = Seq(n)
 
   override protected def withNewChildInternal(newChild: Expression): GramHashesExpr =
     copy(child = newChild)
 }
 
+object GramHashesExpr {
+  def compute(hashes: ArrayData, n: Int): ArrayData =
+    new GenericArrayData(ShingleHashesExpr.chain(hashes.toLongArray(), n))
+}
+
 /** Sorted distinct winnowing fingerprints of a string (see
   * sketch.winnowFingerprints). Docs shorter than k chars → empty array.
   */
-case class WinnowFingerprintsExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+case class WinnowFingerprintsExpr(child: Expression, k: Int, w: Int) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_fingerprints needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowFingerprintsExpr.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.WinnowFingerprintsExpr.compute($c, $k, $w);")
+  override protected def constants: Seq[Any] = Seq(k, w)
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFingerprintsExpr =
     copy(child = newChild)
@@ -611,42 +465,17 @@ object WinnowFingerprintsExpr {
   * minhash signature, offset by the band index so bands never collide.
   */
 case class MinHashBandKeysExpr(child: Expression, k: Int, bands: Int, seed: Long)
-    extends UnaryExpression {
+    extends NativeUnary {
   require(bands >= 1 && k >= bands && k % bands == 0,
     s"minhash_band_keys: k ($k) must be a positive multiple of bands ($bands) — " +
       "bands > k would make every key constant (degenerate O(n^2) join), " +
       "k % bands != 0 would silently drop signature rows")
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_band_keys needs array<bigint>, got $t")
-    }
-
+  override protected def nullRule: Option[NullRule] = Some(NullRule.EmptyArray)
   @transient private lazy val (as, bs) = MinHashSigExpr.constants(k, seed)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null
-    else MinHashBandKeysExpr.compute(arr, as, bs, bands)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""if ($c.numElements() == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.expressions.MinHashBandKeysExpr
-         |    .compute($c, $aRef, $bRef, $bands);
-         |}""".stripMargin)
-  }
+  override protected def constants: Seq[Any] = Seq(as, bs, bands)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashBandKeysExpr =
     copy(child = newChild)
@@ -678,28 +507,12 @@ object MinHashBandKeysExpr {
   * single spaces, DuckDB's `array_to_string(list_slice(tk, i+1, i+n), ' ')`).
   */
 case class MdBandKeysExpr(child: Expression, n: Int, bands: Int, rows: Int)
-    extends UnaryExpression {
+    extends NativeUnary {
   require(n > 0 && bands > 0 && rows > 0, "n, bands, rows must be positive")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md_band_keys needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    MdBandKeysExpr.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      n, bands, rows)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.MdBandKeysExpr.compute($c, $n, $bands, $rows);")
+  override protected def constants: Seq[Any] = Seq(n, bands, rows)
 
   override protected def withNewChildInternal(newChild: Expression): MdBandKeysExpr =
     copy(child = newChild)
@@ -766,25 +579,9 @@ object MdBandKeysExpr {
   * token bytes (= `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`),
   * % 2001 − 1000.
   */
-case class MdWeightScoreExpr(child: Expression) extends UnaryExpression {
+case class MdWeightScoreExpr(child: Expression) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = MdWeightScoreExpr.Schema
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md_weight_score needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    MdWeightScoreExpr.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.MdWeightScoreExpr.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): MdWeightScoreExpr =
     copy(child = newChild)

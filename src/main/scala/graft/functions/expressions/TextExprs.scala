@@ -1,11 +1,11 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native text expressions (with codegen): the engine's one tokenizer, the
   * word n-grams built on it, and the BPE merge chain.
@@ -34,10 +34,12 @@ object textnative {
 /** The engine's one tokenizer rule: the reference's word normalization
   * (mapreduce.c:50-61 — lowercase, keep `[a-z0-9]`) generalized past the
   * first token. Tokens are the maximal `[a-z0-9]` byte runs of the text's
-  * lowercased UTF-8 bytes. `UTF8String.toLowerCase` gives the built-in
-  * `lower()`'s result (PropertySpec checks it on multi-byte text), and
-  * multi-byte UTF-8 units are all >= 0x80, so they never join a run: the
-  * tokens are `split(lower(text), "[^a-z0-9]+")` minus its empty edges
+  * lowercased UTF-8 bytes. The lowercasing is `Locale.ROOT`'s, so tokens
+  * do not depend on the JVM's default locale; it equals the built-in
+  * `lower()` under any default locale but Turkish, Azeri or Lithuanian
+  * (PropertySpec checks both on multi-byte text). Multi-byte UTF-8 units
+  * are all >= 0x80, so they never join a run: the tokens are
+  * `split(lower(text), "[^a-z0-9]+")` minus its empty edges
   * (and DuckDB's `list_filter(regexp_split_to_array(lower(text),
   * '[^a-z0-9]+'), t -> t <> '')`).
   *
@@ -45,10 +47,25 @@ object textnative {
   * a token's span into one long: no per-token allocation or closure call.
   */
 object Tokenizer {
-  import org.apache.spark.unsafe.types.UTF8String
-
-  /** The lowercased UTF-8 bytes the tokens are runs of. */
-  def lowered(text: UTF8String): Array[Byte] = text.toLowerCase.getBytes
+  /** The lowercased UTF-8 bytes the tokens are runs of: ASCII text is
+    * lowered in the one pass that copies it; text with any other byte is
+    * lowered as a Java string under `Locale.ROOT`.
+    */
+  def lowered(text: UTF8String): Array[Byte] = {
+    val n = text.numBytes
+    val out = new Array[Byte](n)
+    var i = 0
+    while (i < n) {
+      val b = text.getByte(i)
+      if (b < 0) {
+        return text.toString.toLowerCase(java.util.Locale.ROOT)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      }
+      out(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+      i += 1
+    }
+    out
+  }
 
   /** The first token at or after byte `from`: its start in the high 32
     * bits, its (exclusive) end in the low 32; -1 when there is none.
@@ -91,33 +108,17 @@ object Tokenizer {
   * order; docs with fewer than n tokens yield an empty array. n = 1 is the
   * token list itself (`text.cleanTokens`).
   */
-case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgramsExpr(child: Expression, n: Int) extends NativeUnary {
   require(n >= 1, "ngram width must be >= 1")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_ngrams needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WordNgramsExpr.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.WordNgramsExpr.compute($c, $n);")
+  override protected def constants: Seq[Any] = Seq(n)
 
   override protected def withNewChildInternal(newChild: Expression): WordNgramsExpr =
     copy(child = newChild)
 }
 
 object WordNgramsExpr {
-  import org.apache.spark.unsafe.types.UTF8String
   import Tokenizer.{end, start}
 
   def compute(text: UTF8String, n: Int): ArrayData = {
@@ -178,46 +179,24 @@ object WordNgramsExpr {
   * of O(K).
   */
 case class BpeMergeAllExpr(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends NativeUnary {
   require(merges.nonEmpty, "empty merge chain — skip the projection instead")
   require(merges.forall(m => m._1.nonEmpty && m._2.nonEmpty),
     "BPE merge symbols must be non-empty")
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_merge_all needs array<string>, got $t")
-    }
 
-  @transient private lazy val lhsArr: Array[org.apache.spark.unsafe.types.UTF8String] =
-    merges.map(m =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(m._1)).toArray
-  @transient private lazy val rhsArr: Array[org.apache.spark.unsafe.types.UTF8String] =
-    merges.map(m =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(m._2)).toArray
-
-  override def nullSafeEval(input: Any): Any =
-    BpeMergeAllExpr.compute(input.asInstanceOf[ArrayData], lhsArr, rhsArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val utf8Arr = "org.apache.spark.unsafe.types.UTF8String[]"
-    val lRef = ctx.addReferenceObj("bpeLhsArr", lhsArr, utf8Arr)
-    val rRef = ctx.addReferenceObj("bpeRhsArr", rhsArr, utf8Arr)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.BpeMergeAllExpr" +
-        s".compute($c, $lRef, $rRef);")
-  }
+  @transient private lazy val lhsArr: Array[UTF8String] =
+    merges.map(m => UTF8String.fromString(m._1)).toArray
+  @transient private lazy val rhsArr: Array[UTF8String] =
+    merges.map(m => UTF8String.fromString(m._2)).toArray
+  override protected def constants: Seq[Any] = Seq(lhsArr, rhsArr)
 
   override protected def withNewChildInternal(newChild: Expression): BpeMergeAllExpr =
     copy(child = newChild)
 }
 
 object BpeMergeAllExpr {
-  import org.apache.spark.unsafe.types.UTF8String
 
   def compute(arr: ArrayData, lhs: Array[UTF8String],
       rhs: Array[UTF8String]): ArrayData = {
@@ -269,7 +248,6 @@ object BpeMergeAllExpr {
   * one-step form is the reference TextAnalysisSpec checks it against.
   */
 object BpeMergeStepExpr {
-  import org.apache.spark.unsafe.types.UTF8String
 
   def compute(arr: ArrayData, lhs: UTF8String, rhs: UTF8String): ArrayData = {
     val n = arr.numElements()

@@ -1,9 +1,7 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -71,33 +69,12 @@ object vecexprs {
         cbA.map(_.toVector).toVector, cbB.map(_.toVector).toVector, k))
 }
 
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class CosineSimExpr(left: Expression, right: Expression) extends NativeBinary {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(s"cosine_sim needs array<double>, got $l, $r")
-    }
-
-  // length mismatch -> null, as in a zip_with/aggregate fold (zip_with pads
-  // with null, which poisons the fold)
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val l = a.asInstanceOf[ArrayData]; val r = b.asInstanceOf[ArrayData]
-    if (l.numElements() != r.numElements()) null
-    else CosineSimExpr.compute(l, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.expressions.CosineSimExpr.compute($a, $b);
-         |}""".stripMargin)
+  override protected def nullRule: Option[NullRule] = Some(NullRule.LengthMismatch)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimExpr =
@@ -127,31 +104,12 @@ object CosineSimExpr {
   * result is bit-identical to DuckDB's `list_inner_product` on the same
   * doubles.
   */
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class DotProductExpr(left: Expression, right: Expression) extends NativeBinary {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(s"dot_product needs array<double>, got $l, $r")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val l = a.asInstanceOf[ArrayData]; val r = b.asInstanceOf[ArrayData]
-    if (l.numElements() != r.numElements()) null
-    else DotProductExpr.compute(l, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.expressions.DotProductExpr.compute($a, $b);
-         |}""".stripMargin)
+  override protected def nullRule: Option[NullRule] = Some(NullRule.LengthMismatch)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductExpr =
@@ -173,31 +131,12 @@ object DotProductExpr {
   * final sqrt is IEEE-754 correctly rounded, so on equal squared sums the
   * value is bit-identical to DuckDB's `list_distance`.
   */
-case class L2DistExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class L2DistExpr(left: Expression, right: Expression) extends NativeBinary {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(s"l2_dist needs array<double>, got $l, $r")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val l = a.asInstanceOf[ArrayData]; val r = b.asInstanceOf[ArrayData]
-    if (l.numElements() != r.numElements()) null
-    else L2DistExpr.compute(l, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.expressions.L2DistExpr.compute($a, $b);
-         |}""".stripMargin)
+  override protected def nullRule: Option[NullRule] = Some(NullRule.LengthMismatch)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2DistExpr =
@@ -219,22 +158,10 @@ object L2DistExpr {
 }
 
 case class HyperplaneBucketsExpr(child: Expression, planes: Int, tables: Int)
-    extends UnaryExpression {
+    extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"hyperplane_buckets needs array<double>, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    HyperplaneBucketsExpr.compute(input.asInstanceOf[ArrayData], planes, tables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.expressions.HyperplaneBucketsExpr
-         |  .compute($c, $planes, $tables);""".stripMargin)
+  override protected def constants: Seq[Any] = Seq(planes, tables)
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketsExpr =
     copy(child = newChild)
@@ -248,29 +175,15 @@ case class HyperplaneBucketsExpr(child: Expression, planes: Int, tables: Int)
   * form this replaced, so assignments are bit-for-bit unchanged.
   */
 case class NearestCellsExpr(child: Expression,
-    centroids: Vector[Vector[Double]], k: Int) extends UnaryExpression {
+    centroids: Vector[Vector[Double]], k: Int) extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"nearest_cells needs array<double>, got $t")
-    }
 
   // rows share one flat copy per task; centroid rows may be ragged in
   // principle, so each keeps its own length
   @transient private lazy val flat: Array[Array[Double]] =
     centroids.map(_.toArray).toArray
-
-  override def nullSafeEval(input: Any): Any =
-    NearestCellsExpr.compute(input.asInstanceOf[ArrayData], flat, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", flat, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.expressions.NearestCellsExpr
-         |  .compute($c, $cRef, $k);""".stripMargin)
-  }
+  override protected def constants: Seq[Any] = Seq(flat, k)
 
   override protected def withNewChildInternal(newChild: Expression): NearestCellsExpr =
     copy(child = newChild)
@@ -282,19 +195,34 @@ object NearestCellsExpr {
     * count (tiny: 16 on the fixture, ~√N capped in the thousands at scale),
     * so an O(K·k) selection beats building and sorting a pair array per row.
     */
-  def compute(v: ArrayData, centroids: Array[Array[Double]], k: Int): ArrayData = {
-    val n = centroids.length
-    val d = new Array[Double](n)
+  def compute(v: ArrayData, centroids: Array[Array[Double]], k: Int): ArrayData =
+    new GenericArrayData(topIdx(halfDists(v, centroids, 0), k))
+
+  /** Squared distances of `v[off, off+width)` to every centroid of `cb`,
+    * each truncated to the shorter of (centroid width, remaining vector
+    * width): the whole vector here (off 0), each half in
+    * [[ImiProbeCellsExpr]].
+    */
+  private[expressions] def halfDists(v: ArrayData, cb: Array[Array[Double]],
+      off: Int): Array[Double] = {
+    val d = new Array[Double](cb.length)
+    val avail = math.max(v.numElements() - off, 0)
     var i = 0
-    while (i < n) {
-      val c = centroids(i)
-      val m = math.min(c.length, v.numElements())
+    while (i < cb.length) {
+      val c = cb(i)
+      val m = math.min(c.length, avail)
       var acc = 0.0
       var j = 0
-      while (j < m) { val x = c(j) - v.getDouble(j); acc += x * x; j += 1 }
+      while (j < m) { val x = c(j) - v.getDouble(off + j); acc += x * x; j += 1 }
       d(i) = acc
       i += 1
     }
+    d
+  }
+
+  /** Indices of the `k` smallest distances, (distance, id) ascending. */
+  private[expressions] def topIdx(d: Array[Double], k: Int): Array[Int] = {
+    val n = d.length
     val kk = math.min(k, n)
     val out = new Array[Int](kk)
     val taken = new Array[Boolean](n)
@@ -302,7 +230,7 @@ object NearestCellsExpr {
     while (s < kk) {
       var best = -1
       var bestD = Double.PositiveInfinity
-      i = 0
+      var i = 0
       while (i < n) {
         if (!taken(i) && d(i) < bestD) { best = i; bestD = d(i) }
         i += 1
@@ -319,7 +247,7 @@ object NearestCellsExpr {
       out(s) = best
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
 }
 
@@ -349,87 +277,22 @@ object NearestCellsExpr {
   */
 case class ImiProbeCellsExpr(child: Expression,
     cbA: Vector[Vector[Double]], cbB: Vector[Vector[Double]], k: Int)
-    extends UnaryExpression {
+    extends NativeUnary {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"imi_probe_cells needs array<double>, got $t")
-    }
 
   @transient private lazy val flatA: Array[Array[Double]] =
     cbA.map(_.toArray).toArray
   @transient private lazy val flatB: Array[Array[Double]] =
     cbB.map(_.toArray).toArray
-
-  override def nullSafeEval(input: Any): Any =
-    ImiProbeCellsExpr.compute(input.asInstanceOf[ArrayData], flatA, flatB, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("cbA", flatA, "double[][]")
-    val bRef = ctx.addReferenceObj("cbB", flatB, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.expressions.ImiProbeCellsExpr
-         |  .compute($c, $aRef, $bRef, $k);""".stripMargin)
-  }
+  override protected def constants: Seq[Any] = Seq(flatA, flatB, k)
 
   override protected def withNewChildInternal(
       newChild: Expression): ImiProbeCellsExpr = copy(child = newChild)
 }
 
 object ImiProbeCellsExpr {
-
-  /** Squared distances of `v[off, off+width)` to every centroid of `cb`
-    * (truncating to the shorter of centroid/remaining-vector width —
-    * NearestCellsExpr's documented rule applied per half).
-    */
-  private def halfDists(v: ArrayData, cb: Array[Array[Double]],
-      off: Int): Array[Double] = {
-    val d = new Array[Double](cb.length)
-    val avail = math.max(v.numElements() - off, 0)
-    var i = 0
-    while (i < cb.length) {
-      val c = cb(i)
-      val m = math.min(c.length, avail)
-      var acc = 0.0
-      var j = 0
-      while (j < m) { val x = c(j) - v.getDouble(off + j); acc += x * x; j += 1 }
-      d(i) = acc
-      i += 1
-    }
-    d
-  }
-
-  /** Indices of the `k` smallest distances, (distance, id) ascending —
-    * NearestCellsExpr.compute's selection (same NaN fallback: incomparable
-    * rows fall back to lowest untaken id, so degenerate vectors get a
-    * deterministic probe list instead of a crash).
-    */
-  private def topIdx(d: Array[Double], k: Int): Array[Int] = {
-    val n = d.length
-    val kk = math.min(k, n)
-    val out = new Array[Int](kk)
-    val taken = new Array[Boolean](n)
-    var s = 0
-    while (s < kk) {
-      var best = -1
-      var bestD = Double.PositiveInfinity
-      var i = 0
-      while (i < n) {
-        if (!taken(i) && d(i) < bestD) { best = i; bestD = d(i) }
-        i += 1
-      }
-      if (best == -1) {
-        var i = 0
-        while (best == -1) { if (!taken(i)) best = i else i += 1 }
-      }
-      taken(best) = true
-      out(s) = best
-      s += 1
-    }
-    out
-  }
+  import NearestCellsExpr.{halfDists, topIdx}
 
   def compute(v: ArrayData, cbA: Array[Array[Double]],
       cbB: Array[Array[Double]], k: Int): ArrayData = {

@@ -38,7 +38,8 @@ object Dedup {
 
   /** The classic universal-hash minhash family h_i(x) = a_i*x + b_i (mod
     * 2^64) over ONE base xxhash64 per shingle — strings are hashed once, not
-    * k times. Computed by the native MinHashSigExpr (codegen) — the
+    * k times. The pipeline computes it with the native MinHashBandKeysExpr
+    * (codegen), which folds the minima straight into band keys — the
     * higher-order-function formulation benched ~10x slower at sf0.1.
     */
   val MinhashSeed = 0x5eedL

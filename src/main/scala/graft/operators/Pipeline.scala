@@ -187,9 +187,9 @@ object Pipeline {
     * are one codegen'd projection; dedup one md5 shuffle; pairs ids-only
     * banded joins; decontam a broadcast membership test). The reused
     * survivor frames are checkpointed (q78's lesson) so the
-    * six stat branches re-read materialized partitions instead of
-    * re-executing the gate/window/CC lineage per branch; each stat is a
-    * two-long aggregate.
+    * six union branches of the [[funnelTable]] fold re-read materialized
+    * partitions instead of re-executing the gate/window/CC lineage per
+    * branch; the fold is one aggregate job.
     */
   def q88(spark: SparkSession, dir: String): DataFrame =
     curationFunnel(Tables.documents(spark, dir).select(col("doc_id"), col("text")),
@@ -198,23 +198,36 @@ object Pipeline {
   /** The q88 core over any (doc_id, text) frame with a parameterized eval
     * split — planted-corpus specs run it directly.
     */
-  def curationFunnel(docs: DataFrame, evalEvery: Long): DataFrame = {
-    val stages = curationStages(docs, evalEvery)
-    stages.zipWithIndex
-      .map { case ((name, df), i) => funnelStat(df, i, name) }
-      .reduce(_.union(_))
-      .orderBy(col("stage_idx"))
-  }
+  def curationFunnel(docs: DataFrame, evalEvery: Long): DataFrame =
+    funnelTable(curationStages(docs, evalEvery))
 
-  /** One funnel row — (stage_idx, stage, docs, tokens) — from a staged
-    * survivor frame carrying n_tokens. (CurationRun's manifest computes
-    * the same rows for all its stages in one fold.)
+  /** The funnel table of staged survivor frames (each carrying n_tokens):
+    * one (stage_idx, stage, docs, tokens) row per stage, in stage order,
+    * as ONE fold over the union of every stage's (stage_idx, n_tokens)
+    * rows — one aggregate job, where one two-long aggregate per stage was
+    * one exchange job each. A zero row per stage keeps an emptied stage in
+    * the table as (0 docs, 0 tokens); one sorted partition needs no range
+    * exchange. q88's funnel and CurationRun's manifest are this table.
     */
-  private def funnelStat(df: DataFrame, idx: Int, name: String): DataFrame =
-    df.agg(count(lit(1)).as("docs"),
-      coalesce(sum(col("n_tokens")), lit(0L)).as("tokens"))
-      .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
+  def funnelTable(stages: Seq[(String, DataFrame)]): DataFrame = {
+    val stageName = typedLit(
+      stages.zipWithIndex.map { case ((name, _), i) => i -> name }.toMap)
+    stages.zipWithIndex
+      .map { case ((_, df), i) =>
+        df.select(lit(i).as("stage_idx"), lit(1L).as("doc"),
+          col("n_tokens").cast("long").as("n_tokens")) }
+      .reduce(_.union(_))
+      .union(stages.head._2.sparkSession.range(0, stages.size, 1, 1).select(
+        col("id").cast("int").as("stage_idx"), lit(0L).as("doc"),
+        lit(null).cast("long").as("n_tokens")))
+      .groupBy(col("stage_idx"))
+      .agg(sum(col("doc")).as("docs"),
+        coalesce(sum(col("n_tokens")), lit(0L)).as("tokens"))
+      .select(col("stage_idx"),
+        element_at(stageName, col("stage_idx")).as("stage"),
         col("docs"), col("tokens"))
+      .coalesce(1).sortWithinPartitions(col("stage_idx"))
+  }
 
   /** The funnel's staged survivor frames, in stage order, each carrying
     * (doc_id, text, n_tokens, …): raw → quality → classifier →

@@ -841,4 +841,29 @@ class PlanSpec extends AnyFunSuite {
     assert(stray.isEmpty, "materialize through graft.operators.Materialize:\n" +
       stray.mkString("\n"))
   }
+
+  /** A native expression's Catalyst wiring — its type check, its
+    * interpreted and generated evaluation, its null rules — is written once,
+    * in [[graft.functions.expressions.NativeKernel]]: an expression states
+    * its facts and extends it, so no other file in src/main hand-writes a
+    * type check or a codegen body.
+    */
+  test("only NativeKernel wires native expressions: no hand-written type check or codegen elsewhere in src/main") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
+    val wiring = Seq("checkInputDataTypes", "TypeCheckFailure", "nullSafeCodeGen", "doGenCode")
+    val sources = scala.util.Using.resource(Files.walk(root))(
+      _.iterator().asScala.toList.filter(_.toString.endsWith(".scala")))
+    val stray = sources.filterNot(_.getFileName.toString == "NativeKernel.scala")
+      .flatMap { (f: Path) =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if wiring.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(stray.isEmpty, "extend graft.functions.expressions.NativeKernel:\n" +
+      stray.mkString("\n"))
+    assert(sources.exists(_.getFileName.toString == "NativeKernel.scala"))
+  }
 }

@@ -166,8 +166,9 @@ class PropertySpec extends AnyFunSuite {
   }
 
   /** The swap that made `text.cleanTokens` native is output-preserving
-    * only if its lowercasing (`UTF8String.toLowerCase`) gives the same
-    * tokens as the built-in `lower()` the lambda form calls.
+    * only if its lowercasing (`Locale.ROOT`) gives the same tokens as the
+    * built-in `lower()` the lambda form calls (under the default locale of
+    * this JVM, which is not Turkish).
     */
   test("native cleanTokens equals the lambda token list through Spark's lower()") {
     import TestSpark.spark.implicits._
@@ -181,6 +182,28 @@ class PropertySpec extends AnyFunSuite {
     rows.foreach { r =>
       assert(r.getSeq[String](1) === r.getSeq[String](2), r.getString(0))
     }
+  }
+
+  /** The built-in `lower()` follows the JVM's default locale; the native
+    * tokenizer must not: under Turkish rules "FILE" would lower to "fıle"
+    * (dotless ı) and split into "f" and "le".
+    */
+  test("native tokens do not depend on the JVM default locale") {
+    import graft.functions.expressions.{TokenXxh64Expr, WordNgramsExpr}
+    import java.util.Locale
+    val doc = UTF8String.fromString("FILE \u00e9t\u00e9")
+    def tokens(locale: Locale): (Seq[Long], Seq[String]) = {
+      val saved = Locale.getDefault
+      Locale.setDefault(locale)
+      try {
+        val grams = WordNgramsExpr.compute(doc, 1)
+        (TokenXxh64Expr.compute(doc).toLongArray().toSeq,
+          (0 until grams.numElements()).map(grams.getUTF8String(_).toString))
+      } finally Locale.setDefault(saved)
+    }
+    val root = tokens(Locale.ROOT)
+    assert(root._2 === Seq("file", "t"))
+    assert(tokens(Locale.forLanguageTag("tr-TR")) === root)
   }
 
   test("native token set counts equal the multiset-membership model") {

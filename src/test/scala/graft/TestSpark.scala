@@ -101,9 +101,12 @@ object TestSpark {
   }
 
   /** Runs `body` between `add` and `remove`, draining the listener bus
-    * before the listener comes off so every event `body` posted arrives.
+    * before the listener goes on, so no event an earlier action posted
+    * reaches it late, and before it comes off, so every event `body`
+    * posted arrives.
     */
   private def drained[T](add: => Unit, remove: => Unit)(body: => T): T = {
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     add
     try body
     finally {
